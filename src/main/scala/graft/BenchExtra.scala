@@ -83,11 +83,10 @@ object BenchExtra {
     locally {
       import org.apache.spark.sql.functions.col
       val (records, _) = queries.Materialized.recordsAndMatched(spark, sfDir)
-      val n = queries.KgQueries.nDocsFor(sfDir)
       var matched: org.apache.spark.sql.DataFrame = null
       phase("dist_match") {
         matched = kg.Link.matchTaxaAdaptive(records, kg.DataGen.wdSparqlRows,
-          kg.DataGen.lineageRows, n, maxDriverRows = 0L)
+          kg.DataGen.lineageRows, maxDriverRows = 0L)
       }
       var dicts: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = null
       phase("dist_dicts") {
@@ -96,8 +95,8 @@ object BenchExtra {
       }
       phase("dist_resolve_emit") {
         val mm = kg.Extract.mediaMentions(records, kg.DataGen.mediaMeta(spark))
-        kg.Materialize.globiTriplesSplit(
-          kg.Materialize.resolve(records, dicts._1, dicts._2), Some(mm)).count()
+        kg.Materialize.globiTriplesFused(records, dicts._1, dicts._2, Some(mm),
+          maxDriverRows = 0L).count()
       }
     }
     println("[extra] per-phase job stats (n_jobs, job_secs):")

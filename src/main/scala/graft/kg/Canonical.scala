@@ -166,7 +166,7 @@ object Canonical {
     * broadcast if stats allow).
     */
   def canonicalizeTriples(triples: DataFrame, mapping: DataFrame,
-      maxBroadcastRows: Long = 2000000L): DataFrame = {
+      maxBroadcastRows: Long = Model.MaxDriverRows): DataFrame = {
     // the guard count is cheap: CC output is localCheckpointed upstream
     // (and driver-built mappings are local relations)
     val m0 = mapping.select(

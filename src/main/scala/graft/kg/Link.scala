@@ -77,32 +77,37 @@ object Link {
     (melt(keyCols, wdNameCol), melt(extCols, wdIdCol))
   }
 
-  /** Stack source/target taxon frames, normalize ids/urls, dedup keeping
-    * first occurrence, unpack rank paths (matcher.py:133-180).
-    * rowIdx: source rows get recNum, target rows get nDocs+recNum —
-    * reproduces pandas concat order without any positional state.
+  /** Ordinal base of target mentions: source rows get recNum, target
+    * rows get TargetBase + recNum — pandas' sources-then-targets concat
+    * order for any set of record numbers below 2^40, gapped or not, and
+    * stable under appends (the incremental state keeps these ordinals).
     */
-  def stackTaxa(records: DataFrame, nDocs: Long): DataFrame = {
+  private val TargetBase: Long = 1L << 40
+
+  /** Stack source/target taxon mentions, normalize ids/urls and dedup
+    * keeping the first occurrence (matcher.py:133-180). Returns the
+    * distinct-taxa table (TaxonId, TaxonName, TaxonPathName,
+    * TaxonRankName, rowIdx); [[unpackRanks]] adds the rank columns.
+    */
+  def stackTaxa(records: DataFrame): DataFrame = {
     // one scan: both sides as a 2-element struct array, exploded —
-    // pandas concat order reproduced by the rowIdx arithmetic, without
-    // reading the corpus twice (union of two projections = two scans)
-    def side(p: String, base: Column): Column = struct(
+    // reading the corpus twice (union of two projections) costs two scans
+    def side(p: String, base: Long): Column = struct(
       col(s"${p}TaxonId").as("TaxonId"),
       col(s"${p}TaxonName").as("TaxonName"),
       col(s"${p}TaxonPathNames").as("TaxonPathName"),
       col(s"${p}TaxonPathRankNames").as("TaxonRankName"),
       (col("recNum") + base).as("rowIdx"))
     val stacked = records
-      .select(explode(array(side("source", lit(0L)), side("target", lit(nDocs))))
+      .select(explode(array(side("source", 0L), side("target", TargetBase)))
         .as("t"))
       .select(col("t.*"))
     val norm = stacked.select(
       Seq("TaxonId", "TaxonName", "TaxonPathName", "TaxonRankName")
         .map(c => Norm.normalizeUri(col(c)).as(c)) :+ col("rowIdx"): _*)
-    val dedup = norm
+    norm
       .groupBy(col("TaxonId"), col("TaxonName"), col("TaxonPathName"), col("TaxonRankName"))
       .agg(min(col("rowIdx")).as("rowIdx"))
-    unpackRanks(dedup)
   }
 
   /** Rank-path unpack (matcher.py:416-427) over a distinct-taxa table:
@@ -111,9 +116,7 @@ object Link {
     * (dict(zip_longest) semantics, matcher.py:419,
     * = LocalMatcher.extractRanks .toMap) — a plain map_from_arrays
     * would throw under mapKeyDedupPolicy=EXCEPTION on noisy paths like
-    * "kingdom|kingdom|family". Factored out of stackTaxa so the
-    * ACCUMULATED taxa state (which stores only the 5 base columns) can
-    * re-enter the distributed matcher without re-stacking the corpus.
+    * "kingdom|kingdom|family".
     */
   def unpackRanks(dedup: DataFrame): DataFrame = {
     val ranksArr = transform(split(col("TaxonRankName"), "\\|"), r => trim(r))
@@ -255,25 +258,6 @@ object Link {
     rankUpdated.select(outCols: _*).unionByName(keep.select(outCols: _*))
   }
 
-  /** Compact matcher: distributed stack+distinct (the only corpus-scale
-    * step), then the dimension-sized dictionary/scoring passes run on
-    * the driver via LocalMatcher — one collect instead of ~12 small
-    * jobs. Returns the matched rows; callers broadcast them (or build
-    * resolution maps directly). The distributed formulation below
-    * remains the beyond-driver-memory path; tests assert both equal.
-    */
-  def matchTaxaCompact(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): Seq[LocalMatcher.MatchedRow] = {
-    val taxa = stackTaxa(records, nDocs)
-      .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-        col("TaxonRankName"), col("rowIdx"))
-      .collect()
-      .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-        r.getString(2), r.getString(3), r.getLong(4)))
-      .sortBy(_.rowIdx)
-    LocalMatcher.matchTaxa(taxa.toSeq, wdSparqlRows, lineageRows)
-  }
-
   /** Driver-local matched rows → DataFrame via parallelize, NOT a
     * LocalRelation: a LocalTableScan feeding an exchange embeds the
     * whole row collection in every task binary (the driver bench logged
@@ -297,126 +281,92 @@ object Link {
       schema)
   }
 
-  /** Compact matcher as a DataFrame (same schema consumers expect). */
-  def matchTaxaCompactDf(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): DataFrame =
-    matchedRowsToDf(records.sparkSession,
-      matchTaxaCompact(records, wdSparqlRows, lineageRows, nDocs))
-
-  /** Adaptive matcher: counts the DISTINCT taxa table (the only thing
-    * the compact path collects) and picks the driver-local refinement
-    * when it is genuinely dimension-sized, else the fully distributed
-    * formulation — the caller no longer has to assert the
-    * fits-in-driver assumption. The count reuses the persisted taxa
-    * table, so the guard costs one cheap action, not a second
-    * corpus-scale pass. Both paths are asserted equal in
-    * KgPipelineSpec.
+  /** The shipped matcher: [[stackTaxa]], then [[matchStacked]]'s
+    * row-count guard. `nDocs` is unused — the target ordinal base is
+    * the fixed [[TargetBase]] — and stays in the signature only because
+    * the benchmark harness calls this positionally.
     */
   def matchTaxaAdaptive(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long,
-      maxDriverRows: Long = 2000000L): DataFrame = {
-    val spark = records.sparkSession
-    // a non-positive threshold FORCES the distributed formulation (the
-    // kg_pipeline_triples_dist production-path gate): the guard count
-    // can never choose the driver path, so skip building + counting the
-    // guard's stacked-taxa table entirely — matchTaxa stacks and
-    // persists its own
-    if (maxDriverRows <= 0)
-      return matchTaxaDistributed(records, wdSparqlRows, lineageRows, nDocs)
-    val taxa = stackTaxa(records, nDocs)
-      .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
+      lineageRows: Seq[Seq[String]], nDocs: Long = 0L,
+      maxDriverRows: Long = MaxDriverRows): DataFrame =
+    matchedDf(records.sparkSession,
+      matchStacked(stackTaxa(records), wdSparqlRows, lineageRows, maxDriverRows))
+
+  /** Either arm's matcher output as the matched-taxa table. */
+  def matchedDf(spark: org.apache.spark.sql.SparkSession,
+      m: Either[Seq[LocalMatcher.MatchedRow], DataFrame]): DataFrame =
+    m.fold(matchedRowsToDf(spark, _), identity)
+
+  /** Matcher over a stacked distinct-taxa table (the [[stackTaxa]] shape;
+    * the incremental path's accumulated taxa state is one). The ROW-COUNT
+    * GUARD: while the table has at most `maxDriverRows` rows, the
+    * dimension-sized dictionary/scoring passes run on the driver via
+    * LocalMatcher — one collect instead of ~12 small jobs — and the rows
+    * come back as Left, so a caller can keep building dictionaries on
+    * the driver; beyond it the distributed formulation runs over the
+    * same table (the corpus is never re-scanned) and its persisted output
+    * comes back as Right. A non-positive guard forces the distributed
+    * arm. Both arms are asserted equal in KgPipelineSpec.
+    */
+  def matchStacked(taxa: DataFrame, wdSparqlRows: Seq[Seq[String]],
+      lineageRows: Seq[Seq[String]], maxDriverRows: Long)
+      : Either[Seq[LocalMatcher.MatchedRow], DataFrame] = {
+    val spark = taxa.sparkSession
+    val base = taxa.select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
         col("TaxonRankName"), col("rowIdx"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out =
-      if (taxa.count() <= maxDriverRows) {
-        val rows = taxa.collect()
+      if (maxDriverRows > 0 && base.count() <= maxDriverRows) {
+        val rows = base.collect()
           .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
             r.getString(2), r.getString(3), r.getLong(4)))
           .sortBy(_.rowIdx)
-        matchedRowsToDf(spark,
-          LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
-      } else matchTaxaDistributed(records, wdSparqlRows, lineageRows, nDocs)
-    taxa.unpersist()
+        Left(LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
+      } else {
+        import org.apache.spark.sql.types.{StructField, StructType, StringType}
+        def rowsDf(rows: Seq[Seq[String]], cols: Seq[String]): DataFrame =
+          spark.createDataFrame(
+            spark.sparkContext.parallelize(
+              rows.map(org.apache.spark.sql.Row.fromSeq), 1),
+            StructType(cols.map(StructField(_, StringType, true))))
+        Right(matchDistributed(base,
+          rowsDf(wdSparqlRows, Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
+            "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
+            "iNat", "eppo", "WdName")),
+          rowsDf(lineageRows, Seq("WdID", "WdName", "kingdom", "phylum", "class",
+            "order", "family", "genus", "species"))))
+      }
+    base.unpersist() // folded into the materialized matcher output
     out
   }
 
-  /** Fully distributed matcher over the fixture dimension rows — the
-    * beyond-driver-memory arm of [[matchTaxaAdaptive]]: rebuild the
-    * dimension DataFrames from the same fixture rows and run the
-    * distributed formulation.
+  /** Fully distributed matcher: records → matched-taxa table
+    * (matcher.py:432-478). The independently implemented reference the
+    * specs hold the driver-local arm of [[matchStacked]] against.
     */
-  def matchTaxaDistributed(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], nDocs: Long): DataFrame = {
-    val spark = records.sparkSession
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val wdCols = Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
-      "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
-      "iNat", "eppo", "WdName")
-    val wdSchema = StructType(wdCols.map(StructField(_, StringType, true)))
-    val wd = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        wdSparqlRows.map(org.apache.spark.sql.Row.fromSeq), 1), wdSchema)
-    val linCols = Seq("WdID", "WdName", "kingdom", "phylum", "class",
-      "order", "family", "genus", "species")
-    val linSchema = StructType(linCols.map(StructField(_, StringType, true)))
-    val lin = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        lineageRows.map(org.apache.spark.sql.Row.fromSeq), 1), linSchema)
-    matchTaxa(records, wd, lin, nDocs)
-  }
+  def matchTaxa(records: DataFrame, wdSparql: DataFrame,
+      lineage: DataFrame): DataFrame =
+    matchDistributed(stackTaxa(records), wdSparql, lineage)
 
-  /** Full matcher pipeline: records → matched-taxa table (matcher.py:432-478).
-    *
-    * The stacked-dedup taxa table and the matcher output are
-    * dimension-sized (distinct taxa, not records) — they are persisted
-    * so the downstream branch joins and the four resolution broadcasts
-    * compute them once instead of re-deriving the whole upstream DAG per
-    * broadcast (the serial fraction that kills scaling efficiency).
+  /** The distributed passes over a distinct-taxa table. The
+    * rank-unpacked table and the matcher output are dimension-sized and
+    * persisted: the branch joins (initialMatch, secondaryMatch's fix/keep
+    * split) reference the taxa several times, and the O(k²) exists-filter
+    * of the rank unpack must run once. The output is materialized here,
+    * so every intermediate is released before returning.
     */
-  def matchTaxa(records: DataFrame, wdSparql: DataFrame, lineage: DataFrame,
-      nDocs: Long): DataFrame = {
-    val taxa = stackTaxa(records, nDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = matchStackedTaxa(taxa, wdSparql, lineage)
-    taxa.unpersist() // folded into the materialized matcher output
-    out
-  }
-
-  /** Distributed matcher over an ALREADY-STACKED distinct-taxa table —
-    * the incremental-maintenance entry point: the accumulated taxa
-    * state (TaxonId, TaxonName, TaxonPathName, TaxonRankName, rowIdx)
-    * IS a stacked table with global first-occurrence ordinals, so the
-    * corpus is never re-scanned to rebuild dictionaries. Accepts the
-    * 5-column base shape (ranks re-derived distributedly) or the full
-    * stackTaxa output.
-    */
-  def matchTaxaFromTaxa(taxa5: DataFrame, wdSparql: DataFrame,
+  private def matchDistributed(stacked: DataFrame, wdSparql: DataFrame,
       lineage: DataFrame): DataFrame = {
-    // persisted for the same reason matchTaxa persists its stacked
-    // taxa: the downstream branch joins (initialMatch, secondaryMatch's
-    // fix/keep split) reference this multiple times, and the O(k²)
-    // exists-filter in the rank unpack must run once, not per branch
-    val unpacked = unpackRanks(taxa5.select(col("TaxonId"), col("TaxonName"),
-        col("TaxonPathName"), col("TaxonRankName"), col("rowIdx")))
+    val taxa = unpackRanks(stacked)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = matchStackedTaxa(unpacked, wdSparql, lineage)
-    unpacked.unpersist()
-    out
-  }
-
-  private def matchStackedTaxa(taxa: DataFrame, wdSparql: DataFrame,
-      lineage: DataFrame): DataFrame = {
-    val prepped = prepWdSparql(wdSparql)
-    val (idMap, idMapWd) = idMaps(prepped)
-    val initial = initialMatch(taxa, idMap, idMapWd)
-    val out = secondaryMatch(initial, lineagePrep(lineage))
+    val (idMap, idMapWd) = idMaps(prepWdSparql(wdSparql))
+    val out = secondaryMatch(initialMatch(taxa, idMap, idMapWd), lineagePrep(lineage))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count() // materialize once
-    // the melted id maps are folded into `out` now — release them so a
-    // caller loop (incremental maintenance runs the matcher per
-    // micro-batch) does not accumulate storage blocks. A cache-evicted
-    // recompute of `out` would just rebuild them.
-    idMap.unpersist(); idMapWd.unpersist()
+    // folded into `out` now — release them so a caller loop (incremental
+    // maintenance runs the matcher per micro-batch) does not accumulate
+    // storage blocks. A cache-evicted recompute of `out` rebuilds them.
+    taxa.unpersist(); idMap.unpersist(); idMapWd.unpersist()
     out
   }
 }

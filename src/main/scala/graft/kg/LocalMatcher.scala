@@ -15,7 +15,7 @@ import scala.collection.mutable
   * (Link.matchTaxa) remains for vocabularies beyond driver memory, and
   * both are asserted equal in tests.
   *
-  * Used by both the engine (Link.matchTaxaCompact) and the golden
+  * Used by both the engine (Link.matchStacked) and the golden
   * oracle (Oracle.run) — the distributed matcher is the independently
   * implemented cross-check.
   */

@@ -14,7 +14,7 @@ import Model._
   * semantics (the reference's per-batch rdflib.Graph + cross-batch
   * first-seen sets, globi_kg_generator.py:78-81,122-126) become one
   * global dropDuplicates; inverse-relation augmentation (utils.py:84-100)
-  * is a broadcast join against the 24-entry inverse map.
+  * happens inline in the emission.
   *
   * Deviations from the reference, by design (documented for the parity
   * harness):
@@ -99,29 +99,52 @@ object Materialize {
         col("Mapped_Value").as("mv")), col("rowIdx")).as("v"))
       .select(col("kind"), col("key"), col("v.wd").as("wd"),
         col("v.mv").as("mv"))
-      // dimension-sized; each dict is broadcast twice (source + target
-      // probes) — persist so the aggregate is computed once
+      // dimension-sized and read several times (size guard, collects or
+      // join probes) — persist so the aggregate is computed once
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (both.filter(col("kind") === "id").select(col("key"), col("wd"), col("mv")),
       both.filter(col("kind") === "name").select(col("key"), col("wd"), col("mv")))
   }
 
+  /** The driver arm of [[wdMapDicts]]: the same dictionaries, built from
+    * the driver-local matcher's rows (pandas dict semantics,
+    * globi_kg_generator.py:88-110) into local tables, so no Spark job
+    * derives them.
+    */
+  def localWdMapDicts(spark: SparkSession, matched: Seq[LocalMatcher.MatchedRow])
+      : (DataFrame, DataFrame) = {
+    import spark.implicits._
+    def clean(s: String): String =
+      if (s == null) null else s.replace("Wikidata:", "").replace("\"", "")
+    val dictId = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
+    val dictName = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
+    matched.sortBy(_.rowIdx).foreach { m =>
+      val wd = clean(m.mappedIdWd)
+      if (wd != null && wd.nonEmpty) {
+        val mv = clean(m.mappedValue)
+        val tid = clean(m.taxonId); val tname = clean(m.taxonName)
+        if (tid != null && tid.nonEmpty) dictId(tid) = (wd, mv)
+        if (tname != null && tname.nonEmpty) dictName(tname) = (wd, mv)
+      }
+    }
+    def toDf(m: scala.collection.Map[String, (String, String)]) =
+      m.toSeq.map { case (k, (w, v)) => (k, w, v) }.toDF("key", "wd", "mv")
+    (toDf(dictId), toDf(dictName))
+  }
+
   /** Two-tier resolution (globi_kg_generator.py:184-209): raw id in the
     * id-dict, else raw name in the name-dict, else drop; then drop
-    * self-interactions. Returns the typed resolved-record Dataset.
+    * self-interactions. The join arm of [[globiTriplesFused]]; its
+    * row-count guard decides `broadcastDicts`. Dictionary-sized dicts
+    * broadcast; an entity space that scales with the corpus falls back
+    * to shuffle joins (salt with ops/Salting when the corpus plants hub
+    * keys).
     */
-  def resolve(records: DataFrame, dictId: DataFrame, dictName: DataFrame,
-      maxBroadcastRows: Long = 2000000L): Dataset[ResolvedRecord] = {
+  private def resolve(records: DataFrame, dictId: DataFrame, dictName: DataFrame,
+      broadcastDicts: Boolean): Dataset[ResolvedRecord] = {
     val spark = records.sparkSession
     import spark.implicits._
-    // row-count-guarded broadcast (same policy as matchTaxaAdaptive /
-    // canonicalizeTriples): dictionary-sized dicts broadcast; an entity
-    // space that scales with the corpus falls back to shuffle joins
-    // (salt with ops/Salting when the corpus plants hub keys). The
-    // counts are cheap — wdMapDicts persists both dicts.
-    val hintBroadcast =
-      dictId.count() + dictName.count() <= maxBroadcastRows
-    def h(df: DataFrame): DataFrame = if (hintBroadcast) broadcast(df) else df
+    def h(df: DataFrame): DataFrame = if (broadcastDicts) broadcast(df) else df
     def lookup(df: DataFrame, p: String): DataFrame = {
       val byId = dictId.select(col("key").as(s"_${p}k1"),
         struct(col("wd"), col("mv")).as(s"_${p}byId"))
@@ -260,12 +283,8 @@ object Materialize {
 
   /** All triples for one resolved record, deduplicated within the record
     * (the reference's per-batch rdflib.Graph set semantics cover the
-    * within-record case, e.g. referenceDoi == sourceDOI).
-    */
-  def emit(r: ResolvedRecord, v: TermVocab): Seq[Triple] =
-    emitTagged(r, v).map(_._1)
-
-  /** Emission with a sharing tag: triples whose subject is minted from
+    * within-record case, e.g. referenceDoi == sourceDOI), each with a
+    * sharing tag: triples whose subject is minted from
     * this record's recNum (inRec / SAMPLE-…-inRec / SEX-n-…) are
     * globally unique BY CONSTRUCTION once deduplicated within the
     * record — only entity-description triples (vocabulary entities,
@@ -374,7 +393,7 @@ object Materialize {
     * span order and the corpus contract has unique refs per doc); the
     * media-object description triples are shared.
     */
-  def mediaTriplesTagged(mediaMentions: DataFrame): DataFrame = {
+  private def mediaTriplesTagged(mediaMentions: DataFrame): DataFrame = {
     val rec = concat(lit(EMIBOX + "inRec"), col("recNum"))
     val m = concat(lit(EMIBOX), col("media_ref"))
     def tr(s: Column, p: Column, o: Column, isLit: Boolean, dt: String,
@@ -393,196 +412,119 @@ object Materialize {
     rows.select(explode(col("ts")).as("t")).select(col("t.*"))
   }
 
-  def mediaTriples(mediaMentions: DataFrame): DataFrame =
-    mediaTriplesTagged(mediaMentions).drop("shared")
-
-  /** Inverse-relation augmentation (utils.py:84-100): broadcast join on
-    * the 24-entry inverse map, IRI objects only.
-    */
-  def addInverses(triples: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val inv = inverseRelations.toSeq.toDF("pred", "invPred")
-    val inverses = triples.filter(!col("objIsLiteral"))
-      .join(broadcast(inv), Seq("pred"))
-      .select(col("obj").as("subj"), col("invPred").as("pred"),
-        col("subj").as("obj"), lit(false).as("objIsLiteral"),
-        lit("").as("objDatatype"))
-    triples.unionByName(inverses)
-  }
-
-  /** Fused resolution + emission: the two dictionaries are collected and
-    * broadcast as hash maps (exactly the reference's broadcast-dict
-    * design, globi_kg_generator.py:88-110) and one typed flatMap walks
-    * records → triples in a single pass — no resolution exchange at all.
+  /** The GloBI triple table: resolution + emission + set semantics, the
+    * one entry point every construction caller shares. One tagged core
+    * ([[taggedTriples]]) plus one split dedup ([[splitDedup]]); the
+    * incremental path calls the two parts itself, to anti-join the
+    * shared subset against the published table.
     *
-    * Use when the dictionaries fit executor memory (vocab-sized dims —
-    * the common case). For dictionaries beyond memory, use
-    * resolve() + globiTriples() whose broadcast joins degrade gracefully
-    * to (salted) shuffle joins.
+    * `maxDriverRows` is the same row-count guard the matcher takes:
+    * dictionaries of at most that many rows are collected and broadcast
+    * as hash maps (the reference's broadcast-dict design,
+    * globi_kg_generator.py:88-110) so one flatMap walks records →
+    * triples with no resolution exchange; larger ones resolve through
+    * the relational join. A non-positive guard forces the join arm.
     */
   def globiTriplesFused(records: DataFrame, dictId: DataFrame,
-      dictName: DataFrame, mediaMentions: Option[DataFrame] = None): DataFrame = {
-    def toMap(df: DataFrame): Map[String, (String, String)] =
-      df.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    globiTriplesFusedMaps(records, toMap(dictId), toMap(dictName), mediaMentions)
-  }
+      dictName: DataFrame, mediaMentions: Option[DataFrame] = None,
+      maxDriverRows: Long = MaxDriverRows): DataFrame =
+    // referenced twice by the split (unique/shared branches) — persist so
+    // the emission flatMap runs exactly once
+    splitDedup(taggedTriples(records, dictId, dictName, mediaMentions, maxDriverRows)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** pandas-dict semantics over the compact matcher output
-    * (globi_kg_generator.py:88-110, driver-side — matched rows are
-    * dimension-sized).
+  /** Tagged emission: (triple columns, shared) with media triples unioned
+    * in and no dedup applied. shared=true ⇒ the triple's subject is
+    * content-derived and may repeat across records; false ⇒ minted from
+    * this record's recNum, globally unique by construction. The
+    * incremental maintenance path consumes it directly (it anti-joins
+    * only the shared subset) and owns its persistence.
     */
-  def localWdMapDicts(matched: Seq[LocalMatcher.MatchedRow])
-      : (Map[String, (String, String)], Map[String, (String, String)]) = {
-    def clean(s: String): String =
-      if (s == null) null else s.replace("Wikidata:", "").replace("\"", "")
-    val dictId = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
-    val dictName = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
-    matched.sortBy(_.rowIdx).foreach { m =>
-      val wd = clean(m.mappedIdWd)
-      if (wd != null && wd.nonEmpty) {
-        val mv = clean(m.mappedValue)
-        val tid = clean(m.taxonId); val tname = clean(m.taxonName)
-        if (tid != null && tid.nonEmpty) dictId(tid) = (wd, mv)
-        if (tname != null && tname.nonEmpty) dictName(tname) = (wd, mv)
-      }
-    }
-    (dictId.toMap, dictName.toMap)
-  }
-
-  /** Fused emission keeping the sharing tag (shared=true ⇒ the triple's
-    * subject is content-derived and may repeat across records; false ⇒
-    * minted from this record's recNum, globally unique by construction).
-    * Consumers: globiTriplesFusedMaps (split dedup) and the incremental
-    * maintenance path (anti-join only the shared subset).
-    */
-  def globiTriplesFusedTagged(records: DataFrame,
-      idMap: Map[String, (String, String)],
-      nameMap: Map[String, (String, String)],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
+  private[kg] def taggedTriples(records: DataFrame, dictId: DataFrame,
+      dictName: DataFrame, mediaMentions: Option[DataFrame],
+      maxDriverRows: Long): DataFrame = {
     val spark = records.sparkSession
     import spark.implicits._
-    val bcId = spark.sparkContext.broadcast(idMap)
-    val bcName = spark.sparkContext.broadcast(nameMap)
     val bcVocab = spark.sparkContext.broadcast(termVocab())
-    val cols = Seq("doc_id", "recNum",
-      "sourceTaxonId", "sourceTaxonName", "targetTaxonId", "targetTaxonName",
-      "interactionTypeName", "interactionTypeId", "localityName",
-      "referenceDoi", "sourceDOI", "decimalLatitude", "decimalLongitude",
-      "sourceBodyPartName", "sourceBodyPartId", "sourceLifeStageName",
-      "sourceLifeStageId", "targetBodyPartName", "targetBodyPartId",
-      "targetLifeStageName", "targetLifeStageId", "sourceSexName",
-      "targetSexName")
-    val tagged = records.select(cols.map(col): _*).flatMap { r =>
-      def s(i: Int) = r.getString(i)
-      def resolveSide(id: String, name: String): Option[(String, String)] =
-        bcId.value.get(id).orElse(bcName.value.get(name)).map { case (wd, mv) =>
-          (wd, if (name != null && name.nonEmpty) name else mv)
+    // a function value, not a local def: a lifted def would drag the
+    // enclosing object into the task closure
+    val emitRows = (r: ResolvedRecord) => emitTagged(r, bcVocab.value).map {
+      case (t, sh) => (t.subj, t.pred, t.obj, t.objIsLiteral, t.objDatatype, sh)
+    }
+    // both dicts in one table: one job counts them, one collects them
+    val dicts = dictId.withColumn("byName", lit(false))
+      .unionByName(dictName.withColumn("byName", lit(true)))
+    val dictRows = dicts.count()
+    val tagged =
+      if (dictRows <= maxDriverRows) {
+        val (byName, byId) = dicts.collect().partition(_.getBoolean(3))
+        def toMap(rows: Array[org.apache.spark.sql.Row]) =
+          rows.map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+        val bcId = spark.sparkContext.broadcast(toMap(byId))
+        val bcName = spark.sparkContext.broadcast(toMap(byName))
+        val cols = Seq("doc_id", "recNum",
+          "sourceTaxonId", "sourceTaxonName", "targetTaxonId", "targetTaxonName",
+          "interactionTypeName", "interactionTypeId", "localityName",
+          "referenceDoi", "sourceDOI", "decimalLatitude", "decimalLongitude",
+          "sourceBodyPartName", "sourceBodyPartId", "sourceLifeStageName",
+          "sourceLifeStageId", "targetBodyPartName", "targetBodyPartId",
+          "targetLifeStageName", "targetLifeStageId", "sourceSexName",
+          "targetSexName")
+        records.select(cols.map(col): _*).flatMap { r =>
+          def s(i: Int) = r.getString(i)
+          // same semantics as resolve(): id hit wins, else name; the row
+          // name wins over the mapped value when present
+          def resolveSide(id: String, name: String): Option[(String, String)] =
+            bcId.value.get(id).orElse(bcName.value.get(name)).map { case (wd, mv) =>
+              (wd, if (name != null && name.nonEmpty) name else mv)
+            }
+          (resolveSide(s(2), s(3)), resolveSide(s(4), s(5))) match {
+            case (Some((sWd, sName)), Some((tWd, tName))) if sWd != tWd =>
+              emitRows(ResolvedRecord(s(0), r.getLong(1), sWd, sName, tWd, tName,
+                s(6), s(7), s(8), s(9), s(10), s(11), s(12), s(13), s(14), s(15),
+                s(16), s(17), s(18), s(19), s(20), s(21), s(22)))
+            case _ => Nil
+          }
         }
-      (resolveSide(s(2), s(3)), resolveSide(s(4), s(5))) match {
-        case (Some((sWd, sName)), Some((tWd, tName))) if sWd != tWd =>
-          emitTagged(ResolvedRecord(s(0), r.getLong(1), sWd, sName, tWd, tName,
-            s(6), s(7), s(8), s(9), s(10), s(11), s(12), s(13), s(14), s(15),
-            s(16), s(17), s(18), s(19), s(20), s(21), s(22)), bcVocab.value)
-            .map(x => (x._1.subj, x._1.pred, x._1.obj, x._1.objIsLiteral,
-              x._1.objDatatype, x._2))
-        case _ => Nil
-      }
-    }.toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
-    mediaMentions
-      .map(m => tagged.unionByName(mediaTriplesTagged(m)))
-      .getOrElse(tagged)
+      } else
+        resolve(records, dictId, dictName, broadcastDicts = dictRows <= MaxDriverRows)
+          .flatMap(emitRows)
+    val df = tagged.toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
+    mediaMentions.map(m => df.unionByName(mediaTriplesTagged(m))).getOrElse(df)
   }
 
-  def globiTriplesFusedMaps(records: DataFrame,
-      idMap: Map[String, (String, String)],
-      nameMap: Map[String, (String, String)],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    // referenced twice below (unique/shared branches) — persist so the
-    // emission flatMap runs exactly once
-    val withMedia = globiTriplesFusedTagged(records, idMap, nameMap, mediaMentions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // split dedup: record-scoped triples are already distinct within the
-    // record and globally unique by the recNum-minted subjects; only the
-    // shared entity-description subset goes through the global distinct
-    // (tiny distinct domain → collapses map-side, near-zero shuffle).
-    // Inverses are already inline (emitTagged).
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = withMedia.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = withMedia.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
-    uniquePart.unionByName(sharedPart)
-  }
+  private val TripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
 
-  /** Tagged emission over resolved records (the distributed-dictionary
-    * twin of globiTriplesFusedTagged): (triple columns, shared) with
-    * media triples unioned in, no dedup applied — callers split on the
-    * tag.
+  /** Split dedup over a tagged emission: record-scoped triples are
+    * already distinct within the record and globally unique by their
+    * recNum-minted subjects, so only the shared entity-description subset
+    * goes through a global distinct (tiny distinct domain → collapses
+    * map-side, near-zero shuffle). `newShared` post-filters that subset
+    * (the incremental path drops triples already published). Inverses
+    * are already inline (emitTagged).
     */
-  def globiTriplesSplitTagged(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val spark = resolved.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(termVocab())
-    val tagged0 = resolved.flatMap(r => emitTagged(r, bc.value)
-        .map(x => (x._1.subj, x._1.pred, x._1.obj, x._1.objIsLiteral,
-          x._1.objDatatype, x._2)))
-      .toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
-    mediaMentions
-      .map(m => tagged0.unionByName(mediaTriplesTagged(m)))
-      .getOrElse(tagged0)
+  private[kg] def splitDedup(tagged: DataFrame,
+      newShared: DataFrame => DataFrame = identity): DataFrame = {
+    val part = (sh: Boolean) =>
+      tagged.filter(col("shared") === sh).select(TripleCols.map(col): _*)
+    part(false).unionByName(newShared(part(true).dropDuplicates(TripleCols)))
   }
 
-  /** Distributed-dictionary emission with the SAME split dedup as the
-    * fused path: record-scoped triples (recNum-minted subjects, unique
-    * by construction) bypass the global distinct; only the shared
-    * entity-description subset — a tiny domain that collapses map-side —
-    * shuffles. This is the beyond-driver-memory companion to
-    * globiTriplesFusedMaps: resolve() upstream does the dictionary
-    * joins (broadcast, degrading to shuffle joins past executor
-    * memory), and the emission never re-shuffles the corpus.
+  /** Graph layout: range-partition by (pred, subj) so each predicate's
+    * files are few and subject-clustered; written partitioned by the
+    * filename-safe `predicate` column it adds, i.e.
+    * triples/predicate=<p>/part-*.parquet (north rule).
     */
-  def globiTriplesSplit(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val tagged = globiTriplesSplitTagged(resolved, mediaMentions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = tagged.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = tagged.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
-    uniquePart.unionByName(sharedPart)
-  }
-
-  /** Full GloBI triple materialization: resolved records → deduplicated
-    * triple table.
-    */
-  def globiTriples(resolved: Dataset[ResolvedRecord],
-      mediaMentions: Option[DataFrame] = None): DataFrame = {
-    val spark = resolved.sparkSession
-    import spark.implicits._
-    val vocab = termVocab()
-    val bc = spark.sparkContext.broadcast(vocab)
-    // emit() includes inverse augmentation inline; media triples carry
-    // no inverse-mapped predicates
-    val base = resolved.flatMap(r => emit(r, bc.value)).toDF()
-    val withMedia = mediaMentions.map(m => base.unionByName(mediaTriples(m)))
-      .getOrElse(base)
-    withMedia
-      .dropDuplicates("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-  }
-
-  /** Graph write: range-partition by (pred, subj) so each predicate's
-    * files are few and subject-clustered, lay out as
-    * triples/predicate=<p>/part-*.parquet (north rule). The predicate
-    * gets a filename-safe encoding.
-    */
-  def writeTriples(triples: DataFrame, outDir: String, numPartitions: Int = 32): Unit = {
+  def predicateLayout(triples: DataFrame, numPartitions: Int): DataFrame =
     triples
       .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
       .repartitionByRange(numPartitions, col("predicate"), col("subj"))
       .sortWithinPartitions(col("predicate"), col("subj"))
+
+  /** Graph write of [[predicateLayout]] as plain parquet. */
+  def writeTriples(triples: DataFrame, outDir: String, numPartitions: Int = 32): Unit =
+    predicateLayout(triples, numPartitions)
       .write.mode("overwrite")
       .partitionBy("predicate")
       .parquet(outDir)
-  }
 }

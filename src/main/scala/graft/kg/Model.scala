@@ -12,6 +12,13 @@ package graft.kg
   */
 object Model {
 
+  /** Default row budget for driver-side or broadcast dictionaries: the
+    * matcher's distinct-taxa table, the resolution dictionaries and the
+    * canonical mapping each take the driver/broadcast arm at or below
+    * it, the distributed arm above it.
+    */
+  val MaxDriverRows: Long = 2000000L
+
   case class Span(kind: String, text: String, media_ref: String, offset: Int)
   case class Document(doc_id: String, spans: Seq[Span])
 

@@ -194,7 +194,7 @@ object Oracle {
             r.targetBodyPartName, r.targetBodyPartId,
             r.targetLifeStageName, r.targetLifeStageId,
             r.sourceSexName, r.targetSexName)
-          out ++= Materialize.emit(rr, vocab)
+          out ++= Materialize.emitTagged(rr, vocab).map(_._1)
         case _ => ()
       }
       // media spans (north-rule extension)
@@ -220,8 +220,11 @@ object Oracle {
   }
 
   /** Convenience: run the oracle over the deterministic corpus at size n. */
-  def runCorpus(nDocs: Int): Set[Triple] = {
-    val records = (0 until nDocs).map(i => DataGen.record(i.toLong))
+  def runCorpus(nDocs: Int): Set[Triple] = runDocs(0L until nDocs)
+
+  /** The oracle over the deterministic corpus documents with these ids. */
+  def runDocs(ids: Seq[Long]): Set[Triple] = {
+    val records = ids.map(DataGen.record)
     val wdRows = (0 until DataGen.K).filter(DataGen.inWdMapping).map { k =>
       val ext = (1 to 15).map(c =>
         if ((k + c) % 3 == 0) null else s"${k * 100 + c}")

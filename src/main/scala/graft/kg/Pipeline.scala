@@ -90,39 +90,38 @@ object Pipeline {
     import graft.sources.SnapshotTable
     val snap = snapshot.getOrElse(SnapshotTable.currentSnapshot(docsTableDir))
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
-    val nDocs = docs.count()
-    val fp = s"table:$docsTableDir@$snap:docs:$nDocs:v1"
-    val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
+    val fp = s"table:$docsTableDir@$snap:docs:${docs.count()}:v1"
+    val (stages, triples, canonical) = buildStages(spark, outRoot, fp, docs)
+    val graphSnap = SnapshotTable.write(
+      Materialize.predicateLayout(canonical, partitions),
+      graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
+    (RunReport(stages, triples.count(), canonical.count()), graphSnap)
+  }
 
+  /** The construction chain [[run]] and [[runFromTable]] share:
+    * extract → link → triples → canonical, each a checkpointed
+    * [[stage]]. Returns the stage results and the raw and canonical
+    * triple tables.
+    */
+  private def buildStages(spark: SparkSession, outRoot: String, fp: String,
+      docs: DataFrame): (Seq[StageResult], DataFrame, DataFrame) = {
     val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
       Extract.records(docs)
     }
-    stages += s1
     val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
-      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, nDocs)
+      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows, DataGen.lineageRows)
     }
-    stages += s2
     val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
       val (dictId, dictName) = Materialize.wdMapDicts(matched)
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
       Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
     }
-    stages += s3
     val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
       val edges = Canonical.equivalenceEdges(matched)
       val mapping = Canonical.connectedComponents(edges)
       Canonical.canonicalizeTriples(triples, mapping)
     }
-    stages += s4
-
-    val graphSnap = SnapshotTable.write(
-      canonical
-        .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
-        .repartitionByRange(partitions, col("predicate"), col("subj"))
-        .sortWithinPartitions(col("predicate"), col("subj")),
-      graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
-    (RunReport(stages.toSeq, triples.count(), canonical.count()), graphSnap)
+    (Seq(s1, s2, s3, s4), triples, canonical)
   }
 
   case class IncrementalResult(processedDocsSnapshot: Long,
@@ -188,7 +187,7 @@ object Pipeline {
     */
   def incrementalCanonicalFromTable(spark: SparkSession, docsTableDir: String,
       rawGraphTableDir: String, canonicalTableDir: String,
-      maxDriverRows: Long = 2000000L,
+      maxDriverRows: Long = MaxDriverRows,
       failpoint: String => Unit = _ => ()): IncrementalResult = {
     import graft.sources.SnapshotTable
     import spark.implicits._
@@ -217,21 +216,9 @@ object Pipeline {
     // common path: one matcher run per micro-batch, not two); derived
     // from the persisted state only on the repair path where the raw
     // layer noop'd but the canonical table is behind
-    val matchedDf = rawMatched.getOrElse {
-      val taxaStateDir = s"$rawGraphTableDir-state/taxa"
-      val taxaDf = SnapshotTable.read(spark, taxaStateDir)
-        .select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-          col("TaxonRankName"), col("rowIdx"))
-      if (taxaDf.count() <= maxDriverRows) {
-        val taxa = taxaDf.collect()
-          .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getLong(4))).sortBy(_.rowIdx)
-        Link.matchedRowsToDf(spark,
-          LocalMatcher.matchTaxa(taxa.toSeq,
-            DataGen.wdSparqlRows, DataGen.lineageRows))
-      } else Link.matchTaxaFromTaxa(taxaDf,
-        DataGen.wdSparql(spark), DataGen.wdLineage(spark))
-    }
+    val matchedDf = rawMatched.getOrElse(Link.matchedDf(spark,
+      Link.matchStacked(SnapshotTable.read(spark, s"$rawGraphTableDir-state/taxa"),
+        DataGen.wdSparqlRows, DataGen.lineageRows, maxDriverRows)))
     val mappingDf = Canonical.connectedComponents(
       Canonical.equivalenceEdges(matchedDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -329,7 +316,7 @@ object Pipeline {
 
   def incrementalFromTable(spark: SparkSession, docsTableDir: String,
       rawGraphTableDir: String,
-      maxDriverRows: Long = 2000000L,
+      maxDriverRows: Long = MaxDriverRows,
       failpoint: String => Unit = _ => ()): IncrementalResult =
     incrementalFromTableImpl(spark, docsTableDir, rawGraphTableDir,
       maxDriverRows, failpoint, keepMatched = false)._1
@@ -344,7 +331,6 @@ object Pipeline {
       maxDriverRows: Long, failpoint: String => Unit,
       keepMatched: Boolean): (IncrementalResult, Option[DataFrame]) = {
     import graft.sources.SnapshotTable
-    import spark.implicits._
     val keyPrefix = "docs-snap-"
     val taxaStateDir = s"$rawGraphTableDir-state/taxa"
     val probesStateDir = s"$rawGraphTableDir-state/probes"
@@ -375,26 +361,14 @@ object Pipeline {
     val stateLost = lastProcessed > 0 &&
       (oldTaxaSnap.isEmpty || oldProbesSnap.isEmpty)
 
-    val taxaCols = Seq("TaxonId", "TaxonName", "TaxonPathName",
-      "TaxonRankName", "rowIdx")
-    def collectTaxa(df: DataFrame): Seq[LocalMatcher.TaxaRow] =
-      df.select(taxaCols.map(col): _*).collect()
-        .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-          r.getString(2), r.getString(3), r.getLong(4)))
-        .sortBy(_.rowIdx).toSeq
-
     // 1-2: merge delta taxa into the accumulated state, derive dicts.
-    // The taxa state is dimension-sized (DISTINCT mention 4-tuples), so
-    // the driver-local dict refinement applies — the same guarded
-    // assumption as Link.matchTaxaAdaptive.
     val delta = SnapshotTable.readDelta(spark, docsTableDir, lastProcessed,
       Some(docsSnap))
     val deltaRecords = Extract.records(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // base 2^40: rowIdx = recNum (source) / 2^40 + recNum (target) — the
-    // global sources-then-targets ordinal, append-stable
-    val deltaTaxa = Link.stackTaxa(deltaRecords, 1L << 40)
-      .select(taxaCols.map(col): _*)
+    // stackTaxa's ordinals are the global sources-then-targets order,
+    // append-stable
+    val deltaTaxa = Link.stackTaxa(deltaRecords)
     val oldTaxaDf = oldTaxaSnap.map(s =>
       SnapshotTable.read(spark, taxaStateDir, Some(s)))
     // full-corpus records, materialized at most once, only when needed
@@ -408,7 +382,7 @@ object Pipeline {
       fr
     }
     val mergedTaxaDf = (if (stateLost)
-      Link.stackTaxa(fullRecords, 1L << 40).select(taxaCols.map(col): _*)
+      Link.stackTaxa(fullRecords)
     else
       oldTaxaDf.map(_.unionByName(deltaTaxa)).getOrElse(deltaTaxa))
       .groupBy(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
@@ -416,52 +390,40 @@ object Pipeline {
       .agg(min(col("rowIdx")).as("rowIdx"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // dictionary derivation, ADAPTIVE (the same row-count guard policy
-    // as Link.matchTaxaAdaptive): while the distinct-taxa state fits
-    // the driver, the LocalMatcher refinement runs in one collect;
-    // beyond it the distributed matcher + relational dict build take
-    // over — compact == distributed is test-pinned, so the switch
-    // never changes the answer. Both produce (key, wd, mv) dict
-    // DataFrames; the compact path additionally yields the hash maps
-    // the fused emission broadcasts.
-    // persists created by the distributed branch (matcher output + the
-    // two dicts) are released after the final commit — a streaming
-    // micro-batch loop must not accumulate storage blocks per call.
-    // The FINAL matcher output is captured for the caller when
+    // dictionary derivation through the matcher's row-count guard
+    // (Link.matchStacked): the taxa state is dimension-sized (DISTINCT
+    // mention 4-tuples), so the driver-local arm normally runs and its
+    // dictionaries are built on the driver too (no Spark job per
+    // increment); past the guard the distributed matcher + relational
+    // dict build run over the same table. Matcher outputs the
+    // distributed arm persists are released after the final commit — a
+    // streaming micro-batch loop must not accumulate storage blocks per
+    // call. The FINAL matcher output is handed to the caller when
     // keepMatched (the canonical layer derives its equivalence mapping
     // from it, instead of re-running the matcher on identical input).
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var finalMatched: Option[DataFrame] = None
-    def deriveDicts(taxaDf: DataFrame, capture: Boolean): (DataFrame, DataFrame,
-        Option[(Map[String, (String, String)], Map[String, (String, String)])]) =
-      if (taxaDf.count() <= maxDriverRows) {
-        val rows = LocalMatcher.matchTaxa(collectTaxa(taxaDf),
-          DataGen.wdSparqlRows, DataGen.lineageRows)
-        if (capture && keepMatched)
-          finalMatched = Some(Link.matchedRowsToDf(spark, rows))
-        val (mi, mn) = Materialize.localWdMapDicts(rows)
-        def toDf(m: Map[String, (String, String)]) =
-          m.toSeq.map { case (k, (w, v)) => (k, w, v) }.toDF("key", "wd", "mv")
-        (toDf(mi), toDf(mn), Some((mi, mn)))
-      } else {
-        val matched = Link.matchTaxaFromTaxa(taxaDf,
-          DataGen.wdSparql(spark), DataGen.wdLineage(spark))
-        val (di, dn) = Materialize.wdMapDicts(matched)
-        if (capture && keepMatched) finalMatched = Some(matched)
-        else toRelease += matched
-        toRelease += di; toRelease += dn
-        (di, dn, None)
+    def deriveDicts(taxaDf: DataFrame): (DataFrame, DataFrame, DataFrame) =
+      Link.matchStacked(taxaDf, DataGen.wdSparqlRows, DataGen.lineageRows,
+        maxDriverRows) match {
+        case Left(rows) =>
+          val (di, dn) = Materialize.localWdMapDicts(spark, rows)
+          (Link.matchedRowsToDf(spark, rows), di, dn)
+        case Right(matched) =>
+          val (di, dn) = Materialize.wdMapDicts(matched)
+          (matched, di, dn)
       }
-    val (newIdDf, newNameDf, newMaps) = deriveDicts(mergedTaxaDf, capture = true)
+    val (newMatched, newIdDf, newNameDf) = deriveDicts(mergedTaxaDf)
+    if (!keepMatched) toRelease += newMatched
 
     // 3-4: stale-emission detection, fully DISTRIBUTED: resolve every
     // previously-seen probe under the previous and the final
     // dictionaries (the probes are corpus-scale and never leave the
     // cluster; dict joins broadcast via AQE while dimension-sized) and
     // look for any difference. Resolution semantics mirror
-    // Materialize.resolve: id-dict hit wins, else name-dict, else none.
+    // Materialize's: id-dict hit wins, else name-dict, else none.
     val needRebuild = stateLost || (graphSnap > 0 && lastProcessed > 0 && {
-      val (oldIdDf, oldNameDf, _) = deriveDicts(oldTaxaDf.get, capture = false)
+      val (oldMatched, oldIdDf, oldNameDf) = deriveDicts(oldTaxaDf.get)
+      toRelease += oldMatched
       def d(df: DataFrame, key: String, p: String) =
         df.select(col("key").as(key), col("wd").as(s"${p}_wd"),
           col("mv").as(s"${p}_mv"))
@@ -481,28 +443,17 @@ object Pipeline {
 
     val emitRecords = if (needRebuild) fullRecords else deltaRecords
     val mm = Extract.mediaMentions(emitRecords, DataGen.mediaMeta(spark))
-    val tagged = (newMaps match {
-      case Some((mi, mn)) =>
-        Materialize.globiTriplesFusedTagged(emitRecords, mi, mn, Some(mm))
-      case None =>
-        // beyond-driver dictionaries: distributed two-tier resolution +
-        // tagged split emission — no driver-side dictionary at all
-        Materialize.globiTriplesSplitTagged(
-          Materialize.resolve(emitRecords, newIdDf, newNameDf), Some(mm))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tagged = Materialize.taggedTriples(emitRecords, newIdDf, newNameDf,
+      Some(mm), maxDriverRows)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tripleCols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
-    val uniquePart = tagged.filter(!col("shared")).select(tripleCols.map(col): _*)
-    val sharedPart = tagged.filter(col("shared")).select(tripleCols.map(col): _*)
-      .dropDuplicates(tripleCols)
     val (outDf, mode) =
       if (needRebuild || graphSnap == 0)
-        (uniquePart.unionByName(sharedPart), if (needRebuild) "rebuild" else "append")
-      else {
-        val sharedNew = sharedPart.join(
+        (Materialize.splitDedup(tagged), if (needRebuild) "rebuild" else "append")
+      else
+        (Materialize.splitDedup(tagged, _.join(
           SnapshotTable.read(spark, rawGraphTableDir)
-            .select(tripleCols.map(col): _*), tripleCols, "left_anti")
-        (uniquePart.unionByName(sharedNew), "append")
-      }
+            .select(tripleCols.map(col): _*), tripleCols, "left_anti")), "append")
     val persisted = outDf
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val written = persisted.count()
@@ -553,60 +504,25 @@ object Pipeline {
     tagged.unpersist(); deltaRecords.unpersist(); persisted.unpersist()
     mergedTaxaDf.unpersist(); fullRecordsCache.foreach(_.unpersist())
     toRelease.foreach(_.unpersist())
-    (IncrementalResult(docsSnap, newGraphSnap, written, mode), finalMatched)
+    (IncrementalResult(docsSnap, newGraphSnap, written, mode),
+      if (keepMatched) Some(newMatched) else None)
   }
 
   /** Full KG construction over the deterministic corpus:
     * datagen → extract → link → materialize → canonicalize, all
-    * checkpointed under outRoot.
+    * checkpointed under outRoot. The final graph is the canonical stage
+    * output in the predicate-partitioned layout under 50_graph; raw
+    * triples remain available in the 30_triples stage parquet.
     */
   def run(spark: SparkSession, nDocs: Long, outRoot: String,
       partitions: Int = 32): RunReport = {
     val fp = s"corpus:$nDocs:v1"
-    val stages = scala.collection.mutable.ArrayBuffer[StageResult]()
-
     val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
       DataGen.corpus(spark, nDocs, partitions).toDF()
     }
-    stages += s0
-
-    val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
-      Extract.records(docs)
-    }
-    stages += s1
-
-    val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
-      // adaptive: driver-local refinement while the distinct-taxa table
-      // is dimension-sized, distributed matcher beyond that — the
-      // row-count guard replaces the caller-asserted assumption
-      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, nDocs)
-    }
-    stages += s2
-
-    val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
-      val (dictId, dictName) = Materialize.wdMapDicts(matched)
-      val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-      // fused broadcast-map path (dictionaries are dimension-sized);
-      // swap to resolve()+globiTriples() for beyond-memory dictionaries
-      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
-    }
-    stages += s3
-
-    val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
-      val edges = Canonical.equivalenceEdges(matched)
-      val mapping = Canonical.connectedComponents(edges)
-      Canonical.canonicalizeTriples(triples, mapping)
-    }
-    stages += s4
-
-    // final graph layout: predicate-partitioned, range-partitioned files
-    // of the CANONICAL stage output (the documented dataflow: extract →
-    // link → materialize → canonicalize → write; raw triples remain
-    // available in the 30_triples stage parquet)
+    val (stages, triples, canonical) = buildStages(spark, outRoot, fp, docs)
     Materialize.writeTriples(canonical, s"$outRoot/50_graph",
       numPartitions = partitions)
-
-    RunReport(stages.toSeq, triples.count(), canonical.count())
+    RunReport(s0 +: stages, triples.count(), canonical.count())
   }
 }

@@ -162,10 +162,10 @@ object Trydb {
     // (sosa:isSampleOf, sosa:isFeatureOfInterestOf, dcterms:isPartOf,
     // sosa:hasResult — rdf:type, qudt:hasUnit and emi:inTaxon have no
     // inverse entry), so their inverses ride the same array under the
-    // same guards. The former Materialize.addInverses pass referenced
-    // the emission output twice (base ∪ inverses), executing the whole
+    // same guards. A separate inverse pass (base ∪ inverses) would
+    // reference the emission output twice, executing the whole
     // datagen → match → emission subtree twice per action; TrydbSpec and
-    // the kg_trydb_triples oracle pin the result set unchanged.
+    // the kg_trydb_triples oracle pin the result set.
     val ts = array(
       tr(lit(true), sample, RDF_TYPE, lit(SOSA + "Sample"), false, ""),
       tr(lit(true), sample, RDFS_LABEL, col("AccSpeciesName"), true, XSD_STRING),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg._
-import graft.ops.Pca
+import graft.ops.{Par, Pca}
 
 /** Case-study analytic workload over the REAL materialized triple
   * table, plus the forced-distributed flagship pipeline.
@@ -19,8 +19,9 @@ import graft.ops.Pca
   * kg_pipeline_triples_dist is the BEYOND-DRIVER-MEMORY production
   * path, forced: `Link.matchTaxaAdaptive(..., maxDriverRows = 0)` takes
   * the fully distributed matcher (matcher.py:432-478 re-expressed as
-  * broadcast joins + scored disambiguation), then distributed two-tier
-  * resolution + emission (`Materialize.resolve` + `globiTriples`). It is
+  * broadcast joins + scored disambiguation), then
+  * `Materialize.globiTriplesFused(..., maxDriverRows = 0)` takes the
+  * relational two-tier resolution join before the emission. It is
   * hash-gated against the SAME independent SQL re-derivation as
   * kg_pipeline_triples — whose dictionary side-channel is written by
   * the driver-local matcher — so a green driver row certifies
@@ -156,7 +157,7 @@ object CaseStudyQueries {
     // edge build consume different upstreams (bucketed triple table vs
     // the records-derived taxon paths) — run them concurrently (guide
     // §2.6); within the chain order is preserved
-    Materialized.inParallel(
+    Par.run(
       "graph" -> (() => { organismEdges(s, dir); organismTriangles(s, dir); () }),
       "taxonomy" -> (() => { taxonomyEdges(s, dir); () }))
   }
@@ -167,13 +168,12 @@ object CaseStudyQueries {
       // the memoized compact-path build also writes the matched
       // side-channel the oracle derives its dictionaries from
       val (records, _) = Materialized.recordsAndMatched(s, dir)
-      val n = KgQueries.nDocsFor(dir)
       val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, n, maxDriverRows = 0L)
+        DataGen.lineageRows, maxDriverRows = 0L)
       val (dictId, dictName) = Materialize.wdMapDicts(matched)
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(s))
-      Materialize.globiTriplesSplit(
-        Materialize.resolve(records, dictId, dictName), Some(mm))
+      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm),
+        maxDriverRows = 0L)
     }),
 
     // CS3: top-20 organisms by interaction degree (both interaction
@@ -1167,7 +1167,7 @@ object CaseStudyQueries {
   val oracle: Map[String, String] = Map(
     // identical independent re-derivation — the engine side differs
     // (distributed matcher + distributed resolve), the truth does not
-    "kg_pipeline_triples_dist" -> PipelineOracles.globiTriples,
+    "kg_pipeline_triples_dist" -> PipelineOracles.pipelineTriples,
 
     "kg_cs_top_degree" ->
       s"""WITH g AS (SELECT * FROM $g),

@@ -162,7 +162,7 @@ object PipelineOracles {
         WHEN 5 THEN 'https://www.wikidata.org/entity/Q' || (1000+$k)
         ELSE 'ĜLOBI:' || $k END"""
 
-  val globiTriples: String = s"""
+  val pipelineTriples: String = s"""
     WITH m0 AS (
       SELECT * FROM '${Materialized.SideDir}/matched_n*/*.parquet'
       WHERE n_docs = $nDocs),
@@ -347,6 +347,6 @@ object PipelineOracles {
 
   val oracle: Map[String, String] = Map(
     "kg_trydb_triples" -> trydbTriples,
-    "kg_pipeline_triples" -> globiTriples,
+    "kg_pipeline_triples" -> pipelineTriples,
     "kg_pipeline_canonical" -> pipelineCanonical)
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Sampling, Similarity, TextOps}
+import graft.ops.{Dedup, Par, Sampling, Similarity, TextOps}
 
 /** Training-data pipeline operators as verifiable queries: text analysis,
   * deduplication (exact / MinHash-LSH / token-Jaccard / SimHash /
@@ -56,7 +56,7 @@ object PipelineQueries {
     // commit/manifest work, and overlapping them fills both gaps —
     // the sequential build paid every fixture's driver segment with
     // all executors idle.
-    Materialized.inParallel(
+    Par.run(
       "lsh" -> (() => { verifiedLshPairs(s, dir); lshComponents(s, dir); () }),
       "merged" -> (() => { mergedDocsTable(s, dir); () }),
       "stats" -> (() => { statsDocsTable(s, dir); () }),
@@ -82,7 +82,7 @@ object PipelineQueries {
     // in-order ingest contract) but the families build concurrently
     // (guide §2.6), overlapping one family's driver-side commit
     // segments with the other's executor jobs
-    Materialized.inParallel(
+    Par.run(
       "incLsh" -> (() => { incLshState(s, dir); () }),
       "incCos" -> (() => { incCosState(s, dir); () }))
   }

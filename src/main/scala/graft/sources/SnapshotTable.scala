@@ -1452,8 +1452,16 @@ object SnapshotTable {
       .getOrElse(throw new IllegalStateException(s"corrupt ref file $p"))
   }
 
-  def dropRef(dir: String, name: String): Unit =
-    Files.deleteIfExists(refPath(dir, name))
+  /** Drop ref `name` together with the `<name>.lock` file updateRef
+    * leaves beside it, under the same per-ref monitor.
+    */
+  def dropRef(dir: String, name: String): Unit = {
+    val p = refPath(dir, name)
+    refLocks.computeIfAbsent(p.toString, _ => new Object).synchronized {
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s"$name.lock"))
+    }
+  }
 
   def listRefs(dir: String): Seq[(String, Long)] = {
     val d = Paths.get(dir, "metadata", "refs")

@@ -28,12 +28,10 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val records = graft.kg.Extract.records(batch)
-        val matched = graft.kg.Link.matchTaxa(records,
-          graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark),
-          nDocs = 1L << 40)
+        val matched = graft.kg.Link.matchTaxaAdaptive(records,
+          graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows)
         val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-        val resolved = graft.kg.Materialize.resolve(records, dictId, dictName)
-        graft.kg.Materialize.globiTriples(resolved)
+        graft.kg.Materialize.globiTriplesFused(records, dictId, dictName)
           .write.mode("append").parquet(outDir)
         ()
       }

@@ -196,6 +196,18 @@ class BgpSpec extends AnyFunSuite {
     assert(got === Array("b"))
   }
 
+  test("FILTER is matched as a whole keyword, not a name prefix") {
+    // a `filter:` prefixed name is a term: the '<' after it opens an IRI,
+    // so the dot inside the IRI does not split the clause
+    val prefixes = Map("filter" -> "http://ex.org/f/", "filters" -> "http://ex.org/fs/")
+    assert(Bgp.parse("filter:x <http://ex.org/p> ?o", prefixes) ===
+      Seq(Pattern(C("http://ex.org/f/x"), C("http://ex.org/p"), V("o"))))
+    val (pats, _, fs) = Bgp.parseQuery(
+      "filters:a <http://ex.org/p> ?o . FILTER(?o != \"x\")", prefixes)
+    assert(pats === Seq(Pattern(C("http://ex.org/fs/a"), C("http://ex.org/p"), V("o"))))
+    assert(fs === Seq(Bgp.Cmp("o", "!=", C("x"))))
+  }
+
   test("unbound select variable fails loudly") {
     val ex = intercept[IllegalArgumentException] {
       Bgp.query(triples, "?a emi:hasSource ?b", Seq("zzz"))

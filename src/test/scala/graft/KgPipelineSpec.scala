@@ -15,15 +15,18 @@ class KgPipelineSpec extends AnyFunSuite {
 
   val N = 240
 
+  /** Distributed matcher + the emission's relational resolution arm
+    * (guard forced to 0): no driver-side dictionary anywhere.
+    */
   def engineTriples(partitions: Int): Set[Model.Triple] = {
     val docs = DataGen.corpus(spark, N, partitions).toDF()
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
-    val resolved = Materialize.resolve(records, dictId, dictName)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-    Materialize.globiTriples(resolved, Some(mm))
+    Materialize.globiTriplesFused(records, dictId, dictName, Some(mm),
+      maxDriverRows = 0)
       .as[Model.Triple].collect().toSet
   }
 
@@ -52,7 +55,7 @@ class KgPipelineSpec extends AnyFunSuite {
     val docs = DataGen.corpus(spark, N, 4).toDF()
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val fused = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -63,22 +66,21 @@ class KgPipelineSpec extends AnyFunSuite {
   test("compact (driver-local) matcher path equals the distributed path") {
     val docs = DataGen.corpus(spark, N, 4).toDF()
     val records = Extract.records(docs)
-    val matched = Link.matchTaxaCompact(records, DataGen.wdSparqlRows,
-      DataGen.lineageRows, N)
-    val (idMap, nameMap) = Materialize.localWdMapDicts(matched)
+    // the shipped calls end to end: driver-local matcher arm, map arm
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows)
+    val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-    val compact = Materialize.globiTriplesFusedMaps(records, idMap, nameMap, Some(mm))
+    val compact = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
       .as[Model.Triple].collect().toSet
     assert(compact == engineSet)
     // and the matched rows themselves agree with the distributed matcher
-    val distributed = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
-      .select("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
-        "Match_Status", "rowIdx")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4), r.getLong(5))).toSet
-    val local = matched.map(m => (m.taxonId, m.taxonName, m.mappedValue,
-      m.mappedIdWd, m.status, m.rowIdx)).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
+        "Match_Status", "rowIdx").collect().map(_.toSeq).toSet
+    val local = rows(matched)
+    val distributed = rows(Link.matchTaxa(records, DataGen.wdSparql(spark),
+      DataGen.wdLineage(spark)))
     assert(local == distributed,
       s"only-local=${(local -- distributed).take(3)} " +
         s"only-dist=${(distributed -- local).take(3)}")
@@ -90,9 +92,9 @@ class KgPipelineSpec extends AnyFunSuite {
       df.select("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
         "Match_Status", "rowIdx").collect().map(_.toSeq).toSet
     val compact = rows(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-      DataGen.lineageRows, N)) // default guard → driver-local path
+      DataGen.lineageRows)) // default guard → driver-local path
     val distributed = rows(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-      DataGen.lineageRows, N, maxDriverRows = 0)) // force distributed
+      DataGen.lineageRows, maxDriverRows = 0)) // force distributed
     assert(compact == distributed,
       s"only-compact=${(compact -- distributed).take(3)} " +
         s"only-dist=${(distributed -- compact).take(3)}")
@@ -101,12 +103,32 @@ class KgPipelineSpec extends AnyFunSuite {
   test("matcher covers the status lattice") {
     val records = Extract.records(DataGen.corpus(spark, N, 4).toDF())
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), N)
+      DataGen.wdLineage(spark))
     val statuses = matched.select("Match_Status").distinct()
       .as[String].collect().toSet
     assert(statuses.contains("NAME-MATCH-YES"))
     assert(statuses.contains("ID-MATCHED-BY-NAME-direct"))
     assert(statuses.contains("ID-MATCHED-BY-NAME-DUPL-duplicate"))
+  }
+
+  test("table build equals the oracle when document ids have a gap") {
+    // target mentions must order after every source mention whatever the
+    // record numbers are: an ordinal base of count(docs) interleaves the
+    // two sides once the ids are not exactly 0..count-1, and pandas'
+    // last-wins dictionaries then pick different winners
+    val ids = (0L until 200L) ++ (3000L until 3150L)
+    val root = java.nio.file.Files.createTempDirectory("kggap").toString
+    graft.sources.SnapshotTable.write(
+      spark.createDataset(ids.map(DataGen.document)).toDF(), s"$root/docs")
+    Pipeline.runFromTable(spark, s"$root/docs", s"$root/out", s"$root/graph",
+      partitions = 4)
+    val engine = spark.read.parquet(s"$root/out/30_triples/data")
+      .as[Model.Triple].collect().toSet
+    val oracle = Oracle.runDocs(ids)
+    val show = (s: Set[Model.Triple]) => s.take(3).mkString("\n  ", "\n  ", "")
+    assert(engine == oracle,
+      s"\nmissing=${(oracle -- engine).size}${show(oracle -- engine)}" +
+        s"\nextra=${(engine -- oracle).size}${show(engine -- oracle)}")
   }
 
   test("pipeline resume skips completed stages idempotently") {

@@ -20,7 +20,7 @@ import graft.queries.PipelineOracles
   */
 class OracleFixtureGuardSpec extends AnyFunSuite {
 
-  val sql: String = PipelineOracles.globiTriples
+  val sql: String = PipelineOracles.pipelineTriples
 
   test("noise-list sizes match the oracle SQL's index arithmetic") {
     // (i%12) for body parts + sex, ((i+1)%8)/((i+2)%8) for life stages

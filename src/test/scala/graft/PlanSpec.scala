@@ -65,10 +65,12 @@ class PlanSpec extends AnyFunSuite {
     val docs = graft.kg.DataGen.corpus(spark, 50, 2).toDF()
     val records = graft.kg.Extract.records(docs)
     val matched = graft.kg.Link.matchTaxa(records,
-      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark), 50)
+      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark))
     val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-    val resolved = graft.kg.Materialize.resolve(records, dictId, dictName)
-    val plan = planOf(resolved.toDF())
+    // the emission's relational resolution arm (guard forced to 0)
+    val triples = graft.kg.Materialize.globiTriplesFused(records, dictId, dictName,
+      maxDriverRows = 0)
+    val plan = planOf(triples)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), plan)
   }

@@ -86,6 +86,10 @@ class SnapshotTableSpec extends AnyFunSuite {
     SnapshotTable.dropRef(dir, "v1.0")
     val (expired2, _) = SnapshotTable.expireSnapshots(spark, dir, keepLast = 1)
     assert(expired2.contains(s1))
+    // dropping the CAS-updated branch leaves no ref file and no lock file
+    SnapshotTable.dropRef(dir, "main")
+    val refsDir = new java.io.File(s"$dir/metadata/refs")
+    assert(refsDir.list().isEmpty, refsDir.list().mkString(", "))
     // refs to unretained snapshots refuse at create time
     intercept[IllegalArgumentException] {
       SnapshotTable.createRef(dir, "stale", s1)
@@ -198,7 +202,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // full rebuild over the complete corpus
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -229,7 +233,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // full canonical rebuild over the complete corpus
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -404,7 +408,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val got = SnapshotTable.read(spark, graphDir).as[Model.Triple].collect().toSet
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 80)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -462,7 +466,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val all = (0L until 60L).map(doc).toDF()
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 60)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -495,7 +499,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // raw table equals the full rebuild
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 100)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -570,7 +574,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val all = (inc1 ++ inc2).toDF()
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 20)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
@@ -624,7 +628,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // the truth the repaired pipeline must reach, whatever the crash
     val records = Extract.records(all)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 60)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))

@@ -60,7 +60,7 @@ class SourcesSpec extends AnyFunSuite {
     val docs = DataGen.corpus(spark, 120, 4).toDF()
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 120)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val triples = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))

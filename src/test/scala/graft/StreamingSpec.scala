@@ -22,10 +22,10 @@ class StreamingSpec extends AnyFunSuite {
     val docs = graft.kg.DataGen.corpus(spark, 120, 2).toDF()
     val records = graft.kg.Extract.records(docs)
     val matched = graft.kg.Link.matchTaxa(records,
-      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark), 1L << 40)
+      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark))
     val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
     val want = graft.kg.Materialize
-      .globiTriples(graft.kg.Materialize.resolve(records, dictId, dictName))
+      .globiTriplesFused(records, dictId, dictName, maxDriverRows = 0)
       .as[graft.kg.Model.Triple].collect().toSet
     assert(got == want, s"got=${got.size} want=${want.size}")
   }
@@ -361,7 +361,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = SnapshotTable.read(spark, graphDir).as[Model.Triple].collect().toSet
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
-      DataGen.wdLineage(spark), 90)
+      DataGen.wdLineage(spark))
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     val want = Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
