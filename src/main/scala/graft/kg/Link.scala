@@ -264,7 +264,7 @@ object Link {
     * `task of very large size (1189 KiB)` for exactly this), while
     * parallelize ships each task only its slice.
     */
-  def matchedRowsToDf(spark: org.apache.spark.sql.SparkSession,
+  private def matchedRowsToDf(spark: org.apache.spark.sql.SparkSession,
       rows: Seq[LocalMatcher.MatchedRow], slices: Int = 4): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
     val schema = StructType(Seq(
@@ -289,28 +289,22 @@ object Link {
   def matchTaxaAdaptive(records: DataFrame, wdSparqlRows: Seq[Seq[String]],
       lineageRows: Seq[Seq[String]], nDocs: Long = 0L,
       maxDriverRows: Long = MaxDriverRows): DataFrame =
-    matchedDf(records.sparkSession,
-      matchStacked(stackTaxa(records), wdSparqlRows, lineageRows, maxDriverRows))
-
-  /** Either arm's matcher output as the matched-taxa table. */
-  def matchedDf(spark: org.apache.spark.sql.SparkSession,
-      m: Either[Seq[LocalMatcher.MatchedRow], DataFrame]): DataFrame =
-    m.fold(matchedRowsToDf(spark, _), identity)
+    matchStacked(stackTaxa(records), wdSparqlRows, lineageRows, maxDriverRows)
 
   /** Matcher over a stacked distinct-taxa table (the [[stackTaxa]] shape;
     * the incremental path's accumulated taxa state is one). The ROW-COUNT
     * GUARD: while the table has at most `maxDriverRows` rows, the
     * dimension-sized dictionary/scoring passes run on the driver via
     * LocalMatcher — one collect instead of ~12 small jobs — and the rows
-    * come back as Left, so a caller can keep building dictionaries on
-    * the driver; beyond it the distributed formulation runs over the
-    * same table (the corpus is never re-scanned) and its persisted output
-    * comes back as Right. A non-positive guard forces the distributed
-    * arm. Both arms are asserted equal in KgPipelineSpec.
+    * come back as a parallelized table; beyond it the distributed
+    * formulation runs over the same table (the corpus is never
+    * re-scanned) and its output comes back persisted. A non-positive
+    * guard forces the distributed arm. Both arms are asserted equal in
+    * KgPipelineSpec. A caller loop unpersists the result (a no-op on
+    * the driver arm).
     */
   def matchStacked(taxa: DataFrame, wdSparqlRows: Seq[Seq[String]],
-      lineageRows: Seq[Seq[String]], maxDriverRows: Long)
-      : Either[Seq[LocalMatcher.MatchedRow], DataFrame] = {
+      lineageRows: Seq[Seq[String]], maxDriverRows: Long): DataFrame = {
     val spark = taxa.sparkSession
     val base = taxa.select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
         col("TaxonRankName"), col("rowIdx"))
@@ -321,7 +315,8 @@ object Link {
           .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
             r.getString(2), r.getString(3), r.getLong(4)))
           .sortBy(_.rowIdx)
-        Left(LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
+        matchedRowsToDf(spark,
+          LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
       } else {
         import org.apache.spark.sql.types.{StructField, StructType, StringType}
         def rowsDf(rows: Seq[Seq[String]], cols: Seq[String]): DataFrame =
@@ -329,12 +324,12 @@ object Link {
             spark.sparkContext.parallelize(
               rows.map(org.apache.spark.sql.Row.fromSeq), 1),
             StructType(cols.map(StructField(_, StringType, true))))
-        Right(matchDistributed(base,
+        matchDistributed(base,
           rowsDf(wdSparqlRows, Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
             "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
             "iNat", "eppo", "WdName")),
           rowsDf(lineageRows, Seq("WdID", "WdName", "kingdom", "phylum", "class",
-            "order", "family", "genus", "species"))))
+            "order", "family", "genus", "species")))
       }
     base.unpersist() // folded into the materialized matcher output
     out

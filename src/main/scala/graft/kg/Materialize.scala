@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model._
 
@@ -80,56 +80,17 @@ object Materialize {
         regexp_replace(regexp_replace(col(c), "Wikidata:", ""), "\"", "").as(c))
         :+ col("rowIdx"): _*)
       .filter(col("Mapped_ID_WD").isNotNull && col("Mapped_ID_WD") =!= "")
-    // ONE aggregation pass builds both dictionaries (explode the two
-    // key kinds, group by (kind, key)) — the per-dict formulation ran
-    // the matcher-output scan + a shuffle + a persist twice for the
-    // same max_by(rowIdx) semantics. Both dicts are cheap filters of
-    // the single cached aggregate; column names and last-wins
-    // tie-breaks are unchanged.
-    val both = cleaned
-      .select(explode(array(
-          struct(lit("id").as("kind"), col("TaxonId").as("key")),
-          struct(lit("name").as("kind"), col("TaxonName").as("key")))).as("k"),
-        col("Mapped_ID_WD"), col("Mapped_Value"), col("rowIdx"))
-      .select(col("k.kind").as("kind"), col("k.key").as("key"),
-        col("Mapped_ID_WD"), col("Mapped_Value"), col("rowIdx"))
-      .filter(col("key").isNotNull && col("key") =!= "")
-      .groupBy(col("kind"), col("key"))
+    // each dict is dimension-sized and read several times (size guard,
+    // collect or join probes), so it is persisted on its own — a caller
+    // loop releases it with unpersist
+    def dict(key: String): DataFrame = cleaned
+      .filter(col(key).isNotNull && col(key) =!= "")
+      .groupBy(col(key).as("key"))
       .agg(max_by(struct(col("Mapped_ID_WD").as("wd"),
         col("Mapped_Value").as("mv")), col("rowIdx")).as("v"))
-      .select(col("kind"), col("key"), col("v.wd").as("wd"),
-        col("v.mv").as("mv"))
-      // dimension-sized and read several times (size guard, collects or
-      // join probes) — persist so the aggregate is computed once
+      .select(col("key"), col("v.wd").as("wd"), col("v.mv").as("mv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (both.filter(col("kind") === "id").select(col("key"), col("wd"), col("mv")),
-      both.filter(col("kind") === "name").select(col("key"), col("wd"), col("mv")))
-  }
-
-  /** The driver arm of [[wdMapDicts]]: the same dictionaries, built from
-    * the driver-local matcher's rows (pandas dict semantics,
-    * globi_kg_generator.py:88-110) into local tables, so no Spark job
-    * derives them.
-    */
-  def localWdMapDicts(spark: SparkSession, matched: Seq[LocalMatcher.MatchedRow])
-      : (DataFrame, DataFrame) = {
-    import spark.implicits._
-    def clean(s: String): String =
-      if (s == null) null else s.replace("Wikidata:", "").replace("\"", "")
-    val dictId = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
-    val dictName = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
-    matched.sortBy(_.rowIdx).foreach { m =>
-      val wd = clean(m.mappedIdWd)
-      if (wd != null && wd.nonEmpty) {
-        val mv = clean(m.mappedValue)
-        val tid = clean(m.taxonId); val tname = clean(m.taxonName)
-        if (tid != null && tid.nonEmpty) dictId(tid) = (wd, mv)
-        if (tname != null && tname.nonEmpty) dictName(tname) = (wd, mv)
-      }
-    }
-    def toDf(m: scala.collection.Map[String, (String, String)]) =
-      m.toSeq.map { case (k, (w, v)) => (k, w, v) }.toDF("key", "wd", "mv")
-    (toDf(dictId), toDf(dictName))
+    (dict("TaxonId"), dict("TaxonName"))
   }
 
   /** Two-tier resolution (globi_kg_generator.py:184-209): raw id in the
@@ -414,9 +375,11 @@ object Materialize {
 
   /** The GloBI triple table: resolution + emission + set semantics, the
     * one entry point every construction caller shares. One tagged core
-    * ([[taggedTriples]]) plus one split dedup ([[splitDedup]]); the
-    * incremental path calls the two parts itself, to anti-join the
-    * shared subset against the published table.
+    * ([[taggedTriples]]) plus one split dedup ([[splitDedup]]). The
+    * persisted tagged table stays cached; a loop calls the two parts
+    * itself and releases it (the incremental path, which also anti-joins
+    * the shared subset against the published table, and the streaming
+    * micro-batch).
     *
     * `maxDriverRows` is the same row-count guard the matcher takes:
     * dictionaries of at most that many rows are collected and broadcast
@@ -436,11 +399,11 @@ object Materialize {
   /** Tagged emission: (triple columns, shared) with media triples unioned
     * in and no dedup applied. shared=true ⇒ the triple's subject is
     * content-derived and may repeat across records; false ⇒ minted from
-    * this record's recNum, globally unique by construction. The
-    * incremental maintenance path consumes it directly (it anti-joins
-    * only the shared subset) and owns its persistence.
+    * this record's recNum, globally unique by construction. Not
+    * persisted: a caller reading it twice (every [[splitDedup]] does)
+    * persists it and owns its release.
     */
-  private[kg] def taggedTriples(records: DataFrame, dictId: DataFrame,
+  private[graft] def taggedTriples(records: DataFrame, dictId: DataFrame,
       dictName: DataFrame, mediaMentions: Option[DataFrame],
       maxDriverRows: Long): DataFrame = {
     val spark = records.sparkSession
@@ -503,7 +466,7 @@ object Materialize {
     * (the incremental path drops triples already published). Inverses
     * are already inline (emitTagged).
     */
-  private[kg] def splitDedup(tagged: DataFrame,
+  private[graft] def splitDedup(tagged: DataFrame,
       newShared: DataFrame => DataFrame = identity): DataFrame = {
     val part = (sh: Boolean) =>
       tagged.filter(col("shared") === sh).select(TripleCols.map(col): _*)

@@ -76,6 +76,13 @@ object Pipeline {
   case class RunReport(stages: Seq[StageResult], triples: Long,
       canonicalTriples: Long)
 
+  /** Version suffix of the stage fingerprints; bumped whenever a stage's
+    * output changes for the same input, so a resume recomputes
+    * checkpoints written by older code. v2: target mentions carry the
+    * fixed 2^40 ordinal base in 20_link (it was the document count).
+    */
+  private val StageVersion = "v2"
+
   /** Table-native entry point (north rule: the pipeline runs OVER
     * Iceberg tables): read the interleaved document corpus from a
     * snapshot table (optionally at a pinned snapshot — a re-run against
@@ -90,7 +97,7 @@ object Pipeline {
     import graft.sources.SnapshotTable
     val snap = snapshot.getOrElse(SnapshotTable.currentSnapshot(docsTableDir))
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
-    val fp = s"table:$docsTableDir@$snap:docs:${docs.count()}:v1"
+    val fp = s"table:$docsTableDir@$snap:docs:${docs.count()}:$StageVersion"
     val (stages, triples, canonical) = buildStages(spark, outRoot, fp, docs)
     val graphSnap = SnapshotTable.write(
       Materialize.predicateLayout(canonical, partitions),
@@ -216,9 +223,9 @@ object Pipeline {
     // common path: one matcher run per micro-batch, not two); derived
     // from the persisted state only on the repair path where the raw
     // layer noop'd but the canonical table is behind
-    val matchedDf = rawMatched.getOrElse(Link.matchedDf(spark,
+    val matchedDf = rawMatched.getOrElse(
       Link.matchStacked(SnapshotTable.read(spark, s"$rawGraphTableDir-state/taxa"),
-        DataGen.wdSparqlRows, DataGen.lineageRows, maxDriverRows)))
+        DataGen.wdSparqlRows, DataGen.lineageRows, maxDriverRows))
     val mappingDf = Canonical.connectedComponents(
       Canonical.equivalenceEdges(matchedDf))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -391,27 +398,21 @@ object Pipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // dictionary derivation through the matcher's row-count guard
-    // (Link.matchStacked): the taxa state is dimension-sized (DISTINCT
-    // mention 4-tuples), so the driver-local arm normally runs and its
-    // dictionaries are built on the driver too (no Spark job per
-    // increment); past the guard the distributed matcher + relational
-    // dict build run over the same table. Matcher outputs the
-    // distributed arm persists are released after the final commit — a
-    // streaming micro-batch loop must not accumulate storage blocks per
+    // (Link.matchStacked; the taxa state is dimension-sized, DISTINCT
+    // mention 4-tuples) and the shared dict build. The dicts and the
+    // matcher outputs they persist are released after the final commit —
+    // a streaming micro-batch loop must not accumulate storage blocks per
     // call. The FINAL matcher output is handed to the caller when
     // keepMatched (the canonical layer derives its equivalence mapping
     // from it, instead of re-running the matcher on identical input).
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def deriveDicts(taxaDf: DataFrame): (DataFrame, DataFrame, DataFrame) =
-      Link.matchStacked(taxaDf, DataGen.wdSparqlRows, DataGen.lineageRows,
-        maxDriverRows) match {
-        case Left(rows) =>
-          val (di, dn) = Materialize.localWdMapDicts(spark, rows)
-          (Link.matchedRowsToDf(spark, rows), di, dn)
-        case Right(matched) =>
-          val (di, dn) = Materialize.wdMapDicts(matched)
-          (matched, di, dn)
-      }
+    def deriveDicts(taxaDf: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      val matched = Link.matchStacked(taxaDf, DataGen.wdSparqlRows,
+        DataGen.lineageRows, maxDriverRows)
+      val (di, dn) = Materialize.wdMapDicts(matched)
+      toRelease ++= Seq(di, dn)
+      (matched, di, dn)
+    }
     val (newMatched, newIdDf, newNameDf) = deriveDicts(mergedTaxaDf)
     if (!keepMatched) toRelease += newMatched
 
@@ -516,7 +517,7 @@ object Pipeline {
     */
   def run(spark: SparkSession, nDocs: Long, outRoot: String,
       partitions: Int = 32): RunReport = {
-    val fp = s"corpus:$nDocs:v1"
+    val fp = s"corpus:$nDocs:$StageVersion"
     val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
       DataGen.corpus(spark, nDocs, partitions).toDF()
     }

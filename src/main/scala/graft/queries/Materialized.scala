@@ -133,7 +133,7 @@ object Materialized {
       // matcher beyond (compact == distributed is pinned in
       // KgPipelineSpec)
       val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-        DataGen.lineageRows, n)
+        DataGen.lineageRows)
       matched
         .select(col("TaxonId"), col("TaxonName"), col("Mapped_Value"),
           col("Mapped_ID_WD"), col("Match_Status"), col("rowIdx"))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 /** Iceberg-layout document/triple tables — the sandbox substitute for
   * the Apache Iceberg runtime (this container has no Iceberg jars and
@@ -1407,14 +1407,30 @@ object SnapshotTable {
   private val refLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** Runs `body` under the per-ref monitor plus the OS file lock on the
+    * `<name>.lock` file beside the ref, so it excludes updaters in this
+    * JVM and in other processes.
+    */
+  private def withRefLock[A](p: Path, name: String)(body: => A): A =
+    refLocks.computeIfAbsent(p.toString, _ => new Object).synchronized {
+      val ch = java.nio.channels.FileChannel.open(p.resolveSibling(s"$name.lock"),
+        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try {
+        val lock = ch.lock()
+        try body finally lock.release()
+      } finally ch.close()
+    }
+
   /** Atomically repoint ref `name` to `snap`. `expectedFrom` makes the
     * move a compare-and-set (fast-forward discipline): the update
     * refuses when the ref no longer points where the caller audited.
-    * The expectedFrom check and the move are serialized under a per-ref
-    * monitor plus an OS file lock, so two racing updaters can no longer
-    * both observe the expected floor and silently last-write-win
-    * (ADVICE r05: the read-check + separate move was a TOCTOU weaker
-    * than the CAS the docstring advertises).
+    * The expectedFrom check and the move are serialized under
+    * [[withRefLock]], so two racing updaters can no longer both observe
+    * the expected floor and silently last-write-win (ADVICE r05: the
+    * read-check + separate move was a TOCTOU weaker than the CAS the
+    * docstring advertises). The ref's existence is re-checked under the
+    * lock: an updater that waited through a [[dropRef]] refuses instead
+    * of recreating the ref.
     */
   def updateRef(dir: String, name: String, snap: Long,
       expectedFrom: Option[Long] = None): Unit = {
@@ -1422,24 +1438,16 @@ object SnapshotTable {
       s"snapshot $snap is not a retained snapshot of $dir")
     val p = refPath(dir, name)
     require(Files.exists(p), s"ref '$name' does not exist in $dir")
-    val mon = refLocks.computeIfAbsent(p.toString, _ => new Object)
-    mon.synchronized {
-      val lockP = p.resolveSibling(s"$name.lock")
-      val ch = java.nio.channels.FileChannel.open(lockP,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try {
-          expectedFrom.foreach { e =>
-            val cur = refSnapshot(dir, name)
-            require(cur == e, s"ref '$name' moved: expected $e, found $cur")
-          }
-          val tmp = p.resolveSibling(s"$name.json.tmp-$snap")
-          Files.writeString(tmp, s"""{"snapshot":$snap}""")
-          Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally lock.release()
-      } finally ch.close()
+    withRefLock(p, name) {
+      require(Files.exists(p), s"ref '$name' was dropped from $dir")
+      expectedFrom.foreach { e =>
+        val cur = refSnapshot(dir, name)
+        require(cur == e, s"ref '$name' moved: expected $e, found $cur")
+      }
+      val tmp = p.resolveSibling(s"$name.json.tmp-$snap")
+      Files.writeString(tmp, s"""{"snapshot":$snap}""")
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
     }
   }
 
@@ -1453,11 +1461,16 @@ object SnapshotTable {
   }
 
   /** Drop ref `name` together with the `<name>.lock` file updateRef
-    * leaves beside it, under the same per-ref monitor.
+    * leaves beside it, both deleted while holding [[withRefLock]]. An
+    * updater already waiting on that lock then finds the ref gone and
+    * refuses. Updaters in other processes must not run while a ref is
+    * dropped and recreated under the same name: one still holding the
+    * unlinked lock file and one locking the new file would not exclude
+    * each other.
     */
   def dropRef(dir: String, name: String): Unit = {
     val p = refPath(dir, name)
-    refLocks.computeIfAbsent(p.toString, _ => new Object).synchronized {
+    if (Files.exists(p.getParent)) withRefLock(p, name) {
       Files.deleteIfExists(p)
       Files.deleteIfExists(p.resolveSibling(s"$name.lock"))
     }

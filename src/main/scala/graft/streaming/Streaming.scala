@@ -17,7 +17,9 @@ object Streaming {
   /** Incremental KG extraction: new document files → records → triples,
     * per-micro-batch dedup + append (the reference's per-batch rdflib
     * set + gzip append, globi_kg_generator.py:325-331). foreachBatch
-    * gives the batch-side joins against the static dictionaries.
+    * gives the batch-side joins against the static dictionaries. Every
+    * table a batch persists is released after its write, so a long
+    * stream holds no cached data per batch.
     */
   def extractionStream(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
@@ -27,13 +29,17 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val records = graft.kg.Extract.records(batch)
-        val matched = graft.kg.Link.matchTaxaAdaptive(records,
-          graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows)
-        val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-        graft.kg.Materialize.globiTriplesFused(records, dictId, dictName)
-          .write.mode("append").parquet(outDir)
-        ()
+        import graft.kg.{DataGen, Extract, Link, Materialize, Model}
+        val records = Extract.records(batch)
+        val matched = Link.matchTaxaAdaptive(records,
+          DataGen.wdSparqlRows, DataGen.lineageRows)
+        val (dictId, dictName) = Materialize.wdMapDicts(matched)
+        // globiTriplesFused's two parts, so the tagged table is released
+        val tagged = Materialize.taggedTriples(records, dictId, dictName, None,
+          Model.MaxDriverRows)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Materialize.splitDedup(tagged).write.mode("append").parquet(outDir)
+        Seq(tagged, dictId, dictName, matched).foreach(_.unpersist())
       }
       .start()
   }

@@ -51,7 +51,7 @@ object Probe6 {
     var matched: org.apache.spark.sql.DataFrame = null
     phase("match_compact") {
       matched = graft.kg.Link.matchTaxaAdaptive(records,
-        graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows, n)
+        graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows)
     }
     phase("matched_side_write") {
       matched.select(col("TaxonId"), col("TaxonName"), col("Mapped_Value"),

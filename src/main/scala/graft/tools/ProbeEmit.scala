@@ -24,7 +24,7 @@ object ProbeEmit {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     records.count()
     val matched = graft.kg.Link.matchTaxaAdaptive(records,
-      graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows, n)
+      graft.kg.DataGen.wdSparqlRows, graft.kg.DataGen.lineageRows)
     val dicts = graft.kg.Materialize.wdMapDicts(matched)
     val mm = graft.kg.Extract.mediaMentions(records, graft.kg.DataGen.mediaMeta(spark))
 

@@ -15,8 +15,12 @@ class StreamingSpec extends AnyFunSuite {
     // two "arrivals" of the corpus: files land, stream drains AvailableNow
     graft.kg.DataGen.corpus(spark, 120, 2).toDF()
       .write.mode("overwrite").parquet(docsDir)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = Streaming.extractionStream(spark, docsDir, outDir, cp)
     q.awaitTermination()
+    // every table a micro-batch persists is released after its write
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"micro-batches left cached RDDs: $leaked")
     val got = spark.read.parquet(outDir).as[graft.kg.Model.Triple].collect().toSet
     // batch equivalent (no media in the stream path)
     val docs = graft.kg.DataGen.corpus(spark, 120, 2).toDF()
@@ -346,6 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     val graphDir = s"$tmp/graph"; val cp = s"$tmp/cp"
     val docs = DataGen.corpus(spark, 90, 3).toDF()
     docs.write.mode("overwrite").parquet(inDir)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val q = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .writeStream
@@ -358,6 +363,9 @@ class StreamingSpec extends AnyFunSuite {
       }
       .start()
     q.awaitTermination()
+    // each increment releases every table it persisted
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"increments left cached RDDs: $leaked")
     val got = SnapshotTable.read(spark, graphDir).as[Model.Triple].collect().toSet
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
