@@ -1,15 +1,23 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Stage 3.5 — connected-components canonicalization over entity
   * equivalence edges (north rule; NOT in the reference, whose
   * canonicalization is purely dictionary-based — SURVEY §4.1).
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14), implemented
-  * as a driver loop of DataFrame ops:
+  * ROW-COUNT GUARD (the policy of Link.matchStacked): while the edge
+  * table has at most `maxDriverRows` rows — the equivalence graph is
+  * dimension-sized, like the taxa table the matcher collects — one
+  * action brings the edges to the driver, where a min-label union-find
+  * labels the components and the mapping comes back as a local
+  * relation. Above the guard, or with a non-positive guard, the
+  * distributed algorithm below runs; the specs hold both arms equal.
+  *
+  * Distributed algorithm: alternating large-star / small-star (Kiveris
+  * et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+  * implemented as a driver loop of DataFrame ops:
   *
   *   large-star: for each node u, neighbors v > u attach to
   *               m = min(N(u) ∪ {u});  small-star: neighbors v <= u
@@ -23,22 +31,66 @@ import org.apache.spark.sql.functions._
   * Lineage is cut by an eager localCheckpoint per iteration — at
   * 10^12-doc scale the loop runs O(log d) iterations.
   *
-  * Node ids are strings (IRIs); ordering is lexicographic, which is a
-  * total order — all the algorithm needs.
+  * Node ids are atomic values (IRIs as strings, or numbers) under
+  * Spark's ordering of their type (lexicographic for strings), a total
+  * order — all either arm needs.
   */
 object Canonical {
 
   /** Input: edges(src, dst) undirected. Output: mapping(node, component)
-    * where component = min node id (lexicographic) of the component.
+    * for every endpoint of an edge with src ≠ dst and no null endpoint,
+    * where component = the component's min node id.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
+      maxDriverRows: Long = Model.MaxDriverRows): DataFrame = {
+    val e = ordered(edges)
+    val local =
+      if (maxDriverRows <= 0) None
+      else Some(e.limit(math.min(maxDriverRows, Int.MaxValue - 1L).toInt + 1)
+        .collect()).filter(_.length <= maxDriverRows)
+    local.map(driverComponents(e, _)).getOrElse(starComponents(edges, maxIter))
+  }
 
-    def canon(e: DataFrame): DataFrame =
-      e.select(least(col("src"), col("dst")).as("src"),
+  /** Each edge as (min, max) endpoint, loops and null endpoints dropped
+    * (a null endpoint makes `=!=` null).
+    */
+  private def ordered(e: DataFrame): DataFrame =
+    e.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
+      .filter(col("src") =!= col("dst"))
+
+  /** Min-label union-find over collected edges: node ids are ranked in
+    * Spark's ordering of their type, so a component's root — always
+    * its smallest rank — is its min node, as the distributed arm's.
+    */
+  private def driverComponents(e: DataFrame, rows: Array[Row]): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val dt = e.schema("src").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val nodes = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .toArray.distinct.map(v => (toCatalyst(v), v))
+      .sortBy(_._1)(TypeUtils.getInterpretedOrdering(dt)).map(_._2)
+    val rank = nodes.iterator.zipWithIndex.toMap
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    rows.foreach { r =>
+      val (a, b) = (find(rank(r.get(0))), find(rank(r.get(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val mapping = nodes.indices.map(i => Row(nodes(i), nodes(find(i))))
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(mapping: _*),
+      StructType(Seq(StructField("node", dt), StructField("component", dt))))
+  }
+
+  /** The distributed arm: large-star / small-star rounds. */
+  private def starComponents(edges: DataFrame, maxIter: Int): DataFrame = {
+    def canon(e: DataFrame): DataFrame = ordered(e).distinct()
 
     // symmetrize once; keep (u, v) both directions for the star steps
     def sym(e: DataFrame): DataFrame =
@@ -158,7 +210,7 @@ object Canonical {
     * entities, so the join key is the WD-prefixed IRI.
     *
     * The broadcast hint is ROW-COUNT-GUARDED (same policy as
-    * Link.matchTaxaAdaptive): while the mapping is dictionary-sized the
+    * Link.matchStacked): while the mapping is dictionary-sized the
     * two probes are broadcast-hash joins, but when the entity space
     * scales with the corpus (open-world linking) a forced broadcast
     * would OOM the executors — above the guard the planner keeps its
@@ -167,12 +219,18 @@ object Canonical {
     */
   def canonicalizeTriples(triples: DataFrame, mapping: DataFrame,
       maxBroadcastRows: Long = Model.MaxDriverRows): DataFrame = {
-    // the guard count is cheap: CC output is localCheckpointed upstream
-    // (and driver-built mappings are local relations)
+    // a local relation (the driver CC arm's mapping) is counted without
+    // a job; the distributed arm's mapping recomputes its final groupBy
+    // over the checkpointed star graph
+    val rows = mapping.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.length.toLong
+      case _ => mapping.count()
+    }
     val m0 = mapping.select(
       concat(lit(Model.WD), col("node")).as("_n"),
       concat(lit(Model.WD), col("component")).as("_c"))
-    val m = if (mapping.count() <= maxBroadcastRows) broadcast(m0) else m0
+    val m = if (rows <= maxBroadcastRows) broadcast(m0) else m0
     triples
       .join(m.withColumnRenamed("_n", "_sn").withColumnRenamed("_c", "_sc"),
         col("subj") === col("_sn"), "left")

@@ -2,7 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import Model._
 
 /** Stage DAG driver: checkpointed, idempotently resumable KG
@@ -10,12 +10,14 @@ import Model._
   * checkpoint file, globi_kg_generator.py:146-150,321-323).
   *
   * Each stage writes (a) its output as parquet, (b) a _MANIFEST.json
-  * sidecar carrying the stage name, an input fingerprint, per-partition
-  * row counts (lineage metrics) and wall-clock. A stage is skipped on
-  * resume iff its manifest exists and the fingerprint matches — so a
-  * killed run re-executes only the unfinished suffix of the DAG, and a
-  * finished run is a no-op. Stage outputs are immutable; reruns write
-  * via overwrite to stay idempotent.
+  * sidecar carrying the stage name, an input fingerprint, per-file row
+  * counts taken at write time from the parquet footers (lineage
+  * metrics: the write-side skew, no re-read of the data) and
+  * wall-clock. The manifest lands by an atomic rename, and a stage is
+  * skipped on resume iff its manifest parses whole and carries the
+  * matching fingerprint — so a killed run re-executes only the
+  * unfinished suffix of the DAG, and a finished run is a no-op. Stage
+  * outputs are immutable; reruns write via overwrite to stay idempotent.
   */
 object Pipeline {
 
@@ -30,46 +32,64 @@ object Pipeline {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     }
 
-  def writeManifest(dir: String, stage: String, fingerprint: String,
-      partCounts: Seq[Long], seconds: Double): Unit = {
-    val counts = partCounts.mkString("[", ",", "]")
+  /** Written to a temp file and renamed over the manifest, so a reader
+    * sees the old manifest or the whole new one, never a torn write.
+    */
+  private def writeManifest(dir: String, stage: String, fingerprint: String,
+      fileRows: Seq[Long], seconds: Double): Unit = {
     val json =
       s"""{"stage":"${jsonEscape(stage)}","fingerprint":"${jsonEscape(fingerprint)}",
-         |"rows":${partCounts.sum},"partitions":${partCounts.length},
-         |"partition_rows":$counts,"seconds":$seconds}""".stripMargin.replace("\n", "")
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(manifestPath(dir), json)
+         |"rows":${fileRows.sum},"partitions":${fileRows.length},
+         |"partition_rows":${fileRows.mkString("[", ",", "]")},
+         |"seconds":$seconds}""".stripMargin.replace("\n", "")
+    // a plain create keeps the umask's permissions (createTempFile's are 0600)
+    val tmp = Files.createDirectories(Paths.get(dir))
+      .resolve(s"_MANIFEST.${java.util.UUID.randomUUID}.tmp")
+    Files.writeString(tmp, json)
+    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def manifestMatches(dir: String, fingerprint: String): Boolean = {
+  private val FingerprintField = "\"fingerprint\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  private val RowsField = "\"rows\":(\\d+)".r
+
+  /** Rows recorded by the stage manifest in `dir` when it parses whole
+    * and carries `fingerprint`; None when it is absent, torn or stale.
+    */
+  private def manifestRows(dir: String, fingerprint: String): Option[Long] = {
     val p = manifestPath(dir)
-    Files.exists(p) &&
-      Files.readString(p).contains(s""""fingerprint":"${jsonEscape(fingerprint)}"""")
+    val j = if (Files.exists(p))
+      new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8).trim
+    else ""
+    if (!j.endsWith("}")) None
+    else for {
+      fp <- FingerprintField.findFirstMatchIn(j)
+      if fp.group(1) == jsonEscape(fingerprint)
+      rows <- RowsField.findFirstMatchIn(j)
+    } yield rows.group(1).toLong
   }
 
   /** Run one stage: skip when a valid manifest exists, else compute,
-    * write parquet + manifest with per-partition counts.
+    * write parquet + manifest with per-file counts from the footers.
     */
   def stage(spark: SparkSession, outRoot: String, name: String,
       fingerprint: String)(compute: => DataFrame): (DataFrame, StageResult) = {
     val dir = s"$outRoot/$name"
-    if (manifestMatches(dir, fingerprint)) {
-      val df = spark.read.parquet(s"$dir/data")
-      (df, StageResult(name, -1L, -1, 0.0, skipped = true))
-    } else {
-      val t0 = System.nanoTime()
-      val df = compute
-      df.write.mode("overwrite").parquet(s"$dir/data")
-      val written = spark.read.parquet(s"$dir/data")
-      // per-partition lineage metrics (north rule: persisted alongside
-      // the checkpoint)
-      val partCounts = written
-        .groupBy(spark_partition_id().as("pid")).count()
-        .orderBy(col("pid")).collect().map(_.getLong(1)).toSeq
-      val secs = (System.nanoTime() - t0) / 1e9
-      writeManifest(dir, name, fingerprint, partCounts, secs)
-      (written, StageResult(name, partCounts.sum, partCounts.length, secs,
-        skipped = false))
+    manifestRows(dir, fingerprint) match {
+      case Some(rows) =>
+        (spark.read.parquet(s"$dir/data"),
+          StageResult(name, rows, -1, 0.0, skipped = true))
+      case None =>
+        val t0 = System.nanoTime()
+        val df = compute
+        df.write.mode("overwrite").parquet(s"$dir/data")
+        // footers without stats columns are always usable
+        val fileRows = graft.sources.SnapshotTable
+          .footerStatEntries(spark, s"$dir/data", Nil).get.map(_._2)
+        val secs = (System.nanoTime() - t0) / 1e9
+        writeManifest(dir, name, fingerprint, fileRows, secs)
+        // the known schema spares the read its schema-inference job
+        (spark.read.schema(df.schema).parquet(s"$dir/data"),
+          StageResult(name, fileRows.sum, fileRows.length, secs, skipped = false))
     }
   }
 
@@ -97,21 +117,22 @@ object Pipeline {
     import graft.sources.SnapshotTable
     val snap = snapshot.getOrElse(SnapshotTable.currentSnapshot(docsTableDir))
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
-    val fp = s"table:$docsTableDir@$snap:docs:${docs.count()}:$StageVersion"
-    val (stages, triples, canonical) = buildStages(spark, outRoot, fp, docs)
+    // a table snapshot is immutable: its id identifies the input
+    val fp = s"table:$docsTableDir@$snap:$StageVersion"
+    val (report, canonical) = buildStages(spark, outRoot, fp, docs)
     val graphSnap = SnapshotTable.write(
       Materialize.predicateLayout(canonical, partitions),
       graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
-    (RunReport(stages, triples.count(), canonical.count()), graphSnap)
+    (report, graphSnap)
   }
 
   /** The construction chain [[run]] and [[runFromTable]] share:
     * extract → link → triples → canonical, each a checkpointed
-    * [[stage]]. Returns the stage results and the raw and canonical
-    * triple tables.
+    * [[stage]]. Returns the run report, whose triple counts are the
+    * 30/40 stage rows, and the canonical triple table.
     */
   private def buildStages(spark: SparkSession, outRoot: String, fp: String,
-      docs: DataFrame): (Seq[StageResult], DataFrame, DataFrame) = {
+      docs: DataFrame): (RunReport, DataFrame) = {
     val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
       Extract.records(docs)
     }
@@ -128,7 +149,7 @@ object Pipeline {
       val mapping = Canonical.connectedComponents(edges)
       Canonical.canonicalizeTriples(triples, mapping)
     }
-    (Seq(s1, s2, s3, s4), triples, canonical)
+    (RunReport(Seq(s1, s2, s3, s4), s3.rows, s4.rows), canonical)
   }
 
   case class IncrementalResult(processedDocsSnapshot: Long,
@@ -227,7 +248,7 @@ object Pipeline {
       Link.matchStacked(SnapshotTable.read(spark, s"$rawGraphTableDir-state/taxa"),
         DataGen.wdSparqlRows, DataGen.lineageRows, maxDriverRows))
     val mappingDf = Canonical.connectedComponents(
-      Canonical.equivalenceEdges(matchedDf))
+      Canonical.equivalenceEdges(matchedDf), maxDriverRows = maxDriverRows)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // previous mapping ANCHORED to the canonical table's committed key
@@ -521,9 +542,9 @@ object Pipeline {
     val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
       DataGen.corpus(spark, nDocs, partitions).toDF()
     }
-    val (stages, triples, canonical) = buildStages(spark, outRoot, fp, docs)
+    val (report, canonical) = buildStages(spark, outRoot, fp, docs)
     Materialize.writeTriples(canonical, s"$outRoot/50_graph",
       numPartitions = partitions)
-    RunReport(s0 +: stages, triples.count(), canonical.count())
+    report.copy(stages = s0 +: report.stages)
   }
 }

@@ -92,8 +92,9 @@ object KgQueries {
         .orderBy(col("subj"), col("pred"), col("obj"))
     }),
 
-    // large-star/small-star CC with a closed-form oracle: docs in the
-    // same (source, lang) group form a path → component = min doc_id
+    // connected components (driver union-find under the row guard,
+    // large-star/small-star above it) with a closed-form oracle: docs in
+    // the same (source, lang) group form a path → component = min doc_id
     "kg_cc_components" -> ((s: SparkSession, dir: String) => {
       val d = s.read.parquet(s"$dir/documents.parquet")
       val w = Window.partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))

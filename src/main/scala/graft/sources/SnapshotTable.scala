@@ -403,7 +403,9 @@ object SnapshotTable {
     val footerPlan: Option[(DataFrame, (Long, Long))] =
       if (bloomCols.isEmpty &&
           effStats.forall(c => footerExactType(df.schema(c).dataType))) {
-        footerStatEntries(spark, dataDir, effStats).map { entries =>
+        footerStatEntries(spark, dataDir, effStats).map { files =>
+          // zero-row part files list no entry, as in groupBy(input_file_name)
+          val entries = files.filter(_._2 > 0)
           val ddl = (Seq("path STRING", "rows BIGINT") ++
             effStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
             Seq("base STRING")).mkString(", ")
@@ -529,16 +531,19 @@ object SnapshotTable {
     }
 
   /** Per-file (path, rows, min/max strings per stats column) read from
-    * the parquet footers on the driver — the statsCols extension of
-    * [[footerEntries]]: a snapshot commit with integral stats columns
-    * needs no Spark re-read of the data it just wrote, because the
-    * footers already carry exact per-row-group min/max. Returns None
+    * the parquet footers ON THE DRIVER (metadata-sized, no Spark job):
+    * a snapshot commit with integral stats columns needs no Spark
+    * re-read of the data it just wrote, because the footers already
+    * carry exact per-row-group min/max, and a pipeline stage takes its
+    * per-file row counts here (no stats columns). Paths use the file://
+    * URI spelling input_file_name() produces; every part file is
+    * listed, zero-row (schema-only) ones included. Returns None
     * (caller falls back to the distributed aggregate) if any
     * non-empty file lacks usable statistics for a requested column —
     * correctness never depends on footers being present. All-null
     * columns yield null bounds, matching min/max over nulls.
     */
-  private def footerStatEntries(spark: SparkSession, dataDir: String,
+  private[graft] def footerStatEntries(spark: SparkSession, dataDir: String,
       statsCols: Seq[String]): Option[Seq[(String, Long, Seq[(String, String)])]] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
@@ -581,12 +586,11 @@ object SnapshotTable {
         }
         ("file://" + p.toAbsolutePath, rows, bounds)
       } finally reader.close()
-    }.filter(_._2 > 0)
+    }
     if (usable) Some(out) else None
   }
 
-  /** Data files of a freshly-written dir, sorted — shared walk of the
-    * two footer readers. */
+  /** Data files of a freshly-written dir, sorted. */
   private def footerFiles(dataDir: String): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
     val stream = Files.walk(Paths.get(dataDir))
@@ -596,36 +600,6 @@ object SnapshotTable {
         !n.startsWith(".") && !n.startsWith("_")
     }.toSeq.sortBy(_.toString)
     finally stream.close()
-  }
-
-  /** Per-file (path, rows) entries of a freshly-written data dir, read
-    * from the parquet footers ON THE DRIVER (metadata-sized, no Spark
-    * job). Paths use the same file:// URI spelling input_file_name()
-    * produces, and zero-row (schema-only) part files list no entry —
-    * mirroring the distributed groupBy(input_file_name) exactly.
-    */
-  private def footerEntries(spark: SparkSession,
-      dataDir: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(dataDir)
-    val stream = Files.walk(root)
-    val files =
-      try stream.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && n.endsWith(".parquet") &&
-          !n.startsWith(".") && !n.startsWith("_")
-      }.toSeq.sortBy(_.toString)
-      finally stream.close()
-    val conf = spark.sessionState.newHadoopConf()
-    files.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val rows =
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-        finally reader.close()
-      ("file://" + p.toAbsolutePath, rows)
-    }.filter(_._2 > 0)
   }
 
   /** ROLLBACK: revert the table to the logical content of snapshot
@@ -954,7 +928,8 @@ object SnapshotTable {
       val tableSchema = StructType.fromDDL(schemaDdl(dir, parent).get)
       val newFooter: Option[(DataFrame, (Long, Long))] =
         if (mergeStats.forall(c => footerExactType(tableSchema(c).dataType))) {
-          footerStatEntries(spark, dataDir, mergeStats).map { entries =>
+          footerStatEntries(spark, dataDir, mergeStats).map { files =>
+            val entries = files.filter(_._2 > 0)
             val ddl = (Seq("path STRING", "rows BIGINT") ++
               mergeStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
               Seq("base STRING", "snapshot_id BIGINT")).mkString(", ")

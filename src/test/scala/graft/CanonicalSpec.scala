@@ -3,8 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kg.Canonical
 
-/** Large-star/small-star connected components vs a union-find oracle on
-  * seeded random graphs (SURVEY §5.2 property tests).
+/** Connected components vs a union-find oracle on seeded random graphs
+  * (SURVEY §5.2 property tests), on both arms of the row guard: the
+  * driver-side union-find (default guard) and the distributed
+  * large-star/small-star rounds (`maxDriverRows = 0`).
   */
 class CanonicalSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,14 +24,17 @@ class CanonicalSpec extends AnyFunSuite {
 
   def check(n: Int, edges: Seq[(Int, Int)]): Unit = {
     val df = edges.map { case (a, b) => (f"N$a%05d", f"N$b%05d") }.toDF("src", "dst")
-    val got = Canonical.connectedComponents(df)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
     val want = unionFind(n, edges)
     // engine covers nodes that appear in edges; min-label components
     val nodesInEdges = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    nodesInEdges.foreach { x =>
-      assert(got(f"N$x%05d") == f"N${want(x)}%05d",
-        s"node $x: got ${got(f"N$x%05d")} want ${want(x)}")
+    for (guard <- Seq(graft.kg.Model.MaxDriverRows, 0L)) {
+      val got = Canonical.connectedComponents(df, maxDriverRows = guard)
+        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      assert(got.keySet == nodesInEdges.map(x => f"N$x%05d"), s"guard $guard")
+      nodesInEdges.foreach { x =>
+        assert(got(f"N$x%05d") == f"N${want(x)}%05d",
+          s"guard $guard, node $x: got ${got(f"N$x%05d")} want ${want(x)}")
+      }
     }
   }
 
@@ -85,11 +90,29 @@ class CanonicalSpec extends AnyFunSuite {
     // neighbor list in one aggregation buffer
     val n = 100001
     val edges = (1 until n).map(i => (f"N$i%06d", "N000000")).toDF("src", "dst")
-    val mapping = Canonical.connectedComponents(edges)
+    val mapping = Canonical.connectedComponents(edges, maxDriverRows = 0)
     import org.apache.spark.sql.functions._
     val comps = mapping.select(countDistinct(col("component")).cast("long"),
       count(lit(1)).cast("long")).head()
     assert(comps.getLong(0) == 1L)
     assert(comps.getLong(1) == n.toLong)
+  }
+
+  test("CC driver and distributed arms agree on a DataGen corpus's equivalence edges") {
+    import graft.kg._
+    val records = Extract.records(DataGen.corpus(spark, 400, 4).toDF())
+    val edges = Canonical.equivalenceEdges(Link.matchTaxaAdaptive(records,
+      DataGen.wdSparqlRows, DataGen.lineageRows))
+      .persist()
+    val driver = Canonical.connectedComponents(edges).collect().toSet
+    val distributed = Canonical.connectedComponents(edges, maxDriverRows = 0)
+      .collect().toSet
+    // null endpoints and self-loops are no nodes on either arm
+    val withNoise = edges.union(Seq[(String, String)](("Q1", null), ("Q2", "Q2"))
+      .toDF("src", "dst"))
+    assert(driver.nonEmpty && driver.exists(r => r.get(0) != r.get(1)))
+    assert(driver == distributed)
+    assert(Canonical.connectedComponents(withNoise).collect().toSet == driver)
+    edges.unpersist()
   }
 }

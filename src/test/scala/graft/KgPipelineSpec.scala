@@ -131,13 +131,58 @@ class KgPipelineSpec extends AnyFunSuite {
         s"\nextra=${(engine -- oracle).size}${show(engine -- oracle)}")
   }
 
+  /** Parquet part files of a stage's data dir. */
+  def partFiles(out: String, stage: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(out, stage, "data"))
+    try walk.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }.toList
+    finally walk.close()
+  }
+
+  def manifest(out: String, stage: String): String =
+    java.nio.file.Files.readString(
+      java.nio.file.Paths.get(out, stage, "_MANIFEST.json"))
+
   test("pipeline resume skips completed stages idempotently") {
     val out = java.nio.file.Files.createTempDirectory("kgrun").toString
     val r1 = Pipeline.run(spark, 60, out, partitions = 4)
     assert(r1.stages.forall(!_.skipped))
     assert(r1.triples > 0)
+    // lineage metrics are write-side: one footer count per part file,
+    // summing to the stage's parquet rows
+    r1.stages.foreach { s =>
+      val counts = "\"partition_rows\":\\[([0-9,]*)\\]".r
+        .findFirstMatchIn(manifest(out, s.name)).get.group(1)
+        .split(",").filter(_.nonEmpty).map(_.toLong).toSeq
+      val rows = spark.read.parquet(s"$out/${s.name}/data").count()
+      assert(counts.length == partFiles(out, s.name).size, s.name)
+      assert(counts.sum == rows && s.rows == rows && s.partitions == counts.length,
+        s"${s.name}: $counts vs $rows rows, $s")
+    }
     val r2 = Pipeline.run(spark, 60, out, partitions = 4)
     assert(r2.stages.forall(_.skipped), s"expected all skipped: ${r2.stages}")
     assert(r2.triples == r1.triples)
+    assert(r2.canonicalTriples == r1.canonicalTriples)
+    assert(r2.stages.map(_.rows) == r1.stages.map(_.rows) &&
+      r2.stages.forall(_.rows >= 0), r2.stages)
+  }
+
+  test("a manifest torn after its fingerprint makes the stage recompute") {
+    val out = java.nio.file.Files.createTempDirectory("kgtorn").toString
+    val r1 = Pipeline.run(spark, 40, out, partitions = 4)
+    val path = java.nio.file.Paths.get(out, "40_canonical", "_MANIFEST.json")
+    val json = manifest(out, "40_canonical")
+    java.nio.file.Files.writeString(path, json.substring(0, json.indexOf("\"rows\"")))
+    val r2 = Pipeline.run(spark, 40, out, partitions = 4)
+    assert(r2.stages.map(s => s.name -> s.skipped) == r1.stages.map(s =>
+      s.name -> (s.name != "40_canonical")), r2.stages)
+    assert(r2.canonicalTriples == r1.canonicalTriples)
+    assert(manifest(out, "40_canonical").endsWith("}"))
+    // the manifest lands by rename: no temp file stays behind
+    val left = java.nio.file.Files.list(path.getParent)
+    try assert(!left.anyMatch(_.toString.endsWith(".tmp"))) finally left.close()
   }
 }
