@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * (the theta-sketch idea): keep the k smallest distinct 60-bit hashes
   * of a set; the k-th smallest estimates density (≈ k/|S| of the hash
   * space), so |S| ≈ (k-1)·2^60/h_k, and two sketches intersect by
-  * counting common hashes below θ = min(h_k^A, h_k^B).
+  * counting common hashes below θ = min(h_k^A, h_k^B) over the full
+  * sketches.
   *
   * Implemented as a typed [[Aggregator]] (the §2.9 UDAF surface):
   * bounded O(k) state per group, map-side partial aggregation like any
@@ -58,22 +59,23 @@ object Kmv {
       .otherwise(lit((k - 1).toDouble) * lit(HashSpace) /
         element_at(sk, k).cast("double"))
 
-  /** θ = the smaller k-th min of two FULL sketches — the common
-    * sampling threshold below which both sketches are exhaustive.
-    * NULL when either sketch holds fewer than k hashes: a non-full
-    * sketch has no sampling threshold (it is exhaustive), and an
-    * unguarded element_at(sk, k) would throw under ANSI mode (ADVICE
-    * r05). Full-sketch values are unchanged by the guard.
+  /** θ = the sampling threshold below which both sketches are
+    * exhaustive: the smaller k-th min when both are FULL, the full
+    * sketch's k-th min when only one is (the other holds its whole set),
+    * NULL when neither is. `least` skips the NULL k-th min of a non-full
+    * sketch; the size guard also keeps element_at(sk, k) from throwing
+    * under ANSI mode (ADVICE r05).
     */
-  def theta(a: Column, b: Column, k: Int): Column =
-    when(size(a) >= k && size(b) >= k,
-      least(element_at(a, k), element_at(b, k)))
+  def theta(a: Column, b: Column, k: Int): Column = {
+    def kth(sk: Column) = when(size(sk) >= k, element_at(sk, k))
+    least(kth(a), kth(b))
+  }
 
   /** Intersection-cardinality estimate: hashes below θ present in
-    * BOTH, scaled back by the sampled fraction. When either sketch is
-    * non-full (θ NULL) both sketches are exhaustive sets, so the EXACT
-    * intersection size is returned instead of a NULL estimate — the
-    * expression is total and never divides by a null θ.
+    * BOTH, scaled back by the sampled fraction. When neither sketch is
+    * full (θ NULL) both are exhaustive sets, so the EXACT intersection
+    * size is returned instead of a NULL estimate — the expression is
+    * total and never divides by a null θ.
     */
   def estimateIntersection(a: Column, b: Column, k: Int): Column = {
     val th = theta(a, b, k)

@@ -44,11 +44,8 @@ object Canonical {
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
       maxDriverRows: Long = Model.MaxDriverRows): DataFrame = {
     val e = ordered(edges)
-    val local =
-      if (maxDriverRows <= 0) None
-      else Some(e.limit(math.min(maxDriverRows, Int.MaxValue - 1L).toInt + 1)
-        .collect()).filter(_.length <= maxDriverRows)
-    local.map(driverComponents(e, _)).getOrElse(starComponents(edges, maxIter))
+    Model.driverRows(e, maxDriverRows).map(driverComponents(e, _))
+      .getOrElse(starComponents(edges, maxIter))
   }
 
   /** Each edge as (min, max) endpoint, loops and null endpoints dropped

@@ -293,46 +293,45 @@ object Link {
 
   /** Matcher over a stacked distinct-taxa table (the [[stackTaxa]] shape;
     * the incremental path's accumulated taxa state is one). The ROW-COUNT
-    * GUARD: while the table has at most `maxDriverRows` rows, the
+    * GUARD: one limited collect ([[Model.driverRows]]) decides and
+    * fetches — while the table has at most `maxDriverRows` rows, the
     * dimension-sized dictionary/scoring passes run on the driver via
-    * LocalMatcher — one collect instead of ~12 small jobs — and the rows
-    * come back as a parallelized table; beyond it the distributed
-    * formulation runs over the same table (the corpus is never
-    * re-scanned) and its output comes back persisted. A non-positive
-    * guard forces the distributed arm. Both arms are asserted equal in
-    * KgPipelineSpec. A caller loop unpersists the result (a no-op on
-    * the driver arm).
+    * LocalMatcher instead of ~12 small jobs, and the rows come back as a
+    * parallelized table; beyond it the distributed formulation runs over
+    * the same table (the corpus is never re-scanned) and its output comes
+    * back persisted. A non-positive guard forces the distributed arm.
+    * Both arms are asserted equal in KgPipelineSpec. A caller loop
+    * unpersists the result (a no-op on the driver arm).
     */
   def matchStacked(taxa: DataFrame, wdSparqlRows: Seq[Seq[String]],
       lineageRows: Seq[Seq[String]], maxDriverRows: Long): DataFrame = {
     val spark = taxa.sparkSession
     val base = taxa.select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
         col("TaxonRankName"), col("rowIdx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out =
-      if (maxDriverRows > 0 && base.count() <= maxDriverRows) {
-        val rows = base.collect()
+    Model.driverRows(base, maxDriverRows) match {
+      case Some(fetched) =>
+        val rows = fetched
           .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
             r.getString(2), r.getString(3), r.getLong(4)))
           .sortBy(_.rowIdx)
         matchedRowsToDf(spark,
           LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
-      } else {
+      case None =>
         import org.apache.spark.sql.types.{StructField, StructType, StringType}
         def rowsDf(rows: Seq[Seq[String]], cols: Seq[String]): DataFrame =
           spark.createDataFrame(
             spark.sparkContext.parallelize(
               rows.map(org.apache.spark.sql.Row.fromSeq), 1),
             StructType(cols.map(StructField(_, StringType, true))))
+        // the distributed passes read `base` once, through unpackRanks'
+        // persisted table, so it is not persisted itself
         matchDistributed(base,
           rowsDf(wdSparqlRows, Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
             "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
             "iNat", "eppo", "WdName")),
           rowsDf(lineageRows, Seq("WdID", "WdName", "kingdom", "phylum", "class",
             "order", "family", "genus", "species")))
-      }
-    base.unpersist() // folded into the materialized matcher output
-    out
+    }
   }
 
   /** Fully distributed matcher: records → matched-taxa table

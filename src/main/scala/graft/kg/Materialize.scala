@@ -69,28 +69,53 @@ object Materialize {
 
   // ---- wd-map dictionaries (globi_kg_generator.py:88-110) ---------------
 
-  /** Matcher output → the two resolution dictionaries. "Wikidata:" and
-    * quotes stripped from every column; empty Mapped_ID_WD rows dropped;
-    * later rows win on key collision (pandas dict-build order = ascending
-    * first-occurrence rowIdx).
+  /** Matcher output → the two resolution dictionaries (key, wd, mv).
+    * "Wikidata:" and quotes stripped from every column; empty
+    * Mapped_ID_WD rows dropped; later rows win on key collision (pandas
+    * dict-build order = ascending first-occurrence rowIdx).
+    *
+    * The ROW-COUNT GUARD of [[Link.matchStacked]]: while the cleaned
+    * matcher output has at most `maxDriverRows` rows, one limited
+    * collect brings it to the driver, which walks it in ascending rowIdx
+    * (rowIdx is unique per matched row, so the last write per key is
+    * max_by's winner) and returns both dictionaries as local relations —
+    * no job reads them again. Above the guard, or with a non-positive
+    * guard, each dictionary is a max_by aggregate, persisted because it
+    * is read several times (size guard, collect or join probes); a
+    * caller loop releases it with unpersist (a no-op on local relations).
+    * DictOrderSpec holds the two arms equal.
     */
-  def wdMapDicts(matcherOut: DataFrame): (DataFrame, DataFrame) = {
+  def wdMapDicts(matcherOut: DataFrame,
+      maxDriverRows: Long = MaxDriverRows): (DataFrame, DataFrame) = {
     val cleaned = matcherOut.select(
       Seq("TaxonId", "TaxonName", "Mapped_ID_WD", "Mapped_Value").map(c =>
         regexp_replace(regexp_replace(col(c), "Wikidata:", ""), "\"", "").as(c))
         :+ col("rowIdx"): _*)
       .filter(col("Mapped_ID_WD").isNotNull && col("Mapped_ID_WD") =!= "")
-    // each dict is dimension-sized and read several times (size guard,
-    // collect or join probes), so it is persisted on its own — a caller
-    // loop releases it with unpersist
-    def dict(key: String): DataFrame = cleaned
-      .filter(col(key).isNotNull && col(key) =!= "")
-      .groupBy(col(key).as("key"))
-      .agg(max_by(struct(col("Mapped_ID_WD").as("wd"),
-        col("Mapped_Value").as("mv")), col("rowIdx")).as("v"))
-      .select(col("key"), col("v.wd").as("wd"), col("v.mv").as("mv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (dict("TaxonId"), dict("TaxonName"))
+    driverRows(cleaned, maxDriverRows) match {
+      case Some(rows) =>
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types.{StructField, StructType, StringType}
+        val schema = StructType(Seq("key", "wd", "mv")
+          .map(StructField(_, StringType, nullable = true)))
+        val byRowIdx = rows.sortBy(_.getLong(4))
+        // toMap keeps the last pair per key: the highest rowIdx wins
+        def dict(k: Int): DataFrame = matcherOut.sparkSession.createDataFrame(
+          java.util.Arrays.asList(byRowIdx.collect {
+            case r if r.getString(k) != null && r.getString(k).nonEmpty =>
+              r.getString(k) -> Row(r.getString(k), r.getString(2), r.getString(3))
+          }.toMap.values.toSeq: _*), schema)
+        (dict(0), dict(1))
+      case None =>
+        def dict(key: String): DataFrame = cleaned
+          .filter(col(key).isNotNull && col(key) =!= "")
+          .groupBy(col(key).as("key"))
+          .agg(max_by(struct(col("Mapped_ID_WD").as("wd"),
+            col("Mapped_Value").as("mv")), col("rowIdx")).as("v"))
+          .select(col("key"), col("v.wd").as("wd"), col("v.mv").as("mv"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (dict("TaxonId"), dict("TaxonName"))
+    }
   }
 
   /** Two-tier resolution (globi_kg_generator.py:184-209): raw id in the
@@ -382,11 +407,13 @@ object Materialize {
     * micro-batch).
     *
     * `maxDriverRows` is the same row-count guard the matcher takes:
-    * dictionaries of at most that many rows are collected and broadcast
-    * as hash maps (the reference's broadcast-dict design,
-    * globi_kg_generator.py:88-110) so one flatMap walks records →
-    * triples with no resolution exchange; larger ones resolve through
-    * the relational join. A non-positive guard forces the join arm.
+    * dictionaries of at most that many rows together are fetched with
+    * one limited collect each (no job on [[wdMapDicts]]' local
+    * relations) and broadcast as hash maps (the reference's
+    * broadcast-dict design, globi_kg_generator.py:88-110) so one flatMap
+    * walks records → triples with no resolution exchange; larger ones
+    * resolve through the relational join. A non-positive guard forces
+    * the join arm.
     */
   def globiTriplesFused(records: DataFrame, dictId: DataFrame,
       dictName: DataFrame, mediaMentions: Option[DataFrame] = None,
@@ -414,13 +441,15 @@ object Materialize {
     val emitRows = (r: ResolvedRecord) => emitTagged(r, bcVocab.value).map {
       case (t, sh) => (t.subj, t.pred, t.obj, t.objIsLiteral, t.objDatatype, sh)
     }
-    // both dicts in one table: one job counts them, one collects them
-    val dicts = dictId.withColumn("byName", lit(false))
-      .unionByName(dictName.withColumn("byName", lit(true)))
-    val dictRows = dicts.count()
-    val tagged =
-      if (dictRows <= maxDriverRows) {
-        val (byName, byId) = dicts.collect().partition(_.getBoolean(3))
+    // one limited collect per dictionary decides and fetches it; on the
+    // local relations wdMapDicts returns under its guard no job runs
+    val fetched = for {
+      byId <- driverRows(dictId, maxDriverRows)
+      byName <- driverRows(dictName, maxDriverRows)
+      if byId.length + byName.length <= maxDriverRows
+    } yield (byId, byName)
+    val tagged = fetched match {
+      case Some((byId, byName)) =>
         def toMap(rows: Array[org.apache.spark.sql.Row]) =
           rows.map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
         val bcId = spark.sparkContext.broadcast(toMap(byId))
@@ -449,9 +478,11 @@ object Materialize {
             case _ => Nil
           }
         }
-      } else
-        resolve(records, dictId, dictName, broadcastDicts = dictRows <= MaxDriverRows)
+      case None =>
+        resolve(records, dictId, dictName,
+          broadcastDicts = dictId.count() + dictName.count() <= MaxDriverRows)
           .flatMap(emitRows)
+    }
     val df = tagged.toDF("subj", "pred", "obj", "objIsLiteral", "objDatatype", "shared")
     mediaMentions.map(m => df.unionByName(mediaTriplesTagged(m))).getOrElse(df)
   }
@@ -473,20 +504,23 @@ object Materialize {
     part(false).unionByName(newShared(part(true).dropDuplicates(TripleCols)))
   }
 
-  /** Graph layout: range-partition by (pred, subj) so each predicate's
-    * files are few and subject-clustered; written partitioned by the
-    * filename-safe `predicate` column it adds, i.e.
-    * triples/predicate=<p>/part-*.parquet (north rule).
+  /** Graph layout: REBALANCE by the filename-safe `predicate` column it
+    * adds, then subject-sorted within each partition; written
+    * partitioned by `predicate`, i.e. triples/predicate=<p>/part-*.parquet
+    * (north rule). AQE sizes the output partitions from the shuffle
+    * bytes: small predicates coalesce into one task (one file each), a
+    * predicate above the advisory partition size is split, and no
+    * range-sampling job runs.
     */
-  def predicateLayout(triples: DataFrame, numPartitions: Int): DataFrame =
+  def predicateLayout(triples: DataFrame): DataFrame =
     triples
       .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
-      .repartitionByRange(numPartitions, col("predicate"), col("subj"))
+      .hint("rebalance", col("predicate"))
       .sortWithinPartitions(col("predicate"), col("subj"))
 
   /** Graph write of [[predicateLayout]] as plain parquet. */
-  def writeTriples(triples: DataFrame, outDir: String, numPartitions: Int = 32): Unit =
-    predicateLayout(triples, numPartitions)
+  def writeTriples(triples: DataFrame, outDir: String): Unit =
+    predicateLayout(triples)
       .write.mode("overwrite")
       .partitionBy("predicate")
       .parquet(outDir)

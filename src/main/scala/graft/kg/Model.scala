@@ -19,6 +19,18 @@ object Model {
     */
   val MaxDriverRows: Long = 2000000L
 
+  /** The row guard's one action: the rows of `df` when it has at most
+    * `maxDriverRows` of them, from a single limited collect that both
+    * decides and fetches; None above the guard or when the guard is
+    * non-positive. On a local relation Catalyst folds the limit into
+    * the relation, so no job runs.
+    */
+  def driverRows(df: org.apache.spark.sql.DataFrame, maxDriverRows: Long)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    if (maxDriverRows <= 0) None
+    else Some(df.limit(math.min(maxDriverRows, Int.MaxValue - 1L).toInt + 1)
+      .collect()).filter(_.length <= maxDriverRows)
+
   case class Span(kind: String, text: String, media_ref: String, offset: Int)
   case class Document(doc_id: String, spans: Seq[Span])
 

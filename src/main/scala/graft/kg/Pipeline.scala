@@ -108,12 +108,13 @@ object Pipeline {
     * snapshot table (optionally at a pinned snapshot — a re-run against
     * the same snapshot is reproducible regardless of later appends) and
     * publish the canonical graph as a new snapshot of an output table,
-    * predicate-partitioned. Returns (run report, graph snapshot id).
+    * predicate-partitioned in [[Materialize.predicateLayout]], whose
+    * partition count AQE sizes from the data. A build leaves no table
+    * persisted. Returns (run report, graph snapshot id).
     */
   def runFromTable(spark: SparkSession, docsTableDir: String,
       outRoot: String, graphTableDir: String,
-      snapshot: Option[Long] = None, partitions: Int = 32)
-      : (RunReport, Long) = {
+      snapshot: Option[Long] = None): (RunReport, Long) = {
     import graft.sources.SnapshotTable
     val snap = snapshot.getOrElse(SnapshotTable.currentSnapshot(docsTableDir))
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
@@ -121,29 +122,40 @@ object Pipeline {
     val fp = s"table:$docsTableDir@$snap:$StageVersion"
     val (report, canonical) = buildStages(spark, outRoot, fp, docs)
     val graphSnap = SnapshotTable.write(
-      Materialize.predicateLayout(canonical, partitions),
+      Materialize.predicateLayout(canonical),
       graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
     (report, graphSnap)
   }
 
   /** The construction chain [[run]] and [[runFromTable]] share:
     * extract → link → triples → canonical, each a checkpointed
-    * [[stage]]. Returns the run report, whose triple counts are the
-    * 30/40 stage rows, and the canonical triple table.
+    * [[stage]]. Every later stage reads the re-read parquet of the ones
+    * before it, so what a stage persisted is released once it is
+    * written. Returns the run report, whose triple counts are the 30/40
+    * stage rows, and the canonical triple table.
     */
   private def buildStages(spark: SparkSession, outRoot: String, fp: String,
       docs: DataFrame): (RunReport, DataFrame) = {
+    val persisted = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def held(df: DataFrame): DataFrame = { persisted += df; df }
     val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
       Extract.records(docs)
     }
     val (matched, s2) = stage(spark, outRoot, "20_link", fp) {
-      Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows, DataGen.lineageRows)
+      // the matcher output is persisted on its distributed arm only
+      held(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows, DataGen.lineageRows))
     }
     val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
       val (dictId, dictName) = Materialize.wdMapDicts(matched)
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
-      Materialize.globiTriplesFused(records, dictId, dictName, Some(mm))
+      // globiTriplesFused's two parts, so the tagged table is released
+      val tagged = Materialize.taggedTriples(records, held(dictId), held(dictName),
+        Some(mm), MaxDriverRows)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Materialize.splitDedup(held(tagged))
     }
+    // the stages after read the written parquet, never these
+    persisted.foreach(_.unpersist())
     val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
       val edges = Canonical.equivalenceEdges(matched)
       val mapping = Canonical.connectedComponents(edges)
@@ -430,7 +442,7 @@ object Pipeline {
     def deriveDicts(taxaDf: DataFrame): (DataFrame, DataFrame, DataFrame) = {
       val matched = Link.matchStacked(taxaDf, DataGen.wdSparqlRows,
         DataGen.lineageRows, maxDriverRows)
-      val (di, dn) = Materialize.wdMapDicts(matched)
+      val (di, dn) = Materialize.wdMapDicts(matched, maxDriverRows)
       toRelease ++= Seq(di, dn)
       (matched, di, dn)
     }
@@ -440,15 +452,25 @@ object Pipeline {
     // 3-4: stale-emission detection, fully DISTRIBUTED: resolve every
     // previously-seen probe under the previous and the final
     // dictionaries (the probes are corpus-scale and never leave the
-    // cluster; dict joins broadcast via AQE while dimension-sized) and
-    // look for any difference. Resolution semantics mirror
-    // Materialize's: id-dict hit wins, else name-dict, else none.
+    // cluster; driver-built dicts broadcast by hint, aggregate ones via
+    // AQE while dimension-sized) and look for any difference. Resolution
+    // semantics mirror Materialize's: id-dict hit wins, else name-dict,
+    // else none.
     val needRebuild = stateLost || (graphSnap > 0 && lastProcessed > 0 && {
       val (oldMatched, oldIdDf, oldNameDf) = deriveDicts(oldTaxaDf.get)
       toRelease += oldMatched
-      def d(df: DataFrame, key: String, p: String) =
-        df.select(col("key").as(key), col("wd").as(s"${p}_wd"),
+      // a dictionary built on the driver is a local relation: broadcast
+      // it whatever its size, as a LocalTableScan under a shuffle exchange
+      // embeds the whole relation in every task (Link.matchedRowsToDf)
+      def d(df: DataFrame, key: String, p: String) = {
+        val renamed = df.select(col("key").as(key), col("wd").as(s"${p}_wd"),
           col("mv").as(s"${p}_mv"))
+        df.queryExecution.optimizedPlan match {
+          case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+            broadcast(renamed)
+          case _ => renamed
+        }
+      }
       def resCol(p: String): org.apache.spark.sql.Column = coalesce(
         when(col(s"${p}i_wd").isNotNull,
           struct(col(s"${p}i_wd").as("w"), col(s"${p}i_mv").as("m"))),
@@ -543,8 +565,7 @@ object Pipeline {
       DataGen.corpus(spark, nDocs, partitions).toDF()
     }
     val (report, canonical) = buildStages(spark, outRoot, fp, docs)
-    Materialize.writeTriples(canonical, s"$outRoot/50_graph",
-      numPartitions = partitions)
+    Materialize.writeTriples(canonical, s"$outRoot/50_graph")
     report.copy(stages = s0 +: report.stages)
   }
 }

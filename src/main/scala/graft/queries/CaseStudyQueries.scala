@@ -170,7 +170,7 @@ object CaseStudyQueries {
       val (records, _) = Materialized.recordsAndMatched(s, dir)
       val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
         DataGen.lineageRows, maxDriverRows = 0L)
-      val (dictId, dictName) = Materialize.wdMapDicts(matched)
+      val (dictId, dictName) = Materialize.wdMapDicts(matched, maxDriverRows = 0L)
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(s))
       Materialize.globiTriplesFused(records, dictId, dictName, Some(mm),
         maxDriverRows = 0L)

@@ -664,10 +664,11 @@ object PipelineQueries {
 
     // theta-sketch INTERSECTION: |docs containing "spark" ∩ docs
     // containing "data"| estimated by counting common sketch hashes
-    // below θ = min of the two 64th minima, scaled back by the sampled
-    // fraction — with the exact intersection as the honesty rider. At
-    // 100 TB the two corpus scans reduce map-side to two 64-long
-    // arrays before a 1×1 join; nothing row-scale ever shuffles.
+    // below θ = min of the 64th minima of the full sketches (Kmv.theta),
+    // scaled back by the sampled fraction — with the exact intersection
+    // as the honesty rider. At 100 TB the two corpus scans reduce
+    // map-side to two 64-long arrays before a 1×1 join; nothing
+    // row-scale ever shuffles.
     "a14_theta_intersect" -> ((s: SparkSession, dir: String) => {
       import graft.functions.Kmv
       val k = 64
@@ -2352,7 +2353,9 @@ object PipelineQueries {
                                        AS DOUBLE) END, 4) AS est_distinct
          FROM r GROUP BY lang ORDER BY lang""",
 
-    // same θ threshold, same common-below-θ count, same scale-back
+    // same θ threshold (least skips the NULL k-th min of a non-full
+    // sketch), same common-below-θ count, same scale-back; the exact
+    // sketch intersection when neither sketch is full
     "a14_theta_intersect" ->
       """WITH f AS (
            SELECT ('0x' || substr(md5('kmv:'
@@ -2366,20 +2369,26 @@ object PipelineQueries {
                 WHERE in_b),
          ka AS (SELECT h AS kth FROM ra WHERE rn = 64),
          kb AS (SELECT h AS kth FROM rb WHERE rn = 64),
-         th AS (SELECT least(ka.kth, kb.kth) AS theta FROM ka, kb),
+         th AS (SELECT least((SELECT kth FROM ka), (SELECT kth FROM kb))
+                  AS theta),
          common AS (
-           SELECT CAST(COUNT(*) AS BIGINT) AS n_common_sampled
+           SELECT CAST(COUNT(*) FILTER (WHERE ra.h < th.theta) AS BIGINT)
+                    AS n_common_sampled,
+                  COUNT(*) AS n_common
            FROM ra JOIN rb USING (h) CROSS JOIN th
-           WHERE ra.rn <= 64 AND rb.rn <= 64 AND ra.h < th.theta)
+           WHERE ra.rn <= 64 AND rb.rn <= 64)
          SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM f WHERE in_a) AS n_a,
                 (SELECT CAST(COUNT(*) AS BIGINT) FROM f WHERE in_b) AS n_b,
                 (SELECT CAST(COUNT(*) AS BIGINT) FROM f
                  WHERE in_a AND in_b) AS n_exact_intersect,
                 th.theta,
                 common.n_common_sampled,
-                round(CAST(common.n_common_sampled AS DOUBLE)
-                      * 1152921504606846976.0
-                      / CAST(th.theta AS DOUBLE), 4) AS est_intersect
+                round(CASE WHEN th.theta IS NULL
+                           THEN CAST(common.n_common AS DOUBLE)
+                           ELSE CAST(common.n_common_sampled AS DOUBLE)
+                                * 1152921504606846976.0
+                                / CAST(th.theta AS DOUBLE) END, 4)
+                  AS est_intersect
          FROM th CROSS JOIN common""",
 
     "a9_sketch_distinct" ->

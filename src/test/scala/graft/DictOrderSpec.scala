@@ -1,9 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{StructField, StructType, StringType}
-import graft.kg.{Link, Trydb}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType}
+import graft.kg.{DataGen, Extract, Link, Materialize, Trydb}
 
 /** Dictionary key-collision order semantics: pandas dict build is
   * last-occurrence-wins in COLUMN-MAJOR melt order (matcher.py:117-130)
@@ -87,5 +88,79 @@ class DictOrderSpec extends AnyFunSuite {
       Seq("Shared name").toDF("TRY_AccSpeciesName"), lineage)
       .select("WdID").head().getString(0)
     assert(out == "Q123", s"expected file-order-last Q123, got $out")
+  }
+
+  // ---- resolution dictionaries: driver arm == aggregate arm ------------
+
+  /** Matcher-output rows (TaxonId, TaxonName, Mapped_ID_WD,
+    * Mapped_Value, rowIdx), deliberately not in rowIdx order.
+    */
+  def matcherFixture(rows: Seq[(String, String, String, String, Long)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, name, wd, mv, ri) =>
+        Row(id, name, wd, mv, ri)
+      }, 2),
+      StructType(Seq("TaxonId", "TaxonName", "Mapped_ID_WD", "Mapped_Value")
+        .map(StructField(_, StringType, nullable = true)) :+
+        StructField("rowIdx", LongType, nullable = false)))
+
+  type Dict = Set[(String, String, String)]
+
+  /** Both arms of wdMapDicts over `matched`, asserted equal; returns the
+    * (id, name) dictionaries.
+    */
+  def bothArms(matched: DataFrame): (Dict, Dict) = {
+    def rows(df: DataFrame): Dict = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val (driverId, driverName) = Materialize.wdMapDicts(matched)
+    val (aggId, aggName) = Materialize.wdMapDicts(matched, maxDriverRows = 0)
+    // the default guard took the driver arm, the forced one the aggregate
+    assert(driverId.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(!aggId.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val id = rows(driverId); val name = rows(driverName)
+    assert(id == rows(aggId), s"id dict: driver=$id agg=${rows(aggId)}")
+    assert(name == rows(aggName), s"name dict: driver=$name agg=${rows(aggName)}")
+    Seq(aggId, aggName).foreach(_.unpersist())
+    (id, name)
+  }
+
+  test("wdMapDicts: driver and aggregate arms agree on a corpus matcher output") {
+    val records = Extract.records(DataGen.corpus(spark, 240, 4).toDF())
+    val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows)
+    val (id, name) = bothArms(matched)
+    assert(id.nonEmpty && name.nonEmpty)
+  }
+
+  test("wdMapDicts: keys that collide only after prefix and quote stripping") {
+    val (id, name) = bothArms(matcherFixture(Seq(
+      ("\"Q1\"", "Pan", "Q20", "late", 2L),
+      ("Wikidata:Q1", "P\"an", "Wikidata:Q10", "early", 1L))))
+    assert(id == Set(("Q1", "Q20", "late")))
+    assert(name == Set(("Pan", "Q20", "late")))
+  }
+
+  test("wdMapDicts: the later rowIdx wins although value order says otherwise") {
+    val target = 1L << 40 // a target mention's ordinal base
+    val (id, name) = bothArms(matcherFixture(Seq(
+      ("T9", "Apis", "Q10", "Zzz", target + 3),
+      ("T9", "Apis", "Q9", "Aaa", 5L),
+      ("T8", "Bos", "Q2", "b", 7L),
+      ("T8", "Bos", "Q100", "a", target))))
+    assert(id == Set(("T9", "Q10", "Zzz"), ("T8", "Q100", "a")))
+    assert(name == Set(("Apis", "Q10", "Zzz"), ("Bos", "Q100", "a")))
+  }
+
+  test("wdMapDicts: null and empty keys, empty and null Mapped_ID_WD") {
+    val (id, name) = bothArms(matcherFixture(Seq(
+      (null, "OnlyName", "Q1", null, 1L),
+      ("", "EmptyId", "Q2", "m2", 2L),
+      ("OnlyId", null, "Q3", "m3", 3L),
+      ("NoNameEither", "", "Q4", "m4", 4L),
+      ("Dropped", "DroppedToo", "", "m5", 5L),
+      ("Gone", "GoneToo", null, "m6", 6L),
+      ("Stripped", "StrippedToo", "Wikidata:", "m7", 7L))))
+    assert(id == Set(("OnlyId", "Q3", "m3"), ("NoNameEither", "Q4", "m4")))
+    assert(name == Set(("OnlyName", "Q1", null), ("EmptyId", "Q2", "m2")))
   }
 }

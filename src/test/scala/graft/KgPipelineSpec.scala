@@ -15,15 +15,16 @@ class KgPipelineSpec extends AnyFunSuite {
 
   val N = 240
 
-  /** Distributed matcher + the emission's relational resolution arm
-    * (guard forced to 0): no driver-side dictionary anywhere.
+  /** Distributed matcher, aggregate dictionaries and the emission's
+    * relational resolution arm (guards forced to 0): no driver-side
+    * dictionary anywhere.
     */
   def engineTriples(partitions: Int): Set[Model.Triple] = {
     val docs = DataGen.corpus(spark, N, partitions).toDF()
     val records = Extract.records(docs)
     val matched = Link.matchTaxa(records, DataGen.wdSparql(spark),
       DataGen.wdLineage(spark))
-    val (dictId, dictName) = Materialize.wdMapDicts(matched)
+    val (dictId, dictName) = Materialize.wdMapDicts(matched, maxDriverRows = 0)
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     Materialize.globiTriplesFused(records, dictId, dictName, Some(mm),
       maxDriverRows = 0)
@@ -120,8 +121,7 @@ class KgPipelineSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("kggap").toString
     graft.sources.SnapshotTable.write(
       spark.createDataset(ids.map(DataGen.document)).toDF(), s"$root/docs")
-    Pipeline.runFromTable(spark, s"$root/docs", s"$root/out", s"$root/graph",
-      partitions = 4)
+    Pipeline.runFromTable(spark, s"$root/docs", s"$root/out", s"$root/graph")
     val engine = spark.read.parquet(s"$root/out/30_triples/data")
       .as[Model.Triple].collect().toSet
     val oracle = Oracle.runDocs(ids)
@@ -129,6 +129,16 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(engine == oracle,
       s"\nmissing=${(oracle -- engine).size}${show(oracle -- engine)}" +
         s"\nextra=${(engine -- oracle).size}${show(engine -- oracle)}")
+  }
+
+  test("a table build leaves no persisted table behind") {
+    val root = java.nio.file.Files.createTempDirectory("kgcache").toString
+    graft.sources.SnapshotTable.write(DataGen.corpus(spark, 80, 4).toDF(),
+      s"$root/docs")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    Pipeline.runFromTable(spark, s"$root/docs", s"$root/out", s"$root/graph")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"the build left cached RDDs: $leaked")
   }
 
   /** Parquet part files of a stage's data dir. */

@@ -66,4 +66,21 @@ class KmvSpec extends AnyFunSuite {
     assert(fr.getDouble(1) ===
       commonWant.toDouble * math.pow(2, 60) / thWant.toDouble)
   }
+
+  test("one full sketch: theta is its k-th min and the estimate scales") {
+    val k = 4
+    // A overflowed its sketch (theta 40 samples 40/2^60 of the space);
+    // B fits in k and is its whole set. Below theta both are exhaustive,
+    // so the two common hashes there scale back by 2^60/40.
+    val full = Seq(10L, 20L, 30L, 40L)
+    val partial = Seq(20L, 30L, 50L)
+    for ((a, b) <- Seq((full, partial), (partial, full))) {
+      val row = Seq((a, b)).toDF("ska", "skb")
+        .select(Kmv.theta(col("ska"), col("skb"), k).as("th"),
+          Kmv.estimateIntersection(col("ska"), col("skb"), k).as("est"))
+        .head()
+      assert(row.getLong(0) == 40L)
+      assert(row.getDouble(1) === 2.0 * math.pow(2, 60) / 40.0)
+    }
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Physical-plan quality gates (the 100 TB checklist): filters and
   * column pruning must reach the parquet scan, dimension joins must
   * broadcast, distinct/agg must have a map-side partial phase, and the
-  * final graph write must be range-partitioned by predicate.
+  * final graph write must be rebalanced by predicate.
   */
 class PlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -82,10 +82,20 @@ class PlanSpec extends AnyFunSuite {
       graft.kg.Model.Triple("s1", "http://p/a", "o1", false, ""),
       graft.kg.Model.Triple("s2", "http://p/a", "o2", false, ""),
       graft.kg.Model.Triple("s3", "http://p/b", "lit", true, "x")).toDF()
-    graft.kg.Materialize.writeTriples(triples, tmp, numPartitions = 2)
+    // a rebalance by predicate sized by AQE: no range partitioning and
+    // so no sampling job
+    val plan = graft.kg.Materialize.predicateLayout(triples)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning"), plan)
+    assert(plan.contains("REBALANCE_PARTITIONS_BY_COL"), plan)
+    graft.kg.Materialize.writeTriples(triples, tmp)
     val dirs = new java.io.File(tmp).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(dirs.exists(_.startsWith("predicate=http_p_a")), dirs.toString)
+    assert(dirs.map(_.getName).toSet ==
+      Set("predicate=http_p_a", "predicate=http_p_b"), dirs.toSeq)
+    dirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
+    }
     val back = spark.read.parquet(tmp)
     assert(back.count() == 3)
   }

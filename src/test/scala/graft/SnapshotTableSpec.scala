@@ -163,7 +163,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val docsDir = s"$base/docs"; val graphDir = s"$base/graph"
     SnapshotTable.write(DataGen.corpus(spark, 60, 4).toDF(), docsDir)
     val (report, snap) = Pipeline.runFromTable(spark, docsDir,
-      s"$base/stages", graphDir, partitions = 4)
+      s"$base/stages", graphDir)
     assert(report.canonicalTriples > 0 && snap == 1L)
     val graph = SnapshotTable.read(spark, graphDir)
     assert(graph.count() == report.canonicalTriples)
