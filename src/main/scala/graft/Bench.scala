@@ -53,26 +53,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     awaitQuietBox()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shm = new java.io.File("/dev/shm")
-    val localDir = if (shm.isDirectory && shm.canWrite)
-      "/dev/shm/graft-spark" else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
     val loadBefore = loadAvg()
     val jvmsBefore = jvmCount()
     // JIT/codegen warmup outside the timed window (same convention as
     // tools/scaling.sh): one cheap query so the first timed query does
     // not absorb JVM warmup
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up q1_agg failed: ${e.getMessage}")
+    }
     // the once-per-scale shared tables (records + matcher + bucketed
     // triple tables) are built UP FRONT and reported as their own timed
     // line — otherwise their cost lands on whichever kg_* query touches
@@ -80,10 +70,7 @@ object Bench {
     val tm0 = System.nanoTime()
     val matSecs =
       try {
-        graft.queries.Materialized.globiTable(spark, sfDir)
-        graft.queries.Materialized.trydbTable(spark, sfDir)
-        graft.queries.PipelineQueries.materializeShared(spark, sfDir)
-        graft.queries.CaseStudyQueries.materializeShared(spark, sfDir)
+        graft.queries.Materialized.buildShared(spark, sfDir)
         (System.nanoTime() - tm0) / 1e9
       } catch {
         case e: Throwable =>
@@ -114,10 +101,15 @@ object Bench {
           -1.0
       }
     val incLoad = loadAvg()
+    // a query that throws reads -1 (left out of the total), not its
+    // time-to-failure, which would pass for a fast query
     def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
     }
     val firstPass = SparkEntry.queries.map { case (name, fn) =>
       name -> time(name, fn)
@@ -128,7 +120,7 @@ object Bench {
     // a real plan regression will. The final value is the min of the two
     // timings; BOTH are reported under "reruns" so the artifact shows
     // its own evidence.
-    val sortedTimes = firstPass.values.toSeq.sorted
+    val sortedTimes = firstPass.values.filter(_ >= 0).toSeq.sorted
     val median = if (sortedTimes.isEmpty) 0.0 else sortedTimes(sortedTimes.size / 2)
     val reruns = firstPass.collect {
       case (name, t) if t > 3 * median && t > 2.0 =>
@@ -144,7 +136,7 @@ object Bench {
       .mkString("{", ",", "}")
     val rr = reruns.map { case (k, (a, b)) => s"\"" + k + s"\":[$a,$b]" }
       .mkString("{", ",", "}")
-    // -1 sentinels (failed materialization) are excluded from the total
+    // -1 sentinels (failed query or build) are excluded from the total
     // rather than subtracted from it
     val total = results.values.filter(_ >= 0).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","contention":{"load_before":$loadBefore,"load_after":$loadAfter,"jvms_before":$jvmsBefore,"jvms_after":$jvmsAfter,"load_after_materialize":$matLoad,"load_after_inc_state":$incLoad,"reruns":$rr}}""")

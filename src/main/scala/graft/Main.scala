@@ -1,32 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entrypoint for the full KG construction pipeline
   * (north rule: "runs via spark-submit at N and 4N executors").
   *
   *   spark-submit --class graft.Main <jar> <nDocs> <outDir> [partitions]
   *
   * On a cluster the session comes from spark-submit's config (master,
-  * executors, memory); locally it falls back to local[*]. The pipeline
-  * is checkpoint-resumable: re-running with the same outDir skips
-  * completed stages (manifest fingerprint match) — kill it anywhere and
-  * re-submit.
+  * executors, memory); locally [[Session]] falls back to `MASTER` or
+  * one worker thread per core. The pipeline is checkpoint-resumable:
+  * re-running with the same outDir skips completed stages (manifest
+  * fingerprint match) — kill it anywhere and re-submit.
   */
 object Main {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(10000L)
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft-kg-out")
     val partitions = args.drop(2).headOption.map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder()
-      .appName("metrinkgspark")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .master(sys.props.getOrElse("spark.master",
-        sys.env.getOrElse("MASTER", "local[*]")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("metrinkgspark")
     val report = kg.Pipeline.run(spark, nDocs, outDir, partitions)
     report.stages.foreach { s =>
       println(f"stage=${s.name}%-14s rows=${s.rows}%10d parts=${s.partitions}%4d " +

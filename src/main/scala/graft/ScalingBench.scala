@@ -23,26 +23,16 @@ object ScalingBench {
   case class Level(cores: Int, wallSec: Double, triples: Long,
       docsPerSec: Double, triplesPerSec: Double, ccSec: Double)
 
+  /** A fresh session for one level: `local[cores]` unless spark-submit
+    * or `MASTER` names the master. Partitions ∝ cores, 8× finer than
+    * [[Session]]'s default so per-task aggregation state stays small
+    * (one giant hash per task = GC thrash); AQE coalesces the tail.
+    */
   def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val shm = new java.io.File("/dev/shm")
-    val localDir = if (shm.isDirectory && shm.canWrite)
-      "/dev/shm/graft-spark" else System.getProperty("java.io.tmpdir")
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      // shuffle/spill on tmpfs: a cluster has per-node local disks; a
-      // single shared /tmp device serializes multi-core shuffle I/O
-      .config("spark.local.dir", localDir)
-      // partitions ∝ cores, 8× finer so per-task aggregation state stays
-      // small (one giant hash per task = GC thrash); AQE coalesces the
-      // tail
-      .config("spark.sql.shuffle.partitions", (cores * 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session(s"graft-scaling-$cores", Some(cores))
+    spark.conf.set("spark.sql.shuffle.partitions", (cores * 8).toString)
+    spark
   }
 
   /** The shipped construction calls (matchTaxaAdaptive → wdMapDicts →
@@ -82,7 +72,10 @@ object ScalingBench {
       val edges = kg.Canonical.equivalenceEdges(matched)
       kg.Canonical.connectedComponents(edges).count()
       val ccSec = (System.nanoTime() - t1) / 1e9
-      Level(cores, wall, triples, nDocs / wall, triples / wall, ccSec)
+      // the cores the session got: spark-submit's or MASTER's master
+      // wins over the requested level
+      Level(spark.sparkContext.defaultParallelism, wall, triples,
+        nDocs / wall, triples / wall, ccSec)
     } finally spark.stop()
   }
 
@@ -101,7 +94,7 @@ object ScalingBench {
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("prep") =>
       val nDocs = args(1).toLong; val dir = args(2)
-      val prep = session(32)
+      val prep = Session("graft-scaling-prep")
       kg.DataGen.corpus(prep, nDocs, 64).toDF()
         .write.mode("overwrite").parquet(dir)
       prep.stop()
@@ -118,7 +111,7 @@ object ScalingBench {
     val corpusDir = s"$tmp/corpus"
 
     // corpus materialized once, outside the timed path
-    val prep = session(32)
+    val prep = Session("graft-scaling-prep")
     kg.DataGen.corpus(prep, nDocs, 64).toDF()
       .write.mode("overwrite").parquet(corpusDir)
     prep.stop()

@@ -17,8 +17,9 @@ object Bucketing {
     * vertical-partitioning layout: partition by pred, bucket by subj —
     * a pred-filtered pattern scan then reads ONLY its predicate's
     * files via partition pruning while subj joins stay exchange-free
-    * on the bucketing; probed in ProbeBucket: partitioned+bucketed
-    * scans keep `Bucketed: true` and SelectedBucketsCount). The input
+    * on the bucketing; BucketingSpec pins both on the GloBI table:
+    * each scan of a star pattern is bucketed and carries a `pred`
+    * partition filter, and the star plans no Exchange). The input
     * is re-clustered by (partitionCols, bucket-id) so each task holds
     * whole (partition, bucket) groups — without it every write task
     * would emit a file per partition×bucket it touches and the file

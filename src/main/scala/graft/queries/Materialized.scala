@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.kg._
-import graft.ops.Bucketing
+import graft.ops.{Bucketing, Par}
 
 /** Once-per-(session, scale) materialization of the pipeline's big
   * intermediates, shared by every kg_* driver query:
@@ -47,13 +47,12 @@ object Materialized {
     * object serializes duplicate builders (parallel test suites share
     * the session) while nested once() calls take DIFFERENT locks, so
     * there is no recursion into a locked map and no deadlock (the
-    * nesting is acyclic: globiTable → recordsAndMatched only).
+    * nesting is acyclic: a build only calls the builds of its upstream
+    * tables, e.g. globiTable → recordsAndMatched).
     */
   private[queries] def once[T <: AnyRef](spark: SparkSession, what: String, dir: String)(
       f: => T): T = {
-    // applicationId, not identityHashCode: hash reuse after GC could
-    // resurface a dead context's cached tables/DataFrames
-    val key = s"${spark.sparkContext.applicationId}:$what:$dir"
+    val key = memoKey(spark, what, dir)
     val cached = memo.get(key)
     if (cached != null) return cached.asInstanceOf[T]
     val lock = locks.computeIfAbsent(key, _ => new Object)
@@ -68,37 +67,31 @@ object Materialized {
     }
   }
 
-  /** Launch the rest of the shared-build DAG in the background the
-    * first time a harness-context build starts (guide §2.6): Bench and
-    * Verify materialize the shared tables through four sequential
-    * top-level calls, so the only way the TRY-db build or the fixture
-    * pack can overlap the records→globi critical path is for the FIRST
-    * build to start them. Gated on SPARK_GRAFT_SF_DIR == dir (the
-    * external-harness data-directory contract) so unit tests building
-    * one shared table do not drag the whole fixture set in. The
-    * incremental-dedup STATE BUILDS are deliberately NOT prefetched:
-    * Bench times them as their own line, and building them here would
-    * smear that line's cost into materialize_tables. Failures are
-    * swallowed — the memo stays empty and the harness's own sequential
-    * call re-runs the build and reports the real error.
+  // applicationId, not identityHashCode: hash reuse after GC could
+  // resurface a dead context's cached tables/DataFrames
+  private def memoKey(spark: SparkSession, what: String, dir: String): String =
+    s"${spark.sparkContext.applicationId}:$what:$dir"
+
+  /** Whether [[once]] holds a built `what` for this session and dir. */
+  private[graft] def isBuilt(spark: SparkSession, what: String, dir: String): Boolean =
+    memo.containsKey(memoKey(spark, what, dir))
+
+  /** Build every once-per-scale shared table: the GloBI and TRY-db
+    * triple tables and both fixture packs, concurrently through
+    * [[Par.run]], which joins every build and rethrows the first
+    * failure. The builds that share an upstream (globi, the taxonomy
+    * paths and the organism graph all need [[recordsAndMatched]]; the
+    * organism graph needs [[globiTable]]) meet on [[once]]'s per-key
+    * locks, so each upstream is built once and its dependants wait for
+    * it. The incremental-dedup state builds are not part of this set:
+    * Bench times them as their own line.
     */
-  private val prefetched =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private[queries] def prefetchShared(spark: SparkSession, dir: String): Unit = {
-    if (!sys.env.get("SPARK_GRAFT_SF_DIR").contains(dir)) return
-    val key = s"${spark.sparkContext.applicationId}:$dir"
-    if (prefetched.putIfAbsent(key, java.lang.Boolean.TRUE) != null) return
-    Seq[(String, () => Unit)](
+  def buildShared(spark: SparkSession, dir: String): Unit =
+    Par.run(
+      "globi" -> (() => { globiTable(spark, dir); () }),
       "trydb" -> (() => { trydbTable(spark, dir); () }),
       "pipeline" -> (() => PipelineQueries.materializeShared(spark, dir)),
-      "casestudy" -> (() => CaseStudyQueries.materializeShared(spark, dir))
-    ).foreach { case (n, t) =>
-      val th = new Thread(() => { try t() catch { case _: Throwable => () } },
-        s"prefetch-$n")
-      th.setDaemon(true)
-      th.start()
-    }
-  }
+      "casestudy" -> (() => CaseStudyQueries.materializeShared(spark, dir)))
 
   /** Physically clear a managed table's leftover warehouse directory
     * from a previous JVM (the in-memory catalog forgets the table, and
@@ -149,7 +142,6 @@ object Materialized {
     */
   def globiTable(spark: SparkSession, dir: String): String =
     once(spark, "globiTable", dir) {
-      prefetchShared(spark, dir)
       val n = KgQueries.nDocsFor(dir)
       val (records, matched) = recordsAndMatched(spark, dir)
       val (dictId, dictName) = Materialize.wdMapDicts(matched)

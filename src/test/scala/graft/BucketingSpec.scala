@@ -54,6 +54,16 @@ class BucketingSpec extends AnyFunSuite {
       val plan = star.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
       assert(!plan.contains("Exchange"), plan)
+      // each pattern scan prunes to its predicate's directory and reads
+      // the subj buckets
+      val scans = star.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.size == 3, star.queryExecution.sparkPlan)
+      scans.foreach { f =>
+        assert(f.partitionFilters.exists(_.references.exists(_.name == "pred")), f)
+        assert(f.bucketedScan, f)
+      }
     } finally ()
   }
 }

@@ -4,11 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for suites (one per JVM — Spark reuses it). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session("graft-test", cores = Some(4))
 }
