@@ -8,9 +8,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native span-walk for [[graft.kg.Extract.records]]: one compiled
-  * pass over a document's span array producing the full record struct
-  * (every field value + the ordered media_ref array).
+/** Native span-walk for [[graft.kg.Extract.records]]: one pass over a
+  * document's span array producing the full record struct (every field
+  * value + the ordered media_ref array). It is NOT compiled: the
+  * expression is `CodegenFallback`, so each row runs the interpreted
+  * `eval` below, which whole-stage codegen calls as a black box.
   *
   * Why: the higher-order formulation
   * (`filter` → `transform` → `map_from_entries` → 23 × `element_at`)

@@ -167,41 +167,6 @@ object Pipeline {
   case class IncrementalResult(processedDocsSnapshot: Long,
       graphSnapshot: Long, rowsWritten: Long, mode: String)
 
-  /** Incremental maintenance of the RAW triple table, EXACT by
-    * construction (incremental output == full rebuild, asserted in
-    * SnapshotTableSpec):
-    *
-    * The dictionaries are order-sensitive (pandas last-wins over the
-    * global sources-then-targets mention order), so naive
-    * delta-with-delta-dicts processing silently diverges from a full
-    * rebuild on duplicate-name keys — this implementation instead
-    * mirrors the reference's actual incremental unit (dictionaries
-    * global, EMISSION batched, globi_kg_generator.py:88-110 vs 146-171):
-    *
-    *  1. an accumulated DISTINCT-TAXA state (dimension-sized) keeps
-    *     every mention 4-tuple with its global first-occurrence ordinal
-    *     (isTarget·2^40 + recNum — exactly the full rebuild's
-    *     sources-then-targets order, stable under appends);
-    *  2. each increment merges the delta's taxa (min-ordinal) and
-    *     re-runs the driver-local matcher on the state → the FINAL
-    *     dictionaries, identical to a full rebuild's;
-    *  3. a PROBE state keeps every distinct (taxonId, taxonName)
-    *     resolution probe ever seen; if no old probe resolves
-    *     DIFFERENTLY under the final dictionaries than under the
-    *     previous ones (covers changed winners, new ids shadowing old
-    *     name matches, and new entries matching previously dropped
-    *     records), previously emitted triples are still exactly what
-    *     the final dictionaries would emit → FAST PATH: emit only the
-    *     delta records, anti-join the shared subset, append;
-    *  4. otherwise old emissions are stale → detected, and the run
-    *     REBUILDS from the full docs table (overwrite snapshot) — the
-    *     correctness-first fallback.
-    *
-    * Scope: maintains the PRE-canonicalization table. CC
-    * canonicalization is a global fixpoint (new equivalence edges merge
-    * previously distinct components retroactively) and stays a periodic
-    * global job (runFromTable) — the standard incremental/batch split.
-    */
   /** Incremental maintenance of the CANONICAL triple table, layered on
     * incrementalFromTable (which keeps the raw table + dictionary
     * states exact):
@@ -219,8 +184,8 @@ object Pipeline {
     *
     * Exactness (incremental canonical == full runFromTable canonical)
     * is test-pinned in SnapshotTableSpec.
-    */
-  /** `failpoint` is a crash-injection hook invoked right AFTER each
+    *
+    * `failpoint` is a crash-injection hook invoked right AFTER each
     * named commit ("taxa-state", "probes-state", "raw-graph",
     * "mapping-state") — production passes the no-op default; the test
     * suite throws from it to prove every crash window repairs exactly.
@@ -354,6 +319,41 @@ object Pipeline {
       .select(explode(col("ps")).as("p")).select(col("p.id"), col("p.name"))
       .distinct()
 
+  /** Incremental maintenance of the RAW triple table, EXACT by
+    * construction (incremental output == full rebuild, asserted in
+    * SnapshotTableSpec):
+    *
+    * The dictionaries are order-sensitive (pandas last-wins over the
+    * global sources-then-targets mention order), so naive
+    * delta-with-delta-dicts processing silently diverges from a full
+    * rebuild on duplicate-name keys — this implementation instead
+    * mirrors the reference's actual incremental unit (dictionaries
+    * global, EMISSION batched, globi_kg_generator.py:88-110 vs 146-171):
+    *
+    *  1. an accumulated DISTINCT-TAXA state (dimension-sized) keeps
+    *     every mention 4-tuple with its global first-occurrence ordinal
+    *     (isTarget·2^40 + recNum — exactly the full rebuild's
+    *     sources-then-targets order, stable under appends);
+    *  2. each increment merges the delta's taxa (min-ordinal) and
+    *     re-runs the driver-local matcher on the state → the FINAL
+    *     dictionaries, identical to a full rebuild's;
+    *  3. a PROBE state keeps every distinct (taxonId, taxonName)
+    *     resolution probe ever seen; if no old probe resolves
+    *     DIFFERENTLY under the final dictionaries than under the
+    *     previous ones (covers changed winners, new ids shadowing old
+    *     name matches, and new entries matching previously dropped
+    *     records), previously emitted triples are still exactly what
+    *     the final dictionaries would emit → FAST PATH: emit only the
+    *     delta records, anti-join the shared subset, append;
+    *  4. otherwise old emissions are stale → detected, and the run
+    *     REBUILDS from the full docs table (overwrite snapshot) — the
+    *     correctness-first fallback.
+    *
+    * Scope: maintains the PRE-canonicalization table. CC
+    * canonicalization is a global fixpoint (new equivalence edges merge
+    * previously distinct components retroactively) and stays a periodic
+    * global job (runFromTable) — the standard incremental/batch split.
+    */
   def incrementalFromTable(spark: SparkSession, docsTableDir: String,
       rawGraphTableDir: String,
       maxDriverRows: Long = MaxDriverRows,

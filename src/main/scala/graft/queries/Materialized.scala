@@ -50,7 +50,7 @@ object Materialized {
     * nesting is acyclic: a build only calls the builds of its upstream
     * tables, e.g. globiTable → recordsAndMatched).
     */
-  private[queries] def once[T <: AnyRef](spark: SparkSession, what: String, dir: String)(
+  private[graft] def once[T <: AnyRef](spark: SparkSession, what: String, dir: String)(
       f: => T): T = {
     val key = memoKey(spark, what, dir)
     val cached = memo.get(key)

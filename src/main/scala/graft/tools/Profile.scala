@@ -20,9 +20,11 @@ import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
   *       `explain("formatted")` of each query to <outDir>/<q>_<suffix>.txt
   *       (the plans/ before/after evidence)
   *   sample <sfDir>
-  *       a sampling profile of the fused GloBI emission: every executor
-  *       task thread's stack every 10 ms over three runs, tallied by the
-  *       first graft/catalyst/regex/String frame
+  *       a sampling profile of the fused GloBI emission: every RUNNABLE
+  *       executor task thread's stack every 10 ms over three runs,
+  *       tallied by the first graft/catalyst/regex/String frame; the
+  *       share of task-thread samples that were parked or waiting is
+  *       reported on its own line
   *   phases <sfDir>
   *       wall time, job count and summed job time of each shared-table
   *       build (in Bench order, memo-incremental) and of the incremental
@@ -87,17 +89,27 @@ object Profile {
     val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
     // local mode: executor tasks are threads of this JVM
     val tally = new ConcurrentHashMap[String, Long]()
+    val idle = new java.util.concurrent.atomic.AtomicLong()
     @volatile var sampling = true
+    // one ThreadInfo holds a thread's state and stack from the same
+    // safepoint; Thread.getState read beside getAllStackTraces can pair
+    // a parked stack with RUNNABLE
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
     val sampler = new Thread(() => {
       while (sampling) {
-        Thread.getAllStackTraces.forEach { (t, st) =>
-          if (t.getName.startsWith("Executor task launch") && st.nonEmpty) {
-            val f = st.find { f =>
-              val c = f.getClassName
-              c.startsWith("graft.") || c.contains("catalyst") ||
-                c.startsWith("java.util.regex") || c.startsWith("java.lang.String")
-            }.getOrElse(st.head)
-            tally.merge(f.getClassName + "." + f.getMethodName, 1L, _ + _)
+        threads.dumpAllThreads(false, false).foreach { ti =>
+          val st = ti.getStackTrace
+          if (ti.getThreadName.startsWith("Executor task launch") && st.nonEmpty) {
+            // a parked or waiting task thread is not computing
+            if (ti.getThreadState != Thread.State.RUNNABLE) idle.incrementAndGet()
+            else {
+              val f = st.find { f =>
+                val c = f.getClassName
+                c.startsWith("graft.") || c.contains("catalyst") ||
+                  c.startsWith("java.util.regex") || c.startsWith("java.lang.String")
+              }.getOrElse(st.head)
+              tally.merge(f.getClassName + "." + f.getMethodName, 1L, _ + _)
+            }
           }
         }
         Thread.sleep(10)
@@ -111,6 +123,9 @@ object Profile {
     } finally { sampling = false; sampler.join() }
     println(f"[profile] 3x fused emission: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val total = tally.values().asScala.map(_.toLong).sum.toDouble
+    val waiting = idle.get()
+    println(f"[profile] parked or waiting: ${waiting * 100.0 / (waiting + total)}%.1f%% " +
+      f"of ${waiting + total.toLong} task-thread samples; RUNNABLE ones below")
     tally.asScala.toSeq.sortBy(-_._2).take(25).foreach { case (k, v) =>
       println(f"[profile] ${v / total * 100}%5.1f%% $v%6d  $k")
     }
@@ -154,7 +169,7 @@ object Profile {
       "scd2DimTable" -> p(PipelineQueries.scd2DimTable),
       "wapDocsTable" -> p(PipelineQueries.wapDocsTable),
       "organismEdges" -> p(CaseStudyQueries.organismEdges),
-      "organismTriangles" -> p(CaseStudyQueries.organismTriangles),
+      "organismGraph" -> p(CaseStudyQueries.organismGraph(_, _)),
       "taxonomyEdges" -> p(CaseStudyQueries.taxonomyEdges),
       // incremental_state_build
       "incLshState" -> p(PipelineQueries.incLshState),

@@ -22,7 +22,7 @@ class HarnessSpec extends AnyFunSuite {
       "lshComponents", "mergedDocsTable", "statsDocsTable", "zorderOrdersTable",
       "deletedDocsTable", "partitionedDocsTable", "bloomDocsTable",
       "scd2DimTable", "wapDocsTable", "orgEdgesDirected", "orgEdgesUndirected",
-      "orgTriangles", "taxonomyEdges"
+      "orgGraph", "taxonomyEdges"
     ).foreach(what => assert(Materialized.isBuilt(spark, what, dir), what))
     assert(buildThreads().isEmpty, buildThreads())
   }

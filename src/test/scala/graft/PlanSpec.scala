@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import graft.queries.CaseStudyQueries
 
 /** Physical-plan quality gates (the 100 TB checklist): filters and
   * column pruning must reach the parquet scan, dimension joins must
@@ -228,6 +229,14 @@ class PlanSpec extends AnyFunSuite {
     assert(rows.exists(_.getLong(2) == 0L), "no customer-only rows — vacuous")
   }
 
+  /** Run `check` against both arms of an organism-graph query: the
+    * default row guard (the driver arm) and a guard of 0 (the
+    * distributed plan).
+    */
+  private def bothArms(check: Long => Unit): Unit =
+    Seq(graft.kg.Model.MaxDriverRows, 0L)
+      .foreach(m => withClue(s"maxDriverRows = $m: ")(check(m)))
+
   /** Undirected organism edge set derived independently of the engine
     * queries (same serving table, plain collected Scala) — shared by
     * the triangle and k-core brute twins.
@@ -262,17 +271,19 @@ class PlanSpec extends AnyFunSuite {
     } yield (u, v, w)
     val perNode = triangles.flatMap { case (a, b, c) => Seq(a, b, c) }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val got = SparkEntry.queries("kg_cs_triangles")(spark, dir).collect()
-    assert(got.nonEmpty, "no triangles in the sf0.001 graph — test is vacuous")
-    got.foreach { r =>
-      assert(r.getLong(2) == triangles.size.toLong,
-        s"total ${r.getLong(2)} vs brute ${triangles.size}")
-      assert(perNode(r.getString(0)) == r.getLong(1),
-        s"${r.getString(0)}: ${r.getLong(1)} vs brute ${perNode(r.getString(0))}")
+    bothArms { m =>
+      val got = CaseStudyQueries.triangles(spark, dir, m).collect()
+      assert(got.nonEmpty, "no triangles in the sf0.001 graph — test is vacuous")
+      got.foreach { r =>
+        assert(r.getLong(2) == triangles.size.toLong,
+          s"total ${r.getLong(2)} vs brute ${triangles.size}")
+        assert(perNode(r.getString(0)) == r.getLong(1),
+          s"${r.getString(0)}: ${r.getLong(1)} vs brute ${perNode(r.getString(0))}")
+      }
+      // the engine returns the top-20 slice of the brute ranking
+      val expectedTop = perNode.toSeq.sortBy { case (n, c) => (-c, n) }.take(20)
+      assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq == expectedTop)
     }
-    // the engine returns the top-20 slice of the brute ranking
-    val expectedTop = perNode.toSeq.sortBy { case (n, c) => (-c, n) }.take(20)
-    assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq == expectedTop)
   }
 
   test("kg_cs_lcc equals brute clustering coefficient; degree-1 excluded") {
@@ -288,11 +299,13 @@ class PlanSpec extends AnyFunSuite {
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }.toSeq
     val expected = brute.sortBy { case (n, _, _, l) => (-l, n) }.take(15)
-    val got = SparkEntry.queries("kg_cs_lcc")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(got.nonEmpty && got == expected, s"\ngot  $got\nwant $expected")
-    assert(got.exists(_._4 > 0.0), "all-zero lcc — fixture has no triangles")
+    bothArms { m =>
+      val got = CaseStudyQueries.lcc(spark, dir, m).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+      assert(got.nonEmpty && got == expected, s"\ngot  $got\nwant $expected")
+      assert(got.exists(_._4 > 0.0), "all-zero lcc — fixture has no triangles")
+    }
   }
 
   test("kg_cs_sssp equals brute Bellman-Ford with the md5 edge weights") {
@@ -355,14 +368,16 @@ class PlanSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val hist = deg.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
-    val got = SparkEntry.queries("kg_cs_degree_dist")(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got.map(r => (r._1, r._2)).toMap == hist)
-    // descending-cumulative: n_ge at the smallest degree covers all nodes
-    assert(got.head._3 == deg.size.toLong)
-    assert(got.sliding(2).forall {
-      case Seq((_, _, a), (_, _, b)) => a >= b; case _ => true
-    })
+    bothArms { m =>
+      val got = CaseStudyQueries.degreeDist(spark, dir, m).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(got.map(r => (r._1, r._2)).toMap == hist)
+      // descending-cumulative: n_ge at the smallest degree covers all nodes
+      assert(got.head._3 == deg.size.toLong)
+      assert(got.sliding(2).forall {
+        case Seq((_, _, a), (_, _, b)) => a >= b; case _ => true
+      })
+    }
   }
 
   test("kg_cs_jaccard_nbrs equals brute common-neighbor Jaccard; no existing edges") {
@@ -378,12 +393,14 @@ class PlanSpec extends AnyFunSuite {
       (u, v, common.toLong,
         BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }).sortBy { case (u, v, _, j) => (-j, u, v) }.take(20)
-    val got = SparkEntry.queries("kg_cs_jaccard_nbrs")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(got.nonEmpty, "no predicted links — test is vacuous")
-    assert(got.toSeq == brute, s"engine ${got.mkString(",")} vs brute $brute")
-    got.foreach { case (u, v, _, _) =>
-      assert(!edges.contains((u, v)), s"($u,$v) is an existing edge") }
+    bothArms { m =>
+      val got = CaseStudyQueries.jaccardNbrs(spark, dir, m).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      assert(got.nonEmpty, "no predicted links — test is vacuous")
+      assert(got.toSeq == brute, s"engine ${got.mkString(",")} vs brute $brute")
+      got.foreach { case (u, v, _, _) =>
+        assert(!edges.contains((u, v)), s"($u,$v) is an existing edge") }
+    }
   }
 
   test("kg_cs_adamic_adar equals brute degree-weighted common neighbors") {
@@ -399,10 +416,12 @@ class PlanSpec extends AnyFunSuite {
       (u, v, cn.size.toLong,
         BigDecimal(aa).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     }).sortBy { case (u, v, _, aa) => (-aa, u, v) }.take(20)
-    val got = SparkEntry.queries("kg_cs_adamic_adar")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(got.nonEmpty, "no predicted links — test is vacuous")
-    assert(got.toSeq == brute, s"engine ${got.mkString(",")} vs brute $brute")
+    bothArms { m =>
+      val got = CaseStudyQueries.adamicAdar(spark, dir, m).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+      assert(got.nonEmpty, "no predicted links — test is vacuous")
+      assert(got.toSeq == brute, s"engine ${got.mkString(",")} vs brute $brute")
+    }
   }
 
   test("kg_cs_wedge_capped equals brute capped enumeration; ledger drops wedges") {
@@ -423,13 +442,15 @@ class PlanSpec extends AnyFunSuite {
     val keptW = adj.values.map(ns => ch2(math.min(ns.size, cap).toLong)).sum
     assert(keptW < total,
       s"cap $cap drops nothing at sf0.001 ($keptW == $total) — ledger vacuous")
-    val got = SparkEntry.queries("kg_cs_wedge_capped")(spark, dir).collect()
-    assert(got.nonEmpty, "no capped predictions — test is vacuous")
-    assert(got.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-      == brute, "capped engine ranking != brute capped ranking")
-    got.foreach { r =>
-      assert(r.getLong(4) == total && r.getLong(3) == keptW,
-        s"ledger (${r.getLong(3)}/${r.getLong(4)}) vs brute ($keptW/$total)")
+    bothArms { m =>
+      val got = CaseStudyQueries.wedgeCapped(spark, dir, m).collect()
+      assert(got.nonEmpty, "no capped predictions — test is vacuous")
+      assert(got.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+        == brute, "capped engine ranking != brute capped ranking")
+      got.foreach { r =>
+        assert(r.getLong(4) == total && r.getLong(3) == keptW,
+          s"ledger (${r.getLong(3)}/${r.getLong(4)}) vs brute ($keptW/$total)")
+      }
     }
   }
 
@@ -447,12 +468,14 @@ class PlanSpec extends AnyFunSuite {
         if (next.nonEmpty) Some((h, dist.toLong, next.size.toLong)) else None
       }
     }.sortBy { case (h, d, _) => (h, d) }
-    val got = SparkEntry.queries("kg_cs_bfs_reach")(spark, dir).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got.nonEmpty, "empty reach — test is vacuous")
-    assert(got == brute, s"engine $got vs brute $brute")
-    // the rings must be genuinely multi-hop at sf0.001, not all dist-1
-    assert(brute.exists(_._2 >= 2), "graph too shallow — BFS test is vacuous")
+    bothArms { m =>
+      val got = CaseStudyQueries.bfsReach(spark, dir, m).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(got.nonEmpty, "empty reach — test is vacuous")
+      assert(got == brute, s"engine $got vs brute $brute")
+      // the rings must be genuinely multi-hop at sf0.001, not all dist-1
+      assert(brute.exists(_._2 >= 2), "graph too shallow — BFS test is vacuous")
+    }
   }
 
   test("kg_cs_kcore equals brute-force peeling; in-core degrees honor k") {
