@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Bucketed co-located joins: pre-shuffle both sides once at write time
   * so every subsequent equi-join on the bucket key is exchange-free.
@@ -8,9 +9,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The 100 TB use: the triple table bucketed by subj makes repeated
   * self-joins (the SPARQL-metrics workload — multiway subject joins)
   * shuffle-free, and the mention table bucketed by the link key joins
-  * the dictionary partitions without moving the corpus.
+  * the dictionary partitions without moving the corpus. The bucket
+  * count follows the data ([[bucketCount]]): a bucket is one scan task,
+  * so a fixed count over-splits a small table and under-splits a
+  * large one.
   */
 object Bucketing {
+
+  /** Buckets for `bytes` of input: one per split of Spark's own file
+    * split size (`FilePartition.maxSplitBytes`'s rule), so a bucketed
+    * scan plans as many tasks as an unbucketed scan of the same bytes;
+    * capped at `spark.sql.sources.bucketing.maxBuckets`, the most a
+    * bucketed write accepts.
+    */
+  def bucketCount(spark: SparkSession, bytes: Long): Int = {
+    val conf = spark.sessionState.conf
+    math.min(conf.bucketingMaxBuckets,
+      bucketCount(bytes, conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes,
+        spark.sparkContext.defaultParallelism))
+  }
+
+  /** `max(1, ceil(bytes / per))` with
+    * `per = min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))`.
+    */
+  def bucketCount(bytes: Long, maxPartitionBytes: Long, openCostInBytes: Long,
+      parallelism: Int): Int = {
+    val per = math.max(1L,
+      math.min(maxPartitionBytes, math.max(openCostInBytes, bytes / parallelism)))
+    math.max(1L, (bytes + per - 1) / per).toInt
+  }
+
+  /** The bytes of the files `df` reads, from its plan's file indexes
+    * (no file-system call of its own, so any Hadoop scheme works).
+    */
+  def inputBytes(df: DataFrame): Long = df.queryExecution.analyzed.collect {
+    case l: LogicalRelation => l.relation match {
+      case h: HadoopFsRelation => h.location.sizeInBytes
+      case _ => 0L
+    }
+  }.sum
 
   /** Write df as a bucketed (and sorted) managed table, optionally
     * hive-partitioned by `partitionCols` first (the triple-store

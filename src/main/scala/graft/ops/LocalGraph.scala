@@ -12,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * IS its rank, so every name comparison a query makes — `least`,
   * `x.b < y.b`, an ORDER BY tiebreak — is an Int comparison that agrees
   * with the distributed plan's. Two CSR arrays hold the edges: the
-  * directed out-adjacency (what PageRank walks) and the symmetric
-  * adjacency (the undirected view), each node's slice sorted ascending,
-  * so a common-neighbour step is a linear merge of two sorted arrays
-  * (the sorted-set intersection HERO, SIGMOD 2024, builds on).
+  * directed out-adjacency (what PageRank and the closure walk) and the
+  * symmetric adjacency (the undirected view), each node's slice sorted
+  * ascending, so a common-neighbour step is a linear merge of two sorted
+  * arrays (the sorted-set intersection HERO, SIGMOD 2024, builds on).
   */
 final class LocalGraph private (
     /** node ids, ascending in Spark's string order */
@@ -103,6 +103,35 @@ final class LocalGraph private (
       }.toArray
       frontier = next
       next.length
+    }
+  }
+
+  /** The transitive closure over the directed edges within `maxDepth`
+    * steps: `(node, anc, depth)` for every node reached from `node`
+    * along one or more out-edges, `depth` the fewest edges, ordered by
+    * (node, anc). One BFS per node; the start is not marked seen, so a
+    * node on a cycle reaches itself at its shortest cycle's length.
+    */
+  def closure(maxDepth: Int): Iterator[(Int, Int, Int)] = {
+    val seen = Array.fill(size)(-1)
+    Iterator.range(0, size).flatMap { v =>
+      val reached = Array.newBuilder[(Int, Int)]
+      var frontier = Array(v)
+      var depth = 1
+      while (depth <= maxDepth && frontier.nonEmpty) {
+        val next = Array.newBuilder[Int]
+        frontier.foreach { u =>
+          var i = outOff(u)
+          while (i < outOff(u + 1)) {
+            val w = outAdj(i)
+            if (seen(w) != v) { seen(w) = v; next += w; reached += ((w, depth)) }
+            i += 1
+          }
+        }
+        frontier = next.result()
+        depth += 1
+      }
+      reached.result().sortInPlace().iterator.map { case (a, d) => (v, a, d) }
     }
   }
 

@@ -104,8 +104,10 @@ object CaseStudyQueries {
     * edge set — itself memoized + checkpointed: the derivation is only a
     * projection + distinct over the (dimension-sized) directed edges,
     * but six queries consume it and each would otherwise re-shuffle the
-    * distinct. Nested `once` calls take different locks (acyclic:
-    * undirected → directed → Materialized.globiTable), so no deadlock.
+    * distinct. Built on first use, not by [[materializeShared]]: only
+    * the distributed arms and the distributed-only queries read it.
+    * Nested `once` calls take different locks (acyclic: undirected →
+    * directed → Materialized.globiTable), so no deadlock.
     */
   private[graft] def organismEdges(s: SparkSession, dir: String): DataFrame =
     Materialized.once(s, "orgEdgesUndirected", dir) {
@@ -158,17 +160,16 @@ object CaseStudyQueries {
     */
   def materializeShared(s: SparkSession, dir: String): Unit = {
     // the organism-graph chain (edges → driver graph, or the distributed
-    // triangle counts above the row guard) and the taxonomy edge build
-    // consume different upstreams (bucketed triple table vs the
-    // records-derived taxon paths) — run them concurrently (guide
-    // §2.6); within the chain order is preserved
+    // triangle counts above the row guard) and the taxonomy chain
+    // (edges → driver graph) consume different upstreams (bucketed
+    // triple table vs the records-derived taxon paths) — run them
+    // concurrently (guide §2.6); within a chain order is preserved
     Par.run(
       "graph" -> (() => {
-        organismEdges(s, dir)
         if (organismGraph(s, dir).isEmpty) organismTriangles(s, dir)
         ()
       }),
-      "taxonomy" -> (() => { taxonomyEdges(s, dir); () }))
+      "taxonomy" -> (() => { taxonomyGraph(s, dir); () }))
   }
 
   /** The organism graph on the driver: the directed edge memo fetched
@@ -180,12 +181,69 @@ object CaseStudyQueries {
     */
   private[graft] def organismGraph(s: SparkSession, dir: String,
       maxDriverRows: Long = Model.MaxDriverRows): Option[LocalGraph] =
+    driverGraph(s, dir, "orgGraph", organismEdgesDirected(s, dir), maxDriverRows)
+
+  /** The taxonomy on the driver: the child → parent edge memo fetched
+    * by the same guarded action as [[organismGraph]], ranked into a
+    * [[LocalGraph]] and memoized per (session, scale). None above the
+    * guard or with a non-positive one, where [[taxonomyClosure]] runs
+    * its distributed plan.
+    */
+  private[graft] def taxonomyGraph(s: SparkSession, dir: String,
+      maxDriverRows: Long = Model.MaxDriverRows): Option[LocalGraph] =
+    driverGraph(s, dir, "taxonomyGraph", taxonomyEdges(s, dir), maxDriverRows)
+
+  /** One guarded fetch of a (from, to) string edge memo as a
+    * [[LocalGraph]], memoized as `what` (suffixed by a non-default
+    * guard); None above the guard or with a non-positive one.
+    */
+  private def driverGraph(s: SparkSession, dir: String, what: String,
+      edges: => DataFrame, maxDriverRows: Long): Option[LocalGraph] =
     if (maxDriverRows <= 0) None
     else Materialized.once(s,
-        if (maxDriverRows == Model.MaxDriverRows) "orgGraph" else s"orgGraph@$maxDriverRows",
-        dir) {
-      Model.driverRows(organismEdgesDirected(s, dir), maxDriverRows)
+        if (maxDriverRows == Model.MaxDriverRows) what else s"$what@$maxDriverRows", dir) {
+      Model.driverRows(edges, maxDriverRows)
         .map(rows => LocalGraph(rows.toSeq.map(r => (r.getString(0), r.getString(1)))))
+    }
+
+  /** Path-doubling rounds of [[taxonomyClosure]]'s distributed arm:
+    * min-depths ≤ 2^3 = 8 cover the 7-level hierarchy (6 rank edges +
+    * the stale pseudo-root the dup-rank noise mints).
+    */
+  private val ClosureRounds = 3
+
+  // RDFS-style taxonomy reasoning: transitive ancestor closure over
+  // the parent edges encoded in the taxon rank paths (the pipe-joined
+  // lineage strings matcher.py:133-180 consumes). Edges = adjacent
+  // path elements (deeper element → its parent), distinct'ed —
+  // dimension-sized (distinct lineages, not records) at any corpus
+  // scale. min(depth) keeps the shortest derivation (unique on a tree;
+  // well-defined on the noisy-path DAG — level-prefixed rank names make
+  // cycles impossible, and a node on a cycle would be its own ancestor
+  // in both arms).
+  //
+  // Two arms, like the organism-graph queries. While the edges fit the
+  // shared row guard, a BFS per node over the memoized [[LocalGraph]]
+  // emits every ancestor within 2^ClosureRounds steps at its min depth
+  // and the ordered rows come back as a local relation, whose collect
+  // runs no job: path doubling here was 16 one-task jobs over a few
+  // hundred edges. Above the guard the closure runs as PATH DOUBLING:
+  // round r extends the relation from min-depth ≤ 2^(r-1) to ≤ 2^r by
+  // joining it with ITSELF, so a depth-D hierarchy closes in
+  // ceil(log2 D) shuffle rounds instead of D semi-naive iterations,
+  // each round localCheckpointed (the CC/PageRank discipline); it stays
+  // the reference arm. The DuckDB oracle re-derives the edges from the
+  // side-channel paths dump and closes them with a RECURSIVE CTE — a
+  // different closure algorithm agreeing hash-exact.
+  private[graft] def taxonomyClosure(s: SparkSession, dir: String,
+      maxDriverRows: Long = Model.MaxDriverRows): DataFrame =
+    taxonomyGraph(s, dir, maxDriverRows).map { g =>
+      localRows(s, "node STRING, anc STRING, depth BIGINT",
+        g.closure(1 << ClosureRounds)
+          .map { case (v, a, d) => Row(g.names(v), g.names(a), d.toLong) }.toSeq)
+    }.getOrElse {
+      graft.ops.Closure.transitive(taxonomyEdges(s, dir), ClosureRounds)
+        .orderBy(col("node"), col("anc"))
     }
 
   /** A driver arm's final rows as a local relation, whose collect runs
@@ -1220,28 +1278,7 @@ object CaseStudyQueries {
         .orderBy(col("ilabel"))
     }),
 
-    // RDFS-style taxonomy reasoning: transitive ancestor closure over
-    // the parent edges encoded in the taxon rank paths (the pipe-joined
-    // lineage strings matcher.py:133-180 consumes). Edges = adjacent
-    // path elements (deeper element → its parent), distinct'ed —
-    // dimension-sized (distinct lineages, not records) at any corpus
-    // scale. The closure runs as PATH DOUBLING: round r extends the
-    // relation from min-depth ≤ 2^(r-1) to ≤ 2^r by joining it with
-    // ITSELF, so a depth-D hierarchy closes in ceil(log2 D) shuffle
-    // rounds instead of D semi-naive iterations — the posture that
-    // matters when the hierarchy is deep and each round is a full
-    // shuffle. min(depth) keeps the shortest derivation (unique on a
-    // tree; well-defined on the noisy-path DAG — level-prefixed rank
-    // names make cycles impossible); each round localCheckpoints (the
-    // CC/PageRank discipline). The DuckDB oracle re-derives the edges
-    // from the side-channel paths dump and closes them with a RECURSIVE
-    // CTE — a different closure algorithm agreeing hash-exact.
-    "kg_taxonomy_closure" -> ((s: SparkSession, dir: String) => {
-      // 3 doubling rounds ⇒ min-depths ≤ 8 ≥ the 7-level hierarchy
-      // (6 rank edges + the stale pseudo-root the dup-rank noise mints)
-      graft.ops.Closure.transitive(taxonomyEdges(s, dir), rounds = 3)
-        .orderBy(col("node"), col("anc"))
-    }),
+    "kg_taxonomy_closure" -> ((s: SparkSession, dir: String) => taxonomyClosure(s, dir)),
 
     // SPARQL property path `p+` through the BGP compiler: descendants
     // of the Kingdom0 root via a TRANSITIVE predicate pattern

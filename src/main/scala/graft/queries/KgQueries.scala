@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.kg._
@@ -81,14 +81,15 @@ object KgQueries {
         .join(broadcast(v), Seq("term"))
       val docUri = concat(lit("doc:"), col("doc_id"))
       val entUri = concat(lit("wd:"), col("qid"))
-      val base = mentions.select(docUri.as("subj"), lit("emi:mentions").as("pred"),
-          entUri.as("obj"))
-        .unionByName(mentions.select(entUri.as("subj"), lit("rdf:type").as("pred"),
-          lit("emi:Entity").as("obj")))
-      val inverses = base.filter(col("pred") === "emi:mentions")
-        .select(col("obj").as("subj"), lit("emi:mentionedIn").as("pred"),
-          col("subj").as("obj"))
-      base.unionByName(inverses).distinct()
+      def triple(subj: Column, pred: String, obj: Column) =
+        struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj"))
+      // each mention yields its three triple kinds from the one scan
+      mentions.select(explode(array(
+          triple(docUri, "emi:mentions", entUri),
+          triple(entUri, "rdf:type", lit("emi:Entity")),
+          triple(entUri, "emi:mentionedIn", docUri))).as("t"))
+        .select(col("t.subj"), col("t.pred"), col("t.obj"))
+        .distinct()
         .orderBy(col("subj"), col("pred"), col("obj"))
     }),
 

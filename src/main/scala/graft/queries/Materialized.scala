@@ -14,8 +14,9 @@ import graft.ops.{Bucketing, Par}
   *    link each (the round-1 bench spent ~34 s re-deriving them inside
   *    kg_pipeline_canonical alone);
   *  - the GloBI and TRY-db triple tables written BUCKETED BY subj
-  *    (sorted, 16 buckets) so the SPARQL self-join workload is
-  *    exchange-free on every same-subject pattern join;
+  *    (sorted; as many buckets as Spark's file split rule cuts the
+  *    dump into, [[Bucketing.bucketCount]]) so the SPARQL self-join
+  *    workload is exchange-free on every same-subject pattern join;
   *  - side-channel parquet dumps under [[SideDir]] (n_docs-stamped) that
   *    the DuckDB oracles read, which is what lets the driver
   *    hash-verify the flagship outputs instead of taking rows-only.
@@ -157,15 +158,23 @@ object Materialized {
       // the engine table from the oracle's side-channel. Reading the
       // dump back makes the two sides bit-identical by construction.
       val tbl = s"graft_globi_triples_n$n"
-      dropTable(spark, tbl)
-      // partitioned by pred + bucketed by subj: every pred-filtered
-      // pattern scan (the SPARQL/BGP/case-study workload) prunes to its
-      // predicate's files, subject joins stay exchange-free
-      Bucketing.writeBucketed(
-        spark.read.parquet(s"$SideDir/globi_triples_n$n"), tbl, "subj", 16,
-        partitionCols = Seq("pred"))
+      writeTripleTable(spark, s"$SideDir/globi_triples_n$n", tbl)
       tbl
     }
+
+  /** The engine-side triple table over a re-read side-channel dump,
+    * partitioned by pred + bucketed and sorted by subj: every
+    * pred-filtered pattern scan (the SPARQL/BGP/case-study workload)
+    * prunes to its predicate's files, subject joins stay exchange-free.
+    * The bucket count is sized from the dump's bytes.
+    */
+  private def writeTripleTable(spark: SparkSession, dump: String, tbl: String): Unit = {
+    dropTable(spark, tbl)
+    val triples = spark.read.parquet(dump)
+    Bucketing.writeBucketed(triples, tbl, "subj",
+      Bucketing.bucketCount(spark, Bucketing.inputBytes(triples)),
+      partitionCols = Seq("pred"))
+  }
 
   /** TRY-db triple table, same treatment. */
   def trydbTable(spark: SparkSession, dir: String): String =
@@ -178,11 +187,7 @@ object Materialized {
       // same dump-identity guarantee as globiTable: bucketed table is
       // built from the re-read side-channel parquet
       val tbl = s"graft_trydb_triples_n$n"
-      dropTable(spark, tbl)
-      // same pred-partitioned + subj-bucketed layout as globiTable
-      Bucketing.writeBucketed(
-        spark.read.parquet(s"$SideDir/trydb_triples_n$n"), tbl, "subj", 16,
-        partitionCols = Seq("pred"))
+      writeTripleTable(spark, s"$SideDir/trydb_triples_n$n", tbl)
       tbl
     }
 

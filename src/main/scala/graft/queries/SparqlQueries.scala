@@ -11,9 +11,11 @@ import graft.ops.Bucketing
   * re-expressed as multiway self-joins over the materialized triple
   * table.
   *
-  * Plan shape: the triple tables are written BUCKETED BY subj (16
-  * buckets, sorted) once per (session, scale) in [[Materialized]]; every
-  * triple pattern is a pred-filtered scan of that table, so all
+  * Plan shape: the triple tables are written BUCKETED BY subj (sorted,
+  * one bucket per file split of the data,
+  * [[graft.ops.Bucketing.bucketCount]]) once per (session, scale) in
+  * [[Materialized]]; every triple pattern is a pred-filtered scan of
+  * that table, so all
   * same-subject pattern joins (the star patterns ?intxn p1/p2/p3,
   * ?source p4/p5 …) are exchange-free sort-merge joins, and only the
   * cross-variable hops (pattern.obj = pattern.subj) shuffle the

@@ -171,6 +171,7 @@ object Profile {
       "organismEdges" -> p(CaseStudyQueries.organismEdges),
       "organismGraph" -> p(CaseStudyQueries.organismGraph(_, _)),
       "taxonomyEdges" -> p(CaseStudyQueries.taxonomyEdges),
+      "taxonomyGraph" -> p(CaseStudyQueries.taxonomyGraph(_, _)),
       // incremental_state_build
       "incLshState" -> p(PipelineQueries.incLshState),
       "incCosState" -> p(PipelineQueries.incCosState),

@@ -32,6 +32,27 @@ class BucketingSpec extends AnyFunSuite {
     }
   }
 
+  test("bucketCount follows Spark's file split rule") {
+    val (maxSplit, openCost) = (128L << 20, 4L << 20)
+    assert(Bucketing.bucketCount(0L, maxSplit, openCost, 4) == 1)
+    assert(Bucketing.bucketCount(40L << 20, maxSplit, openCost, 4) == 4)
+    assert(Bucketing.bucketCount(1L << 40, maxSplit, openCost, 4) == 8192)
+    // the session's own split settings are Spark's defaults
+    assert(Bucketing.bucketCount(spark, 0L) == 1)
+    assert(Bucketing.bucketCount(spark, 1L << 40) == 8192)
+    // the sf0.001 GloBI dump is one bucket's worth, and its table has one
+    val dir = "/root/testdata/sf0.001"
+    val tbl = graft.queries.Materialized.globiTable(spark, dir)
+    val n = graft.queries.KgQueries.nDocsFor(dir)
+    val bytes = Bucketing.inputBytes(
+      spark.read.parquet(s"${graft.queries.Materialized.SideDir}/globi_triples_n$n"))
+    assert(bytes > 0)
+    assert(Bucketing.bucketCount(spark, bytes) == 1, bytes)
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+    assert(meta.bucketSpec.map(_.numBuckets).contains(1), meta.bucketSpec)
+  }
+
   test("SPARQL star-pattern joins over the materialized triple table are exchange-free") {
     // the serving-workload plan gate: the ?intxn subject star from
     // metrics/query_globi_records.txt (3 pred-filtered self-joins on

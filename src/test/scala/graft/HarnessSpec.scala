@@ -21,8 +21,8 @@ class HarnessSpec extends AnyFunSuite {
     Seq("recordsAndMatched", "globiTable", "trydbTable", "taxonPaths",
       "lshComponents", "mergedDocsTable", "statsDocsTable", "zorderOrdersTable",
       "deletedDocsTable", "partitionedDocsTable", "bloomDocsTable",
-      "scd2DimTable", "wapDocsTable", "orgEdgesDirected", "orgEdgesUndirected",
-      "orgGraph", "taxonomyEdges"
+      "scd2DimTable", "wapDocsTable", "orgEdgesDirected", "orgGraph",
+      "taxonomyEdges", "taxonomyGraph"
     ).foreach(what => assert(Materialized.isBuilt(spark, what, dir), what))
     assert(buildThreads().isEmpty, buildThreads())
   }

@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
 import graft.kg.Model
 import graft.queries.{CaseStudyQueries, Materialized}
 
-/** The organism-graph queries' two arms: the driver arm over
-  * [[graft.ops.LocalGraph]] below the row guard and the distributed
-  * plan above it.
+/** The organism-graph queries' and the taxonomy closure's two arms: the
+  * driver arm over [[graft.ops.LocalGraph]] below the row guard and the
+  * distributed plan above it.
   */
 class LocalGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -93,9 +93,10 @@ class LocalGraphSpec extends AnyFunSuite {
     assert(xs.map(CaseStudyQueries.round6) == got)
   }
 
-  test("after materializeShared the nine graph queries run no Spark job") {
-    CaseStudyQueries.materializeShared(spark, sf)
-    val names = graphQueries.map(_._1).toSet
+  /** One entry per job the queries' `collect()` calls start: the
+    * query's name.
+    */
+  private def queryJobs(names: Set[String]): Seq[String] = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -120,7 +121,64 @@ class LocalGraphSpec extends AnyFunSuite {
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
-    val queryJobs = jobs.asScala.filter(names).toSeq
-    assert(queryJobs.isEmpty, queryJobs.groupBy(identity).view.mapValues(_.size).toMap)
+    jobs.asScala.filter(names).toSeq
+  }
+
+  test("after materializeShared the nine graph queries run no Spark job") {
+    CaseStudyQueries.materializeShared(spark, sf)
+    val jobs = queryJobs(graphQueries.map(_._1).toSet)
+    assert(jobs.isEmpty, jobs.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
+  /** Child → parent edges of a random taxonomy: a 12-edge chain (min
+    * depths past the distributed arm's 2^3 rounds), diamonds with a
+    * shortcut (min depth over longer derivations), a 2-cycle, the names
+    * "ﬁ" and "😀", and random edges among a few more nodes.
+    */
+  private def taxonomyEdges(seed: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val chain = (0 until 12).map(i => f"c$i%02d" -> f"c${i + 1}%02d")
+    val diamonds = Seq("d0" -> "d1", "d0" -> "d2", "d1" -> "d3", "d2" -> "d3",
+      "d3" -> "d4", "d4" -> "d5", "d0" -> "d4", "c03" -> "d0")
+    val named = Seq("ﬁ" -> "😀", "😀" -> "c05", "ﬁ" -> "é", "é" -> "c07")
+    val cycle = Seq("x" -> "y", "y" -> "x", "y" -> "c10")
+    val plain = (0 until 6 + rnd.nextInt(6)).map(i => s"r$i")
+    val rest = for (a <- plain; b <- plain ++ Seq("c02", "d1")
+      if a != b && rnd.nextDouble() < 0.2) yield a -> b
+    (chain ++ diamonds ++ named ++ cycle ++ rest).distinct
+  }
+
+  test("taxonomy closure: driver and distributed arms agree row for row") {
+    import spark.implicits._
+    (1 to 3).foreach { seed =>
+      val dir = s"local-graph-spec/taxonomy$seed"
+      Materialized.once(spark, "taxonomyEdges", dir)(
+        taxonomyEdges(seed).toDF("child", "parent"))
+      assert(CaseStudyQueries.taxonomyGraph(spark, dir).isDefined)
+      val local = CaseStudyQueries.taxonomyClosure(spark, dir)
+      val dist = CaseStudyQueries.taxonomyClosure(spark, dir, 0L)
+      withClue(s"seed $seed: ") {
+        assert(local.schema.map(c => (c.name, c.dataType)) ==
+          dist.schema.map(c => (c.name, c.dataType)))
+        val want = dist.collect().toSeq
+        val got = local.collect().toSeq
+        assert(got == want)
+        val depth = want.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+        // path doubling's reach: min depth ≤ 2^3, at its min depth
+        assert(depth.get("c00" -> "c08").contains(8L) && !depth.contains("c00" -> "c09"))
+        assert(depth.get("d0" -> "d5").contains(2L) && depth.get("d1" -> "d5").contains(3L))
+        assert(depth.get("x" -> "x").contains(2L) && depth.get("y" -> "y").contains(2L))
+        assert(depth.get("ﬁ" -> "c05").contains(2L))
+        // "ﬁ" (U+FB01) before "😀" (U+1F600): Spark's UTF-8 order
+        val nodes = got.map(_.getString(0)).distinct
+        assert(nodes.indexOf("ﬁ") < nodes.indexOf("😀"), nodes)
+      }
+    }
+  }
+
+  test("after materializeShared the taxonomy closure runs no Spark job") {
+    CaseStudyQueries.materializeShared(spark, sf)
+    val jobs = queryJobs(Set("kg_taxonomy_closure"))
+    assert(jobs.isEmpty, jobs.size)
   }
 }
