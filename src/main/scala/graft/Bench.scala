@@ -71,6 +71,10 @@ object Bench {
     val matSecs =
       try {
         graft.queries.Materialized.buildShared(spark, sfDir)
+        // the undirected organism-edge memo is built on first use, not
+        // by buildShared (perfbench's set-up leaves it out); forced here
+        // so its build stays off the first query that reads it
+        graft.queries.CaseStudyQueries.organismEdges(spark, sfDir)
         (System.nanoTime() - tm0) / 1e9
       } catch {
         case e: Throwable =>

@@ -301,9 +301,17 @@ object DataGen {
     Document(r.doc_id, renderSpans(r))
   }
 
-  /** The interleaved document corpus, generated distributed. */
-  def corpus(spark: SparkSession, nDocs: Long,
-      partitions: Int = 32): Dataset[Document] = {
+  /** The interleaved document corpus, generated distributed in the
+    * session's `defaultParallelism` partitions (the count `spark.range`
+    * takes when given none): one slice per core.
+    */
+  def corpus(spark: SparkSession, nDocs: Long): Dataset[Document] =
+    corpus(spark, nDocs, spark.sparkContext.defaultParallelism)
+
+  /** The corpus in an explicit number of partitions; the documents do
+    * not depend on it.
+    */
+  def corpus(spark: SparkSession, nDocs: Long, partitions: Int): Dataset[Document] = {
     import spark.implicits._
     spark.range(0, nDocs, 1, partitions).map(document(_))
   }

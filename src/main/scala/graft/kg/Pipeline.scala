@@ -556,10 +556,12 @@ object Pipeline {
     * datagen → extract → link → materialize → canonicalize, all
     * checkpointed under outRoot. The final graph is the canonical stage
     * output in the predicate-partitioned layout under 50_graph; raw
-    * triples remain available in the 30_triples stage parquet.
+    * triples remain available in the 30_triples stage parquet. The
+    * corpus is generated in `partitions` partitions; the graph does not
+    * depend on the count.
     */
   def run(spark: SparkSession, nDocs: Long, outRoot: String,
-      partitions: Int = 32): RunReport = {
+      partitions: Int): RunReport = {
     val fp = s"corpus:$nDocs:$StageVersion"
     val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
       DataGen.corpus(spark, nDocs, partitions).toDF()

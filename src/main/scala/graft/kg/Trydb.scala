@@ -55,7 +55,16 @@ object Trydb {
       UnitName = pick(unitNames, t + 1))
   }
 
-  def trydbData(spark: SparkSession, n: Long, partitions: Int = 32): DataFrame = {
+  /** The n TRY-db rows, generated distributed in the session's
+    * `defaultParallelism` partitions.
+    */
+  def trydbData(spark: SparkSession, n: Long): DataFrame =
+    trydbData(spark, n, spark.sparkContext.defaultParallelism)
+
+  /** The n TRY-db rows in an explicit number of partitions; every row is
+    * a pure function of its index, so the rows do not depend on it.
+    */
+  def trydbData(spark: SparkSession, n: Long, partitions: Int): DataFrame = {
     import spark.implicits._
     spark.range(0, n, 1, partitions).map(trydbRow(_)).toDF()
   }
@@ -84,26 +93,25 @@ object Trydb {
     * so the raw id is safe at any partition count — it stays monotone
     * in (partitionId, offset) however many partitions the read splits
     * into.
+    *
+    * One aggregate builds all three dictionaries: per WdName, the
+    * Plantae and the null-kingdom WdID are `max_by` over an ordinal
+    * that is null outside the kingdom (`max_by` skips null orderings,
+    * so a name without that kingdom gets null), and a name is in the
+    * lineage exactly when its group exists. The one dimension-sized
+    * table is joined once, by broadcast.
     */
   def matchSpecies(speciesNames: DataFrame, lineage: DataFrame): DataFrame = {
-    val l = lineage
+    val wd = regexp_replace(col("WdID"), "http://www\\.wikidata\\.org/entity/", "")
+    val kingdom = when(col("kingdom") =!= "", col("kingdom")) // "" → null
+    val names = lineage
       .withColumn("_ord", monotonically_increasing_id())
-      .select(
-        regexp_replace(col("WdID"), "http://www\\.wikidata\\.org/entity/", "").as("wd"),
-        col("WdName"),
-        when(col("kingdom") === "", lit(null)).otherwise(col("kingdom")).as("kingdom"),
-        col("_ord"))
-    def dictFor(kingdomFilter: Column, keyName: String): DataFrame =
-      l.filter(kingdomFilter)
-        .groupBy(col("WdName").as(keyName))
-        .agg(max_by(col("wd"), col("_ord")).as(s"${keyName}_wd"))
-    val plantae = dictFor(col("kingdom") === "Plantae", "k_pl")
-    val nullK = dictFor(col("kingdom").isNull, "k_null")
-    val anyName = l.select(col("WdName").as("k_any")).distinct()
+      .groupBy(col("WdName").as("k_any"))
+      .agg(
+        max_by(wd, when(kingdom === "Plantae", col("_ord"))).as("k_pl_wd"),
+        max_by(wd, when(kingdom.isNull, col("_ord"))).as("k_null_wd"))
     speciesNames
-      .join(broadcast(anyName), col("TRY_AccSpeciesName") === col("k_any"), "left")
-      .join(broadcast(plantae), col("TRY_AccSpeciesName") === col("k_pl"), "left")
-      .join(broadcast(nullK), col("TRY_AccSpeciesName") === col("k_null"), "left")
+      .join(broadcast(names), col("TRY_AccSpeciesName") === col("k_any"), "left")
       .select(
         col("TRY_AccSpeciesName"),
         when(col("k_any").isNotNull, coalesce(col("k_pl_wd"), col("k_null_wd")))

@@ -105,7 +105,8 @@ object CaseStudyQueries {
     * projection + distinct over the (dimension-sized) directed edges,
     * but six queries consume it and each would otherwise re-shuffle the
     * distinct. Built on first use, not by [[materializeShared]]: only
-    * the distributed arms and the distributed-only queries read it.
+    * the distributed arms and the distributed-only queries read it
+    * (Bench forces it on its materialize_tables line).
     * Nested `once` calls take different locks (acyclic: undirected →
     * directed → Materialized.globiTable), so no deadlock.
     */

@@ -89,6 +89,10 @@ object KgQueries {
           triple(entUri, "rdf:type", lit("emi:Entity")),
           triple(entUri, "emi:mentionedIn", docUri))).as("t"))
         .select(col("t.subj"), col("t.pred"), col("t.obj"))
+        // one exchange into one partition, where the distinct and the
+        // total order need none of their own (alone they cost a hash
+        // exchange, a range exchange and its sampling job)
+        .repartition(1)
         .distinct()
         .orderBy(col("subj"), col("pred"), col("obj"))
     }),

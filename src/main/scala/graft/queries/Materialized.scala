@@ -120,7 +120,7 @@ object Materialized {
   def recordsAndMatched(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
     once(spark, "recordsAndMatched", dir) {
       val n = KgQueries.nDocsFor(dir)
-      val docs = DataGen.corpus(spark, n, 32).toDF()
+      val docs = DataGen.corpus(spark, n).toDF()
       val records = Extract.records(docs).persist(StorageLevel.MEMORY_AND_DISK)
       // the guarded production path: driver-local dictionary refinement
       // while the distinct-taxa table is dimension-sized, distributed
@@ -150,29 +150,32 @@ object Materialized {
       val triples = Materialize
         .globiTriplesFused(records, dictId, dictName, Some(mm))
         .withColumn("n_docs", lit(n))
-      triples.write.mode("overwrite").parquet(s"$SideDir/globi_triples_n$n")
-      // Build the engine-side bucketed table FROM the re-read dump, not
-      // from the shared persisted DF: if cached partitions were evicted
-      // between the two writes, the second would silently recompute the
-      // emission lineage — any future nondeterminism there would diverge
-      // the engine table from the oracle's side-channel. Reading the
-      // dump back makes the two sides bit-identical by construction.
       val tbl = s"graft_globi_triples_n$n"
-      writeTripleTable(spark, s"$SideDir/globi_triples_n$n", tbl)
+      writeTripleTable(spark, triples, s"$SideDir/globi_triples_n$n", tbl)
       tbl
     }
 
-  /** The engine-side triple table over a re-read side-channel dump,
-    * partitioned by pred + bucketed and sorted by subj: every
-    * pred-filtered pattern scan (the SPARQL/BGP/case-study workload)
-    * prunes to its predicate's files, subject joins stay exchange-free.
-    * The bucket count is sized from the dump's bytes.
+  /** Write `triples` to the side-channel `dump`, then the engine-side
+    * triple table over the re-read dump, partitioned by pred + bucketed
+    * and sorted by subj: every pred-filtered pattern scan (the
+    * SPARQL/BGP/case-study workload) prunes to its predicate's files,
+    * subject joins stay exchange-free. The bucket count is sized from
+    * the dump's bytes.
+    *
+    * The table is built FROM the re-read dump, not from `triples`: a
+    * second evaluation of the emission lineage (evicted cache
+    * partitions) could diverge from the oracle's side-channel under any
+    * future nondeterminism there; reading the dump back makes the two
+    * sides bit-identical by construction. The re-read takes the schema
+    * just written, which spares it a schema-inference job.
     */
-  private def writeTripleTable(spark: SparkSession, dump: String, tbl: String): Unit = {
+  private def writeTripleTable(spark: SparkSession, triples: DataFrame, dump: String,
+      tbl: String): Unit = {
+    triples.write.mode("overwrite").parquet(dump)
     dropTable(spark, tbl)
-    val triples = spark.read.parquet(dump)
-    Bucketing.writeBucketed(triples, tbl, "subj",
-      Bucketing.bucketCount(spark, Bucketing.inputBytes(triples)),
+    val written = spark.read.schema(triples.schema).parquet(dump)
+    Bucketing.writeBucketed(written, tbl, "subj",
+      Bucketing.bucketCount(spark, Bucketing.inputBytes(written)),
       partitionCols = Seq("pred"))
   }
 
@@ -181,13 +184,10 @@ object Materialized {
     once(spark, "trydbTable", dir) {
       val n = KgQueries.nDocsFor(dir)
       val triples = Trydb
-        .run(spark, Trydb.trydbData(spark, n, 32), Trydb.trydbLineage(spark), None)
+        .run(spark, Trydb.trydbData(spark, n), Trydb.trydbLineage(spark), None)
         .withColumn("n_docs", lit(n))
-      triples.write.mode("overwrite").parquet(s"$SideDir/trydb_triples_n$n")
-      // same dump-identity guarantee as globiTable: bucketed table is
-      // built from the re-read side-channel parquet
       val tbl = s"graft_trydb_triples_n$n"
-      writeTripleTable(spark, s"$SideDir/trydb_triples_n$n", tbl)
+      writeTripleTable(spark, triples, s"$SideDir/trydb_triples_n$n", tbl)
       tbl
     }
 

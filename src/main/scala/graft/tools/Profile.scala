@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
@@ -26,9 +27,10 @@ import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
   *       share of task-thread samples that were parked or waiting is
   *       reported on its own line
   *   phases <sfDir>
-  *       wall time, job count and summed job time of each shared-table
-  *       build (in Bench order, memo-incremental) and of the incremental
-  *       state builds, labelled through the job description
+  *       wall time, job count, task count and summed job time of each
+  *       shared-table build (in Bench order, memo-incremental) and of the
+  *       incremental state builds, labelled through the job description;
+  *       tasks far above jobs × cores read as over-partitioning
   *
   * Usage: runMain graft.tools.Profile <mode> <args...>
   */
@@ -132,18 +134,22 @@ object Profile {
   }
 
   private def phases(spark: SparkSession, sfDir: String): Unit = {
-    // jobs and summed job wall time per job description, so a slow phase
-    // reads as "many tiny jobs" (scheduling) or "one big job" (compute)
+    // jobs, tasks and summed job wall time per job description, so a slow
+    // phase reads as "many tiny jobs" or "many tiny tasks" (scheduling)
+    // or "one big job" (compute)
     val jobCount = new ConcurrentHashMap[String, Long]()
+    val taskCount = new ConcurrentHashMap[String, Long]()
     val jobTime = new ConcurrentHashMap[String, Long]()
     val jobStart = new ConcurrentHashMap[Int, (String, Long)]()
+    def description(p: java.util.Properties): String =
+      Option(p).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?")
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val d = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("?")
-        jobStart.put(js.jobId, (d, js.time))
-      }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobStart.put(js.jobId, (description(js.properties), js.time))
+      // a submitted stage runs all its tasks; a skipped one is never
+      // submitted, so it adds none
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        taskCount.merge(description(ss.properties), ss.stageInfo.numTasks.toLong, _ + _)
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(jobStart.remove(je.jobId)).foreach { case (d, t0) =>
           jobCount.merge(d, 1L, _ + _)
@@ -186,9 +192,10 @@ object Profile {
       println(f"[profile] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       spark.sparkContext.setJobDescription(null)
     }
-    println("[profile] per-phase job stats (n_jobs, job_secs):")
+    println("[profile] per-phase job stats (n_jobs, n_tasks, job_secs):")
     jobCount.asScala.toSeq.sortBy(-_._2).foreach { case (d, c) =>
-      println(f"[profile] $c%4d jobs ${jobTime.getOrDefault(d, 0L) / 1e3}%8.2f s  $d")
+      println(f"[profile] $c%4d jobs ${taskCount.getOrDefault(d, 0L)}%6d tasks " +
+        f"${jobTime.getOrDefault(d, 0L) / 1e3}%8.2f s  $d")
     }
   }
 }

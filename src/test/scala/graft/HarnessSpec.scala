@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import graft.queries.Materialized
 
 /** The harness layer: the shared-table build, Verify's dump and the one
@@ -37,6 +38,40 @@ class HarnessSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains(dir.toString), e.getMessage)
     assert(buildThreads().isEmpty, buildThreads())
+  }
+
+  test("the shared tables' generated inputs have defaultParallelism partitions") {
+    // a scale no other test builds (150 docs), so both builds run here
+    val dir = Files.createTempDirectory("graft-harness").resolve("sf0.0003").toString
+    val sc = spark.sparkContext
+    val cores = sc.defaultParallelism
+    val (records, _) = Materialized.recordsAndMatched(spark, dir)
+    assert(records.rdd.getNumPartitions == cores)
+    // trydbTable's input is internal: its scan stages show its width
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        tasks.add(Option(ss.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("?") ->
+          ss.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("trydbTable")
+      Materialized.trydbTable(spark, dir)
+      // the listener bus delivers in order: once the marker's stage
+      // arrives, every stage of the build has arrived too
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!tasks.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    val build = tasks.asScala.collect { case ("trydbTable", n) => n }.toSeq
+    assert(build.nonEmpty && build.max == cores, build)
   }
 
   test("Verify.dump deletes a failed query's output left by an earlier run") {

@@ -50,6 +50,44 @@ class TrydbSpec extends AnyFunSuite {
     assert(m.filter(col("Match_Status") === "NAME-NOT-MATCHED").count() > 0)
   }
 
+  test("trydb triples are equal at 1 and 7 input partitions") {
+    def at(partitions: Int): Set[Model.Triple] =
+      Trydb.run(spark, Trydb.trydbData(spark, N, partitions), Trydb.trydbLineage(spark))
+        .as[Model.Triple].collect().toSet
+    val one = at(1)
+    assert(one.nonEmpty)
+    assert(at(7) == one)
+  }
+
+  test("one-aggregate species matcher equals the three-aggregate oracle") {
+    // repeated names across and within kingdoms (a later row wins its
+    // key), Plantae, null, "" and other kingdoms, Q-ids of mixed length
+    // (the ordinal, not the id, orders them) and a name in no lineage row
+    val lineage = Seq(
+      ("Q9", "A", "Plantae"), ("Q2", "A", null), ("Q100", "A", "Plantae"),
+      ("Q4", "B", ""), ("Q5", "B", "Animalia"), ("Q60", "B", null),
+      ("Q7", "C", "Animalia"), ("Q8", "C", "Fungi"),
+      ("Q3", "D", "Plantae"), ("Q10", "D", ""),
+      ("Q11", "E", null), ("Q12", "E", ""), ("Q13", null, "Plantae"))
+      .map { case (q, n, k) => (s"http://www.wikidata.org/entity/$q", n, k) }
+      .toDF("WdID", "WdName", "kingdom")
+    val names = Seq("A", "B", "C", "D", "E", "Z").toDF("TRY_AccSpeciesName")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("TRY_AccSpeciesName").collect().toSeq
+    val got = rows(Trydb.matchSpecies(names, lineage))
+    assert(got == rows(TrydbOracle.matchSpeciesThreeAggregates(names, lineage)))
+    val hit = "ID-MATCHED-BY-NAME-direct"
+    assert(got.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))) ==
+      Seq(("A", "Q100", hit, "Plantae"), ("B", "Q60", hit, "None"), ("C", null, hit, "None"),
+        ("D", "Q3", hit, "Plantae"), ("E", "Q12", hit, "None"),
+        ("Z", null, "NAME-NOT-MATCHED", null)))
+    // and on the fixture lineage with the corpus' species names
+    val corpusNames = Trydb.trydbData(spark, N, 4)
+      .select(col("AccSpeciesName").as("TRY_AccSpeciesName")).distinct()
+    assert(rows(Trydb.matchSpecies(corpusNames, Trydb.trydbLineage(spark))) ==
+      rows(TrydbOracle.matchSpeciesThreeAggregates(corpusNames, Trydb.trydbLineage(spark))))
+  }
+
   test("Column formatUri matches Model.quote on the corpus value universe") {
     val vals = (0 until 60).flatMap { t =>
       val r = Trydb.trydbRow(t.toLong)

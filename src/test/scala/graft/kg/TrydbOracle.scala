@@ -2,12 +2,48 @@ package graft.kg
 
 import Model._
 import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 
 /** Single-threaded interpreter of the TRY-db branch
   * (matcher.py:339-412 + trydb_kg_generator.py:51-188) for golden
   * comparison against Trydb.run.
   */
 object TrydbOracle {
+
+  /** The species matcher as three dictionaries, each its own aggregate
+    * and broadcast join: Plantae, null kingdom and any name — the
+    * reference [[Trydb.matchSpecies]]'s one aggregate must equal.
+    */
+  def matchSpeciesThreeAggregates(speciesNames: DataFrame, lineage: DataFrame): DataFrame = {
+    val l = lineage
+      .withColumn("_ord", monotonically_increasing_id())
+      .select(
+        regexp_replace(col("WdID"), "http://www\\.wikidata\\.org/entity/", "").as("wd"),
+        col("WdName"),
+        when(col("kingdom") === "", lit(null)).otherwise(col("kingdom")).as("kingdom"),
+        col("_ord"))
+    def dictFor(kingdomFilter: Column, keyName: String): DataFrame =
+      l.filter(kingdomFilter)
+        .groupBy(col("WdName").as(keyName))
+        .agg(max_by(col("wd"), col("_ord")).as(s"${keyName}_wd"))
+    val plantae = dictFor(col("kingdom") === "Plantae", "k_pl")
+    val nullK = dictFor(col("kingdom").isNull, "k_null")
+    val anyName = l.select(col("WdName").as("k_any")).distinct()
+    speciesNames
+      .join(broadcast(anyName), col("TRY_AccSpeciesName") === col("k_any"), "left")
+      .join(broadcast(plantae), col("TRY_AccSpeciesName") === col("k_pl"), "left")
+      .join(broadcast(nullK), col("TRY_AccSpeciesName") === col("k_null"), "left")
+      .select(
+        col("TRY_AccSpeciesName"),
+        when(col("k_any").isNotNull, coalesce(col("k_pl_wd"), col("k_null_wd")))
+          .as("WdID"),
+        when(col("k_any").isNotNull, lit("ID-MATCHED-BY-NAME-direct"))
+          .otherwise(lit("NAME-NOT-MATCHED")).as("Match_Status"),
+        when(col("k_any").isNotNull,
+          when(col("k_pl_wd").isNotNull, lit("Plantae")).otherwise(lit("None")))
+          .as("kingdom"))
+  }
 
   def run(rows: Seq[Trydb.TrydbRow],
       lineageRows: Seq[(String, String, String)], // WdID url, WdName, kingdom|null
