@@ -21,9 +21,7 @@ object Brandes {
     * estimate.
     */
   def dependencies(und: DataFrame, sources: DataFrame): DataFrame = {
-    val sym = und.select(col("u").as("a"), col("v").as("b"))
-      .union(und.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    val sym = Adjacency.symmetric(und).localCheckpoint(true)
     var visited = sources.select(col("hub"), col("hub").as("node"),
       lit(0L).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
     var frontier = visited

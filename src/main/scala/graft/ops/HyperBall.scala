@@ -25,38 +25,41 @@ import org.apache.spark.sql.functions._
   */
 object HyperBall {
 
-  /** Per-round register tables for r = 0..maxR over an UNDIRECTED
+  /** The registers of ball_0 .. ball_maxR over an UNDIRECTED distinct
+    * edge list `(u, v)`, one `(node, b, mreg)` frame per radius. Each
+    * round is one shuffle: the registers move along every edge
+    * orientation and re-aggregate by (node, bucket) MAX with the node's
+    * own, localCheckpointed so the plan stays one round deep.
+    */
+  private def balls(edges: DataFrame, maxR: Int): Seq[DataFrame] = {
+    val adj = Adjacency.symmetric(edges).select(col("a").as("src"), col("b").as("dst"))
+    val ball0 = Sketches.hllRegisters(
+      adj.select(col("src").as("node")).distinct()
+        .withColumn("h", Dedup.hash60(col("node").cast("string"))),
+      "node", "h").localCheckpoint(true)
+    (1 to maxR).scanLeft(ball0) { (regs, _) =>
+      Sketches.mergeRegisters(
+          adj.join(regs.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst").as("node"), col("b"), col("mreg")),
+          regs, "node")
+        .localCheckpoint(true)
+    }
+  }
+
+  /** The neighborhood function N(r) for r = 0..maxR over an UNDIRECTED
     * distinct edge list `(u, v)`. Estimates are summed per round as
     * DECIMAL(18,3) (order-independent exact addition — the repo's
     * double-sum convention) and returned as one row per radius:
-    * `(r, est_pairs)`. Each round's registers are localCheckpointed
-    * (the iterative-loop convention: the plan stays one round deep).
+    * `(r, est_pairs)`.
     */
   def neighborhoodFunction(edges: DataFrame, maxR: Int): DataFrame = {
     require(maxR >= 0, "maxR must be non-negative")
-    val sym = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
-    val nodes = sym.select(col("src").as("node")).distinct()
-    var regs = Sketches.hllRegisters(
-      nodes.withColumn("h", Dedup.hash60(col("node").cast("string"))),
-      "node", "h").localCheckpoint(true)
-    def estRow(r: Int): DataFrame =
+    balls(edges, maxR).zipWithIndex.map { case (regs, r) =>
       Sketches.hllEstimate(regs, "node")
         .agg(sum(col("est_distinct").cast("decimal(18,3)"))
           .cast("double").as("est_pairs"))
         .select(lit(r).as("r"), col("est_pairs"))
-    var out = estRow(0)
-    for (r <- 1 to maxR) {
-      val prop = sym
-        .join(regs.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), col("b"), col("mreg"))
-      regs = prop.unionByName(regs.select(col("node"), col("b"), col("mreg")))
-        .groupBy(col("node"), col("b"))
-        .agg(max(col("mreg")).as("mreg"))
-        .localCheckpoint(true)
-      out = out.unionByName(estRow(r))
-    }
-    out
+    }.reduce(_ unionByName _)
   }
 
   /** HARMONIC CENTRALITY via the same ball iteration (the HyperBall
@@ -72,26 +75,9 @@ object HyperBall {
     */
   def harmonicCentrality(edges: DataFrame, maxR: Int, k: Int): DataFrame = {
     require(maxR >= 1, "harmonic centrality needs maxR >= 1")
-    val sym = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
-    val nodes = sym.select(col("src").as("node")).distinct()
-    var regs = Sketches.hllRegisters(
-      nodes.withColumn("h", Dedup.hash60(col("node").cast("string"))),
-      "node", "h").localCheckpoint(true)
-    def est(r: Int): DataFrame = Sketches.hllEstimate(regs, "node")
-      .withColumnRenamed("est_distinct", s"e$r")
-    var perRound = Seq(est(0))
-    for (r <- 1 to maxR) {
-      val prop = sym
-        .join(regs.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), col("b"), col("mreg"))
-      regs = prop.unionByName(regs.select(col("node"), col("b"), col("mreg")))
-        .groupBy(col("node"), col("b"))
-        .agg(max(col("mreg")).as("mreg"))
-        .localCheckpoint(true)
-      perRound = perRound :+ est(r)
-    }
-    val joined = perRound.reduce(_.join(_, Seq("node")))
+    val joined = balls(edges, maxR).zipWithIndex.map { case (regs, r) =>
+      Sketches.hllEstimate(regs, "node").withColumnRenamed("est_distinct", s"e$r")
+    }.reduce(_.join(_, Seq("node")))
     val harmonic = (1 to maxR)
       .map(r => (col(s"e$r") - col(s"e${r - 1}")) / lit(r.toDouble))
       .reduce(_ + _)
@@ -107,8 +93,7 @@ object HyperBall {
     * Returns `(r, exact_pairs)` for r = 0..maxR.
     */
   def exactNeighborhood(edges: DataFrame, maxR: Int): DataFrame = {
-    val sym = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
+    val sym = Adjacency.symmetric(edges).select(col("a").as("src"), col("b").as("dst"))
     val nodes = sym.select(col("src").as("node")).distinct()
     var pairs = nodes.select(col("node").as("a"), col("node").as("z"))
       .localCheckpoint(true)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 import scala.math.Ordering.Double.TotalOrdering
 import graft.kg._
-import graft.ops.{LocalGraph, Par, Pca}
+import graft.ops.{Adjacency, Iterate, LocalGraph, Par, Pca}
 
 /** Case-study analytic workload over the REAL materialized triple
   * table, plus the forced-distributed flagship pipeline.
@@ -73,12 +73,12 @@ object CaseStudyQueries {
     }
 
   /** Directed distinct organism→organism interaction edges via each
-    * record's hasSource/hasTarget samples — the shared graph-derivation
-    * of ALL seven kg_cs_* graph queries, memoized per (session, scale)
-    * and materialized by an eager localCheckpoint (the verifiedLshPairs
-    * contract): the 3-join + distinct edge build over the bucketed triple
-    * table runs ONCE per scale instead of once per graph query — at
-    * corpus scale that is one triple-table scan instead of seven.
+    * record's hasSource/hasTarget samples, memoized per (session, scale)
+    * and materialized by an eager localCheckpoint: the 3-join + distinct
+    * edge build over the bucketed triple table runs ONCE per scale
+    * instead of once per graph query. Read by [[organismGraph]] (the
+    * driver arm of every organism-graph query), by [[pageRank]]'s
+    * distributed arm and by the undirected view [[organismEdges]].
     * [[materializeShared]] forces it in Bench's materialize phase so the
     * build cost lands on the explicit materialize line.
     */
@@ -103,10 +103,15 @@ object CaseStudyQueries {
   /** Undirected view (u < v lexicographically) of the memoized directed
     * edge set — itself memoized + checkpointed: the derivation is only a
     * projection + distinct over the (dimension-sized) directed edges,
-    * but six queries consume it and each would otherwise re-shuffle the
-    * distinct. Built on first use, not by [[materializeShared]]: only
-    * the distributed arms and the distributed-only queries read it
-    * (Bench forces it on its materialize_tables line).
+    * but every query below would otherwise re-shuffle the distinct.
+    * Read by the distributed arms of the organism-graph queries except
+    * PageRank (bfs reach, degree distribution, lcc, Jaccard,
+    * Adamic-Adar, capped wedges, assortativity and, through
+    * [[organismTriangles]], triangles) and by the distributed-only
+    * queries (PPR, SSSP, k-core, communities, closeness, betweenness,
+    * HyperBall, harmonic). Built on first use, not by
+    * [[materializeShared]] (Bench forces it on its materialize_tables
+    * line).
     * Nested `once` calls take different locks (acyclic: undirected →
     * directed → Materialized.globiTable), so no deadlock.
     */
@@ -132,8 +137,7 @@ object CaseStudyQueries {
   private[graft] def organismTriangles(s: SparkSession, dir: String): DataFrame =
     Materialized.once(s, "orgTriangles", dir) {
       val und = organismEdges(s, dir)
-      val deg = und.select(col("u").as("n")).union(und.select(col("v")))
-        .groupBy(col("n")).agg(count(lit(1)).as("d"))
+      val deg = Adjacency.degrees(Adjacency.symmetric(und))
       // u < v lexicographically by construction, so a degree tie keeps
       // (u, v) — the deterministic total order both engines share
       val e = und
@@ -142,14 +146,11 @@ object CaseStudyQueries {
         .select(when(col("du") <= col("dv"), col("u")).otherwise(col("v")).as("a"),
           when(col("du") <= col("dv"), col("v")).otherwise(col("u")).as("b"))
         .localCheckpoint(true)
-      // wedge at a + the closing oriented edge: each triangle matches
-      // exactly once because exactly one orientation of {y, z} exists
-      val tri = e.as("e1").join(e.as("e2"),
-          col("e1.a") === col("e2.a") && col("e1.b") =!= col("e2.b"))
-        .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-        .join(e.as("e3"), col("y") === col("e3.a") && col("z") === col("e3.b"))
-        .select(col("x"), col("y"), col("z"))
-      tri.select(explode(array(col("x"), col("y"), col("z"))).as("organism"))
+      // the oriented graph is acyclic, so exactly one corner w of each
+      // triangle has both other corners as out-neighbours: its wedge
+      // (u < v) plus the closing undirected edge (u, v) matches once
+      Adjacency.wedges(e).join(und, Seq("u", "v"))
+        .select(explode(array(col("w"), col("u"), col("v"))).as("organism"))
         .groupBy(col("organism")).agg(count(lit(1)).as("n_triangles"))
         .localCheckpoint(true)
     }
@@ -274,11 +275,11 @@ object CaseStudyQueries {
   // ten rounds run on the driver over the memoized [[LocalGraph]]: a
   // round of the distributed loop is a few jobs and a checkpoint round
   // trip over a few hundred rows, which costs far more than the
-  // arithmetic. Above the guard the distributed loop runs: its static
-  // inputs stay localCheckpointed rather than repartition+persist'ed,
-  // because per-round columnar-cache decode cost more than the avoided
-  // shuffle of an edge list (4.1 s checkpoint vs 5.2 s cache at sf0.1),
-  // and `pr` is checkpointed every second round.
+  // arithmetic. Above the guard [[Iterate.powerIteration]] runs: its
+  // static inputs stay localCheckpointed rather than
+  // repartition+persist'ed, because per-round columnar-cache decode
+  // cost more than the avoided shuffle of an edge list (4.1 s
+  // checkpoint vs 5.2 s cache at sf0.1).
   private[graft] def pageRank(s: SparkSession, dir: String,
       maxDriverRows: Long = Model.MaxDriverRows): DataFrame =
     organismGraph(s, dir, maxDriverRows).map { g =>
@@ -290,28 +291,13 @@ object CaseStudyQueries {
           .map { case (p, v) => Row(g.names(v), -p) })
     }.getOrElse {
       val edges = organismEdgesDirected(s, dir)
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst"))).distinct().localCheckpoint(true)
+      val adj = edges.select(col("src").as("a"), col("dst").as("b"))
+      val nodes = Adjacency.symmetric(edges.select(col("src").as("u"), col("dst").as("v")))
+        .select(col("a").as("node")).distinct().localCheckpoint(true)
       val n = nodes.count()
-      val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
-      var pr = nodes.withColumn("rank", lit(1.0 / n))
-      for (i <- 1 to 10) {
-        val contrib = pr.join(deg, Seq("node"))
-          .join(edges, col("node") === col("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") / col("deg")).as("x"))
-        pr = nodes.join(contrib, Seq("node"), "left")
-          .withColumn("rank",
-            lit(0.15 / n) + lit(0.85) * coalesce(col("x"), lit(0.0)))
-          .select(col("node"), col("rank"))
-        // checkpoint every SECOND round (the Canonical.connectedComponents
-        // signature cadence): `pr` enters the next round exactly once, so
-        // a two-round lineage is linear, and halving the eager-checkpoint
-        // actions halves the per-round driver round-trips that dominate
-        // on a dimension-sized graph
-        if (i % 2 == 0) pr = pr.localCheckpoint(true)
-      }
+      val pr = Iterate.powerIteration(adj, Adjacency.degrees(adj).localCheckpoint(true),
+        nodes.select(col("node"), lit(0.15 / n).as("restart")),
+        nodes.select(col("node"), lit(1.0 / n).as("rank")), 10)
       pr.select(col("node").as("organism"),
           round(col("rank") * lit(n.toDouble), 6).as("pr_scaled"))
         .orderBy(col("pr_scaled").desc, col("organism")).limit(20)
@@ -321,13 +307,10 @@ object CaseStudyQueries {
   // organisms (undirected degree, name tiebreak), how many organisms
   // sit at distance exactly 1, 2, 3 — the "how far does a hub's
   // influence extend" centrality slice (CS3's ego-network archetype
-  // generalized one ring further). Exactly 3 unrolled expansion
-  // rounds on BOTH engines (no fixpoint detection to drift): each
-  // round is frontier ⋈ edges → distinct → anti-join visited, every
-  // frame dimension-sized and localCheckpointed so round k+1 never
-  // recomputes round k's lineage. At corpus scale this is the
-  // standard frontier-expansion BFS — one shuffle per round, frontier
-  // rows only (never the full graph), k bounded.
+  // generalized one ring further). At most 3 expansion rounds on BOTH
+  // engines (an empty ring ends the walk early and emits no row): the
+  // distributed arm is [[Iterate.frontierWalk]] — one shuffle per
+  // round, frontier rows only (never the full graph), k bounded.
   private[graft] def bfsReach(s: SparkSession, dir: String,
       maxDriverRows: Long = Model.MaxDriverRows): DataFrame =
     organismGraph(s, dir, maxDriverRows).map { g =>
@@ -337,29 +320,10 @@ object CaseStudyQueries {
         (n, d) <- g.rings(Seq(h), 3).toSeq.zipWithIndex if n > 0
       } yield Row(g.names(h), d + 1L, n.toLong))
     }.getOrElse {
-      val und = organismEdges(s, dir) // memo-checkpointed
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-      val hubs = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .orderBy(col("d").desc, col("a")).limit(3)
-        .select(col("a").as("hub"))
-      var visited = hubs.select(col("hub"), col("hub").as("node"))
-        .localCheckpoint(true)
-      var frontier = visited
-      val perDist = (1 to 3).map { dist =>
-        val next = frontier.join(sym, frontier("node") === sym("a"))
-          .select(col("hub"), col("b").as("node")).distinct()
-          .join(visited, Seq("hub", "node"), "left_anti")
-          .localCheckpoint(true)
-        // union of materialized checkpoints — no re-checkpoint
-        visited = visited.union(next)
-        frontier = next
-        next.groupBy(col("hub"))
-          .agg(count(lit(1)).as("n_nodes"))
-          .withColumn("dist", lit(dist.toLong))
-      }
-      perDist.reduce(_ unionByName _)
-        .select(col("hub"), col("dist"), col("n_nodes"))
+      val adj = Adjacency.symmetric(organismEdges(s, dir)) // memo-checkpointed
+      Iterate.frontierWalk(adj, Adjacency.topByDegree(adj, 3), 3)
+        .filter(col("dist") > 0)
+        .groupBy(col("hub"), col("dist")).agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("hub"), col("dist"))
     }
 
@@ -379,10 +343,8 @@ object CaseStudyQueries {
         hist.zip(atLeast).map { case ((d, c), ge) => Row(d, c, ge) })
     }.getOrElse {
       import org.apache.spark.sql.expressions.Window
-      val und = organismEdges(s, dir)
-      val deg = und.select(col("u").as("n")).union(und.select(col("v")))
-        .groupBy(col("n")).agg(count(lit(1)).as("degree"))
-      val hist = deg.groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
+      val deg = Adjacency.degrees(Adjacency.symmetric(organismEdges(s, dir)))
+      val hist = deg.groupBy(col("d").as("degree")).agg(count(lit(1)).as("n_nodes"))
       val w = Window.orderBy(col("degree").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       hist.withColumn("n_nodes_ge", sum(col("n_nodes")).over(w))
@@ -440,11 +402,9 @@ object CaseStudyQueries {
         }.sorted.take(15)
           .map { case (l, v) => Row(g.names(v), g.degree(v).toLong, t(v), -l) })
     }.getOrElse {
-      val und = organismEdges(s, dir)
-      val deg = und.select(col("u").as("organism"))
-        .union(und.select(col("v")))
-        .groupBy(col("organism")).agg(count(lit(1)).as("degree"))
-      deg.filter(col("degree") >= 2)
+      Adjacency.degrees(Adjacency.symmetric(organismEdges(s, dir)))
+        .select(col("n").as("organism"), col("d").as("degree"))
+        .filter(col("degree") >= 2)
         .join(organismTriangles(s, dir), Seq("organism"), "left")
         .select(col("organism"), col("degree"),
           coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
@@ -477,14 +437,11 @@ object CaseStudyQueries {
     }.getOrElse {
       // memo-checkpointed; referenced by wedges, degrees AND anti-join
       val und = organismEdges(s, dir)
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-      val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-      // (b1 < b2) orients each wedge once; edges are distinct so the
-      // pair count IS the common-neighbor count
-      val cand = sym.as("x").join(sym.as("y"),
-          col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-        .select(col("x.b").as("u"), col("y.b").as("v"))
+      val sym = Adjacency.symmetric(und)
+      val deg = Adjacency.degrees(sym)
+      // edges are distinct, so the wedge count of a pair IS its
+      // common-neighbor count
+      val cand = Adjacency.wedges(sym)
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("common"))
       cand.join(und, Seq("u", "v"), "left_anti")
         .join(deg.select(col("n").as("u"), col("d").as("du")), Seq("u"))
@@ -516,14 +473,9 @@ object CaseStudyQueries {
     }.getOrElse {
       // memo-checkpointed; referenced by wedges, degrees AND anti-join
       val und = organismEdges(s, dir)
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-      val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-      val wedges = sym.as("x").join(sym.as("y"),
-          col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-        .select(col("x.a").as("w"), col("x.b").as("u"), col("y.b").as("v"))
-      val cand = wedges
-        .join(deg.select(col("n").as("w"), col("d").as("dw")), Seq("w"))
+      val sym = Adjacency.symmetric(und)
+      val cand = Adjacency.wedges(sym)
+        .join(Adjacency.degrees(sym).select(col("n").as("w"), col("d").as("dw")), Seq("w"))
         .groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("common"),
           round(sum(lit(1.0) / log(col("dw").cast("double"))), 6).as("aa"))
@@ -566,19 +518,15 @@ object CaseStudyQueries {
     }.getOrElse {
       import org.apache.spark.sql.expressions.Window
       val und = organismEdges(s, dir) // memo-checkpointed
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
+      val sym = Adjacency.symmetric(und)
       val ranked = sym.withColumn("r",
         row_number().over(Window.partitionBy(col("a")).orderBy(col("b"))))
       val kept = ranked.filter(col("r") <= WedgeCap).drop("r")
-      val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-      val ledger = deg.agg(
+      val ledger = Adjacency.degrees(sym).agg(
         expr(s"sum(least(d, $WedgeCap) * (least(d, $WedgeCap) - 1)) div 2")
           .as("wedges_kept"),
         expr("sum(d * (d - 1)) div 2").as("wedges_total"))
-      val cand = kept.as("x").join(kept.as("y"),
-          col("x.a") === col("y.a") && col("x.b") < col("y.b"))
-        .select(col("x.b").as("u"), col("y.b").as("v"))
+      val cand = Adjacency.wedges(kept)
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("common_capped"))
       cand.join(und, Seq("u", "v"), "left_anti")
         .orderBy(col("common_capped").desc, col("u"), col("v")).limit(20)
@@ -609,11 +557,8 @@ object CaseStudyQueries {
       else null
       localRows(s, "n_directed_edges BIGINT, assortativity DOUBLE", Seq(Row(n, r)))
     }.getOrElse {
-      val und = organismEdges(s, dir) // memo-checkpointed
-
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-      val deg = sym.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
+      val sym = Adjacency.symmetric(organismEdges(s, dir)) // memo-checkpointed
+      val deg = Adjacency.degrees(sym)
       val pairs = sym
         .join(deg.select(col("n").as("a"), col("d").as("x")), Seq("a"))
         .join(deg.select(col("n").as("b"), col("d").as("y")), Seq("b"))
@@ -777,38 +722,20 @@ object CaseStudyQueries {
     // instead of spreading 1/n everywhere, so the stationary vector
     // ranks proximity to the seed — the link-prediction / related-entity
     // primitive (the random-walk counterpart of kg_cs_adamic_adar's
-    // counting heuristic). Same iterative plan as kg_cs_pagerank: 10
-    // rounds, each ONE shuffle (contrib groupBy), per-round
-    // localCheckpoint, dimension-sized state.
+    // counting heuristic). The same [[Iterate.powerIteration]] as
+    // kg_cs_pagerank's distributed arm, over the symmetric adjacency and
+    // with the seed as start and restart vector: 10 rounds, dimension-
+    // sized state.
     "kg_cs_ppr" -> ((s: SparkSession, dir: String) => {
-      val und = organismEdges(s, dir)
-      val edges = und.select(col("u").as("src"), col("v").as("dst"))
-        .union(und.select(col("v").as("src"), col("u").as("dst")))
-        .localCheckpoint(true)
-      val deg = edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+      val adj = Adjacency.symmetric(organismEdges(s, dir)).localCheckpoint(true)
       // symmetric graph ⇒ every node appears in deg (no dangling mass)
-      val seed = deg.orderBy(col("deg").desc, col("node")).limit(1)
-        .select(col("node"), lit(1).as("is_seed")).localCheckpoint(true)
-      val nodes = deg.select(col("node"))
-      var pr = nodes.join(seed, Seq("node"), "left")
-        .select(col("node"),
-          when(col("is_seed").isNotNull, lit(1.0)).otherwise(lit(0.0))
-            .as("rank"))
+      val deg = Adjacency.degrees(adj).localCheckpoint(true)
+      val seed = deg.join(Adjacency.topByDegree(adj, 1), col("n") === col("hub"), "left")
+        .select(col("n").as("node"), when(col("hub").isNotNull, lit(1.0)).otherwise(lit(0.0))
+          .as("rank"))
         .localCheckpoint(true)
-      for (i <- 1 to 10) {
-        val contrib = pr.join(deg, Seq("node"))
-          .join(edges, col("node") === col("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("rank") / col("deg")).as("x"))
-        pr = nodes.join(contrib, Seq("node"), "left")
-          .join(seed, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("is_seed").isNotNull, lit(0.15)).otherwise(lit(0.0))
-              + lit(0.85) * coalesce(col("x"), lit(0.0))).as("rank"))
-        // every-2nd-round checkpoint cadence — see kg_cs_pagerank
-        if (i % 2 == 0) pr = pr.localCheckpoint(true)
-      }
+      val pr = Iterate.powerIteration(adj, deg,
+        seed.select(col("node"), (col("rank") * lit(0.15)).as("restart")), seed, 10)
       pr.select(col("node").as("organism"), round(col("rank"), 6).as("ppr"))
         .orderBy(col("ppr").desc, col("organism")).limit(20)
     }),
@@ -825,33 +752,22 @@ object CaseStudyQueries {
     // paths are genuinely weighted (a pure-BFS distance would collapse
     // to kg_cs_bfs_reach). Each round is ONE shuffle — dist ⋈ edges →
     // min-aggregate — over node-scale state; the edge set is the shared
-    // memoized derivation, and each round localCheckpoints so round r+1
-    // replays zero lineage (the CC / PageRank / k-core discipline).
+    // memoized derivation, and the rounds run on [[Iterate.rounds]].
+    // `dist` is referenced twice per round (probe + union), so the
+    // un-checkpointed round's subtree executes twice in the next action
+    // — bounded at one doubling by the every-second-round checkpoint.
     // Integer weights ⇒ integer distances ⇒ hash-exact across engines.
     "kg_cs_sssp" -> ((s: SparkSession, dir: String) => {
-      val und = organismEdges(s, dir)
-      val wEdges = und.select(col("u"), col("v"),
-        (pmod(graft.ops.Dedup.hash60(
-          concat(col("u"), lit("|"), col("v"))), lit(9L)) + 1).as("w"))
-      val sym = wEdges.select(col("u").as("a"), col("v").as("b"), col("w"))
-        .union(wEdges.select(col("v").as("a"), col("u").as("b"), col("w")))
+      val sym = Adjacency.symmetric(organismEdges(s, dir).withColumn("w",
+          pmod(graft.ops.Dedup.hash60(concat(col("u"), lit("|"), col("v"))), lit(9L)) + 1))
         .localCheckpoint(true)
-      val hub = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .orderBy(col("d").desc, col("a")).limit(1)
-      var dist = hub.select(col("a").as("node"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      for (i <- 1 to 4) {
-        val relaxed = dist.join(sym, dist("node") === sym("a"))
-          .select(col("b").as("node"), (col("dist") + col("w")).as("dist"))
-        dist = dist.union(relaxed)
+      val hub = Adjacency.topByDegree(sym, 1)
+        .select(col("hub").as("node"), lit(0L).as("dist")).localCheckpoint(true)
+      Iterate.rounds(hub, 4) { dist =>
+        dist.union(dist.join(sym, dist("node") === sym("a"))
+            .select(col("b").as("node"), (col("dist") + col("w")).as("dist")))
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        // every-2nd-round checkpoint cadence — see kg_cs_pagerank.
-        // `dist` is referenced twice per round (probe + union), so the
-        // un-checkpointed round's subtree executes twice in the next
-        // action — bounded at one doubling by the cadence
-        if (i % 2 == 0) dist = dist.localCheckpoint(true)
-      }
-      dist.orderBy(col("dist"), col("node")).limit(25)
+      }.orderBy(col("dist"), col("node")).limit(25)
     }),
 
     // CS3 generalization: 3-core of the undirected organism interaction
@@ -881,8 +797,7 @@ object CaseStudyQueries {
         var converged = false
         var rounds = 0
         while (!converged && rounds < 13) {
-          val keep = edges.select(col("u").as("n")).union(edges.select(col("v")))
-            .groupBy(col("n")).agg(count(lit(1)).as("d"))
+          val keep = Adjacency.degrees(Adjacency.symmetric(edges))
             .filter(col("d") >= k).select(col("n"))
           val next = edges
             .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
@@ -900,9 +815,8 @@ object CaseStudyQueries {
         edges
       }
       def degrees(edges: DataFrame, k: Int): DataFrame =
-        edges.select(col("u").as("organism")).union(edges.select(col("v")))
-          .groupBy(col("organism")).agg(count(lit(1)).as("core_degree"))
-          .select(lit(k).as("k"), col("organism"), col("core_degree"))
+        Adjacency.degrees(Adjacency.symmetric(edges))
+          .select(lit(k).as("k"), col("n").as("organism"), col("d").as("core_degree"))
       // the (k+1)-core is a subgraph of the k-core, so each peel starts
       // from the previous core's (checkpointed, smaller) edge set
       val core2 = peel(und, 2)
@@ -920,10 +834,9 @@ object CaseStudyQueries {
     // neighbors, ties broken by the lexicographically smallest label —
     // fully deterministic, so the DuckDB oracle unrolls the identical
     // 5 rounds. Each round is one join + one count aggregate + one
-    // per-node argmax window (partitioned by node — never global), and
-    // every round localCheckpoints: the iterative-DataFrame discipline
-    // of the CC/PageRank/k-core loops. Output: the top-25 communities
-    // by size plus the total-community-count rider.
+    // per-node argmax window (partitioned by node — never global), on
+    // [[Iterate.rounds]]. Output: the top-25 communities by size plus
+    // the total-community-count rider.
     "kg_cs_communities" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
       val und = organismEdges(s, dir)
@@ -936,24 +849,18 @@ object CaseStudyQueries {
       // UnknownPartitioning (pinned in PlanSpec), which is why the
       // static side uses persist while the per-round labels (whose
       // lineage must be truncated) keep using localCheckpoint
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-        .repartition(col("b"))
-        .persist()
-      var labels = sym.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint(true)
+      val sym = Adjacency.symmetric(und).repartition(col("b")).persist()
       val w = Window.partitionBy(col("a"))
         .orderBy(col("c").desc, col("label").asc)
-      for (i <- 1 to 5) {
-        labels = sym.join(labels, col("b") === col("node"))
+      val start = sym.select(col("a").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .localCheckpoint(true)
+      val labels = Iterate.rounds(start, 5) { prev =>
+        sym.join(prev, col("b") === col("node"))
           .groupBy(col("a"), col("label")).agg(count(lit(1)).as("c"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("a").as("node"), col("label"))
-        // every-2nd-round checkpoint cadence — see kg_cs_pagerank
-        // (labels enters the next round exactly once: linear lineage)
-        if (i % 2 == 0 || i == 5) labels = labels.localCheckpoint(true)
       }
       val comm = labels.groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("n_members"))
@@ -1001,42 +908,18 @@ object CaseStudyQueries {
 
     // Exact closeness centrality for the top-3 degree hubs: BFS to
     // EXHAUSTION (while-frontier-nonempty, not a fixed unroll) over the
-    // memoized undirected organism graph — one shuffle per level over
-    // frontier-scale rows, each level localCheckpointed, the count that
-    // drives the loop riding the checkpoint action. Emits the integer
+    // memoized undirected organism graph — [[Iterate.frontierWalk]]
+    // without a level bound, one shuffle per level over frontier-scale
+    // rows, each level localCheckpointed. Emits the integer
     // (n_reached, sum_dist) pair beside the rounded closeness so the
     // gate is integer-exact except one audited division. The oracle
     // unrolls 8 BFS levels (empty trailing levels are no-ops; the
     // engine's exhaustion loop proves 8 suffices — a deeper graph would
     // hash-mismatch loudly, not silently truncate).
     "kg_cs_closeness" -> ((s: SparkSession, dir: String) => {
-      val und = organismEdges(s, dir)
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-        .localCheckpoint(true)
-      val hubs = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .orderBy(col("d").desc, col("a")).limit(3)
-        .select(col("a").as("hub"))
-      var visited = hubs.select(col("hub"), col("hub").as("node"),
-        lit(0L).as("dist")).localCheckpoint(true)
-      var frontier = visited
-      var level = 0L
-      var n = frontier.count()
-      while (n > 0) {
-        level += 1
-        val next = frontier.join(sym, frontier("node") === sym("a"))
-          .select(col("hub"), col("b").as("node")).distinct()
-          .join(visited, Seq("hub", "node"), "left_anti")
-          .withColumn("dist", lit(level))
-          .localCheckpoint(true)
-        // union of materialized checkpoints — no re-checkpoint (the
-        // Brandes convention: re-materializing the accumulated set
-        // copied all visited rows again every level)
-        visited = visited.union(next)
-        frontier = next
-        n = next.count()
-      }
-      visited.groupBy(col("hub"))
+      val sym = Adjacency.symmetric(organismEdges(s, dir)).localCheckpoint(true)
+      Iterate.frontierWalk(sym, Adjacency.topByDegree(sym, 3), Int.MaxValue)
+        .groupBy(col("hub"))
         .agg((count(lit(1)) - 1L).as("n_reached"),
           sum(col("dist")).as("sum_dist"))
         .withColumn("closeness", round(
@@ -1057,12 +940,7 @@ object CaseStudyQueries {
     // pinned, so both engines sample identically).
     "kg_cs_betweenness" -> ((s: SparkSession, dir: String) => {
       val und = organismEdges(s, dir)
-      val sym = und.select(col("u").as("a"), col("v").as("b"))
-        .union(und.select(col("v").as("a"), col("u").as("b")))
-      val hubs = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .orderBy(col("d").desc, col("a")).limit(3)
-        .select(col("a").as("hub"))
-      graft.ops.Brandes.dependencies(und, hubs)
+      graft.ops.Brandes.dependencies(und, Adjacency.topByDegree(Adjacency.symmetric(und), 3))
         .groupBy(col("node"))
         .agg(round(sum(col("delta")), 6).as("bc"))
         .orderBy(col("bc").desc, col("node"))

@@ -14,23 +14,6 @@ object PipelineQueries {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Verified near-dup pair set — the banded-MinHash-LSH + exact-Jaccard
-    * chain — shared by `dd_minhash_lsh` (which serves the pairs) and
-    * `dd_lsh_clusters` (which runs connected components over them).
-    * Memoized per (session, scale dir) and materialized by an eager
-    * localCheckpoint, the same once-per-scale contract as
-    * [[Materialized]]: the expensive signature/banding/verify chain
-    * executes once, and the clusters query starts from pair-scale
-    * checkpoint blocks instead of re-deriving the whole corpus scan.
-    */
-  private val lshPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Force the once-per-scale shared intermediates of this module (the
-    * verified LSH pair set) — called by Bench's up-front materialization
-    * phase so the build cost lands on the explicit materialize line, not
-    * on whichever dd_* query touches the memo first.
-    */
   /** Connected components over the verified LSH pair graph — memoized
     * like the pair memo itself, because TWO queries consume the same
     * mapping (dd_lsh_clusters and tx_leakage_split) and the iterative
@@ -44,6 +27,12 @@ object PipelineQueries {
         .localCheckpoint(true)
     }
 
+  /** Force the once-per-scale shared intermediates of this module (the
+    * verified LSH pair set, its components and the snapshot-table gate
+    * fixtures) — called by Bench's up-front materialization phase so the
+    * build cost lands on the explicit materialize line, not on whichever
+    * query touches the memo first.
+    */
   def materializeShared(s: SparkSession, dir: String): Unit = {
     // snapshot-table gate fixtures (base write + DML commits) build
     // here so their construction cost lands on the materialize_tables
@@ -414,16 +403,22 @@ object PipelineQueries {
       stateDir
     }
 
+  /** Verified near-dup pair set — the banded-MinHash-LSH + exact-Jaccard
+    * chain — shared by `dd_minhash_lsh` (which serves the pairs) and
+    * `dd_lsh_clusters` (which runs connected components over them).
+    * Memoized per (session, scale dir) through [[Materialized.once]] and
+    * materialized by an eager localCheckpoint: the expensive
+    * signature/banding/verify chain executes once, and the clusters
+    * query starts from pair-scale checkpoint blocks instead of
+    * re-deriving the whole corpus scan.
+    */
   private[graft] def verifiedLshPairs(s: SparkSession, dir: String): DataFrame =
-    lshPairsMemo.computeIfAbsent(
-      // applicationId is unique per context — an identityHashCode key
-      // can be reused after GC and would hand a later session a
-      // checkpointed DataFrame of a dead SparkContext
-      s"${s.sparkContext.applicationId}:$dir",
-      _ => Dedup.minhashLsh(s.read.parquet(t(dir, "documents")), "doc_id",
+    Materialized.once(s, "verifiedLshPairs", dir) {
+      Dedup.minhashLsh(s.read.parquet(t(dir, "documents")), "doc_id",
           "text", k = 4, rowsPerBand = 2, threshold = 0.8)
         .select(col("id_a"), col("id_b"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
+    }
 
   /** Brute-force recall@10 honesty rider shared by the ANN queries
     * (IVF / SQ / PQ): fraction of the TRUE cosine top-10 the

@@ -20,7 +20,7 @@ class HarnessSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     Materialized.buildShared(spark, dir)
     Seq("recordsAndMatched", "globiTable", "trydbTable", "taxonPaths",
-      "lshComponents", "mergedDocsTable", "statsDocsTable", "zorderOrdersTable",
+      "verifiedLshPairs", "lshComponents", "mergedDocsTable", "statsDocsTable", "zorderOrdersTable",
       "deletedDocsTable", "partitionedDocsTable", "bloomDocsTable",
       "scd2DimTable", "wapDocsTable", "orgEdgesDirected", "orgGraph",
       "taxonomyEdges", "taxonomyGraph"

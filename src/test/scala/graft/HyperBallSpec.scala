@@ -43,4 +43,40 @@ class HyperBallSpec extends AnyFunSuite {
     assert(exact(2) == 144L)
     assert(est(1) <= est(2) + 1e-9 && est(0) <= est(1) + 1e-9)
   }
+
+  test("harmonicCentrality ranks by score then node, within HLL error of the exact scores") {
+    // K5 on k0..k4 with the path k0 - p0 - p1 - p2 hanging off k0.
+    // k1..k4 have equal balls at every radius >= 1 and singleton balls
+    // at 0 (whose linear-counting estimate depends only on the occupied
+    // register count), so their scores tie exactly
+    val k5 = for (i <- 0 until 5; j <- i + 1 until 5) yield (s"k$i", s"k$j")
+    val edges = k5 ++ Seq("k0" -> "p0", "p0" -> "p1", "p1" -> "p2")
+    val es = edges.toDF("u", "v")
+    def top(k: Int) = HyperBall.harmonicCentrality(es, 3, k).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val all = top(100)
+    assert(all.map(_._1).sorted == (0 until 5).map(i => s"k$i") ++ Seq("p0", "p1", "p2"))
+    assert(all == all.sortBy { case (n, h) => (-h, n) }, all)
+    assert(top(6) == all.take(6))
+    val tied = all.filter(_._1.matches("k[1-4]"))
+    assert(tied.map(_._2).distinct.size == 1, tied)
+    assert(all.map(_._1).containsSlice(Seq("k1", "k2", "k3", "k4")), all)
+    // the exact harmonic centrality truncated at distance 3, by BFS
+    val adj = edges.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    def exact(v: String): Double = {
+      var seen = Set(v)
+      var frontier = Set(v)
+      (1 to 3).map { r =>
+        frontier = frontier.flatMap(adj) -- seen
+        seen ++= frontier
+        frontier.size / r.toDouble
+      }.sum
+    }
+    assert(math.abs(exact("k1") - (4 + 1.0 / 2 + 1.0 / 3)) < 1e-12)
+    all.foreach { case (n, h) =>
+      val rel = math.abs(h - exact(n)) / exact(n)
+      assert(rel < 0.35, s"$n: est $h vs exact ${exact(n)}")
+    }
+  }
 }

@@ -562,6 +562,46 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  /** Exact closeness of the top-3 degree hubs (degree desc, name) by
+    * plain BFS to exhaustion: (hub, n_reached, sum_dist, closeness),
+    * ordered by hub.
+    */
+  private def bruteCloseness(edges: Set[(String, String)]): Seq[(String, Long, Long, Double)] = {
+    val adj = edges.toSeq.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val hubs = adj.toSeq.sortBy { case (n, ns) => (-ns.size, n) }.take(3).map(_._1)
+    hubs.sorted.map { h =>
+      var dist = Map(h -> 0L)
+      var frontier = Set(h)
+      while (frontier.nonEmpty) {
+        val d = dist(frontier.head) + 1
+        frontier = frontier.flatMap(adj) -- dist.keySet
+        dist ++= frontier.map(_ -> d)
+      }
+      val (n, total) = (dist.size - 1L, dist.values.sum)
+      (h, n, total, CaseStudyQueries.round6(n.toDouble / total.toDouble))
+    }
+  }
+
+  test("kg_cs_closeness equals brute BFS to exhaustion, also past the oracle's 8 levels") {
+    import spark.implicits._
+    def closeness(d: String) = SparkEntry.queries("kg_cs_closeness")(spark, d).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    val expected = bruteCloseness(bruteOrganismEdges())
+    val got = closeness(dir)
+    assert(got.size == 3 && got == expected, s"\ngot  $got\nwant $expected")
+    // a 12-node path p00 - ... - p11 as the undirected edge memo: the
+    // hubs p01, p02, p03 (degree 2, name order) reach p11 at distances
+    // 10, 9 and 8, so an 8-level unroll would lose p01's and p02's tails
+    val path = (0 until 11).map(i => (f"p$i%02d", f"p${i + 1}%02d"))
+    val deep = "plan-spec/closeness-path"
+    graft.queries.Materialized.once(spark, "orgEdgesUndirected", deep)(path.toDF("u", "v"))
+    val gotDeep = closeness(deep)
+    assert(gotDeep == bruteCloseness(path.toSet), gotDeep)
+    assert(gotDeep.map(r => (r._1, r._2, r._3)) ==
+      Seq(("p01", 11L, 56L), ("p02", 11L, 48L), ("p03", 11L, 42L)), gotDeep)
+  }
+
   test("kg_sparql_wdids evaluates the 7-pattern star join ONCE") {
     // The SPARQL UNION merges source-side and target-side taxa; a naive
     // per-arm formulation references the star-join subtree twice and
