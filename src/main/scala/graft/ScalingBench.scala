@@ -1,154 +1,72 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Two-parallelism-level scaling benchmark (BASELINE.md protocol —
-  * sandbox substitute for N vs 4N executors):
+  * sandbox substitute for N vs 4N executors; tools/scaling.sh runs each
+  * level in its own JVM and writes BENCH.md):
   *
-  * 1. materialize the deterministic corpus to parquet once,
-  * 2. run the identical KG pipeline (scan → extract → link → resolve →
-  *    materialize) at local[N] and local[4N] with shuffle partitions
-  *    scaled to cores,
-  * 3. report docs/sec, triples/sec and scaling efficiency
-  *    (throughput@4N / throughput@N) / 4, gate ≥ 0.8.
+  * 1. `prep` writes the deterministic corpus once, as a docs snapshot
+  *    table at the session's parallelism;
+  * 2. `level` runs the shipped full build, [[kg.Pipeline.runFromTable]],
+  *    over that table at one core count: a warm-up build of a small
+  *    corpus, then two timed builds, each into a fresh output root in a
+  *    temp dir that is deleted afterwards;
+  * 3. the level prints one JSON line with the faster build's end-to-end
+  *    docs/sec and triples/sec and its per-stage seconds.
   *
-  * Usage: runMain graft.ScalingBench [nDocs] [N] — defaults 150000, 8.
-  * Writes/updates BENCH.md and prints one JSON line per level plus a
-  * summary line.
+  * Usage: runMain graft.ScalingBench prep <nDocs> <dir>
+  *        runMain graft.ScalingBench level <cores> <nDocs> <dir>
   */
 object ScalingBench {
 
   case class Level(cores: Int, wallSec: Double, triples: Long,
-      docsPerSec: Double, triplesPerSec: Double, ccSec: Double)
+      docsPerSec: Double, triplesPerSec: Double, stageSec: Seq[(String, Double)])
 
-  /** A fresh session for one level: `local[cores]` unless spark-submit
-    * or `MASTER` names the master. Partitions ∝ cores, 8× finer than
-    * [[Session]]'s default so per-task aggregation state stays small
-    * (one giant hash per task = GC thrash); AQE coalesces the tail.
-    */
-  def session(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+  def runLevel(cores: Int, nDocs: Long, docsDir: String): Level = {
     val spark = Session(s"graft-scaling-$cores", Some(cores))
-    spark.conf.set("spark.sql.shuffle.partitions", (cores * 8).toString)
-    spark
-  }
-
-  /** The shipped construction calls (matchTaxaAdaptive → wdMapDicts →
-    * globiTriplesFused), counted instead of written.
-    */
-  def pipelineCount(spark: SparkSession, docs: org.apache.spark.sql.DataFrame): Long = {
-    val records = kg.Extract.records(docs)
-    val matched = kg.Link.matchTaxaAdaptive(records, kg.DataGen.wdSparqlRows,
-      kg.DataGen.lineageRows)
-    val (dictId, dictName) = kg.Materialize.wdMapDicts(matched)
-    val mm = kg.Extract.mediaMentions(records, kg.DataGen.mediaMeta(spark))
-    kg.Materialize.globiTriplesFused(records, dictId, dictName, Some(mm)).count()
-  }
-
-  def runLevel(cores: Int, nDocs: Long, corpusDir: String): Level = {
-    val spark = session(cores)
+    val tmp = Files.createTempDirectory("graft-scaling").toString
+    def build(docs: String, root: String): (Double, kg.Pipeline.RunReport) = {
+      val t0 = System.nanoTime()
+      val report = kg.Pipeline.runFromTable(spark, docs, s"$tmp/$root",
+        s"$tmp/$root/50_graph")._1
+      ((System.nanoTime() - t0) / 1e9, report)
+    }
     try {
       // JIT/codegen warmup outside the timed window (same code path,
       // tiny input) — measures steady-state throughput, not JVM warmup
-      pipelineCount(spark, kg.DataGen.corpus(spark, 2000, cores).toDF())
-      val docs = spark.read.parquet(corpusDir)
+      sources.SnapshotTable.write(kg.DataGen.corpus(spark, 2000).toDF(), s"$tmp/warmup-docs")
+      build(s"$tmp/warmup-docs", "warmup")
       // best of two trials: the sandbox host is noisy; min is the least
       // contended estimate of the job's true cost
-      var wall = Double.MaxValue
-      var triples = 0L
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
-        triples = pipelineCount(spark, docs)
-        wall = math.min(wall, (System.nanoTime() - t0) / 1e9)
-      }
-      // canonicalization timed separately (iterative; not part of the
-      // extracted+linked/sec headline)
-      val records = kg.Extract.records(docs)
-      val matched = kg.Link.matchTaxaAdaptive(records, kg.DataGen.wdSparqlRows,
-        kg.DataGen.lineageRows)
-      val t1 = System.nanoTime()
-      val edges = kg.Canonical.equivalenceEdges(matched)
-      kg.Canonical.connectedComponents(edges).count()
-      val ccSec = (System.nanoTime() - t1) / 1e9
+      val (wall, report) = Seq("trial1", "trial2").map(build(docsDir, _)).minBy(_._1)
       // the cores the session got: spark-submit's or MASTER's master
       // wins over the requested level
-      Level(spark.sparkContext.defaultParallelism, wall, triples,
-        nDocs / wall, triples / wall, ccSec)
-    } finally spark.stop()
+      Level(spark.sparkContext.defaultParallelism, wall, report.triples,
+        nDocs / wall, report.triples / wall, report.stages.map(s => s.name -> s.seconds))
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(tmp)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      spark.stop()
+    }
   }
 
   def line(l: Level): String =
     s"""{"cores":${l.cores},"wall_sec":${f"${l.wallSec}%.2f"},"triples":${l.triples},""" +
       s""""docs_per_sec":${f"${l.docsPerSec}%.0f"},"triples_per_sec":${f"${l.triplesPerSec}%.0f"},""" +
-      s""""cc_sec":${f"${l.ccSec}%.2f"}}"""
+      l.stageSec.map { case (n, s) => f""""$n":$s%.2f""" }
+        .mkString(""""stage_sec":{""", ",", "}}")
 
-  /** Modes:
-    *   prep <nDocs> <dir>            — materialize the corpus once
-    *   level <cores> <nDocs> <dir>   — one timed level in THIS JVM
-    *   (default) <nDocs> <N>         — both levels in one JVM (quick look;
-    *     for the honest protocol run each level in its own JVM with heap
-    *     and GC threads scaled to cores — tools/scaling.sh)
-    */
-  def main(args: Array[String]): Unit = args.headOption match {
-    case Some("prep") =>
-      val nDocs = args(1).toLong; val dir = args(2)
-      val prep = Session("graft-scaling-prep")
-      kg.DataGen.corpus(prep, nDocs, 64).toDF()
-        .write.mode("overwrite").parquet(dir)
-      prep.stop()
-    case Some("level") =>
-      val cores = args(1).toInt; val nDocs = args(2).toLong; val dir = args(3)
-      println(line(runLevel(cores, nDocs, dir)))
-    case _ => singleJvm(args)
-  }
-
-  def singleJvm(args: Array[String]): Unit = {
-    val nDocs = args.headOption.map(_.toLong).getOrElse(150000L)
-    val n = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val tmp = Files.createTempDirectory("graft-scaling").toString
-    val corpusDir = s"$tmp/corpus"
-
-    // corpus materialized once, outside the timed path
-    val prep = Session("graft-scaling-prep")
-    kg.DataGen.corpus(prep, nDocs, 64).toDF()
-      .write.mode("overwrite").parquet(corpusDir)
-    prep.stop()
-
-    val lo = runLevel(n, nDocs, corpusDir)
-    val hi = runLevel(4 * n, nDocs, corpusDir)
-    val eff = (hi.triplesPerSec / lo.triplesPerSec) / 4.0
-
-    println(line(lo)); println(line(hi))
-    println(s"""{"metric":"scaling_efficiency","value":${f"$eff%.3f"},""" +
-      s""""n_cores":$n,"4n_cores":${4 * n},"n_docs":$nDocs,"gate":0.8,""" +
-      s""""pass":${eff >= 0.8}}""")
-
-    val md =
-      s"""# BENCH — scaling evidence (local[N] vs local[4N])
-         |
-         |Protocol (BASELINE.md): identical spark-submit job, identical
-         |deterministic input ($nDocs docs, corpus pre-materialized to
-         |parquet), two parallelism levels, shuffle partitions = cores.
-         |
-         |Command:
-         |```
-         |sbt "runMain graft.ScalingBench $nDocs $n"
-         |```
-         |
-         || cores | wall (s) | triples | docs/sec | triples/sec | CC (s) |
-         ||---|---|---|---|---|---|
-         || $n | ${f"${lo.wallSec}%.2f"} | ${lo.triples} | ${f"${lo.docsPerSec}%.0f"} | ${f"${lo.triplesPerSec}%.0f"} | ${f"${lo.ccSec}%.2f"} |
-         || ${4 * n} | ${f"${hi.wallSec}%.2f"} | ${hi.triples} | ${f"${hi.docsPerSec}%.0f"} | ${f"${hi.triplesPerSec}%.0f"} | ${f"${hi.ccSec}%.2f"} |
-         |
-         |**Scaling efficiency = (throughput@${4 * n} / throughput@$n) / 4 =
-         |${f"$eff%.3f"}** (gate ≥ 0.8: ${if (eff >= 0.8) "PASS" else "FAIL"})
-         |
-         |Headline metric: triples extracted+linked/sec (extraction →
-         |linking → resolution → emission → global distinct). CC
-         |canonicalization timed separately (iterative driver loop).
-         |""".stripMargin
-    Files.writeString(Paths.get("BENCH.md"), md)
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("prep", nDocs, dir) =>
+      val spark = Session("graft-scaling-prep")
+      try sources.SnapshotTable.write(kg.DataGen.corpus(spark, nDocs.toLong).toDF(), dir): Unit
+      finally spark.stop()
+    case Seq("level", cores, nDocs, dir) =>
+      println(line(runLevel(cores.toInt, nDocs.toLong, dir)))
+    case _ =>
+      System.err.println(
+        "usage: ScalingBench prep <nDocs> <dir> | level <cores> <nDocs> <dir>")
+      sys.exit(2)
   }
 }

@@ -9,8 +9,7 @@ import org.apache.spark.sql.SparkSession
   * Master: the `spark.master` that spark-submit sets, else `MASTER`,
   * else `local[n]` with n = `cores`, else `SPARK_GRAFT_CPUS`, else the
   * JVM's available processors. On a local master the shuffle partitions
-  * equal its core count; a caller that wants another fan-out sets it on
-  * the returned session's conf.
+  * equal its core count; no caller sets another fan-out.
   *
   * Settings: UTC session time zone, no UI, WARN logging, and shuffle and
   * spill files on /dev/shm when it is writable (one tmpfs instead of a

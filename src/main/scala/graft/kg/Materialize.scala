@@ -505,8 +505,9 @@ object Materialize {
   }
 
   /** Graph layout: REBALANCE by the filename-safe `predicate` column it
-    * adds, then subject-sorted within each partition; written
-    * partitioned by `predicate`, i.e. triples/predicate=<p>/part-*.parquet
+    * adds, then subject-sorted within each partition; the graph table
+    * of [[Pipeline.runFromTable]] is written partitioned by `predicate`,
+    * i.e. predicate=<p>/part-*.parquet in each snapshot's data directory
     * (north rule). AQE sizes the output partitions from the shuffle
     * bytes: small predicates coalesce into one task (one file each), a
     * predicate above the advisory partition size is split, and no
@@ -517,11 +518,4 @@ object Materialize {
       .withColumn("predicate", regexp_replace(col("pred"), "[^A-Za-z0-9]+", "_"))
       .hint("rebalance", col("predicate"))
       .sortWithinPartitions(col("predicate"), col("subj"))
-
-  /** Graph write of [[predicateLayout]] as plain parquet. */
-  def writeTriples(triples: DataFrame, outDir: String): Unit =
-    predicateLayout(triples)
-      .write.mode("overwrite")
-      .partitionBy("predicate")
-      .parquet(outDir)
 }

@@ -104,13 +104,18 @@ object Pipeline {
   private val StageVersion = "v2"
 
   /** Table-native entry point (north rule: the pipeline runs OVER
-    * Iceberg tables): read the interleaved document corpus from a
-    * snapshot table (optionally at a pinned snapshot — a re-run against
-    * the same snapshot is reproducible regardless of later appends) and
-    * publish the canonical graph as a new snapshot of an output table,
+    * Iceberg tables) and the one full build: read the interleaved
+    * document corpus from a snapshot table (optionally at a pinned
+    * snapshot — a re-run against the same snapshot is reproducible
+    * regardless of later appends), run extract → link → triples →
+    * canonical, each a checkpointed [[stage]] under outRoot, and publish
+    * the canonical graph as a new snapshot of an output table,
     * predicate-partitioned in [[Materialize.predicateLayout]], whose
-    * partition count AQE sizes from the data. A build leaves no table
-    * persisted. Returns (run report, graph snapshot id).
+    * partition count AQE sizes from the data. Every later stage reads
+    * the re-read parquet of the ones before it, so what a stage
+    * persisted is released once it is written, and a build leaves no
+    * table persisted. Returns (run report, graph snapshot id); the
+    * report's triple counts are the 30/40 stage rows.
     */
   def runFromTable(spark: SparkSession, docsTableDir: String,
       outRoot: String, graphTableDir: String,
@@ -120,22 +125,6 @@ object Pipeline {
     val docs = SnapshotTable.read(spark, docsTableDir, Some(snap))
     // a table snapshot is immutable: its id identifies the input
     val fp = s"table:$docsTableDir@$snap:$StageVersion"
-    val (report, canonical) = buildStages(spark, outRoot, fp, docs)
-    val graphSnap = SnapshotTable.write(
-      Materialize.predicateLayout(canonical),
-      graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
-    (report, graphSnap)
-  }
-
-  /** The construction chain [[run]] and [[runFromTable]] share:
-    * extract → link → triples → canonical, each a checkpointed
-    * [[stage]]. Every later stage reads the re-read parquet of the ones
-    * before it, so what a stage persisted is released once it is
-    * written. Returns the run report, whose triple counts are the 30/40
-    * stage rows, and the canonical triple table.
-    */
-  private def buildStages(spark: SparkSession, outRoot: String, fp: String,
-      docs: DataFrame): (RunReport, DataFrame) = {
     val persisted = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def held(df: DataFrame): DataFrame = { persisted += df; df }
     val (records, s1) = stage(spark, outRoot, "10_extract", fp) {
@@ -161,7 +150,10 @@ object Pipeline {
       val mapping = Canonical.connectedComponents(edges)
       Canonical.canonicalizeTriples(triples, mapping)
     }
-    (RunReport(Seq(s1, s2, s3, s4), s3.rows, s4.rows), canonical)
+    val graphSnap = SnapshotTable.write(
+      Materialize.predicateLayout(canonical),
+      graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
+    (RunReport(Seq(s1, s2, s3, s4), s3.rows, s4.rows), graphSnap)
   }
 
   case class IncrementalResult(processedDocsSnapshot: Long,
@@ -552,22 +544,18 @@ object Pipeline {
       if (keepMatched) Some(newMatched) else None)
   }
 
-  /** Full KG construction over the deterministic corpus:
-    * datagen → extract → link → materialize → canonicalize, all
-    * checkpointed under outRoot. The final graph is the canonical stage
-    * output in the predicate-partitioned layout under 50_graph; raw
-    * triples remain available in the 30_triples stage parquet. The
-    * corpus is generated in `partitions` partitions; the graph does not
-    * depend on the count.
+  /** Full KG construction over the deterministic corpus: the generated
+    * documents become the snapshot table `docs` under outRoot, and
+    * [[runFromTable]] builds that snapshot into the graph table
+    * `50_graph`. The corpus write is keyed by its size, so a resumed run
+    * writes no new snapshot and every stage fingerprint matches; the
+    * build is pinned to the keyed snapshot, so a root last run at
+    * another size still builds this one.
     */
-  def run(spark: SparkSession, nDocs: Long, outRoot: String,
-      partitions: Int): RunReport = {
-    val fp = s"corpus:$nDocs:$StageVersion"
-    val (docs, s0) = stage(spark, outRoot, "00_corpus", fp) {
-      DataGen.corpus(spark, nDocs, partitions).toDF()
-    }
-    val (report, canonical) = buildStages(spark, outRoot, fp, docs)
-    Materialize.writeTriples(canonical, s"$outRoot/50_graph")
-    report.copy(stages = s0 +: report.stages)
+  def run(spark: SparkSession, nDocs: Long, outRoot: String): RunReport = {
+    val docsDir = s"$outRoot/docs"
+    val snap = graft.sources.SnapshotTable.write(DataGen.corpus(spark, nDocs).toDF(),
+      docsDir, idempotencyKey = s"corpus:$nDocs")
+    runFromTable(spark, docsDir, outRoot, s"$outRoot/50_graph", Some(snap))._1
   }
 }

@@ -29,7 +29,8 @@ import graft.ops.{Bucketing, Par}
   */
 object Materialized {
 
-  val SideDir = "/root/repo/target/verify_side"
+  /** Under the working directory, so each checkout writes its own dumps. */
+  val SideDir: String = s"${sys.props("user.dir")}/target/verify_side"
 
   val EMI = Model.EMI
   val SOSA = Model.SOSA

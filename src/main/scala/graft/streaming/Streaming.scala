@@ -1,48 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY §2.8): the reference's
   * incremental machinery is chunked batch + resume
   * (globi_kg_generator.py:167-171); its faithful streaming mapping is a
-  * file-source micro-batch pipeline with Trigger.AvailableNow. Event
-  * streams additionally get watermarked windows, streaming dedup, and
-  * stateful sessionization — the operators a 100 TB training-data
-  * ingest pipeline needs.
+  * file-source micro-batch pipeline with Trigger.AvailableNow whose
+  * `foreachBatch` appends each batch to the docs snapshot table, keyed
+  * by its batch id, and runs [[graft.kg.Pipeline.incrementalCanonicalFromTable]]
+  * (StreamingSpec). Event streams additionally get watermarked windows,
+  * streaming dedup, and stateful sessionization — the operators a
+  * 100 TB training-data ingest pipeline needs.
   */
 object Streaming {
-
-  /** Incremental KG extraction: new document files → records → triples,
-    * per-micro-batch dedup + append (the reference's per-batch rdflib
-    * set + gzip append, globi_kg_generator.py:325-331). foreachBatch
-    * gives the batch-side joins against the static dictionaries. Every
-    * table a batch persists is released after its write, so a long
-    * stream holds no cached data per batch.
-    */
-  def extractionStream(spark: SparkSession, docsDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val schema = graft.kg.DataGen.corpus(spark, 1, 1).schema
-    val docs = spark.readStream.schema(schema).parquet(docsDir)
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.kg.{DataGen, Extract, Link, Materialize, Model}
-        val records = Extract.records(batch)
-        val matched = Link.matchTaxaAdaptive(records,
-          DataGen.wdSparqlRows, DataGen.lineageRows)
-        val (dictId, dictName) = Materialize.wdMapDicts(matched)
-        // globiTriplesFused's two parts, so the tagged table is released
-        val tagged = Materialize.taggedTriples(records, dictId, dictName, None,
-          Model.MaxDriverRows)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Materialize.splitDedup(tagged).write.mode("append").parquet(outDir)
-        Seq(tagged, dictId, dictName, matched).foreach(_.unpersist())
-      }
-      .start()
-  }
 
   /** Watermarked tumbling-window aggregation over an event stream. */
   def windowedCounts(events: DataFrame): DataFrame =

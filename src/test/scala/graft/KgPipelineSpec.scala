@@ -158,7 +158,7 @@ class KgPipelineSpec extends AnyFunSuite {
 
   test("pipeline resume skips completed stages idempotently") {
     val out = java.nio.file.Files.createTempDirectory("kgrun").toString
-    val r1 = Pipeline.run(spark, 60, out, partitions = 4)
+    val r1 = Pipeline.run(spark, 60, out)
     assert(r1.stages.forall(!_.skipped))
     assert(r1.triples > 0)
     // lineage metrics are write-side: one footer count per part file,
@@ -172,21 +172,32 @@ class KgPipelineSpec extends AnyFunSuite {
       assert(counts.sum == rows && s.rows == rows && s.partitions == counts.length,
         s"${s.name}: $counts vs $rows rows, $s")
     }
-    val r2 = Pipeline.run(spark, 60, out, partitions = 4)
+    val r2 = Pipeline.run(spark, 60, out)
     assert(r2.stages.forall(_.skipped), s"expected all skipped: ${r2.stages}")
     assert(r2.triples == r1.triples)
     assert(r2.canonicalTriples == r1.canonicalTriples)
     assert(r2.stages.map(_.rows) == r1.stages.map(_.rows) &&
       r2.stages.forall(_.rows >= 0), r2.stages)
+    // the resumed run found the corpus snapshot by its key
+    import graft.sources.SnapshotTable
+    assert(SnapshotTable.history(s"$out/docs").size == 1,
+      SnapshotTable.history(s"$out/docs"))
+    // the graph table is the canonical stage's output
+    val cols = Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().toSet
+    val graph = triples(SnapshotTable.read(spark, s"$out/50_graph"))
+    assert(graph.nonEmpty && graph.size == r2.canonicalTriples)
+    assert(graph == triples(spark.read.parquet(s"$out/40_canonical/data")))
   }
 
   test("a manifest torn after its fingerprint makes the stage recompute") {
     val out = java.nio.file.Files.createTempDirectory("kgtorn").toString
-    val r1 = Pipeline.run(spark, 40, out, partitions = 4)
+    val r1 = Pipeline.run(spark, 40, out)
     val path = java.nio.file.Paths.get(out, "40_canonical", "_MANIFEST.json")
     val json = manifest(out, "40_canonical")
     java.nio.file.Files.writeString(path, json.substring(0, json.indexOf("\"rows\"")))
-    val r2 = Pipeline.run(spark, 40, out, partitions = 4)
+    val r2 = Pipeline.run(spark, 40, out)
     assert(r2.stages.map(s => s.name -> s.skipped) == r1.stages.map(s =>
       s.name -> (s.name != "40_canonical")), r2.stages)
     assert(r2.canonicalTriples == r1.canonicalTriples)

@@ -89,15 +89,19 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("rangepartitioning"), plan)
     assert(plan.contains("REBALANCE_PARTITIONS_BY_COL"), plan)
-    graft.kg.Materialize.writeTriples(triples, tmp)
-    val dirs = new java.io.File(tmp).listFiles().filter(_.isDirectory)
+    import graft.sources.SnapshotTable
+    SnapshotTable.write(graft.kg.Materialize.predicateLayout(triples), tmp,
+      partitionBy = Seq("predicate"))
+    // the snapshot's one data directory holds the predicate directories
+    val Array(data) = new java.io.File(s"$tmp/data").listFiles()
+    val dirs = data.listFiles().filter(_.isDirectory)
     assert(dirs.map(_.getName).toSet ==
       Set("predicate=http_p_a", "predicate=http_p_b"), dirs.toSeq)
     dirs.foreach { d =>
       val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
       assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
     }
-    val back = spark.read.parquet(tmp)
+    val back = SnapshotTable.read(spark, tmp)
     assert(back.count() == 3)
   }
 

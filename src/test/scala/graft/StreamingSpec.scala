@@ -10,28 +10,41 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("incremental extraction stream equals batch pipeline output") {
+    // the canonical-layer twin of "streaming micro-batches drive exact
+    // incremental KG maintenance": stream → docs snapshot append → one
+    // incremental canonical update per micro-batch, and the final table
+    // is EXACTLY the full build's graph over the same docs table
+    import graft.sources.SnapshotTable
+    import graft.kg.{DataGen, Model, Pipeline}
     val tmp = java.nio.file.Files.createTempDirectory("stream").toString
-    val docsDir = s"$tmp/docs"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    // two "arrivals" of the corpus: files land, stream drains AvailableNow
-    graft.kg.DataGen.corpus(spark, 120, 2).toDF()
-      .write.mode("overwrite").parquet(docsDir)
+    val inDir = s"$tmp/in"; val docsDir = s"$tmp/docs"; val cp = s"$tmp/cp"
+    val canonDir = s"$tmp/canonical"
+    val docs = DataGen.corpus(spark, 120, 2).toDF()
+    docs.write.mode("overwrite").parquet(inDir)
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val q = Streaming.extractionStream(spark, docsDir, outDir, cp)
+    val q = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir)
+      .writeStream
+      .option("checkpointLocation", cp)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        SnapshotTable.write(batch, docsDir, mode = "append",
+          idempotencyKey = s"docs-batch-$id")
+        Pipeline.incrementalCanonicalFromTable(spark, docsDir, s"$tmp/raw",
+          canonDir): Unit
+      }
+      .start()
     q.awaitTermination()
     // every table a micro-batch persists is released after its write
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"micro-batches left cached RDDs: $leaked")
-    val got = spark.read.parquet(outDir).as[graft.kg.Model.Triple].collect().toSet
-    // batch equivalent (no media in the stream path)
-    val docs = graft.kg.DataGen.corpus(spark, 120, 2).toDF()
-    val records = graft.kg.Extract.records(docs)
-    val matched = graft.kg.Link.matchTaxa(records,
-      graft.kg.DataGen.wdSparql(spark), graft.kg.DataGen.wdLineage(spark))
-    val (dictId, dictName) = graft.kg.Materialize.wdMapDicts(matched)
-    val want = graft.kg.Materialize
-      .globiTriplesFused(records, dictId, dictName, maxDriverRows = 0)
-      .as[graft.kg.Model.Triple].collect().toSet
-    assert(got == want, s"got=${got.size} want=${want.size}")
+    assert(SnapshotTable.history(docsDir).count(_.operation == "append") >= 2,
+      "the stream drained in fewer than two micro-batches")
+    val got = SnapshotTable.read(spark, canonDir).as[Model.Triple].collect().toSet
+    Pipeline.runFromTable(spark, docsDir, s"$tmp/build", s"$tmp/graph")
+    val want = SnapshotTable.read(spark, s"$tmp/graph").as[Model.Triple].collect().toSet
+    assert(want.nonEmpty)
+    assert(got == want, s"missing=${(want -- got).size} extra=${(got -- want).size}")
   }
 
   test("watermarked windowed aggregation over event stream (memory sink)") {

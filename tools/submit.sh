@@ -9,6 +9,9 @@
 #   tools/submit.sh bench   [cores] [sfDir]
 #   tools/submit.sh verify  [cores] [sfDir] [outDir]
 #   tools/submit.sh scaling [cores] [nDocs] [corpusDir]   (one level)
+#
+# scaling's corpusDir is the docs snapshot table that
+# `ScalingBench prep <nDocs> <corpusDir>` writes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
