@@ -13,7 +13,8 @@ import java.nio.file.Files
   *    corpus, then two timed builds, each into a fresh output root in a
   *    temp dir that is deleted afterwards;
   * 3. the level prints one JSON line with the faster build's end-to-end
-  *    docs/sec and triples/sec and its per-stage seconds.
+  *    docs/sec and triples/sec, its graph table write seconds
+  *    (`graph_s`) and its per-stage seconds.
   *
   * Usage: runMain graft.ScalingBench prep <nDocs> <dir>
   *        runMain graft.ScalingBench level <cores> <nDocs> <dir>
@@ -21,7 +22,8 @@ import java.nio.file.Files
 object ScalingBench {
 
   case class Level(cores: Int, wallSec: Double, triples: Long,
-      docsPerSec: Double, triplesPerSec: Double, stageSec: Seq[(String, Double)])
+      docsPerSec: Double, triplesPerSec: Double, graphSec: Double,
+      stageSec: Seq[(String, Double)])
 
   def runLevel(cores: Int, nDocs: Long, docsDir: String): Level = {
     val spark = Session(s"graft-scaling-$cores", Some(cores))
@@ -43,7 +45,8 @@ object ScalingBench {
       // the cores the session got: spark-submit's or MASTER's master
       // wins over the requested level
       Level(spark.sparkContext.defaultParallelism, wall, report.triples,
-        nDocs / wall, report.triples / wall, report.stages.map(s => s.name -> s.seconds))
+        nDocs / wall, report.triples / wall, report.graphSeconds,
+        report.stages.map(s => s.name -> s.seconds))
     } finally {
       val p = new org.apache.hadoop.fs.Path(tmp)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -54,6 +57,7 @@ object ScalingBench {
   def line(l: Level): String =
     s"""{"cores":${l.cores},"wall_sec":${f"${l.wallSec}%.2f"},"triples":${l.triples},""" +
       s""""docs_per_sec":${f"${l.docsPerSec}%.0f"},"triples_per_sec":${f"${l.triplesPerSec}%.0f"},""" +
+      f""""graph_s":${l.graphSec}%.2f,""" +
       l.stageSec.map { case (n, s) => f""""$n":$s%.2f""" }
         .mkString(""""stage_sec":{""", ",", "}}")
 

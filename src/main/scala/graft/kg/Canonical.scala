@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Stage 3.5 — connected-components canonicalization over entity
   * equivalence edges (north rule; NOT in the reference, whose
@@ -44,7 +45,9 @@ object Canonical {
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
       maxDriverRows: Long = Model.MaxDriverRows): DataFrame = {
     val e = ordered(edges)
-    Model.driverRows(e, maxDriverRows).map(driverComponents(e, _))
+    Model.driverRows(e, maxDriverRows)
+      .map(rows => driverComponents(e.sparkSession,
+        rows.toSeq.map(r => (r.get(0), r.get(1))), e.schema("src").dataType))
       .getOrElse(starComponents(edges, maxIter))
   }
 
@@ -56,17 +59,18 @@ object Canonical {
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
 
-  /** Min-label union-find over collected edges: node ids are ranked in
-    * Spark's ordering of their type, so a component's root — always
-    * its smallest rank — is its min node, as the distributed arm's.
+  /** Min-label union-find over edge pairs on the driver (no loops, no
+    * null endpoints): node ids of type `dt` are ranked in Spark's
+    * ordering of that type, so a component's root — always its smallest
+    * rank — is its min node, as the distributed arm's.
     */
-  private def driverComponents(e: DataFrame, rows: Array[Row]): DataFrame = {
+  private def driverComponents(spark: SparkSession, edges: Seq[(Any, Any)],
+      dt: DataType): DataFrame = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.util.TypeUtils
     import org.apache.spark.sql.types.{StructField, StructType}
-    val dt = e.schema("src").dataType
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    val nodes = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+    val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2))
       .toArray.distinct.map(v => (toCatalyst(v), v))
       .sortBy(_._1)(TypeUtils.getInterpretedOrdering(dt)).map(_._2)
     val rank = nodes.iterator.zipWithIndex.toMap
@@ -76,12 +80,12 @@ object Canonical {
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    rows.foreach { r =>
-      val (a, b) = (find(rank(r.get(0))), find(rank(r.get(1))))
+    edges.foreach { case (u, v) =>
+      val (a, b) = (find(rank(u)), find(rank(v)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
     val mapping = nodes.indices.map(i => Row(nodes(i), nodes(find(i))))
-    e.sparkSession.createDataFrame(java.util.Arrays.asList(mapping: _*),
+    spark.createDataFrame(java.util.Arrays.asList(mapping: _*),
       StructType(Seq(StructField("node", dt), StructField("component", dt))))
   }
 
@@ -200,6 +204,28 @@ object Canonical {
       .filter(col("a.wd") < col("b.wd"))
       .select(col("a.wd").as("src"), col("b.wd").as("dst"))
       .distinct()
+  }
+
+  /** `connectedComponents(equivalenceEdges(m))` over the raw
+    * (TaxonName, Mapped_ID_WD) pairs of matcher rows already on the
+    * driver: the same filter and name/id forms (`trim` strips ASCII
+    * spaces only, as Spark's), then the driver union-find. A name's
+    * distinct ids are a clique in [[equivalenceEdges]]; a star on one of
+    * them has the same components and nodes, with edges linear in the
+    * rows.
+    */
+  private[graft] def equivalenceMapping(spark: SparkSession,
+      namedIds: Seq[(String, String)]): DataFrame = {
+    def trimSpaces(s: String): String = s.replaceAll("^ +| +$", "")
+    val idsByName = namedIds
+      .filter { case (name, wd) =>
+        wd != null && wd.nonEmpty && name != null && trimSpaces(name).nonEmpty
+      }
+      .map { case (name, wd) => trimSpaces(name) -> wd.replace("Wikidata:", "") }
+      .distinct.groupMap(_._1)(_._2)
+    val star = idsByName.valuesIterator
+      .flatMap(ids => ids.tail.map(id => (ids.head: Any) -> (id: Any))).toSeq
+    driverComponents(spark, star, org.apache.spark.sql.types.StringType)
   }
 
   /** Rewrite triple subjects/objects through the canonical map (IRIs

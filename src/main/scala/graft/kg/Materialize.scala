@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import Model._
 
@@ -69,6 +69,16 @@ object Materialize {
 
   // ---- wd-map dictionaries (globi_kg_generator.py:88-110) ---------------
 
+  /** The matcher output's dictionary columns as [[wdMapDicts]] reads
+    * them: TaxonId, TaxonName, Mapped_ID_WD and Mapped_Value with
+    * "Wikidata:" and quotes stripped, then rowIdx — the rows
+    * [[driverDicts]] takes.
+    */
+  private[graft] val dictColumns: Seq[Column] =
+    Seq("TaxonId", "TaxonName", "Mapped_ID_WD", "Mapped_Value").map(c =>
+      regexp_replace(regexp_replace(col(c), "Wikidata:", ""), "\"", "").as(c)) :+
+      col("rowIdx")
+
   /** Matcher output → the two resolution dictionaries (key, wd, mv).
     * "Wikidata:" and quotes stripped from every column; empty
     * Mapped_ID_WD rows dropped; later rows win on key collision (pandas
@@ -76,36 +86,20 @@ object Materialize {
     *
     * The ROW-COUNT GUARD of [[Link.matchStacked]]: while the cleaned
     * matcher output has at most `maxDriverRows` rows, one limited
-    * collect brings it to the driver, which walks it in ascending rowIdx
-    * (rowIdx is unique per matched row, so the last write per key is
-    * max_by's winner) and returns both dictionaries as local relations —
-    * no job reads them again. Above the guard, or with a non-positive
-    * guard, each dictionary is a max_by aggregate, persisted because it
-    * is read several times (size guard, collect or join probes); a
-    * caller loop releases it with unpersist (a no-op on local relations).
-    * DictOrderSpec holds the two arms equal.
+    * collect brings it to the driver, where [[driverDicts]] builds both
+    * dictionaries as local relations — no job reads them again. Above
+    * the guard, or with a non-positive guard, each dictionary is a
+    * max_by aggregate, persisted because it is read several times (size
+    * guard, collect or join probes); a caller loop releases it with
+    * unpersist (a no-op on local relations). DictOrderSpec holds the
+    * two arms equal.
     */
   def wdMapDicts(matcherOut: DataFrame,
       maxDriverRows: Long = MaxDriverRows): (DataFrame, DataFrame) = {
-    val cleaned = matcherOut.select(
-      Seq("TaxonId", "TaxonName", "Mapped_ID_WD", "Mapped_Value").map(c =>
-        regexp_replace(regexp_replace(col(c), "Wikidata:", ""), "\"", "").as(c))
-        :+ col("rowIdx"): _*)
+    val cleaned = matcherOut.select(dictColumns: _*)
       .filter(col("Mapped_ID_WD").isNotNull && col("Mapped_ID_WD") =!= "")
     driverRows(cleaned, maxDriverRows) match {
-      case Some(rows) =>
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.types.{StructField, StructType, StringType}
-        val schema = StructType(Seq("key", "wd", "mv")
-          .map(StructField(_, StringType, nullable = true)))
-        val byRowIdx = rows.sortBy(_.getLong(4))
-        // toMap keeps the last pair per key: the highest rowIdx wins
-        def dict(k: Int): DataFrame = matcherOut.sparkSession.createDataFrame(
-          java.util.Arrays.asList(byRowIdx.collect {
-            case r if r.getString(k) != null && r.getString(k).nonEmpty =>
-              r.getString(k) -> Row(r.getString(k), r.getString(2), r.getString(3))
-          }.toMap.values.toSeq: _*), schema)
-        (dict(0), dict(1))
+      case Some(rows) => driverDicts(matcherOut.sparkSession, rows)
       case None =>
         def dict(key: String): DataFrame = cleaned
           .filter(col(key).isNotNull && col(key) =!= "")
@@ -116,6 +110,28 @@ object Materialize {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         (dict("TaxonId"), dict("TaxonName"))
     }
+  }
+
+  /** The driver arm of [[wdMapDicts]] over rows of [[dictColumns]]
+    * already on the driver (further columns are ignored): rows with an
+    * empty Mapped_ID_WD dropped, then a walk in ascending rowIdx (rowIdx
+    * is unique per matched row, so the last write per key is max_by's
+    * winner).
+    */
+  private[graft] def driverDicts(spark: SparkSession,
+      rows: Array[Row]): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types.{StructField, StructType, StringType}
+    val schema = StructType(Seq("key", "wd", "mv")
+      .map(StructField(_, StringType, nullable = true)))
+    val byRowIdx = rows.filter(r => r.getString(2) != null && r.getString(2).nonEmpty)
+      .sortBy(_.getLong(4))
+    // toMap keeps the last pair per key: the highest rowIdx wins
+    def dict(k: Int): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(byRowIdx.collect {
+        case r if r.getString(k) != null && r.getString(k).nonEmpty =>
+          r.getString(k) -> Row(r.getString(k), r.getString(2), r.getString(3))
+      }.toMap.values.toSeq: _*), schema)
+    (dict(0), dict(1))
   }
 
   /** Two-tier resolution (globi_kg_generator.py:184-209): raw id in the

@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import Model._
 
@@ -26,22 +27,20 @@ object Pipeline {
 
   private def manifestPath(dir: String): Path = Paths.get(dir, "_MANIFEST.json")
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
+  import graft.sources.SnapshotTable.{jsonEscape, jsonUnescape}
 
   /** Written to a temp file and renamed over the manifest, so a reader
     * sees the old manifest or the whole new one, never a torn write.
+    * The output schema comes last, as DDL, so that a skipped stage
+    * re-reads its data without a schema-inference job.
     */
   private def writeManifest(dir: String, stage: String, fingerprint: String,
-      fileRows: Seq[Long], seconds: Double): Unit = {
+      fileRows: Seq[Long], seconds: Double, schema: StructType): Unit = {
     val json =
       s"""{"stage":"${jsonEscape(stage)}","fingerprint":"${jsonEscape(fingerprint)}",
          |"rows":${fileRows.sum},"partitions":${fileRows.length},
          |"partition_rows":${fileRows.mkString("[", ",", "]")},
-         |"seconds":$seconds}""".stripMargin.replace("\n", "")
+         |"seconds":$seconds,"schema":"${jsonEscape(schema.toDDL)}"}""".stripMargin.replace("\n", "")
     // a plain create keeps the umask's permissions (createTempFile's are 0600)
     val tmp = Files.createDirectories(Paths.get(dir))
       .resolve(s"_MANIFEST.${java.util.UUID.randomUUID}.tmp")
@@ -49,13 +48,19 @@ object Pipeline {
     Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private val FingerprintField = "\"fingerprint\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
+  private def stringField(name: String) =
+    ("\"" + name + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
+  private val FingerprintField = stringField("fingerprint")
+  private val SchemaField = stringField("schema")
   private val RowsField = "\"rows\":(\\d+)".r
 
-  /** Rows recorded by the stage manifest in `dir` when it parses whole
-    * and carries `fingerprint`; None when it is absent, torn or stale.
+  /** Rows and output schema recorded by the stage manifest in `dir`
+    * when it parses whole and carries `fingerprint`; None when it is
+    * absent, torn or stale. The schema is None in a manifest written
+    * before it was recorded.
     */
-  private def manifestRows(dir: String, fingerprint: String): Option[Long] = {
+  private def manifestRows(dir: String,
+      fingerprint: String): Option[(Long, Option[StructType])] = {
     val p = manifestPath(dir)
     val j = if (Files.exists(p))
       new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8).trim
@@ -65,36 +70,55 @@ object Pipeline {
       fp <- FingerprintField.findFirstMatchIn(j)
       if fp.group(1) == jsonEscape(fingerprint)
       rows <- RowsField.findFirstMatchIn(j)
-    } yield rows.group(1).toLong
+    } yield (rows.group(1).toLong, SchemaField.findFirstMatchIn(j)
+      .map(m => StructType.fromDDL(jsonUnescape(m.group(1)))))
+  }
+
+  /** Local property that labels the Spark jobs of a build by stage (the
+    * stage name, or [[GraphWrite]]); `Profile build` groups by it.
+    */
+  val StageLabel = "graft.stage"
+  val GraphWrite = "graph_write"
+
+  private def labelled[A](spark: SparkSession, label: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty(StageLabel)
+    sc.setLocalProperty(StageLabel, label)
+    try body finally sc.setLocalProperty(StageLabel, outer)
   }
 
   /** Run one stage: skip when a valid manifest exists, else compute,
     * write parquet + manifest with per-file counts from the footers.
     */
   def stage(spark: SparkSession, outRoot: String, name: String,
-      fingerprint: String)(compute: => DataFrame): (DataFrame, StageResult) = {
-    val dir = s"$outRoot/$name"
-    manifestRows(dir, fingerprint) match {
-      case Some(rows) =>
-        (spark.read.parquet(s"$dir/data"),
-          StageResult(name, rows, -1, 0.0, skipped = true))
-      case None =>
-        val t0 = System.nanoTime()
-        val df = compute
-        df.write.mode("overwrite").parquet(s"$dir/data")
-        // footers without stats columns are always usable
-        val fileRows = graft.sources.SnapshotTable
-          .footerStatEntries(spark, s"$dir/data", Nil).get.map(_._2)
-        val secs = (System.nanoTime() - t0) / 1e9
-        writeManifest(dir, name, fingerprint, fileRows, secs)
-        // the known schema spares the read its schema-inference job
-        (spark.read.schema(df.schema).parquet(s"$dir/data"),
-          StageResult(name, fileRows.sum, fileRows.length, secs, skipped = false))
+      fingerprint: String)(compute: => DataFrame): (DataFrame, StageResult) =
+    labelled(spark, name) {
+      val dir = s"$outRoot/$name"
+      // a known schema spares the read its schema-inference job
+      def reread(schema: Option[StructType]) =
+        schema.fold(spark.read)(spark.read.schema(_)).parquet(s"$dir/data")
+      manifestRows(dir, fingerprint) match {
+        case Some((rows, schema)) =>
+          (reread(schema), StageResult(name, rows, -1, 0.0, skipped = true))
+        case None =>
+          val t0 = System.nanoTime()
+          val df = compute
+          df.write.mode("overwrite").parquet(s"$dir/data")
+          // footers without stats columns are always usable
+          val fileRows = graft.sources.SnapshotTable
+            .footerStatEntries(spark, s"$dir/data", Nil).get.map(_._2)
+          val secs = (System.nanoTime() - t0) / 1e9
+          writeManifest(dir, name, fingerprint, fileRows, secs, df.schema)
+          (reread(Some(df.schema)),
+            StageResult(name, fileRows.sum, fileRows.length, secs, skipped = false))
+      }
     }
-  }
 
+  /** A build's stages, its raw (30) and canonical (40) triple counts, and
+    * the seconds of its graph table write.
+    */
   case class RunReport(stages: Seq[StageResult], triples: Long,
-      canonicalTriples: Long)
+      canonicalTriples: Long, graphSeconds: Double = 0.0)
 
   /** Version suffix of the stage fingerprints; bumped whenever a stage's
     * output changes for the same input, so a resume recomputes
@@ -102,6 +126,11 @@ object Pipeline {
     * fixed 2^40 ordinal base in 20_link (it was the document count).
     */
   private val StageVersion = "v2"
+
+  /** Tag of the graph table's layout ([[Materialize.predicateLayout]])
+    * in the graph write's idempotency key.
+    */
+  private val GraphLayout = "predicate-layout:v1"
 
   /** Table-native entry point (north rule: the pipeline runs OVER
     * Iceberg tables) and the one full build: read the interleaved
@@ -114,8 +143,22 @@ object Pipeline {
     * partition count AQE sizes from the data. Every later stage reads
     * the re-read parquet of the ones before it, so what a stage
     * persisted is released once it is written, and a build leaves no
-    * table persisted. Returns (run report, graph snapshot id); the
-    * report's triple counts are the 30/40 stage rows.
+    * table persisted.
+    *
+    * The 20_link output's dictionary columns and raw names and ids come
+    * to the driver in one collect while its manifest's row count is
+    * within [[Model.MaxDriverRows]]; both resolution dictionaries and
+    * the equivalence mapping are built from those rows as local
+    * relations.
+    * Above the guard each takes its own guarded arm. A stage that is
+    * skipped fetches nothing.
+    *
+    * The graph write is keyed by the canonical stage's fingerprint, the
+    * layout tag and the graph head it replaces: when the head already
+    * carries this build's fingerprint and layout, a finished build
+    * writes nothing, and a build of another input still publishes over
+    * it. Returns (run report, graph snapshot id); the report's triple
+    * counts are the 30/40 stage rows.
     */
   def runFromTable(spark: SparkSession, docsTableDir: String,
       outRoot: String, graphTableDir: String,
@@ -134,8 +177,13 @@ object Pipeline {
       // the matcher output is persisted on its distributed arm only
       held(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows, DataGen.lineageRows))
     }
+    // the dictionaries' cleaned columns, then the raw name and id the
+    // equivalence edges read
+    lazy val matchedRows = Option.when(s2.rows <= MaxDriverRows)(matched.select(
+      Materialize.dictColumns :+ col("TaxonName") :+ col("Mapped_ID_WD"): _*).collect())
     val (triples, s3) = stage(spark, outRoot, "30_triples", fp) {
-      val (dictId, dictName) = Materialize.wdMapDicts(matched)
+      val (dictId, dictName) = matchedRows
+        .fold(Materialize.wdMapDicts(matched))(Materialize.driverDicts(spark, _))
       val mm = Extract.mediaMentions(records, DataGen.mediaMeta(spark))
       // globiTriplesFused's two parts, so the tagged table is released
       val tagged = Materialize.taggedTriples(records, held(dictId), held(dictName),
@@ -146,14 +194,25 @@ object Pipeline {
     // the stages after read the written parquet, never these
     persisted.foreach(_.unpersist())
     val (canonical, s4) = stage(spark, outRoot, "40_canonical", fp) {
-      val edges = Canonical.equivalenceEdges(matched)
-      val mapping = Canonical.connectedComponents(edges)
+      val mapping = matchedRows.fold(
+        Canonical.connectedComponents(Canonical.equivalenceEdges(matched)))(
+        rows => Canonical.equivalenceMapping(spark,
+          rows.toSeq.map(r => (r.getString(5), r.getString(6)))))
       Canonical.canonicalizeTriples(triples, mapping)
     }
-    val graphSnap = SnapshotTable.write(
-      Materialize.predicateLayout(canonical),
-      graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"))
-    (RunReport(Seq(s1, s2, s3, s4), s3.rows, s4.rows), graphSnap)
+    val t0 = System.nanoTime()
+    val graphSnap = labelled(spark, GraphWrite) {
+      val head = SnapshotTable.currentSnapshot(graphTableDir)
+      val built = s"$fp|$GraphLayout|"
+      if (head > 0 && SnapshotTable.committedKey(graphTableDir, head)
+          .exists(_.startsWith(built))) head
+      else SnapshotTable.write(
+        Materialize.predicateLayout(canonical),
+        graphTableDir, mode = "overwrite", partitionBy = Seq("predicate"),
+        idempotencyKey = s"${built}after-$head")
+    }
+    (RunReport(Seq(s1, s2, s3, s4), s3.rows, s4.rows, (System.nanoTime() - t0) / 1e9),
+      graphSnap)
   }
 
   case class IncrementalResult(processedDocsSnapshot: Long,

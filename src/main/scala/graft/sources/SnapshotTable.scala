@@ -64,12 +64,12 @@ object SnapshotTable {
     snap
   }
 
-  private def jsonEscape(s: String): String = s.flatMap {
+  private[graft] def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
     case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
   }
 
-  private def jsonUnescape(s: String): String = {
+  private[graft] def jsonUnescape(s: String): String = {
     val out = new StringBuilder; var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
@@ -122,27 +122,198 @@ object SnapshotTable {
     * cache and keep the distributed read — the cache is a small-metadata
     * fast path, not an assumption that metadata fits the driver.
     */
-  private val ManifestCacheMaxRows = 100000
+  private[graft] val ManifestCacheMaxRows = 100000
   private val ManifestCacheMaxEntries = 1024
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Row], StructType)]()
+    new java.util.concurrent.ConcurrentHashMap[String, Entries]()
+
+  /** Manifest entries held on the driver: the rows and their schema. */
+  private[graft] type Entries = (Array[Row], StructType)
+
+  /** Cache a committed manifest's entries under their read schema:
+    * every column nullable, as `spark.read.parquet` returns it.
+    */
+  private def cachePut(mdir: String, e: Entries): Unit = {
+    if (manifestCache.size() >= ManifestCacheMaxEntries) manifestCache.clear()
+    manifestCache.put(mdir,
+      (e._1, StructType(e._2.fields.map(_.copy(nullable = true)))))
+  }
+
+  /** Whether the cache holds the manifest dir `mdir` (for the specs). */
+  private[graft] def manifestCached(mdir: String): Boolean =
+    manifestCache.containsKey(mdir)
+
+  private def toFrame(spark: SparkSession, e: Entries): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(e._1: _*), e._2)
 
   private def manifestFrame(spark: SparkSession, dir: String,
-      snap: Long): DataFrame = {
+      snap: Long): DataFrame =
+    manifestEntries(spark, dir, snap).map(toFrame(spark, _))
+      .getOrElse(spark.read.parquet(manifestDir(dir, snap)))
+
+  /** The entries of snapshot `snap`'s manifest on the driver; None when
+    * it has more than [[ManifestCacheMaxRows]] (the recorded data_files
+    * count IS the entry count, so a too-big manifest is known without
+    * reading it). A cache miss reads a string-and-long manifest with
+    * parquet-mr on the driver, and any other (bloom arrays) with Spark.
+    */
+  private def manifestEntries(spark: SparkSession, dir: String,
+      snap: Long): Option[Entries] = {
     val mdir = manifestDir(dir, snap)
     val cached = manifestCache.get(mdir)
-    if (cached != null)
-      return spark.createDataFrame(
-        java.util.Arrays.asList(cached._1: _*), cached._2)
-    // the recorded data_files count IS the manifest entry count — a
-    // too-big manifest is known without collecting it
-    if (metaCounts(dir, snap).exists(_._1 > ManifestCacheMaxRows))
-      return spark.read.parquet(mdir)
-    val df = spark.read.parquet(mdir)
-    val rows = df.collect()
-    if (manifestCache.size() >= ManifestCacheMaxEntries) manifestCache.clear()
-    manifestCache.put(mdir, (rows, df.schema))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    if (cached != null) return Some(cached)
+    if (metaCounts(dir, snap).exists(_._1 > ManifestCacheMaxRows)) return None
+    val e = readLocalManifest(spark, mdir).getOrElse {
+      val df = spark.read.parquet(mdir)
+      (df.collect(), df.schema)
+    }
+    cachePut(mdir, e)
+    Some(manifestCache.get(mdir))
+  }
+
+  /** Footer key under which Spark records a parquet file's row schema. */
+  private val SparkRowSchema = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The parquet column of a manifest field the driver path handles:
+    * the string and long columns of the entries (path, base, bounds,
+    * rows, snapshot id). None for anything else (bloom arrays).
+    */
+  private def flatParquetField(f: org.apache.spark.sql.types.StructField)
+      : Option[org.apache.parquet.schema.PrimitiveType] = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.types._
+    (f.dataType match {
+      case StringType =>
+        Some(Types.optional(BINARY).as(LogicalTypeAnnotation.stringType()))
+      case LongType => Some(Types.optional(INT64))
+      case _ => None
+    }).map(_.named(f.name))
+  }
+
+  /** Write `e` as one parquet file in the manifest dir `mdir` with
+    * parquet-mr on the driver, through a Hadoop Path and the session's
+    * Hadoop conf, recording Spark's row schema in the footer so that
+    * `spark.read.parquet` reads it back as written. False, with nothing
+    * written, when a column is neither string nor long.
+    */
+  private def writeLocalManifest(spark: SparkSession, mdir: String,
+      e: Entries): Boolean = {
+    val columns = e._2.fields.map(flatParquetField)
+    if (columns.exists(_.isEmpty)) return false
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.spark.sql.types._
+    val message = new org.apache.parquet.schema.MessageType("spark_schema",
+      columns.map(c => c.get: org.apache.parquet.schema.Type): _*)
+    val conf = spark.sessionState.newHadoopConf()
+    val schema = StructType(e._2.fields.map(_.copy(nullable = true)))
+    val writer = ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$mdir/part-00000.snappy.parquet"), conf))
+      .withConf(conf).withType(message)
+      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of(SparkRowSchema, schema.json))
+      .build()
+    try e._1.foreach { r =>
+      val g = new SimpleGroup(message)
+      e._2.fields.indices.foreach { i =>
+        if (!r.isNullAt(i)) e._2.fields(i).dataType match {
+          case StringType => g.add(i, r.getString(i))
+          case LongType => g.add(i, r.getLong(i))
+        }
+      }
+      writer.write(g)
+    } finally writer.close()
+    true
+  }
+
+  /** Read the manifest dir `mdir` with parquet-mr on the driver, through
+    * the session's Hadoop conf. None (the caller reads it with Spark)
+    * unless every file records one Spark row schema of string and long
+    * columns — what [[writeLocalManifest]] and Spark's own manifest
+    * writes of such entries both leave.
+    */
+  private[graft] def readLocalManifest(spark: SparkSession,
+      mdir: String): Option[Entries] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types._
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(mdir)
+    val files = root.getFileSystem(conf).listStatus(root).toSeq
+      .map(_.getPath).filter { p =>
+        val n = p.getName
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }.sortBy(_.getName)
+    val schemas = files.map { p =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkRowSchema))
+        .map(s => StructType(DataType.fromJson(s).asInstanceOf[StructType].fields
+          .map(_.copy(nullable = true))))
+      finally reader.close()
+    }
+    val schema = schemas.headOption.flatten
+      .filter(s => schemas.forall(_.contains(s)))
+      .filter(_.fields.forall(flatParquetField(_).isDefined))
+    schema.map { s =>
+      val rows = files.flatMap { p =>
+        val reader = ParquetReader.builder(new GroupReadSupport(), p)
+          .withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+          val t = g.getType
+          Row.fromSeq(s.fields.toSeq.map { f =>
+            val i = t.getFieldIndex(f.name)
+            if (g.getFieldRepetitionCount(i) == 0) null
+            else f.dataType match {
+              case StringType => g.getString(i, 0)
+              case LongType => g.getLong(i, 0)
+            }
+          })
+        }.toVector
+        finally reader.close()
+      }
+      (rows.toArray, s)
+    }
+  }
+
+  /** `a` ∪ `b` by column name, a column one side lacks read as null:
+    * `unionByName(allowMissingColumns = true)` on the driver, for entries
+    * whose shared columns have one type (every writer here gives a
+    * column name the same type).
+    */
+  private def unionEntries(a: Entries, b: Entries): Entries = {
+    val names = a._2.fieldNames ++ b._2.fieldNames.filterNot(a._2.fieldNames.contains)
+    val schema = StructType(names.map(n =>
+      (if (a._2.fieldNames.contains(n)) a._2(n) else b._2(n)).copy(nullable = true)))
+    def align(e: Entries): Array[Row] = {
+      val at = names.map(n => e._2.fieldNames.indexOf(n))
+      e._1.map(r => Row.fromSeq(at.toSeq.map(i => if (i < 0) null else r.get(i))))
+    }
+    (align(a) ++ align(b), schema)
+  }
+
+  /** Write a snapshot's manifest into the dir `mdir`: the one manifest
+    * writer of the commit paths. Entries held on the driver — at most
+    * [[ManifestCacheMaxRows]] of them, string and long columns — are written
+    * with parquet-mr on the driver, no Spark job, and returned so that
+    * the commit can cache them once its CAS wins. Any other manifest
+    * (corpus-large, bloom arrays, or entries that are only a plan)
+    * is written through Spark as one file.
+    */
+  private[graft] def writeManifest(spark: SparkSession, mdir: String,
+      entries: Either[DataFrame, Entries]): Option[Entries] = entries match {
+    case Right(e) if e._1.length <= ManifestCacheMaxRows &&
+        writeLocalManifest(spark, mdir, e) => Some(e)
+    case other =>
+      other.fold(identity, toFrame(spark, _))
+        .coalesce(1).write.mode("overwrite").parquet(mdir)
+      None
   }
 
   /** The idempotency key recorded by snapshot `snap`, if any. */
@@ -176,7 +347,7 @@ object SnapshotTable {
   /** Manifest location recorded by snapshot `snap` (manifest names are
     * writer-unique; the committed metadata is the source of truth).
     */
-  private def manifestDir(dir: String, snap: Long): String =
+  private[graft] def manifestDir(dir: String, snap: Long): String =
     metaJson(dir, snap).flatMap(metaStr(_, "manifest"))
       .map(rel => s"$dir/$rel")
       .getOrElse(s"$dir/manifests/snap-$snap")
@@ -400,7 +571,7 @@ object SnapshotTable {
     // distributed min/max cast; string/fractional stats columns and
     // bloom indexes keep the distributed aggregate, which must see the
     // rows. A footer missing usable statistics falls back too.
-    val footerPlan: Option[(DataFrame, (Long, Long))] =
+    val footerPlan: Option[(Entries, (Long, Long))] =
       if (bloomCols.isEmpty &&
           effStats.forall(c => footerExactType(df.schema(c).dataType))) {
         footerStatEntries(spark, dataDir, effStats).map { files =>
@@ -409,12 +580,10 @@ object SnapshotTable {
           val ddl = (Seq("path STRING", "rows BIGINT") ++
             effStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
             Seq("base STRING")).mkString(", ")
-          val rows: java.util.List[Row] = java.util.Arrays.asList(
-            entries.map { case (p, r, bounds) =>
+          ((entries.map { case (p, r, bounds) =>
               Row.fromSeq(Seq(p, r) ++ bounds.flatMap(b => Seq(b._1, b._2)) ++
                 Seq(dataDir))
-            }: _*)
-          (spark.createDataFrame(rows, StructType.fromDDL(ddl)),
+            }.toArray, StructType.fromDDL(ddl)),
             (entries.size.toLong, entries.map(_._2).sum))
         }
       } else None
@@ -435,8 +604,8 @@ object SnapshotTable {
       s"bloomCols not in df: ${bloomCols.filterNot(df.columns.contains)}")
     require(bloomCols.intersect(partitionBy).isEmpty,
       s"bloomCols must not be partition columns")
-    val newEntries = footerPlan.map(_._1).getOrElse {
-      bloomCols.foldLeft(plainEntries) { (acc, c) =>
+    val newEntries: Either[DataFrame, Entries] = footerPlan.map(p => Right(p._1))
+      .getOrElse(Left(bloomCols.foldLeft(plainEntries) { (acc, c) =>
         val bits = spark.read.parquet(dataDir)
           .select(input_file_name().as("path"),
             explode(array((0 until graft.ops.Sketches.BloomK).map(j =>
@@ -446,14 +615,13 @@ object SnapshotTable {
           .groupBy(col("path"))
           .agg(sort_array(collect_set(col("bit"))).as(s"bloom_$c"))
         acc.join(bits, Seq("path"), "left")
-      }.persist()
-    }
+      }.persist()))
     // force materialization AND capture (files, rows) in the same
     // action — the commit totals then come from here + the parent's
     // recorded counts instead of re-reading the written manifest
-    // (driver-side for the footer path: its entries are a local relation)
+    // (driver-side for the footer path: its entries are on the driver)
     val newAgg: (Long, Long) = footerPlan.map(_._2).getOrElse {
-      val r = newEntries
+      val r = newEntries.fold(identity, toFrame(spark, _))
         .agg(count(lit(1)).as("f"), coalesce(sum(col("rows")), lit(0L)).as("r"))
         .head()
       (r.getLong(0), r.getLong(1))
@@ -474,17 +642,22 @@ object SnapshotTable {
         }
         val snap = parent + 1
         val manifestRel = s"manifests/snap-$snap-$token"
-        val stamped = newEntries.withColumn("snapshot_id", lit(snap))
+        val stamped = newEntries.fold(
+          df => Left(df.withColumn("snapshot_id", lit(snap))),
+          e => Right((e._1.map(r => Row.fromSeq(r.toSeq :+ snap)),
+            e._2.add("snapshot_id", org.apache.spark.sql.types.LongType, false))))
+        // allowMissingColumns: entries written before (or after) a
+        // stats-column change carry null bounds — readers treat null as
+        // "unknown, cannot skip", so mixed manifests stay correct
         val manifest =
-          if (mode == "append" && parent > 0)
-            // allowMissingColumns: entries written before (or after) a
-            // stats-column change carry null bounds — readers treat
-            // null as "unknown, cannot skip", so mixed manifests stay
-            // correct
-            manifestFrame(spark, dir, parent)
-              .unionByName(stamped, allowMissingColumns = true)
-          else stamped
-        manifest.coalesce(1).write.mode("overwrite").parquet(s"$dir/$manifestRel")
+          if (mode != "append" || parent == 0) stamped
+          else (manifestEntries(spark, dir, parent), stamped) match {
+            case (Some(p), Right(e)) => Right(unionEntries(p, e))
+            case (_, e) => Left(manifestFrame(spark, dir, parent)
+              .unionByName(e.fold(identity, toFrame(spark, _)),
+                allowMissingColumns = true))
+          }
+        val written = writeManifest(spark, s"$dir/$manifestRel", manifest)
         // commit totals = parent's recorded totals (append) + this
         // write's already-aggregated entries — no manifest re-read job
         val (nFiles, nRows) =
@@ -498,6 +671,7 @@ object SnapshotTable {
           commitCas(dir, snap, mode, parent, df.schema.toDDL, partitionBy,
             manifestRel, nFiles, nRows, idempotencyKey,
             effStats)
+          written.foreach(cachePut(s"$dir/$manifestRel", _))
           // reclaim this writer's own lost-CAS manifest attempts
           cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
           return snap
@@ -511,7 +685,7 @@ object SnapshotTable {
         }
       }
       throw new IllegalStateException("unreachable")
-    } finally newEntries.unpersist()
+    } finally newEntries.fold(_.unpersist(), _ => ())
   }
 
   /** Statistics columns whose per-file min/max can be read EXACTLY
@@ -729,13 +903,14 @@ object SnapshotTable {
         s"partition value needs hive escaping, unsupported here: '$v'"))
       // manifests are file-level metadata (one coalesced file; the
       // merge path collects them the same way) — driver-side filter
-      val manifestDf = manifestFrame(spark, dir, parent)
-      val keep = manifestDf.collect().filter { r =>
-        val p = r.getAs[String]("path"); val b = r.getAs[String]("base")
-        !affected.contains(entryPartition(p, b, partitionBy).toList)
+      val (parentRows, parentSchema) = manifestEntries(spark, dir, parent)
+        .getOrElse { val m = manifestFrame(spark, dir, parent); (m.collect(), m.schema) }
+      val Seq(pathAt, baseAt, rowsAt) =
+        Seq("path", "base", "rows").map(parentSchema.fieldIndex)
+      val keep = parentRows.filter { r =>
+        !affected.contains(
+          entryPartition(r.getString(pathAt), r.getString(baseAt), partitionBy).toList)
       }
-      val keptDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(keep.toSeq, 1), manifestDf.schema)
       val token = java.util.UUID.randomUUID.toString.take(12)
       val dataDir = s"$dir/data/w-$token"
       sel.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dataDir)
@@ -752,11 +927,15 @@ object SnapshotTable {
         .withColumn("base", lit(dataDir))
       val snap = parent + 1
       val manifestRel = s"manifests/snap-$snap-$token"
-      keptDf.unionByName(newEntries.withColumn("snapshot_id", lit(snap)),
-          allowMissingColumns = true)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$manifestRel")
-      val stats = spark.read.parquet(s"$dir/$manifestRel")
-        .agg(count(lit(1)), coalesce(sum(col("rows")), lit(0L))).head()
+      // the new files' entries are metadata-sized: one collect, and the
+      // commit totals come from the entries in hand
+      val stamped = newEntries.withColumn("snapshot_id", lit(snap))
+      val fresh: Entries = (stamped.collect(), stamped.schema)
+      val written = writeManifest(spark, s"$dir/$manifestRel",
+        Right(unionEntries((keep, parentSchema), fresh)))
+      val freshRowsAt = fresh._2.fieldIndex("rows")
+      val nFiles = keep.length.toLong + fresh._1.length
+      val nRows = keep.map(_.getLong(rowsAt)).sum + fresh._1.map(_.getLong(freshRowsAt)).sum
       val racedKey = snapshotWithKey(dir, idempotencyKey)
       if (racedKey.isDefined) {
         deleteRecursively(Paths.get(dataDir))
@@ -766,8 +945,8 @@ object SnapshotTable {
       try {
         commitCas(dir, snap, "overwrite_partitions", parent,
           StructType.fromDDL(schemaDdl(dir, parent).get).toDDL, partitionBy,
-          manifestRel, stats.getLong(0), stats.getLong(1), idempotencyKey,
-          effStats)
+          manifestRel, nFiles, nRows, idempotencyKey, effStats)
+        written.foreach(cachePut(s"$dir/$manifestRel", _))
         cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
         return snap
       } catch {
@@ -898,7 +1077,6 @@ object SnapshotTable {
         .collect().map(_.getString(0)).toSeq
       import spark.implicits._
       val affectedDf = affected.toDF("path")
-      val keptDf = manifestDf.join(affectedDf, Seq("path"), "left_anti")
       val survivors = cur
         .join(affectedDf.withColumnRenamed("path", "_file"), Seq("_file"))
         .drop("_file")
@@ -926,38 +1104,42 @@ object SnapshotTable {
       // zero part files: footers list none, and the schema'd read
       // reads empty.
       val tableSchema = StructType.fromDDL(schemaDdl(dir, parent).get)
-      val newFooter: Option[(DataFrame, (Long, Long))] =
+      val newFooter: Option[(Entries, (Long, Long))] =
         if (mergeStats.forall(c => footerExactType(tableSchema(c).dataType))) {
           footerStatEntries(spark, dataDir, mergeStats).map { files =>
             val entries = files.filter(_._2 > 0)
             val ddl = (Seq("path STRING", "rows BIGINT") ++
               mergeStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
               Seq("base STRING", "snapshot_id BIGINT")).mkString(", ")
-            val rows: java.util.List[Row] = java.util.Arrays.asList(
-              entries.map { case (pth, r, bounds) =>
+            ((entries.map { case (pth, r, bounds) =>
                 Row.fromSeq(Seq(pth, r) ++
                   bounds.flatMap(b => Seq(b._1, b._2)) ++ Seq(dataDir, snap))
-              }: _*)
-            (spark.createDataFrame(rows, StructType.fromDDL(ddl)),
+              }.toArray, StructType.fromDDL(ddl)),
               (entries.size.toLong, entries.map(_._2).sum))
           }
         } else None
-      val newEntries = newFooter.map(_._1).getOrElse {
-        spark.read
+      val newEntries: Either[DataFrame, Entries] = newFooter.map(f => Right(f._1))
+        .getOrElse(Left(spark.read
           .schema(StructType.fromDDL(schemaDdl(dir, parent).get))
           .parquet(dataDir)
           .groupBy(input_file_name().as("path"))
           .agg(count(lit(1)).as("rows"), mergeStatAggs: _*)
           .withColumn("base", lit(dataDir))
-          .withColumn("snapshot_id", lit(snap))
-      }
+          .withColumn("snapshot_id", lit(snap))))
+      val affectedSet = affected.toSet
       val manifestRel = s"manifests/snap-$snap-$token"
-      keptDf.unionByName(newEntries, allowMissingColumns = true).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$manifestRel")
+      val written = writeManifest(spark, s"$dir/$manifestRel",
+        (manifestEntries(spark, dir, parent), newEntries) match {
+          case (Some((rows, schema)), Right(e)) =>
+            val pathAt = schema.fieldIndex("path")
+            Right(unionEntries(
+              (rows.filterNot(r => affectedSet.contains(r.getString(pathAt))), schema), e))
+          case (_, e) => Left(manifestDf.join(affectedDf, Seq("path"), "left_anti")
+            .unionByName(e.fold(identity, toFrame(spark, _)), allowMissingColumns = true))
+        })
       upd.foreach(_.unpersist())
       // commit totals: kept entries (from the already-collected parent
       // manifest rows) + this rewrite's entries — no manifest re-read
-      val affectedSet = affected.toSet
       val keptRows = entRows.filterNot(r => affectedSet.contains(r.getString(0)))
       val newTotals: (Long, Long) = newFooter.map(_._2).getOrElse {
         val r = spark.read.parquet(s"$dir/$manifestRel")
@@ -980,6 +1162,7 @@ object SnapshotTable {
           StructType.fromDDL(schemaDdl(dir, parent).get).toDDL, partitionBy,
           manifestRel, stats._1, stats._2, idempotencyKey,
           mergeStats)
+        written.foreach(cachePut(s"$dir/$manifestRel", _))
         cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
         return snap
       } catch {

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import graft.{Session, SparkEntry, Verify}
-import graft.kg.{DataGen, Extract, Materialize}
+import graft.kg.{DataGen, Extract, Materialize, Pipeline}
 import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
 
 /** Development profiler: one main for the plan audits and attribution
@@ -31,6 +31,12 @@ import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
   *       shared-table build (in Bench order, memo-incremental) and of the
   *       incremental state builds, labelled through the job description;
   *       tasks far above jobs × cores read as over-partitioning
+  *   build <nDocs>
+  *       one cold `Pipeline.runFromTable` over a fresh `DataGen` docs
+  *       table (in a temp dir, deleted afterwards): every Spark job of
+  *       the build with its stage label and call site, then per stage
+  *       (10/20/30/40 and the graph write) the job count, summed job
+  *       seconds and wall seconds, and the graph table's hash
   *
   * Usage: runMain graft.tools.Profile <mode> <args...>
   */
@@ -44,9 +50,10 @@ object Profile {
         planDump(_, sfDir, outDir, suffix, Verify.queryNames(names))
       case "sample" :: sfDir :: Nil => sample(_, sfDir)
       case "phases" :: sfDir :: Nil => phases(_, sfDir)
+      case "build" :: nDocs :: Nil => build(_, nDocs.toLong)
       case _ =>
         System.err.println("usage: Profile plan <sfDir> [<outDir> <suffix>] <q1,q2,...>" +
-          " | sample <sfDir> | phases <sfDir>")
+          " | sample <sfDir> | phases <sfDir> | build <nDocs>")
         sys.exit(2)
     }
     val spark = Session("graft-profile")
@@ -196,6 +203,83 @@ object Profile {
     jobCount.asScala.toSeq.sortBy(-_._2).foreach { case (d, c) =>
       println(f"[profile] $c%4d jobs ${taskCount.getOrDefault(d, 0L)}%6d tasks " +
         f"${jobTime.getOrDefault(d, 0L) / 1e3}%8.2f s  $d")
+    }
+  }
+
+  /** A job `body` ran: its id, stage label ([[Pipeline.StageLabel]],
+    * "-" when unset), call site and seconds.
+    */
+  case class Job(id: Int, label: String, site: String, seconds: Double)
+
+  /** Runs `body` and returns the Spark jobs it scheduled, in id order.
+    * Listener events arrive asynchronously but in order, so a marker job
+    * run after `body` flushes them.
+    */
+  private[graft] def recordJobs[A](spark: SparkSession)(body: => A): (A, Seq[Job]) = {
+    val sc = spark.sparkContext
+    val marker = s"graft-jobs-flush-${java.util.UUID.randomUUID}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val started = new ConcurrentHashMap[Int, (String, String, Long)]()
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    def property(p: java.util.Properties, key: String): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(key)))
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (property(js.properties, "spark.job.description").contains(marker))
+          flushed.countDown()
+        else started.put(js.jobId, (property(js.properties, Pipeline.StageLabel)
+          .getOrElse("-"),
+          // the result stage is the job's last: its name is the call site
+          js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"), js.time))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(started.remove(je.jobId)).foreach { case (label, site, t0) =>
+          done.add(Job(je.jobId, label, site, (je.time - t0) / 1e3))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(outer)
+      flushed.await()
+      (result, done.asScala.toSeq.sortBy(_.id))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def build(spark: SparkSession, nDocs: Long): Unit = {
+    import graft.sources.SnapshotTable
+    val tmp = Files.createTempDirectory("graft-profile-build").toString
+    try {
+      SnapshotTable.write(DataGen.corpus(spark, nDocs).toDF(), s"$tmp/docs")
+      val ((report, wall), jobs) = recordJobs(spark) {
+        val t0 = System.nanoTime()
+        val r = Pipeline.runFromTable(spark, s"$tmp/docs", s"$tmp/out", s"$tmp/graph")._1
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      jobs.foreach { j =>
+        println(f"[profile] job ${j.id}%4d ${j.label}%-13s ${j.seconds}%6.2f s  ${j.site}")
+      }
+      val wallOf = report.stages.map(s => s.name -> s.seconds).toMap +
+        (Pipeline.GraphWrite -> report.graphSeconds)
+      println("[profile] stage          jobs   job_s  wall_s")
+      ("-" +: report.stages.map(_.name) :+ Pipeline.GraphWrite).foreach { st =>
+        val js = jobs.filter(_.label == st)
+        if (st != "-" || js.nonEmpty)
+          println(f"[profile] $st%-13s ${js.size}%5d ${js.map(_.seconds).sum}%7.2f " +
+            f"${wallOf.getOrElse(st, Double.NaN)}%7.2f")
+      }
+      println(f"[profile] build: ${jobs.size} jobs, $wall%.2f s wall, " +
+        s"${report.triples} raw and ${report.canonicalTriples} canonical triples")
+      import org.apache.spark.sql.functions._
+      val h = SnapshotTable.read(spark, s"$tmp/graph")
+        .select(xxhash64(Seq("subj", "pred", "obj", "objIsLiteral", "objDatatype")
+          .map(col): _*).cast("decimal(38,0)").as("h"))
+        .agg(count(lit(1)), sum(col("h"))).head()
+      println(s"[profile] graph hash: ${h.getLong(0)}:${h.getDecimal(1).toPlainString}")
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(tmp)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
 }

@@ -115,4 +115,51 @@ class CanonicalSpec extends AnyFunSuite {
     assert(Canonical.connectedComponents(withNoise).collect().toSet == driver)
     edges.unpersist()
   }
+
+  test("the build's shared matcher-row fetch maps like equivalenceEdges + distributed CC") {
+    import graft.kg._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType}
+    def both(matched: org.apache.spark.sql.DataFrame): Set[(String, String)] = {
+      val shared = Canonical.equivalenceMapping(spark,
+        matched.select("TaxonName", "Mapped_ID_WD").collect().toSeq
+          .map(r => (r.getString(0), r.getString(1))))
+      assert(shared.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+      val distributed = pairs(Canonical.connectedComponents(
+        Canonical.equivalenceEdges(matched), maxDriverRows = 0))
+      assert(pairs(shared) == distributed)
+      distributed
+    }
+    // padding spaces (trim strips ASCII spaces only, so a tab-padded name
+    // is another name), quotes (kept: '"' orders before 'Q'), Wikidata:
+    // prefixes, empty and null cells
+    val fixture = spark.createDataFrame(
+      java.util.Arrays.asList(Seq[(String, String, String, String, Long)](
+        ("T1", " Pan ", "Wikidata:Q5", "m", 1L),
+        ("T2", "Pan", "Q6", "m", 2L),
+        ("T3", "Pan  ", "Q7", null, 3L),
+        ("T4", "\tPan", "Q8", "m", 4L),
+        ("T5", "\tPan", "Wikidata:Q9", "m", 5L),
+        ("T6", "\"Pan\"", "Q10", "m", 6L),
+        ("T7", "\"Pan\"", "\"Q11\"", "m", 7L),
+        ("T8", "Bos", "Wikidata:", "m", 8L),
+        ("T9", "Bos", "Q12", "m", 9L),
+        ("T10", "   ", "Q13", "m", 10L),
+        ("T11", null, "Q14", "m", 11L),
+        ("T12", "Apis", "", "m", 12L),
+        ("T13", "Apis", null, "m", 13L),
+        ("T14", "Apis", "Q15", "m", 14L),
+        ("T15", "Bos", "Q12", "m", 15L)).map(t => Row.fromTuple(t)): _*),
+      StructType(Seq("TaxonId", "TaxonName", "Mapped_ID_WD", "Mapped_Value")
+        .map(StructField(_, StringType)) :+ StructField("rowIdx", LongType, false)))
+    assert(both(fixture) == Set("Q5" -> "Q5", "Q6" -> "Q5", "Q7" -> "Q5",
+      "Q8" -> "Q8", "Q9" -> "Q8", "Q10" -> "\"Q11\"", "\"Q11\"" -> "\"Q11\"",
+      "" -> "", "Q12" -> ""))
+    val records = Extract.records(DataGen.corpus(spark, 400, 4).toDF())
+    assert(both(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
+      DataGen.lineageRows)).exists(p => p._1 != p._2))
+  }
 }

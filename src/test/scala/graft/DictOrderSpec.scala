@@ -163,4 +163,28 @@ class DictOrderSpec extends AnyFunSuite {
     assert(id == Set(("OnlyId", "Q3", "m3"), ("NoNameEither", "Q4", "m4")))
     assert(name == Set(("OnlyName", "Q1", null), ("EmptyId", "Q2", "m2")))
   }
+
+  test("wdMapDicts: the build's shared matcher-row fetch equals the aggregate arm") {
+    // what runFromTable collects once for both dictionaries and the
+    // equivalence mapping: padded names, quotes and Wikidata: prefixes
+    // in every column, and rows out of rowIdx order
+    val matched = matcherFixture(Seq(
+      ("Wikidata:T1", " Pan ", "Wikidata:Q5", "\"ape\"", 4L),
+      ("T1", "Pan", "Q6", "ape", 2L),
+      ("\"T2\"", "Pan ", "Q5", null, 3L),
+      ("T3", "\tPan", "\"Wikidata:Q7\"", "x", 1L),
+      ("T4", "Wikidata:", "Wikidata:", "gone", 5L),
+      (null, " ", "Q8", "blank", 6L)))
+    val rows = matched.select(Materialize.dictColumns :+
+      org.apache.spark.sql.functions.col("TaxonName"): _*).collect()
+    def dict(df: DataFrame): Dict = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val (sharedId, sharedName) = Materialize.driverDicts(spark, rows)
+    val (aggId, aggName) = Materialize.wdMapDicts(matched, maxDriverRows = 0)
+    assert(sharedId.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(dict(sharedId) == dict(aggId) && dict(sharedName) == dict(aggName),
+      s"id ${dict(sharedId)} vs ${dict(aggId)}; name ${dict(sharedName)} vs ${dict(aggName)}")
+    assert(dict(sharedName).exists(_._1 == " Pan "))
+    Seq(aggId, aggName).foreach(_.unpersist())
+  }
 }

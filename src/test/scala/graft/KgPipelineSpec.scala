@@ -206,4 +206,48 @@ class KgPipelineSpec extends AnyFunSuite {
     val left = java.nio.file.Files.list(path.getParent)
     try assert(!left.anyMatch(_.toString.endsWith(".tmp"))) finally left.close()
   }
+
+  test("a finished build is a no-op: one graph snapshot, no Spark job") {
+    import graft.sources.SnapshotTable
+    val out = java.nio.file.Files.createTempDirectory("kgnoop").toString
+    val r1 = Pipeline.run(spark, 60, out)
+    val (r2, jobs) = graft.tools.Profile.recordJobs(spark)(Pipeline.run(spark, 60, out))
+    assert(jobs.isEmpty, s"a finished build ran jobs: $jobs")
+    assert(r2.stages.forall(_.skipped) && r2.canonicalTriples == r1.canonicalTriples)
+    assert(SnapshotTable.history(s"$out/50_graph").map(_.id) == Seq(1L))
+    // a build of another input still publishes over the head, and
+    // building the first input again publishes its graph once more
+    Pipeline.run(spark, 40, out)
+    val r3 = Pipeline.run(spark, 60, out)
+    assert(SnapshotTable.history(s"$out/50_graph").map(_.id) == Seq(1L, 2L, 3L))
+    assert(SnapshotTable.read(spark, s"$out/50_graph").count() == r3.canonicalTriples &&
+      r3.canonicalTriples == r1.canonicalTriples)
+    // a stage manifest written before the schema field falls back to
+    // schema inference: one job, the stage still skipped
+    val path = java.nio.file.Paths.get(out, "10_extract", "_MANIFEST.json")
+    val json = manifest(out, "10_extract")
+    java.nio.file.Files.writeString(path, json.substring(0, json.indexOf(",\"schema\"")) + "}")
+    val (r4, inferred) = graft.tools.Profile.recordJobs(spark)(Pipeline.run(spark, 60, out))
+    assert(r4.stages.forall(_.skipped) && inferred.map(_.label) == Seq("10_extract"), inferred)
+  }
+
+  test("a cold table build schedules no dimension-sized job") {
+    // the job count of a build over a fixed 4-partition corpus: the
+    // snapshot manifests are read and written on the driver, and the
+    // matcher output is fetched once for the dictionaries and the
+    // equivalence mapping
+    val root = java.nio.file.Files.createTempDirectory("kgjobs").toString
+    graft.sources.SnapshotTable.write(DataGen.corpus(spark, 120, 4).toDF(),
+      s"$root/docs")
+    val (_, jobs) = graft.tools.Profile.recordJobs(spark) {
+      Pipeline.runFromTable(spark, s"$root/docs", s"$root/out", s"$root/graph")
+    }
+    assert(jobs.size <= MaxBuildJobs, jobs.mkString("\n", "\n", ""))
+  }
+
+  /** The cold table build's job budget: 15 (the build before the
+    * driver manifests and the shared matcher fetch ran 23 over this
+    * corpus).
+    */
+  val MaxBuildJobs = 15
 }

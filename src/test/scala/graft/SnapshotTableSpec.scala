@@ -1317,4 +1317,171 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(got.filter(col("p") === "p1").count() ===
       base.filter(col("p") === "p1").count() + 1)
   }
+
+  // ---- snapshot manifests written and read on the driver ---------------
+
+  /** Spark's writes leave a _SUCCESS marker; the driver manifest writer
+    * writes only its parquet file.
+    */
+  def sparkWritten(mdir: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(mdir, "_SUCCESS"))
+
+  def rowSet(rows: Array[org.apache.spark.sql.Row]): Set[Seq[Any]] =
+    rows.map(_.toSeq).toSet
+
+  test("driver manifest: spark.read.parquet reads back its rows and schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val mdir = java.nio.file.Files.createTempDirectory("mfdriver").toString + "/m"
+    val schema = StructType(Seq(
+      StructField("path", StringType, nullable = false),
+      StructField("rows", LongType, nullable = false),
+      StructField("min_k", StringType), StructField("snapshot_id", LongType)))
+    val rows = Array(Row("file:/a b/p-0.parquet", 3L, null, 7L),
+      Row("file:/p-1.parquet", 0L, "é\"q", null))
+    assert(SnapshotTable.writeManifest(spark, mdir, Right((rows, schema))).isDefined)
+    assert(!sparkWritten(mdir))
+    val back = spark.read.parquet(mdir)
+    assert(back.schema == StructType(schema.fields.map(_.copy(nullable = true))))
+    assert(rowSet(back.collect()) == rowSet(rows))
+    // a table commit takes this path and primes the cache once it wins
+    val dir = java.nio.file.Files.createTempDirectory("mfdriver").toString + "/t"
+    SnapshotTable.write((0 until 30).map(i => (s"r$i", i)).toDF("id", "v")
+      .repartition(3), dir, statsCols = Seq("v"))
+    val m1 = SnapshotTable.manifestDir(dir, 1)
+    assert(!sparkWritten(m1) && SnapshotTable.manifestCached(m1))
+    val (local, localSchema) = SnapshotTable.readLocalManifest(spark, m1).get
+    assert(localSchema == spark.read.parquet(m1).schema && local.length == 3)
+    assert(rowSet(local) == rowSet(spark.read.parquet(m1).collect()))
+    assert(SnapshotTable.readRange(spark, dir, "v", "3", "5").count() == 3)
+  }
+
+  test("driver manifest: a Spark-written manifest reads the same through the driver reader") {
+    val dir = java.nio.file.Files.createTempDirectory("mfspark").toString + "/t"
+    // string stats columns take the distributed aggregate and Spark's
+    // manifest write
+    SnapshotTable.write((0 until 30).map(i => (s"r$i", i)).toDF("id", "v")
+      .repartition(3), dir, statsCols = Seq("id"))
+    val m1 = SnapshotTable.manifestDir(dir, 1)
+    assert(sparkWritten(m1))
+    val viaSpark = spark.read.parquet(m1)
+    val (rows, schema) = SnapshotTable.readLocalManifest(spark, m1).get
+    assert(schema == viaSpark.schema, s"$schema vs ${viaSpark.schema}")
+    assert(rows.length == 3 && rowSet(rows) == rowSet(viaSpark.collect()))
+  }
+
+  test("driver manifest: appended onto a Spark-written manifest, entries union by name") {
+    val dir = java.nio.file.Files.createTempDirectory("mfappend").toString + "/t"
+    SnapshotTable.write((0 until 20).map(i => (s"a$i", i)).toDF("id", "v")
+      .repartition(2), dir, statsCols = Seq("id"))
+    val m1 = SnapshotTable.manifestDir(dir, 1)
+    assert(sparkWritten(m1))
+    // integral stats: footer entries, written on the driver over the
+    // Spark-written parent's
+    SnapshotTable.write((20 until 50).map(i => (s"b$i", i)).toDF("id", "v")
+      .repartition(3), dir, mode = "append", statsCols = Seq("v"))
+    val m2 = SnapshotTable.manifestDir(dir, 2)
+    assert(!sparkWritten(m2))
+    val parent = spark.read.parquet(m1)
+    val got = spark.read.parquet(m2)
+    assert(got.columns.toSeq == parent.columns.toSeq ++ Seq("min_v", "max_v"))
+    val old = got.filter(col("snapshot_id") === 1)
+    assert(rowSet(old.select(parent.columns.map(col).toIndexedSeq: _*).collect()) ==
+      rowSet(parent.collect()))
+    assert(old.filter(col("min_v").isNotNull || col("max_v").isNotNull).isEmpty)
+    // the new entries carry v's bounds as the distributed aggregate has them
+    val fresh = got.filter(col("snapshot_id") === 2)
+    assert(fresh.filter(col("min_id").isNotNull || col("max_id").isNotNull).isEmpty)
+    val paths = fresh.select("path").as[String].collect().toIndexedSeq
+    val want = spark.read.parquet(paths: _*).groupBy(input_file_name().as("path"))
+      .agg(count(lit(1)).as("rows"), min(col("v")).cast("string").as("min_v"),
+        max(col("v")).cast("string").as("max_v"))
+    assert(paths.size == 3 && rowSet(fresh.select("path", "rows", "min_v", "max_v")
+      .collect()) == rowSet(want.collect()))
+    // the driver reader agrees with Spark on the union, and the table
+    // reads whole
+    val (rows, schema) = SnapshotTable.readLocalManifest(spark, m2).get
+    assert(schema == got.schema && rowSet(rows) == rowSet(got.collect()))
+    assert(SnapshotTable.read(spark, dir).count() == 50)
+    assert(SnapshotTable.readRange(spark, dir, "v", "25", "30").count() == 6)
+  }
+
+  test("driver manifest: bloom columns and oversized manifests keep the Spark write") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("mfbloom").toString + "/t"
+    SnapshotTable.write(spark.range(0, 40, 1, 2).toDF("id"), dir,
+      statsCols = Seq("id"), bloomCols = Seq("id"))
+    assert(sparkWritten(SnapshotTable.manifestDir(dir, 1)))
+    assert(SnapshotTable.readLocalManifest(spark, SnapshotTable.manifestDir(dir, 1)).isEmpty)
+    // an append's footer entries join the parent's bloom array column
+    SnapshotTable.write(spark.range(40, 60, 1, 1).toDF("id"), dir, mode = "append")
+    assert(sparkWritten(SnapshotTable.manifestDir(dir, 2)))
+    assert(SnapshotTable.readPoint(spark, dir, "id", "45").count() == 1)
+    assert(SnapshotTable.readPoint(spark, dir, "id", "7").count() == 1)
+    // more entries than the manifest cache holds
+    val mdir = java.nio.file.Files.createTempDirectory("mfbig").toString + "/m"
+    val schema = StructType(Seq(StructField("path", StringType),
+      StructField("rows", LongType)))
+    val big = (0 to SnapshotTable.ManifestCacheMaxRows)
+      .map(i => Row(s"p$i", i.toLong)).toArray
+    assert(SnapshotTable.writeManifest(spark, mdir, Right((big, schema))).isEmpty)
+    assert(sparkWritten(mdir) && spark.read.parquet(mdir).count() == big.length)
+  }
+
+  test("driver manifest: a lost-CAS attempt is never cached") {
+    val dir = java.nio.file.Files.createTempDirectory("mfcas").toString + "/t"
+    SnapshotTable.write(Seq(("base", 0)).toDF("id", "v"), dir)
+    @volatile var lost: String = null
+    @volatile var raced = 0L
+    // writer B commits snapshot 2 while writer A writes its manifest for
+    // snapshot 2: A loses the CAS and commits snapshot 3
+    RaceFs.before = { f =>
+      lost = f.getParent.toUri.getPath
+      val b = new Thread(() => raced = SnapshotTable.write(
+        Seq(("b", 2)).toDF("id", "v"), dir, mode = "append"))
+      b.start(); b.join()
+    }
+    RaceFs.trigger = s"$dir/manifests/snap-2-"
+    spark.conf.set("fs.file.impl", classOf[RaceFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val won = try SnapshotTable.write(Seq(("a", 1)).toDF("id", "v"), dir, mode = "append")
+      finally {
+        spark.conf.unset("fs.file.impl"); spark.conf.unset("fs.file.impl.disable.cache")
+        RaceFs.trigger = null
+      }
+    assert(raced == 2L && won == 3L, s"B=$raced A=$won")
+    assert(lost != null && lost != SnapshotTable.manifestDir(dir, 2), lost)
+    assert(!SnapshotTable.manifestCached(lost))
+    Seq(2L, 3L).foreach(s =>
+      assert(SnapshotTable.manifestCached(SnapshotTable.manifestDir(dir, s)), s))
+    assert(SnapshotTable.read(spark, dir).select("id").as[String].collect().toSet ==
+      Set("base", "a", "b"))
+  }
+}
+
+/** A local file system that runs [[RaceFs.before]] once, ahead of
+  * creating the first file whose path contains [[RaceFs.trigger]].
+  */
+class RaceFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def create(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    RaceFs.fire(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object RaceFs {
+  @volatile var trigger: String = null
+  @volatile var before: org.apache.hadoop.fs.Path => Unit = _ => ()
+
+  def fire(f: org.apache.hadoop.fs.Path): Unit = {
+    val hit = synchronized {
+      val t = trigger
+      if (t != null && f.toUri.getPath.contains(t)) { trigger = null; true } else false
+    }
+    if (hit) before(f)
+  }
 }
