@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Paths, Path, StandardCopyOption}
+import java.nio.file.{Files, Paths, Path}
 import Model._
 
 /** Stage DAG driver: checkpointed, idempotently resumable KG
@@ -41,11 +41,7 @@ object Pipeline {
          |"rows":${fileRows.sum},"partitions":${fileRows.length},
          |"partition_rows":${fileRows.mkString("[", ",", "]")},
          |"seconds":$seconds,"schema":"${jsonEscape(schema.toDDL)}"}""".stripMargin.replace("\n", "")
-    // a plain create keeps the umask's permissions (createTempFile's are 0600)
-    val tmp = Files.createDirectories(Paths.get(dir))
-      .resolve(s"_MANIFEST.${java.util.UUID.randomUUID}.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(dir), StandardCopyOption.ATOMIC_MOVE)
+    graft.sources.SnapshotTable.replaceAtomically(manifestPath(dir), json)
   }
 
   private def stringField(name: String) =

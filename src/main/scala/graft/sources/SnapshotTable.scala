@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
@@ -29,7 +29,19 @@ import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCo
   *  - time travel: read any retained snapshot by id;
   *  - append / overwrite semantics as new snapshots (append = parent
   *    manifest ∪ new files);
-  *  - idempotency keys for exactly-once publishes under replays.
+  *  - idempotency keys for exactly-once publishes under replays;
+  *  - one commit path ([[commit]]): a mutation stages an attempt on top
+  *    of the current snapshot — what its manifest keeps of earlier
+  *    snapshots, and the entries of the files it wrote — and one loop
+  *    writes the manifest (kept ∪ new), takes the totals from the
+  *    entries in hand, creates `v<id>.json`, and only then primes the
+  *    manifest cache; a lost CAS reclaims the attempt and retries on
+  *    top of the winner. `write` stages its new files over nothing
+  *    (overwrite) or over the whole parent (append), writing its data
+  *    once; `overwritePartitions`, `merge` and `delete` stage the parent
+  *    entries they leave untouched plus a rewrite derived from the
+  *    parent, restaged after a lost CAS; `rollback` stages a byte copy
+  *    of its target's manifest at the target's recorded totals.
   *
   * On a cluster with the real Iceberg runtime, swap these calls for
   * `spark.read.format("iceberg")` / `writeTo(...)` — the pipeline code
@@ -146,10 +158,28 @@ object SnapshotTable {
   private def toFrame(spark: SparkSession, e: Entries): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(e._1: _*), e._2)
 
+  /** Manifest entries on the driver (Right), or a plan (Left) where they
+    * are corpus-large, carry bloom arrays or come from an aggregate.
+    */
+  private type EntrySet = Either[DataFrame, Entries]
+
+  private def frame(spark: SparkSession, e: EntrySet): DataFrame =
+    e.fold(identity, toFrame(spark, _))
+
+  /** Snapshot `snap`'s manifest entries: on the driver up to
+    * [[ManifestCacheMaxRows]], a Spark read above.
+    */
+  private def manifestSet(spark: SparkSession, dir: String, snap: Long): EntrySet =
+    manifestEntries(spark, dir, snap).toRight(spark.read.parquet(manifestDir(dir, snap)))
+
   private def manifestFrame(spark: SparkSession, dir: String,
       snap: Long): DataFrame =
-    manifestEntries(spark, dir, snap).map(toFrame(spark, _))
-      .getOrElse(spark.read.parquet(manifestDir(dir, snap)))
+    frame(spark, manifestSet(spark, dir, snap))
+
+  /** (path, base) of the manifest entries `m` where `keep` holds. */
+  private def entryPaths(m: DataFrame, keep: Column = lit(true)): Array[(String, String)] =
+    m.filter(keep).select(col("path"), col("base")).collect()
+      .map(r => (r.getString(0), r.getString(1)))
 
   /** The entries of snapshot `snap`'s manifest on the driver; None when
     * it has more than [[ManifestCacheMaxRows]] (the recorded data_files
@@ -307,12 +337,11 @@ object SnapshotTable {
     * is written through Spark as one file.
     */
   private[graft] def writeManifest(spark: SparkSession, mdir: String,
-      entries: Either[DataFrame, Entries]): Option[Entries] = entries match {
+      entries: EntrySet): Option[Entries] = entries match {
     case Right(e) if e._1.length <= ManifestCacheMaxRows &&
         writeLocalManifest(spark, mdir, e) => Some(e)
     case other =>
-      other.fold(identity, toFrame(spark, _))
-        .coalesce(1).write.mode("overwrite").parquet(mdir)
+      frame(spark, other).coalesce(1).write.mode("overwrite").parquet(mdir)
       None
   }
 
@@ -359,9 +388,8 @@ object SnapshotTable {
   private def commitCas(dir: String, snap: Long, operation: String,
       parent: Long, schemaDdl: String, partitionBy: Seq[String],
       manifestRel: String, files: Long, rows: Long,
-      idempotencyKey: String, statsCols: Seq[String] = Nil): Unit = {
-    val meta = Paths.get(dir, "metadata")
-    Files.createDirectories(meta)
+      idempotencyKey: String, statsCols: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(dir, "metadata"))
     val json =
       s"""{"format_version":2,"snapshot_id":$snap,"parent_snapshot_id":$parent,
          |"operation":"$operation","schema":"${jsonEscape(schemaDdl)}",
@@ -383,12 +411,20 @@ object SnapshotTable {
     // move it forward so a slow loser never regresses a newer commit
     val cur = hintPath(dir)
     val curVal = if (Files.exists(cur)) Files.readString(cur).trim.toLong else 0L
-    if (snap > curVal) {
-      val tmp = meta.resolve(s"version-hint-$snap.tmp")
-      Files.writeString(tmp, snap.toString)
-      Files.move(tmp, cur, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (snap > curVal) replaceAtomically(cur, snap.toString)
+  }
+
+  /** Replace `target` with `content`: written to a temp file beside it
+    * and renamed over it, so a reader sees the old file or the whole new
+    * one, never a torn write. A plain create keeps the umask's
+    * permissions (createTempFile's are 0600).
+    */
+  private[graft] def replaceAtomically(target: Path, content: String): Unit = {
+    val tmp = Files.createDirectories(target.getParent)
+      .resolve(s"${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Key-index marker path: every commit with a key also creates
@@ -405,14 +441,8 @@ object SnapshotTable {
     Paths.get(dir, "metadata", "keys", s"k-$h")
   }
 
-  private def writeKeyMarker(dir: String, idempotencyKey: String, snap: Long): Unit = {
-    val marker = keyMarkerPath(dir, idempotencyKey)
-    Files.createDirectories(marker.getParent)
-    val tmpM = marker.resolveSibling(marker.getFileName.toString + s".tmp-$snap")
-    Files.writeString(tmpM, snap.toString)
-    Files.move(tmpM, marker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeKeyMarker(dir: String, idempotencyKey: String, snap: Long): Unit =
+    replaceAtomically(keyMarkerPath(dir, idempotencyKey), snap.toString)
 
   /** Sentinel recording that the key index covers ALL retained
     * snapshots, not just those committed after the index appeared. The
@@ -432,15 +462,10 @@ object SnapshotTable {
     */
   private def ensureKeyIndex(dir: String): Unit = {
     if (Files.exists(keyIndexSentinel(dir))) return
-    val keysDir = Paths.get(dir, "metadata", "keys")
-    Files.createDirectories(keysDir)
     history(dir).foreach { s =>
       committedKey(dir, s.id).foreach(k => writeKeyMarker(dir, k, s.id))
     }
-    val tmp = keysDir.resolve(s".complete.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    Files.writeString(tmp, "1")
-    Files.move(tmp, keyIndexSentinel(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    replaceAtomically(keyIndexSentinel(dir), "1")
   }
 
   /** How far back the marker-miss fallback scans. A marker can only be
@@ -486,6 +511,206 @@ object SnapshotTable {
       }
     }
 
+  // ---- the commit path ---------------------------------------------------
+
+  /** (entries, rows) of an entry set: summed on the driver, or one
+    * aggregate job over a plan.
+    */
+  private def totals(e: EntrySet): (Long, Long) = e match {
+    case Right((rows, schema)) =>
+      val at = schema.fieldIndex("rows")
+      (rows.length.toLong, rows.map(_.getLong(at)).sum)
+    case Left(df) =>
+      val r = df.agg(count(lit(1)), coalesce(sum(col("rows")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+  }
+
+  /** (data_files, rows) recorded by snapshot `snap`. */
+  private def recordedTotals(dir: String, snap: Long): (Long, Long) =
+    metaCounts(dir, snap).getOrElse(throw new IllegalStateException(
+      s"no data_files/rows recorded for $dir@$snap"))
+
+  /** What a staged attempt's manifest keeps of earlier snapshots. */
+  private sealed trait Kept
+  /** Nothing: the manifest lists only the new files (overwrite). */
+  private case object KeepNone extends Kept
+  /** Every entry of snapshot `snap`, at its recorded totals: the parent's
+    * under an append. With no new files the manifest is a byte copy of
+    * `snap`'s, original `snapshot_id` stamps preserved (a rollback).
+    */
+  private case class KeepAll(snap: Long) extends Kept
+  /** The parent entries a rewrite left untouched. */
+  private case class KeepSome(entries: EntrySet) extends Kept
+
+  /** One commit attempt staged on top of a parent snapshot: the schema,
+    * partition spec and stats columns to record, the entries kept, and
+    * the entries of the files it wrote under `data/w-<token>` (None:
+    * nothing written). `fromParent`: those files were derived from the
+    * parent's data, so a lost CAS discards them and the next attempt
+    * restages from the winner.
+    */
+  private case class Staged(schemaDdl: String, partitionBy: Seq[String],
+      statsCols: Seq[String], kept: Kept, fresh: Option[EntrySet],
+      token: String, fromParent: Boolean)
+
+  /** Names one writer's data dir (`data/w-<token>`) and manifest attempts. */
+  private def newToken(): String = java.util.UUID.randomUUID.toString.take(12)
+
+  /** How often a commit may lose the CAS before it gives up. */
+  private val MaxCommitAttempts = 100
+
+  /** The one commit path of every mutation. A key already committed
+    * returns its snapshot. Each attempt stages on top of the current
+    * snapshot, writes the manifest `manifests/snap-<id>-<token>`, takes
+    * the totals from the entries in hand, re-probes the key (a racer
+    * that committed it wins: this attempt's files are reclaimed) and
+    * creates `v<id>.json` — the CAS. Only a won CAS primes the manifest
+    * cache. A lost one reclaims the attempt's manifest, and its data
+    * when staged from the parent, then retries on top of the winner.
+    */
+  private def commit(spark: SparkSession, dir: String, operation: String,
+      idempotencyKey: String)(stage: Long => Staged): Long = {
+    val already = snapshotWithKey(dir, idempotencyKey)
+    if (already.isDefined) return already.get
+    var attempt = 0
+    while (true) {
+      val parent = currentSnapshot(dir)
+      val s = stage(parent)
+      val snap = parent + 1
+      val manifestRel = s"manifests/snap-$snap-${s.token}"
+      val mdir = s"$dir/$manifestRel"
+      val (written, files, rows) =
+        try writeAttempt(spark, dir, mdir, snap, s)
+        finally s.fresh.foreach(_.left.foreach(_.unpersist()))
+      def reclaim(data: Boolean): Unit = {
+        deleteRecursively(Paths.get(mdir))
+        if (data) deleteRecursively(Paths.get(dir, "data", s"w-${s.token}"))
+      }
+      val racedKey = snapshotWithKey(dir, idempotencyKey)
+      if (racedKey.isDefined) {
+        reclaim(data = true)
+        return racedKey.get
+      }
+      try {
+        commitCas(dir, snap, operation, parent, s.schemaDdl, s.partitionBy,
+          manifestRel, files, rows, idempotencyKey, s.statsCols)
+        written.foreach(cachePut(mdir, _))
+        return snap
+      } catch {
+        case _: FileAlreadyExistsException =>
+          reclaim(data = s.fromParent)
+          attempt += 1
+          require(attempt < MaxCommitAttempts, s"$operation contention on $dir")
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Write attempt `s`'s manifest into `mdir` as snapshot `snap`'s and
+    * take its totals: the kept entries' (recorded, for a whole snapshot)
+    * plus the new entries'. Returns the entries to cache once the CAS
+    * wins; None when Spark wrote them or the manifest is a copy.
+    */
+  private def writeAttempt(spark: SparkSession, dir: String, mdir: String,
+      snap: Long, s: Staged): (Option[Entries], Long, Long) =
+    (s.kept, s.fresh) match {
+      case (KeepAll(from), None) =>
+        import scala.jdk.CollectionConverters._
+        val dst = Files.createDirectories(Paths.get(mdir))
+        val stream = Files.list(Paths.get(manifestDir(dir, from)))
+        try stream.iterator().asScala.filter(Files.isRegularFile(_)).foreach(f =>
+          Files.copy(f, dst.resolve(f.getFileName.toString),
+            StandardCopyOption.REPLACE_EXISTING))
+        finally stream.close()
+        val (f, r) = recordedTotals(dir, from)
+        (None, f, r)
+      case (kept, Some(added)) =>
+        val fresh = added.fold(
+          df => Left(df.withColumn("snapshot_id", lit(snap))),
+          e => Right((e._1.map(r => Row.fromSeq(r.toSeq :+ snap)),
+            e._2.add("snapshot_id", org.apache.spark.sql.types.LongType, false))))
+        val (old, (keptFiles, keptRows)) = kept match {
+          case KeepNone => (None, (0L, 0L))
+          case KeepAll(from) => (Some(manifestSet(spark, dir, from)), recordedTotals(dir, from))
+          case KeepSome(e) => (Some(e), totals(e))
+        }
+        // an aggregate's totals job also materializes the persisted entries
+        val (newFiles, newRows) = totals(fresh)
+        // allowMissingColumns: entries written before (or after) a
+        // stats-column change carry null bounds — readers treat null as
+        // "unknown, cannot skip", so mixed manifests stay correct
+        val manifest = old.fold(fresh)(o => (o, fresh) match {
+          case (Right(a), Right(b)) => Right(unionEntries(a, b))
+          case _ => Left(frame(spark, o).unionByName(frame(spark, fresh),
+            allowMissingColumns = true))
+        })
+        (writeManifest(spark, mdir, manifest), keptFiles + newFiles, keptRows + newRows)
+      case (kept, None) =>
+        throw new IllegalArgumentException(s"nothing to commit over $kept")
+    }
+
+  /** Manifest entries of the data files just written under `dataDir`,
+    * one per non-empty file: path, rows, `min_<c>`/`max_<c>` per stats
+    * column (strings, compared after casting back to the column's type),
+    * base, and a `bloom_<c>` per bloom column.
+    *
+    * With no bloom columns and integral stats columns (the stats-free
+    * streaming append is the common case) they come from the parquet
+    * FOOTERS on the driver — metadata-sized work that replaces a Spark
+    * re-read of the data just written (one scheduler round-trip per
+    * commit, the dominant cost of the fixture/state-table builds). Footer
+    * INT statistics are exact and string-format-identical to the
+    * distributed min/max cast. String/fractional stats columns and bloom
+    * indexes keep the distributed aggregate, which must see the rows, as
+    * does a footer missing usable statistics. The aggregate comes back
+    * persisted: the commit's totals and manifest write both read it.
+    */
+  private def newFileEntries(spark: SparkSession, dataDir: String,
+      schema: StructType, statsCols: Seq[String],
+      bloomCols: Seq[String] = Nil): EntrySet = {
+    val footer =
+      if (bloomCols.isEmpty && statsCols.forall(c => footerExactType(schema(c).dataType)))
+        footerStatEntries(spark, dataDir, statsCols)
+      else None
+    footer.map { files =>
+      val ddl = (Seq("path STRING", "rows BIGINT") ++
+        statsCols.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
+        Seq("base STRING")).mkString(", ")
+      // zero-row part files list no entry, as in groupBy(input_file_name)
+      Right((files.filter(_._2 > 0).map { case (p, r, bounds) =>
+          Row.fromSeq(Seq(p, r) ++ bounds.flatMap(b => Seq(b._1, b._2)) :+ dataDir)
+        }.toArray, StructType.fromDDL(ddl))): EntrySet
+    }.getOrElse {
+      // the recorded schema also reads a dir a delete left without part files
+      val data = spark.read.schema(schema).parquet(dataDir)
+      val plain = data.groupBy(input_file_name().as("path"))
+        .agg(count(lit(1)).as("rows"), statsCols.flatMap(c => Seq(
+          min(col(c)).cast("string").as(s"min_$c"),
+          max(col(c)).cast("string").as(s"max_$c"))): _*)
+        .withColumn("base", lit(dataDir))
+      // per-file BLOOM INDEX (the Iceberg/Delta file-bloom analogue):
+      // the distinct set bit positions of a column's values per file —
+      // ≤ BloomBits rows per file (the distinct caps the aggregation
+      // state BEFORE collect_set), so building it is one extra bounded
+      // pass over the just-written files. Point reads ([[readPoint]])
+      // skip files whose bloom excludes the value — the lookup path for
+      // a column the layout is NOT clustered on, where min/max bounds
+      // cannot prune. Null blooms (other writers, merge rewrites) mean
+      // "unknown, cannot skip", like null stats bounds.
+      Left(bloomCols.foldLeft(plain) { (acc, c) =>
+        val bits = data
+          .select(input_file_name().as("path"),
+            explode(array((0 until graft.ops.Sketches.BloomK).map(j =>
+              graft.ops.Sketches.bloomBit(j, col(c).cast("string"))): _*))
+              .as("bit"))
+          .distinct()
+          .groupBy(col("path"))
+          .agg(sort_array(collect_set(col("bit"))).as(s"bloom_$c"))
+        acc.join(bits, Seq("path"), "left")
+      }.persist())
+    }
+  }
+
   /** Write a new snapshot. `mode` = "overwrite" (the new snapshot's
     * manifest lists only the new files) or "append" (parent manifest ∪
     * new files). Data files of previous snapshots are never touched —
@@ -517,175 +742,57 @@ object SnapshotTable {
       partitionBy: Seq[String] = Nil, idempotencyKey: String = "",
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val already = snapshotWithKey(dir, idempotencyKey)
-    if (already.isDefined) return already.get
-    // add-column schema evolution: an append may WIDEN the schema (new
-    // columns — old files read as null via the recorded-schema scan in
-    // [[assemble]]) but never drop a column or change a type; those
-    // need an overwrite, which rewrites the file list anyway
-    if (mode == "append") {
-      val p = currentSnapshot(dir)
-      if (p > 0) schemaDdl(dir, p).foreach { ddl =>
-        StructType.fromDDL(ddl).fields.foreach { f =>
-          val i = df.schema.fieldNames.indexOf(f.name)
-          require(i >= 0,
-            s"append drops column ${f.name}; schema can only widen on append")
-          // catalogString comparison: nullability (incl. nested
-          // containsNull) is NOT a type change — parquet round-trips
-          // and DDL reconstitution flip it routinely
-          require(df.schema(i).dataType.catalogString == f.dataType.catalogString,
-            s"append changes ${f.name}: ${f.dataType.catalogString} -> " +
-              df.schema(i).dataType.catalogString)
-        }
-      }
-    }
-    // inherit the table's declared stats columns (schema evolution may
-    // drop one — stats only ever cover columns this write actually has)
-    val effStats = {
-      val base = if (statsCols.nonEmpty) statsCols
-        else { val p = currentSnapshot(dir); if (p > 0) statsColumns(dir, p) else Nil }
-      base.filter(df.columns.contains)
-    }
-    require(effStats.intersect(partitionBy).isEmpty,
-      s"statsCols must not be partition columns: ${effStats.intersect(partitionBy)}")
-    val token = java.util.UUID.randomUUID.toString.take(12)
-    val dataDir = s"$dir/data/w-$token"
-    val writer = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dataDir)
-    // manifest entries: every data file + its row count + per-file
-    // min/max of the stats columns + the dir to resolve partition
-    // values against. An empty DataFrame lists zero entries (its
-    // schema-only part file has no rows) — a legal snapshot; readers
-    // reconstitute the schema from the metadata DDL.
-    val statAggs = effStats.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"min_$c"),
-      max(col(c)).cast("string").as(s"max_$c")))
-    // stats-free writes (the streaming-append common case) AND writes
-    // whose stats columns are integral read per-file row counts and
-    // min/max bounds from the parquet FOOTERS on the driver —
-    // metadata-sized work that replaces a full Spark re-read of the
-    // just-written data (one scheduler round-trip per commit, the
-    // dominant cost of the fixture/state-table builds). Footer INT
-    // statistics are exact and string-format-identical to the
-    // distributed min/max cast; string/fractional stats columns and
-    // bloom indexes keep the distributed aggregate, which must see the
-    // rows. A footer missing usable statistics falls back too.
-    val footerPlan: Option[(Entries, (Long, Long))] =
-      if (bloomCols.isEmpty &&
-          effStats.forall(c => footerExactType(df.schema(c).dataType))) {
-        footerStatEntries(spark, dataDir, effStats).map { files =>
-          // zero-row part files list no entry, as in groupBy(input_file_name)
-          val entries = files.filter(_._2 > 0)
-          val ddl = (Seq("path STRING", "rows BIGINT") ++
-            effStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
-            Seq("base STRING")).mkString(", ")
-          ((entries.map { case (p, r, bounds) =>
-              Row.fromSeq(Seq(p, r) ++ bounds.flatMap(b => Seq(b._1, b._2)) ++
-                Seq(dataDir))
-            }.toArray, StructType.fromDDL(ddl)),
-            (entries.size.toLong, entries.map(_._2).sum))
-        }
-      } else None
-    lazy val plainEntries = spark.read.parquet(dataDir)
-      .groupBy(input_file_name().as("path"))
-      .agg(count(lit(1)).as("rows"), statAggs: _*)
-      .withColumn("base", lit(dataDir))
-    // per-file BLOOM INDEX (the Iceberg/Delta file-bloom analogue):
-    // the distinct set bit positions of a column's values per file —
-    // ≤ BloomBits rows per file (the distinct caps the aggregation
-    // state BEFORE collect_set), so building it is one extra bounded
-    // pass over the just-written files. Point reads ([[readPoint]])
-    // skip files whose bloom excludes the value — the lookup path for
-    // a column the layout is NOT clustered on, where min/max bounds
-    // cannot prune. Null blooms (other writers, merge rewrites) mean
-    // "unknown, cannot skip", like null stats bounds.
-    require(bloomCols.forall(df.columns.contains),
-      s"bloomCols not in df: ${bloomCols.filterNot(df.columns.contains)}")
-    require(bloomCols.intersect(partitionBy).isEmpty,
-      s"bloomCols must not be partition columns")
-    val newEntries: Either[DataFrame, Entries] = footerPlan.map(p => Right(p._1))
-      .getOrElse(Left(bloomCols.foldLeft(plainEntries) { (acc, c) =>
-        val bits = spark.read.parquet(dataDir)
-          .select(input_file_name().as("path"),
-            explode(array((0 until graft.ops.Sketches.BloomK).map(j =>
-              graft.ops.Sketches.bloomBit(j, col(c).cast("string"))): _*))
-              .as("bit"))
-          .distinct()
-          .groupBy(col("path"))
-          .agg(sort_array(collect_set(col("bit"))).as(s"bloom_$c"))
-        acc.join(bits, Seq("path"), "left")
-      }.persist()))
-    // force materialization AND capture (files, rows) in the same
-    // action — the commit totals then come from here + the parent's
-    // recorded counts instead of re-reading the written manifest
-    // (driver-side for the footer path: its entries are on the driver)
-    val newAgg: (Long, Long) = footerPlan.map(_._2).getOrElse {
-      val r = newEntries.fold(identity, toFrame(spark, _))
-        .agg(count(lit(1)).as("f"), coalesce(sum(col("rows")), lit(0L)).as("r"))
-        .head()
-      (r.getLong(0), r.getLong(1))
-    }
-    try {
-      var attempt = 0
-      while (true) {
-        val parent = currentSnapshot(dir)
-        // another writer may have committed our key while we raced: our
-        // data files will never be referenced by any manifest — delete
-        // them (and any lost-CAS manifest attempts) instead of leaving
-        // permanent orphans behind
-        val racedKey = snapshotWithKey(dir, idempotencyKey)
-        if (racedKey.isDefined) {
-          deleteRecursively(Paths.get(dataDir))
-          cleanWriterAttempts(dir, token, keepRel = None)
-          return racedKey.get
-        }
-        val snap = parent + 1
-        val manifestRel = s"manifests/snap-$snap-$token"
-        val stamped = newEntries.fold(
-          df => Left(df.withColumn("snapshot_id", lit(snap))),
-          e => Right((e._1.map(r => Row.fromSeq(r.toSeq :+ snap)),
-            e._2.add("snapshot_id", org.apache.spark.sql.types.LongType, false))))
-        // allowMissingColumns: entries written before (or after) a
-        // stats-column change carry null bounds — readers treat null as
-        // "unknown, cannot skip", so mixed manifests stay correct
-        val manifest =
-          if (mode != "append" || parent == 0) stamped
-          else (manifestEntries(spark, dir, parent), stamped) match {
-            case (Some(p), Right(e)) => Right(unionEntries(p, e))
-            case (_, e) => Left(manifestFrame(spark, dir, parent)
-              .unionByName(e.fold(identity, toFrame(spark, _)),
-                allowMissingColumns = true))
+    val token = newToken()
+    // forced by the first attempt, after the key probe: the data files
+    // land once, and a lost CAS retries only the manifest and metadata
+    lazy val (effStats, fresh) = {
+      // add-column schema evolution: an append may WIDEN the schema (new
+      // columns — old files read as null via the recorded-schema scan in
+      // [[assemble]]) but never drop a column or change a type; those
+      // need an overwrite, which rewrites the file list anyway
+      if (mode == "append") {
+        val p = currentSnapshot(dir)
+        if (p > 0) schemaDdl(dir, p).foreach { ddl =>
+          StructType.fromDDL(ddl).fields.foreach { f =>
+            val i = df.schema.fieldNames.indexOf(f.name)
+            require(i >= 0,
+              s"append drops column ${f.name}; schema can only widen on append")
+            // catalogString comparison: nullability (incl. nested
+            // containsNull) is NOT a type change — parquet round-trips
+            // and DDL reconstitution flip it routinely
+            require(df.schema(i).dataType.catalogString == f.dataType.catalogString,
+              s"append changes ${f.name}: ${f.dataType.catalogString} -> " +
+                df.schema(i).dataType.catalogString)
           }
-        val written = writeManifest(spark, s"$dir/$manifestRel", manifest)
-        // commit totals = parent's recorded totals (append) + this
-        // write's already-aggregated entries — no manifest re-read job
-        val (nFiles, nRows) =
-          if (mode == "append" && parent > 0) {
-            val (pf, pr) = metaCounts(dir, parent).getOrElse(
-              throw new IllegalStateException(
-                s"no data_files/rows recorded for $dir@$parent"))
-            (pf + newAgg._1, pr + newAgg._2)
-          } else newAgg
-        try {
-          commitCas(dir, snap, mode, parent, df.schema.toDDL, partitionBy,
-            manifestRel, nFiles, nRows, idempotencyKey,
-            effStats)
-          written.foreach(cachePut(s"$dir/$manifestRel", _))
-          // reclaim this writer's own lost-CAS manifest attempts
-          cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
-          return snap
-        } catch {
-          case _: FileAlreadyExistsException =>
-            // lost the race: retry on top of the winner (the attempt's
-            // manifest dir is reclaimed on eventual success/raced-key
-            // return, or by expireSnapshots' orphan sweep)
-            attempt += 1
-            require(attempt < 100, s"commit contention on $dir")
         }
       }
-      throw new IllegalStateException("unreachable")
-    } finally newEntries.fold(_.unpersist(), _ => ())
+      // inherit the table's declared stats columns (schema evolution may
+      // drop one — stats only ever cover columns this write actually has)
+      val effStats = {
+        val base = if (statsCols.nonEmpty) statsCols
+          else { val p = currentSnapshot(dir); if (p > 0) statsColumns(dir, p) else Nil }
+        base.filter(df.columns.contains)
+      }
+      require(effStats.intersect(partitionBy).isEmpty,
+        s"statsCols must not be partition columns: ${effStats.intersect(partitionBy)}")
+      require(bloomCols.forall(df.columns.contains),
+        s"bloomCols not in df: ${bloomCols.filterNot(df.columns.contains)}")
+      require(bloomCols.intersect(partitionBy).isEmpty,
+        s"bloomCols must not be partition columns")
+      val dataDir = s"$dir/data/w-$token"
+      val writer = df.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(dataDir)
+      // an empty DataFrame lists zero entries (its schema-only part file
+      // has no rows) — a legal snapshot; readers reconstitute the schema
+      // from the metadata DDL
+      (effStats, newFileEntries(spark, dataDir, df.schema, effStats, bloomCols))
+    }
+    commit(spark, dir, mode, idempotencyKey) { parent =>
+      Staged(df.schema.toDDL, partitionBy, effStats,
+        if (mode == "append" && parent > 0) KeepAll(parent) else KeepNone,
+        Some(fresh), token, fromParent = false)
+    }
   }
 
   /** Statistics columns whose per-file min/max can be read EXACTLY
@@ -785,62 +892,21 @@ object SnapshotTable {
     * both the bad commit and the `operation = "rollback"` audit row,
     * and the schema / partition spec / stats columns revert with the
     * data (undoing a schema evolution restores the pre-evolution
-    * DDL). Refuses if `to`'s manifest has been expired. Exactly-once
-    * under replays via `idempotencyKey`.
+    * DDL). The manifest is a byte copy of `to`'s on the driver, and the
+    * totals are `to`'s recorded ones: no Spark job. Refuses if `to`'s
+    * manifest has been expired. Exactly-once under replays via
+    * `idempotencyKey`.
     */
   def rollback(spark: SparkSession, dir: String, to: Long,
-      idempotencyKey: String = ""): Long = {
-    val already = snapshotWithKey(dir, idempotencyKey)
-    if (already.isDefined) return already.get
-    var attempt = 0
-    while (true) {
-      val parent = currentSnapshot(dir)
+      idempotencyKey: String = ""): Long =
+    commit(spark, dir, "rollback", idempotencyKey) { parent =>
       require(parent > 0, s"no snapshot in $dir to roll back")
       require(to >= 1 && to <= parent, s"no snapshot $to in $dir")
       require(Files.exists(Paths.get(manifestDir(dir, to))),
         s"snapshot $to of $dir has been expired; cannot roll back to it")
-      val token = java.util.UUID.randomUUID.toString.take(12)
-      val snap = parent + 1
-      val manifestRel = s"manifests/snap-$snap-$token"
-      // a rollback's manifest is BYTE-IDENTICAL to `to`'s (original
-      // snapshot_id stamps preserved) — copy the files on the driver
-      // instead of a Spark read+rewrite+re-aggregate (3 jobs → 0); the
-      // totals are `to`'s recorded metadata counts
-      val srcDir = Paths.get(manifestDir(dir, to))
-      val dstDir = Paths.get(s"$dir/$manifestRel")
-      Files.createDirectories(dstDir)
-      locally {
-        import scala.jdk.CollectionConverters._
-        val stream = Files.list(srcDir)
-        try stream.iterator().asScala.filter(Files.isRegularFile(_)).foreach {
-          f => Files.copy(f, dstDir.resolve(f.getFileName.toString),
-            StandardCopyOption.REPLACE_EXISTING)
-        } finally stream.close()
-      }
-      val (nFiles, nRows) = metaCounts(dir, to).getOrElse(
-        throw new IllegalStateException(
-          s"no data_files/rows recorded for $dir@$to"))
-      val racedKey = snapshotWithKey(dir, idempotencyKey)
-      if (racedKey.isDefined) {
-        cleanWriterAttempts(dir, token, keepRel = None)
-        return racedKey.get
-      }
-      try {
-        commitCas(dir, snap, "rollback", parent,
-          schemaDdl(dir, to).get, partitionSpec(dir, to),
-          manifestRel, nFiles, nRows, idempotencyKey,
-          statsColumns(dir, to))
-        cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
-        return snap
-      } catch {
-        case _: FileAlreadyExistsException =>
-          cleanWriterAttempts(dir, token, keepRel = None)
-          attempt += 1
-          require(attempt < 20, s"rollback contention on $dir")
-      }
+      Staged(schemaDdl(dir, to).get, partitionSpec(dir, to), statsColumns(dir, to),
+        KeepAll(to), None, newToken(), fromParent = false)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Partition tuple of a manifest entry, parsed from the hive path
     * segments between `base` and the file name (`col=value` dirs, in
@@ -879,16 +945,13 @@ object SnapshotTable {
   def overwritePartitions(df: DataFrame, dir: String,
       idempotencyKey: String = ""): Long = {
     val spark = df.sparkSession
-    val already = snapshotWithKey(dir, idempotencyKey)
-    if (already.isDefined) return already.get
-    var attempt = 0
-    while (true) {
-      val parent = currentSnapshot(dir)
+    commit(spark, dir, "overwrite_partitions", idempotencyKey) { parent =>
       require(parent > 0, s"no snapshot in $dir to overwrite into")
       val partitionBy = partitionSpec(dir, parent)
       require(partitionBy.nonEmpty,
         "overwritePartitions needs a partitioned table (use write(mode=overwrite))")
-      val cols = StructType.fromDDL(schemaDdl(dir, parent).get).fieldNames.toSeq
+      val schema = StructType.fromDDL(schemaDdl(dir, parent).get)
+      val cols = schema.fieldNames.toSeq
       require(cols.forall(df.columns.contains),
         s"df missing columns: ${cols.filterNot(df.columns.contains)}")
       val sel = df.select(cols.map(col): _*)
@@ -903,63 +966,20 @@ object SnapshotTable {
         s"partition value needs hive escaping, unsupported here: '$v'"))
       // manifests are file-level metadata (one coalesced file; the
       // merge path collects them the same way) — driver-side filter
-      val (parentRows, parentSchema) = manifestEntries(spark, dir, parent)
-        .getOrElse { val m = manifestFrame(spark, dir, parent); (m.collect(), m.schema) }
-      val Seq(pathAt, baseAt, rowsAt) =
-        Seq("path", "base", "rows").map(parentSchema.fieldIndex)
+      val (parentRows, parentSchema) = manifestSet(spark, dir, parent)
+        .fold(m => (m.collect(), m.schema), identity)
+      val Seq(pathAt, baseAt) = Seq("path", "base").map(parentSchema.fieldIndex)
       val keep = parentRows.filter { r =>
         !affected.contains(
           entryPartition(r.getString(pathAt), r.getString(baseAt), partitionBy).toList)
       }
-      val token = java.util.UUID.randomUUID.toString.take(12)
+      val token = newToken()
       val dataDir = s"$dir/data/w-$token"
       sel.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dataDir)
       val effStats = statsColumns(dir, parent).filter(cols.contains)
-      val statAggs = effStats.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"min_$c"),
-        max(col(c)).cast("string").as(s"max_$c")))
-      val newEntries = spark.read
-        .option("basePath", dataDir)
-        .schema(StructType.fromDDL(schemaDdl(dir, parent).get))
-        .parquet(dataDir)
-        .groupBy(input_file_name().as("path"))
-        .agg(count(lit(1)).as("rows"), statAggs: _*)
-        .withColumn("base", lit(dataDir))
-      val snap = parent + 1
-      val manifestRel = s"manifests/snap-$snap-$token"
-      // the new files' entries are metadata-sized: one collect, and the
-      // commit totals come from the entries in hand
-      val stamped = newEntries.withColumn("snapshot_id", lit(snap))
-      val fresh: Entries = (stamped.collect(), stamped.schema)
-      val written = writeManifest(spark, s"$dir/$manifestRel",
-        Right(unionEntries((keep, parentSchema), fresh)))
-      val freshRowsAt = fresh._2.fieldIndex("rows")
-      val nFiles = keep.length.toLong + fresh._1.length
-      val nRows = keep.map(_.getLong(rowsAt)).sum + fresh._1.map(_.getLong(freshRowsAt)).sum
-      val racedKey = snapshotWithKey(dir, idempotencyKey)
-      if (racedKey.isDefined) {
-        deleteRecursively(Paths.get(dataDir))
-        cleanWriterAttempts(dir, token, keepRel = None)
-        return racedKey.get
-      }
-      try {
-        commitCas(dir, snap, "overwrite_partitions", parent,
-          StructType.fromDDL(schemaDdl(dir, parent).get).toDDL, partitionBy,
-          manifestRel, nFiles, nRows, idempotencyKey, effStats)
-        written.foreach(cachePut(s"$dir/$manifestRel", _))
-        cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
-        return snap
-      } catch {
-        case _: FileAlreadyExistsException =>
-          // lost the race: the kept set was derived from the old
-          // parent — recompute everything from detection
-          deleteRecursively(Paths.get(dataDir))
-          cleanWriterAttempts(dir, token, keepRel = None)
-          attempt += 1
-          require(attempt < 20, s"overwrite_partitions contention on $dir")
-      }
+      Staged(schema.toDDL, partitionBy, effStats, KeepSome(Right((keep, parentSchema))),
+        Some(newFileEntries(spark, dataDir, schema, effStats)), token, fromParent = true)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Copy-on-write MERGE (the Iceberg MERGE INTO analogue): upsert
@@ -1021,13 +1041,10 @@ object SnapshotTable {
       upsert: Option[DataFrame], keys: DataFrame, keyCols: Seq[String],
       operation: String, idempotencyKey: String): Long = {
     require(keyCols.nonEmpty, s"$operation needs at least one key column")
-    val already = snapshotWithKey(dir, idempotencyKey)
-    if (already.isDefined) return already.get
-    var attempt = 0
-    while (true) {
-      val parent = currentSnapshot(dir)
+    commit(spark, dir, operation, idempotencyKey) { parent =>
       require(parent > 0, s"no snapshot in $dir to $operation into")
-      val cols = StructType.fromDDL(schemaDdl(dir, parent).get).fieldNames.toSeq
+      val schema = StructType.fromDDL(schemaDdl(dir, parent).get)
+      val cols = schema.fieldNames.toSeq
       require(keyCols.forall(cols.contains), s"key not in table: $keyCols")
       val upd = upsert.map { u =>
         require(cols.forall(u.columns.contains),
@@ -1041,10 +1058,9 @@ object SnapshotTable {
       require(keyCols.forall(keys.columns.contains),
         s"keys missing columns: ${keyCols.filterNot(keys.columns.contains)}")
       val updKeys = upd.getOrElse(keys).select(keyCols.map(col): _*).distinct()
-      val manifestDf = manifestFrame(spark, dir, parent)
-      val entRows = manifestDf.select(col("path"), col("base"), col("rows"))
-        .collect()
-      val allEntries = entRows.map(r => (r.getString(0), r.getString(1)))
+      val parentEntries = manifestSet(spark, dir, parent)
+      val manifestDf = frame(spark, parentEntries)
+      val allEntries = entryPaths(manifestDf)
       // stats-pruned detection: files whose [min,max] bounds on a
       // stats-covered key column intersect NO update key cannot be
       // affected — skip scanning them entirely. Null/absent bounds are
@@ -1055,7 +1071,7 @@ object SnapshotTable {
         keyCols.contains(c) && manifestDf.columns.contains(s"min_$c"))
       val candEntries = statKey match {
         case Some(c) =>
-          val dt = StructType.fromDDL(schemaDdl(dir, parent).get)(c).dataType
+          val dt = schema(c).dataType
           val ranged = manifestDf.select(col("path"),
             col(s"min_$c").cast(dt).as("_lo"), col(s"max_$c").cast(dt).as("_hi"))
           val hit = ranged.filter(col("_lo").isNotNull && col("_hi").isNotNull)
@@ -1083,122 +1099,35 @@ object SnapshotTable {
         .join(updKeys, keyCols, "left_anti")
       val rewritten = upd.fold(survivors)(survivors.unionByName(_))
       val partitionBy = partitionSpec(dir, parent)
-      val token = java.util.UUID.randomUUID.toString.take(12)
+      val token = newToken()
       val dataDir = s"$dir/data/w-$token"
       val writer = rewritten.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      try (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dataDir)
-      val snap = parent + 1
+      finally upd.foreach(_.unpersist())
       // rewritten files carry the same stats coverage the table
       // declared, so a merged table keeps pruning
       val mergeStats = statsColumns(dir, parent).filter(cols.contains)
         .filterNot(partitionBy.contains)
-      val mergeStatAggs = mergeStats.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"min_$c"),
-        max(col(c)).cast("string").as(s"max_$c")))
-      // stats-free tables AND tables whose stats columns are integral
-      // take the driver-side footer path (the write() convention — no
-      // Spark re-read of the rewrite); string/fractional stats columns
-      // keep the distributed aggregate, which must see the rows. A
-      // delete that empties every affected file leaves dataDir with
-      // zero part files: footers list none, and the schema'd read
-      // reads empty.
-      val tableSchema = StructType.fromDDL(schemaDdl(dir, parent).get)
-      val newFooter: Option[(Entries, (Long, Long))] =
-        if (mergeStats.forall(c => footerExactType(tableSchema(c).dataType))) {
-          footerStatEntries(spark, dataDir, mergeStats).map { files =>
-            val entries = files.filter(_._2 > 0)
-            val ddl = (Seq("path STRING", "rows BIGINT") ++
-              mergeStats.flatMap(c => Seq(s"min_$c STRING", s"max_$c STRING")) ++
-              Seq("base STRING", "snapshot_id BIGINT")).mkString(", ")
-            ((entries.map { case (pth, r, bounds) =>
-                Row.fromSeq(Seq(pth, r) ++
-                  bounds.flatMap(b => Seq(b._1, b._2)) ++ Seq(dataDir, snap))
-              }.toArray, StructType.fromDDL(ddl)),
-              (entries.size.toLong, entries.map(_._2).sum))
-          }
-        } else None
-      val newEntries: Either[DataFrame, Entries] = newFooter.map(f => Right(f._1))
-        .getOrElse(Left(spark.read
-          .schema(StructType.fromDDL(schemaDdl(dir, parent).get))
-          .parquet(dataDir)
-          .groupBy(input_file_name().as("path"))
-          .agg(count(lit(1)).as("rows"), mergeStatAggs: _*)
-          .withColumn("base", lit(dataDir))
-          .withColumn("snapshot_id", lit(snap))))
       val affectedSet = affected.toSet
-      val manifestRel = s"manifests/snap-$snap-$token"
-      val written = writeManifest(spark, s"$dir/$manifestRel",
-        (manifestEntries(spark, dir, parent), newEntries) match {
-          case (Some((rows, schema)), Right(e)) =>
-            val pathAt = schema.fieldIndex("path")
-            Right(unionEntries(
-              (rows.filterNot(r => affectedSet.contains(r.getString(pathAt))), schema), e))
-          case (_, e) => Left(manifestDf.join(affectedDf, Seq("path"), "left_anti")
-            .unionByName(e.fold(identity, toFrame(spark, _)), allowMissingColumns = true))
+      val kept = parentEntries.fold(
+        _ => Left(manifestDf.join(affectedDf, Seq("path"), "left_anti")),
+        { case (rows, s) =>
+          val at = s.fieldIndex("path")
+          Right((rows.filterNot(r => affectedSet.contains(r.getString(at))), s))
         })
-      upd.foreach(_.unpersist())
-      // commit totals: kept entries (from the already-collected parent
-      // manifest rows) + this rewrite's entries — no manifest re-read
-      val keptRows = entRows.filterNot(r => affectedSet.contains(r.getString(0)))
-      val newTotals: (Long, Long) = newFooter.map(_._2).getOrElse {
-        val r = spark.read.parquet(s"$dir/$manifestRel")
-          .filter(col("snapshot_id") === snap)
-          .agg(count(lit(1)), coalesce(sum(col("rows")), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val stats = (keptRows.length.toLong + newTotals._1,
-        keptRows.map(_.getLong(2)).sum + newTotals._2)
-      // a racer may have committed our key while we computed: our files
-      // are unreferenced — reclaim them and return the racer's snapshot
-      val racedKey = snapshotWithKey(dir, idempotencyKey)
-      if (racedKey.isDefined) {
-        deleteRecursively(Paths.get(dataDir))
-        cleanWriterAttempts(dir, token, keepRel = None)
-        return racedKey.get
-      }
-      try {
-        commitCas(dir, snap, operation, parent,
-          StructType.fromDDL(schemaDdl(dir, parent).get).toDDL, partitionBy,
-          manifestRel, stats._1, stats._2, idempotencyKey,
-          mergeStats)
-        written.foreach(cachePut(s"$dir/$manifestRel", _))
-        cleanWriterAttempts(dir, token, keepRel = Some(manifestRel))
-        return snap
-      } catch {
-        case _: FileAlreadyExistsException =>
-          // lost the CAS: the rewrite is stale against the new parent —
-          // reclaim this attempt's files and RECOMPUTE from detection
-          deleteRecursively(Paths.get(dataDir))
-          cleanWriterAttempts(dir, token, keepRel = None)
-          attempt += 1
-          require(attempt < 20, s"$operation contention on $dir")
-      }
+      Staged(schema.toDDL, partitionBy, mergeStats, KeepSome(kept),
+        Some(newFileEntries(spark, dataDir, schema, mergeStats)), token, fromParent = true)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      val stream = Files.walk(p)
+      try stream.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally stream.close()
     }
-
-  /** Delete this writer token's manifest attempt dirs, except the one
-    * (if any) a committed snapshot references.
-    */
-  private def cleanWriterAttempts(dir: String, token: String,
-      keepRel: Option[String]): Unit = {
-    val root = Paths.get(dir, "manifests")
-    if (!Files.exists(root)) return
-    import scala.jdk.CollectionConverters._
-    val stream = Files.list(root)
-    try stream.iterator().asScala.toSeq
-      .filter(_.getFileName.toString.endsWith(s"-$token"))
-      .filterNot(p => keepRel.contains(s"manifests/${p.getFileName.toString}"))
-      .foreach(deleteRecursively)
-    finally stream.close()
-  }
 
   private def emptyOf(spark: SparkSession, dir: String, snap: Long): DataFrame = {
     val ddl = schemaDdl(dir, snap).getOrElse(
@@ -1245,10 +1174,7 @@ object SnapshotTable {
       snapshot: Option[Long] = None): DataFrame = {
     val snap = snapshot.getOrElse(currentSnapshot(dir))
     require(snap > 0, s"no snapshot in $dir")
-    val entries = manifestFrame(spark, dir, snap)
-      .select(col("path"), col("base")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    assemble(spark, dir, snap, entries)
+    assemble(spark, dir, snap, entryPaths(manifestFrame(spark, dir, snap)))
   }
 
   /** Manifest entries of `snap` that could hold a row with
@@ -1270,9 +1196,8 @@ object SnapshotTable {
         val mx = col(s"max_$keyCol").cast(dt)
         mn.isNull || mx.isNull || !(mx < lit(lo).cast(dt) || mn > lit(hi).cast(dt))
       }
-    val rows = m.select(col("path"), col("base"), keep.as("_keep")).collect()
-    (rows.filter(_.getBoolean(2)).map(r => (r.getString(0), r.getString(1))),
-      rows.length.toLong)
+    // the recorded data_files count is the manifest's entry count
+    (entryPaths(m, keep), recordedTotals(dir, snap)._1)
   }
 
   /** Read the rows with `lo <= keyCol <= hi` (bounds as strings, cast
@@ -1349,8 +1274,7 @@ object SnapshotTable {
           size(array_intersect(col(bloomCol),
             array(pos.map(lit(_)): _*))) === pos.size
       }
-    val kept = m.filter(keep).select(col("path"), col("base")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
+    val kept = entryPaths(m, keep)
     val dt = StructType.fromDDL(schemaDdl(dir, snap).get)(keyCol).dataType
     assemble(spark, dir, snap, kept)
       .filter(col(keyCol) === lit(value).cast(dt))
@@ -1403,11 +1327,8 @@ object SnapshotTable {
       snapshot: Option[Long] = None): DataFrame = {
     val snap = snapshot.getOrElse(currentSnapshot(dir))
     require(snap > sinceSnapshot, s"no delta: $snap <= $sinceSnapshot")
-    val entries = manifestFrame(spark, dir, snap)
-      .filter(col("snapshot_id") > sinceSnapshot)
-      .select(col("path"), col("base")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    assemble(spark, dir, snap, entries)
+    assemble(spark, dir, snap, entryPaths(manifestFrame(spark, dir, snap),
+      col("snapshot_id") > sinceSnapshot))
   }
 
   /** Row-level change-data-feed between two snapshots: every row
@@ -1432,12 +1353,8 @@ object SnapshotTable {
     val to = snapshot.getOrElse(currentSnapshot(dir))
     require(fromSnapshot >= 1, s"no snapshot $fromSnapshot in $dir")
     require(to >= fromSnapshot, s"changes needs from <= to: $fromSnapshot > $to")
-    def entriesOf(snap: Long): Array[(String, String)] =
-      manifestFrame(spark, dir, snap)
-        .select(col("path"), col("base")).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-    val fromE = entriesOf(fromSnapshot)
-    val toE = entriesOf(to)
+    val fromE = entryPaths(manifestFrame(spark, dir, fromSnapshot))
+    val toE = entryPaths(manifestFrame(spark, dir, to))
     val fromPaths = fromE.map(_._1).toSet
     val toPaths = toE.map(_._1).toSet
     val added = toE.filterNot(e => fromPaths.contains(e._1))
@@ -1602,10 +1519,7 @@ object SnapshotTable {
         val cur = refSnapshot(dir, name)
         require(cur == e, s"ref '$name' moved: expected $e, found $cur")
       }
-      val tmp = p.resolveSibling(s"$name.json.tmp-$snap")
-      Files.writeString(tmp, s"""{"snapshot":$snap}""")
-      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      replaceAtomically(p, s"""{"snapshot":$snap}""")
     }
   }
 
@@ -1663,8 +1577,7 @@ object SnapshotTable {
       snaps.toSeq.flatMap { s =>
         val m = manifestDir(dir, s)
         if (!Files.exists(Paths.get(m))) Nil
-        else spark.read.parquet(m)
-          .select(col("path")).collect().map(_.getString(0)).toSeq
+        else entryPaths(manifestFrame(spark, dir, s)).map(_._1).toSeq
       }.toSet
     val retained = files(keep)
     val orphans = files(expire) -- retained
@@ -1674,11 +1587,7 @@ object SnapshotTable {
       Files.deleteIfExists(p)
     }
     expire.foreach { s =>
-      import scala.jdk.CollectionConverters._
-      val m = Paths.get(manifestDir(dir, s))
-      if (Files.exists(m))
-        Files.walk(m).iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
+      deleteRecursively(Paths.get(manifestDir(dir, s)))
       Files.deleteIfExists(versionPath(dir, s))
     }
     sweepOrphans(spark, dir, keep, retained, sweepOrphansOlderThanMs)

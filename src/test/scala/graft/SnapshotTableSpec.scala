@@ -1458,6 +1458,152 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, dir).select("id").as[String].collect().toSet ==
       Set("base", "a", "b"))
   }
+
+  // ---- the one commit path ----------------------------------------------
+
+  def dataDirs(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
+
+  /** Runs `loser`, and `racer` in another thread the moment the loser
+    * starts writing its manifest attempt for snapshot `n`: the racer
+    * commits `n`, the loser's CAS on `n` fails and it commits on top.
+    * Returns (racer's snapshot, loser's snapshot, the lost attempt's dir).
+    */
+  def raced(dir: String, n: Long)(racer: => Long)(loser: => Long): (Long, Long, String) = {
+    @volatile var lost: String = null
+    @volatile var won = 0L
+    RaceFs.before = { f =>
+      lost = f.getParent.toUri.getPath
+      val b = new Thread(() => won = racer)
+      b.start(); b.join()
+    }
+    RaceFs.trigger = s"$dir/manifests/snap-$n-"
+    spark.conf.set("fs.file.impl", classOf[RaceFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    val got = try loser finally {
+      spark.conf.unset("fs.file.impl"); spark.conf.unset("fs.file.impl.disable.cache")
+      RaceFs.trigger = null
+    }
+    (won, got, lost)
+  }
+
+  /** After a lost CAS: the loser committed on top of the racer, its lost
+    * manifest is gone and was never cached, and every data dir left is
+    * one a committed manifest references (the stale rewrite is gone).
+    */
+  def assertLoserReclaimed(dir: String, n: Long, got: (Long, Long, String)): Unit = {
+    val (won, mine, lost) = got
+    assert(won == n && mine == n + 1, s"racer=$won loser=$mine")
+    assert(SnapshotTable.history(dir).find(_.id == mine).exists(_.parent == n))
+    assert(lost != null && lost != SnapshotTable.manifestDir(dir, n), lost)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(lost)), lost)
+    assert(!SnapshotTable.manifestCached(lost))
+    val bases = SnapshotTable.history(dir).flatMap(s =>
+      spark.read.parquet(SnapshotTable.manifestDir(dir, s.id)).select("base")
+        .as[String].collect()).map(b => java.nio.file.Paths.get(b).getFileName.toString)
+    assert(dataDirs(dir) == bases.toSet, s"${dataDirs(dir)} vs ${bases.toSet}")
+  }
+
+  test("a lost-CAS merge restages on the winner and reclaims its stale attempt") {
+    val dir = java.nio.file.Files.createTempDirectory("racemerge").toString + "/t"
+    SnapshotTable.write(spark.range(0, 40, 1, 4).toDF("id")
+      .withColumn("v", lit("old")), dir)
+    val got = raced(dir, 2)(SnapshotTable.merge(spark, dir,
+      Seq((3L, "racer")).toDF("id", "v"), Seq("id"))) {
+      SnapshotTable.merge(spark, dir, Seq((30L, "loser")).toDF("id", "v"), Seq("id"))
+    }
+    assertLoserReclaimed(dir, 2, got)
+    val head = SnapshotTable.read(spark, dir).as[(Long, String)].collect().toMap
+    assert(head.size == 40 && head(3L) == "racer" && head(30L) == "loser" &&
+      head(4L) == "old")
+  }
+
+  test("a lost-CAS delete restages on the winner and reclaims its stale attempt") {
+    val dir = java.nio.file.Files.createTempDirectory("racedel").toString + "/t"
+    SnapshotTable.write(spark.range(0, 40, 1, 4).toDF("id"), dir)
+    val got = raced(dir, 2)(SnapshotTable.delete(spark, dir,
+      Seq(3L).toDF("id"), Seq("id"))) {
+      SnapshotTable.delete(spark, dir, Seq(30L).toDF("id"), Seq("id"))
+    }
+    assertLoserReclaimed(dir, 2, got)
+    assert(SnapshotTable.read(spark, dir).as[Long].collect().toSet ==
+      (0L until 40L).toSet -- Set(3L, 30L))
+  }
+
+  test("a lost-CAS overwritePartitions restages on the winner and reclaims its stale attempt") {
+    val dir = java.nio.file.Files.createTempDirectory("raceowp").toString + "/t"
+    SnapshotTable.write(spark.range(0, 40, 1, 2).select(col("id"),
+      concat(lit("p"), col("id") % 4).as("part")), dir, partitionBy = Seq("part"))
+    val got = raced(dir, 2)(SnapshotTable.overwritePartitions(
+      Seq((100L, "p0")).toDF("id", "part"), dir)) {
+      SnapshotTable.overwritePartitions(Seq((200L, "p1")).toDF("id", "part"), dir)
+    }
+    assertLoserReclaimed(dir, 2, got)
+    val head = SnapshotTable.read(spark, dir).select("id", "part").as[(Long, String)]
+      .collect().toSet
+    assert(head == (0L until 40L).filter(_ % 4 > 1).map(i => (i, s"p${i % 4}")).toSet ++
+      Set((100L, "p0"), (200L, "p1")))
+  }
+
+  test("commit totals: every mutation records its manifest's entries and rows") {
+    def assertTotals(dir: String): Unit = {
+      val snap = SnapshotTable.currentSnapshot(dir)
+      val h = SnapshotTable.history(dir).find(_.id == snap).get
+      val entries = spark.read.parquet(SnapshotTable.manifestDir(dir, snap)).count()
+      val rows = SnapshotTable.read(spark, dir).count()
+      assert((h.files, h.rows) == ((entries, rows)), s"${h.operation} @ $snap")
+    }
+    val root = java.nio.file.Files.createTempDirectory("totals").toString
+    // integral stats: the footer path, appended onto its parent's totals
+    val ints = s"$root/ints"
+    SnapshotTable.write(spark.range(0, 30, 1, 3).toDF("v"), ints, statsCols = Seq("v"))
+    SnapshotTable.write(spark.range(30, 50, 1, 2).toDF("v"), ints, mode = "append")
+    assertTotals(ints)
+    // string stats: merge and delete take the distributed aggregate
+    val strs = s"$root/strs"
+    SnapshotTable.write((0 until 40).map(i => (s"k$i", i)).toDF("id", "n")
+      .repartition(4), strs, statsCols = Seq("id"))
+    SnapshotTable.merge(spark, strs, Seq(("k3", -3), ("k99", 99)).toDF("id", "n"),
+      Seq("id"))
+    assert(sparkWritten(SnapshotTable.manifestDir(strs, 2)))
+    assertTotals(strs)
+    SnapshotTable.delete(spark, strs, Seq("k5", "k6").toDF("id"), Seq("id"))
+    assertTotals(strs)
+    assert(SnapshotTable.read(spark, strs).count() == 39)
+    // a rollback takes its target's recorded totals
+    SnapshotTable.rollback(spark, strs, 1L)
+    assertTotals(strs)
+    assert(SnapshotTable.read(spark, strs).count() == 40)
+    // overwritePartitions on a stats-free table: footer entries, no job
+    // beyond the partition detection and the data write themselves
+    val parts = s"$root/parts"
+    SnapshotTable.write(spark.range(0, 40, 1, 2).select(col("id"),
+      concat(lit("p"), col("id") % 4).as("part")), parts, partitionBy = Seq("part"))
+    val reland = Seq((100L, "p1"), (101L, "p1"), (200L, "p7")).toDF("id", "part")
+    val (_, detectAndWrite) = graft.tools.Profile.recordJobs(spark) {
+      reland.select("part").distinct().collect()
+      reland.write.mode("overwrite").partitionBy("part").parquet(s"$root/scratch")
+    }
+    val (_, jobs) = graft.tools.Profile.recordJobs(spark)(
+      SnapshotTable.overwritePartitions(reland, parts))
+    assert(jobs.size == detectAndWrite.size, s"$jobs vs $detectAndWrite")
+    assertTotals(parts)
+    assert(SnapshotTable.read(spark, parts).count() == 33)
+  }
+
+  test("expireSnapshots reads driver-written manifests without a Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("expirejobs").toString + "/t"
+    (0 until 3).foreach(i => SnapshotTable.write(Seq((s"r$i", i)).toDF("id", "v"), dir))
+    (1L to 3L).foreach(s => assert(!sparkWritten(SnapshotTable.manifestDir(dir, s)), s))
+    val ((expired, deleted), jobs) = graft.tools.Profile.recordJobs(spark)(
+      SnapshotTable.expireSnapshots(spark, dir, keepLast = 1))
+    assert(jobs.isEmpty, jobs)
+    assert(expired == Seq(1L, 2L) && deleted == 2L, s"$expired $deleted")
+    assert(SnapshotTable.read(spark, dir).as[(String, Int)].collect().toSeq == Seq(("r2", 2)))
+  }
 }
 
 /** A local file system that runs [[RaceFs.before]] once, ahead of
