@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
   * SPARQL endpoint — e.g. the CS query patterns in
   * case-studies/CS3/CS3_query.rq-style star/chain shapes).
   *
-  * Compilation is Spark-first, not an interpreter:
+  * One planner ([[plan]]) and two executors. [[compile]] turns the plan
+  * into a Spark join plan; [[LocalTriples.evaluate]] runs the same plan
+  * on the driver over an interned copy of a table that fits the row
+  * guard, where a Spark plan's fixed cost (planning, stage submission,
+  * codegen) would outweigh its joins. The Spark arm:
   *
   *  - each triple pattern becomes ONE pred/subj/obj-CONSTANT-filtered
   *    projection of the triple table, so every constant is a pushdown
@@ -25,6 +29,9 @@ import org.apache.spark.sql.functions._
   *    genuinely disconnected one fails fast instead of exploding;
   *  - a variable repeated WITHIN one pattern compiles to an intra-row
   *    equality filter before projection (?x ?p ?x → subj = obj).
+  *
+  * The driver arm runs the same steps as hash equi-joins of Int rows,
+  * with the filters' null, double-cast and `rlike` semantics.
   *
   * At scale: same-subject star joins run exchange-free over the
   * subj-bucketed triple tables ([[Bucketing]]); dimension-sized pattern
@@ -144,10 +151,7 @@ object Bgp {
     }
   }
 
-  private def filterColumn(f: FilterExpr, bound: Set[String]): Column = {
-    val missing = f.vars.filterNot(bound)
-    require(missing.isEmpty,
-      s"FILTER references unbound variables: ${missing.mkString(",")}")
+  private def filterColumn(f: FilterExpr): Column = {
     def cmp(l: Column, op: String, r: Column): Column = op match {
       case "=" => l === r
       case "!=" => l =!= r
@@ -159,12 +163,14 @@ object Bgp {
     f match {
       case Cmp(l, op, V(n)) => cmp(col(l), op, col(n))
       case Cmp(l, op, C(v)) => cmp(col(l), op, lit(v))
-      case Cmp(l, op, other) => throw new IllegalArgumentException(
-        s"unsupported FILTER rhs $other for ?$l $op")
+      case Cmp(l, op, other) => throw unsupportedRhs(l, op, other)
       case NumCmp(l, op, v) => cmp(col(l).cast("double"), op, lit(v))
       case Regex(v, p) => col(v).rlike(p)
     }
   }
+
+  private[ops] def unsupportedRhs(l: String, op: String, rhs: Term) =
+    new IllegalArgumentException(s"unsupported FILTER rhs $rhs for ?$l $op")
 
   /** Parse a compact BGP string: `.`-separated triples of
     * whitespace-separated terms. `?x` = variable; `<iri>` = absolute
@@ -261,19 +267,30 @@ object Bgp {
     eqFiltered.select(proj: _*)
   }
 
-  /** Greedy-selective join of a connected pattern group → (plan, bound
-    * variable set). Seed = most constants; then always the pattern
-    * sharing the most already-bound variables.
+  /** One join step: a pattern and the variables it shares with the
+    * patterns before it (sorted; none for a group's seed).
     */
-  private def joinPatterns(triples: DataFrame, patterns: Seq[Pattern],
-      plusRounds: Int): (DataFrame, Set[String]) = {
+  private[ops] type Step = (Pattern, Seq[String])
+
+  /** What both executors run: the required group's steps, each OPTIONAL
+    * group's steps with the variables it left-joins on, and the
+    * group-level filters, applied after every join.
+    */
+  private[ops] final case class Plan(required: Seq[Step],
+      optionals: Seq[(Seq[Step], Seq[String])], filters: Seq[FilterExpr])
+
+  /** Greedy-selective order of a connected pattern group. Seed = most
+    * constants; then always the pattern sharing the most already-bound
+    * variables (ties: more constants, then input order).
+    */
+  private def joinOrder(patterns: Seq[Pattern]): Seq[Step] = {
     require(patterns.nonEmpty, "empty pattern group")
     val seedIdx = patterns.zipWithIndex.maxBy { case (p, i) =>
       (p.nConsts, -i)
     }._2
     var remaining = patterns.zipWithIndex.filterNot(_._2 == seedIdx)
-    var plan = scan(triples, patterns(seedIdx), plusRounds)
     var bound = patterns(seedIdx).vars
+    val steps = Seq.newBuilder[Step] += (patterns(seedIdx) -> Nil)
     while (remaining.nonEmpty) {
       val (next, idx) = remaining.maxBy { case (p, i) =>
         ((p.vars & bound).size, p.nConsts, -i)
@@ -283,11 +300,41 @@ object Bgp {
         "disconnected BGP: pattern shares no variable with the bound set " +
           s"(bound = ${bound.toSeq.sorted.mkString(",")}); " +
           "cartesian products are refused")
-      plan = plan.join(scan(triples, next, plusRounds), shared)
+      steps += (next -> shared)
       bound ++= next.vars
       remaining = remaining.filterNot(_._2 == idx)
     }
-    (plan, bound)
+    steps.result()
+  }
+
+  /** The plan of a query, checked: every selected variable is bound by
+    * some pattern, each pattern group is connected, each OPTIONAL group
+    * shares a variable with what is bound before it, and each filter
+    * reads only bound variables.
+    */
+  private[ops] def plan(patterns: Seq[Pattern], select: Seq[String],
+      optionals: Seq[Seq[Pattern]], filters: Seq[FilterExpr]): Plan = {
+    val boundable = (patterns ++ optionals.flatten).flatMap(_.vars).toSet
+    val missing = select.filterNot(boundable)
+    require(missing.isEmpty,
+      s"select variables not bound by any pattern: ${missing.mkString(",")}")
+    val required = joinOrder(patterns)
+    var bound = patterns.flatMap(_.vars).toSet
+    val opts = optionals.map { group =>
+      val steps = joinOrder(group)
+      val gvars = group.flatMap(_.vars).toSet
+      val shared = (gvars & bound).toSeq.sorted
+      require(shared.nonEmpty,
+        "OPTIONAL group shares no variable with the required patterns")
+      bound ++= gvars
+      (steps, shared)
+    }
+    filters.foreach { f =>
+      val unbound = f.vars.filterNot(bound)
+      require(unbound.isEmpty,
+        s"FILTER references unbound variables: ${unbound.mkString(",")}")
+    }
+    Plan(required, opts, filters)
   }
 
   /** Compile a BGP to a DataFrame of variable bindings (SPARQL bag
@@ -303,23 +350,18 @@ object Bgp {
       select: Seq[String], plusRounds: Int = 4,
       optionals: Seq[Seq[Pattern]] = Nil,
       filters: Seq[FilterExpr] = Nil): DataFrame = {
-    val boundable = (patterns ++ optionals.flatten).flatMap(_.vars).toSet
-    val missing = select.filterNot(boundable)
-    require(missing.isEmpty,
-      s"select variables not bound by any pattern: ${missing.mkString(",")}")
-    var (plan, bound) = joinPatterns(triples, patterns, plusRounds)
-    optionals.foreach { group =>
-      val (g, gvars) = joinPatterns(triples, group, plusRounds)
-      val shared = (gvars & bound).toSeq.sorted
-      require(shared.nonEmpty,
-        "OPTIONAL group shares no variable with the required patterns")
-      plan = plan.join(g, shared, "left_outer")
-      bound ++= gvars
+    val p = plan(patterns, select, optionals, filters)
+    def joined(steps: Seq[Step]): DataFrame =
+      steps.tail.foldLeft(scan(triples, steps.head._1, plusRounds)) {
+        case (df, (pat, keys)) => df.join(scan(triples, pat, plusRounds), keys)
+      }
+    val withOptionals = p.optionals.foldLeft(joined(p.required)) {
+      case (df, (steps, keys)) => df.join(joined(steps), keys, "left_outer")
     }
     // group-level filters: Catalyst pushes single-variable predicates
     // down into the pattern scans on its own; multi-variable ones stay
     // at the first join where both sides are bound
-    filters.foldLeft(plan)((p, f) => p.filter(filterColumn(f, bound)))
+    p.filters.foldLeft(withOptionals)((df, f) => df.filter(filterColumn(f)))
       .select(select.map(col): _*)
   }
 

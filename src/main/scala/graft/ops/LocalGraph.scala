@@ -30,6 +30,9 @@ final class LocalGraph private (
 
   def outDegree(v: Int): Int = outOff(v + 1) - outOff(v)
 
+  /** The out-neighbours of `v`, ascending. */
+  def successors(v: Int): Iterator[Int] = Iterator.range(outOff(v), outOff(v + 1)).map(outAdj)
+
   /** The undirected neighbours of `v`, ascending. */
   def neighbors(v: Int): Iterator[Int] = Iterator.range(symOff(v), symOff(v + 1)).map(symAdj)
 
@@ -155,9 +158,7 @@ object LocalGraph {
   /** The graph of distinct directed edges (src, dst), src ≠ dst. */
   def apply(directed: Seq[(String, String)]): LocalGraph = {
     directed.foreach { case (s, d) => require(s != d, s"self-loop at $s") }
-    val names = directed.iterator.flatMap { case (s, d) => Iterator(s, d) }
-      .toArray.distinct.map(s => UTF8String.fromString(s) -> s)
-      .sortWith((a, b) => a._1.binaryCompare(b._1) < 0).map(_._2)
+    val names = sparkOrder(directed.iterator.flatMap { case (s, d) => Iterator(s, d) })
     val rank = names.iterator.zipWithIndex.toMap
     val out = directed.map { case (s, d) => (rank(s), rank(d)) }.distinct
     val sym = out.flatMap { case (s, d) => Seq((s, d), (d, s)) }.distinct
@@ -165,6 +166,11 @@ object LocalGraph {
     val (symOff, symAdj) = csr(names.length, sym)
     new LocalGraph(names, outOff, outAdj, symOff, symAdj)
   }
+
+  /** The distinct `terms`, ascending in Spark's string order. */
+  private[ops] def sparkOrder(terms: Iterator[String]): Array[String] =
+    terms.toArray.distinct.map(s => UTF8String.fromString(s) -> s)
+      .sortWith((a, b) => a._1.binaryCompare(b._1) < 0).map(_._2)
 
   /** Offsets and targets of a CSR over `n` nodes, each slice ascending. */
   private def csr(n: Int, edges: Seq[(Int, Int)]): (Array[Int], Array[Int]) = {

@@ -9,17 +9,24 @@ import graft.ops.{Bucketing, Par}
 /** Once-per-(session, scale) materialization of the pipeline's big
   * intermediates, shared by every kg_* driver query:
   *
-  *  - records + distributed-matcher output (persisted) — so the
-  *    triple/canonical/SPARQL queries stop re-running datagen+extract+
-  *    link each (the round-1 bench spent ~34 s re-deriving them inside
-  *    kg_pipeline_canonical alone);
+  *  - records + matcher output (persisted; the driver-local matcher
+  *    while the distinct taxa fit the row guard, the distributed one
+  *    beyond) — so the triple/canonical/SPARQL queries stop re-running
+  *    datagen+extract+link each (the round-1 bench spent ~34 s
+  *    re-deriving them inside kg_pipeline_canonical alone);
   *  - the GloBI and TRY-db triple tables written BUCKETED BY subj
   *    (sorted; as many buckets as Spark's file split rule cuts the
   *    dump into, [[Bucketing.bucketCount]]) so the SPARQL self-join
   *    workload is exchange-free on every same-subject pattern join;
   *  - side-channel parquet dumps under [[SideDir]] (n_docs-stamped) that
   *    the DuckDB oracles read, which is what lets the driver
-  *    hash-verify the flagship outputs instead of taking rows-only.
+  *    hash-verify the flagship outputs instead of taking rows-only;
+  *  - through [[once]], the memos [[CaseStudyQueries.materializeShared]]
+  *    forces: the organism and taxonomy edge sets and, below the row
+  *    guard, their driver graphs (`ops/LocalGraph`) and the GloBI
+  *    table's driver triple index (`ops/LocalTriples`,
+  *    [[CaseStudyQueries.globiTriples]]), which the graph, BGP and
+  *    SPARQL queries read without a Spark job.
   *
   * The side-channel contract: every dump carries an n_docs column equal
   * to this run's corpus size, and the oracle SQL selects the dump whose
@@ -83,7 +90,8 @@ object Materialized {
     * [[Par.run]], which joins every build and rethrows the first
     * failure. The builds that share an upstream (globi, the taxonomy
     * paths and the organism graph all need [[recordsAndMatched]]; the
-    * organism graph needs [[globiTable]]) meet on [[once]]'s per-key
+    * organism graph and the driver triple index need [[globiTable]])
+    * meet on [[once]]'s per-key
     * locks, so each upstream is built once and its dependants wait for
     * it. The incremental-dedup state builds are not part of this set:
     * Bench times them as their own line.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg._
 import graft.ops.Bucketing
@@ -39,47 +39,79 @@ object SparqlQueries {
     t.filter(col("pred") === pred)
       .select(col("subj").as(s), col("obj").as(o))
 
-  /** query_globi_records.txt:3-12 — 7-pattern join through
-    * ?intxn/?source/?target, COUNT(*).
+  /** The pattern block both GloBI metric queries join, as a BGP: the
+    * driver arm's form of the joins below.
     */
-  def globiRecords(spark: SparkSession, dir: String): DataFrame = {
-    val t = spark.table(globiTable(spark, dir))
-    val intxn = pat(t, EMI + "hasSource", "intxn", "source")
-      .join(pat(t, EMI + "hasTarget", "intxn", "target"), Seq("intxn"))
-      .join(pat(t, EMI + "isClassifiedWith", "intxn", "itype"), Seq("intxn"))
-    val withType = intxn.join(pat(t, RDFS_LABEL, "itype", "intxnLabel"), Seq("itype"))
-    val src = pat(t, EMI + "inTaxon", "source", "wdxSource")
-      .join(pat(t, RDFS_LABEL, "source", "sourceName"), Seq("source"))
-    val tgt = pat(t, EMI + "inTaxon", "target", "wdxTarget")
-      .join(pat(t, RDFS_LABEL, "target", "targetName"), Seq("target"))
-    withType.join(src, Seq("source")).join(tgt, Seq("target"))
-      .agg(count(lit(1)).as("rowCount"))
-  }
+  private val globiBlock =
+    """?intxn emi:hasSource ?source .
+       ?intxn emi:hasTarget ?target .
+       ?intxn emi:isClassifiedWith ?itype .
+       ?itype rdfs:label ?intxnLabel .
+       ?source emi:inTaxon ?wdxSource .
+       ?source rdfs:label ?sourceName .
+       ?target emi:inTaxon ?wdxTarget .
+       ?target rdfs:label ?targetName"""
+
+  /** query_globi_records.txt:3-12 — 7-pattern join through
+    * ?intxn/?source/?target, COUNT(*). Under the row guard the block
+    * runs on the driver over [[CaseStudyQueries.globiTriples]] and the
+    * count comes back as a local relation (no Spark job), as for the
+    * kg_bgp_* queries; above it the joins below run, the reference arm.
+    */
+  def globiRecords(spark: SparkSession, dir: String,
+      maxDriverRows: Long = Model.MaxDriverRows): DataFrame =
+    CaseStudyQueries.globiTriples(spark, dir, maxDriverRows).map { ix =>
+      CaseStudyQueries.localRows(spark, "rowCount BIGINT",
+        Seq(Row(ix.query(globiBlock, Seq("intxn")).size.toLong)))
+    }.getOrElse {
+      val t = spark.table(globiTable(spark, dir))
+      val intxn = pat(t, EMI + "hasSource", "intxn", "source")
+        .join(pat(t, EMI + "hasTarget", "intxn", "target"), Seq("intxn"))
+        .join(pat(t, EMI + "isClassifiedWith", "intxn", "itype"), Seq("intxn"))
+      val withType = intxn.join(pat(t, RDFS_LABEL, "itype", "intxnLabel"), Seq("itype"))
+      val src = pat(t, EMI + "inTaxon", "source", "wdxSource")
+        .join(pat(t, RDFS_LABEL, "source", "sourceName"), Seq("source"))
+      val tgt = pat(t, EMI + "inTaxon", "target", "wdxTarget")
+        .join(pat(t, RDFS_LABEL, "target", "targetName"), Seq("target"))
+      withType.join(src, Seq("source")).join(tgt, Seq("target"))
+        .agg(count(lit(1)).as("rowCount"))
+    }
 
   /** query_globi_wikidata_ids.txt:3-17 — same pattern block + a UNION
     * merging source/target taxa into one variable, COUNT(DISTINCT ?wdx).
+    * Two arms, as [[globiRecords]]. On the driver the union is the
+    * block's own `?wdxSource`/`?wdxTarget` values: every row with a
+    * given `?source` carries each of its inTaxon objects as
+    * `?wdxSource`, so those values are exactly what probing inTaxon with
+    * the row's source yields (and likewise for the target).
     */
-  def globiWikidataIds(spark: SparkSession, dir: String): DataFrame = {
-    val t = spark.table(globiTable(spark, dir))
-    val intxn = pat(t, EMI + "hasSource", "intxn", "source")
-      .join(pat(t, EMI + "hasTarget", "intxn", "target"), Seq("intxn"))
-      .join(pat(t, EMI + "isClassifiedWith", "intxn", "itype"), Seq("intxn"))
-      .join(pat(t, RDFS_LABEL, "itype", "intxnLabel"), Seq("itype"))
-      .join(pat(t, EMI + "inTaxon", "source", "wdxSource")
-        .join(pat(t, RDFS_LABEL, "source", "sourceName"), Seq("source")), Seq("source"))
-      .join(pat(t, EMI + "inTaxon", "target", "wdxTarget")
-        .join(pat(t, RDFS_LABEL, "target", "targetName"), Seq("target")), Seq("target"))
-    val inTaxon = pat(t, EMI + "inTaxon", "s", "wdx")
-    // SPARQL's UNION of the source-side and target-side bindings, as ONE
-    // pass over the star join: explode each interaction row into its two
-    // taxon ends, then probe inTaxon once. The naive per-arm formulation
-    // referenced `intxn` twice and executed the whole 7-pattern join
-    // subtree once per arm — at corpus scale that doubles the most
-    // expensive serving join.
-    val ends = intxn.select(explode(array(col("source"), col("target"))).as("s"))
-    ends.join(inTaxon, Seq("s"))
-      .agg(countDistinct(col("wdx")).as("totalDistinctTaxa"))
-  }
+  def globiWikidataIds(spark: SparkSession, dir: String,
+      maxDriverRows: Long = Model.MaxDriverRows): DataFrame =
+    CaseStudyQueries.globiTriples(spark, dir, maxDriverRows).map { ix =>
+      CaseStudyQueries.localRows(spark, "totalDistinctTaxa BIGINT",
+        Seq(Row(ix.query(globiBlock, Seq("wdxSource", "wdxTarget"))
+          .flatten.distinct.size.toLong)))
+    }.getOrElse {
+      val t = spark.table(globiTable(spark, dir))
+      val intxn = pat(t, EMI + "hasSource", "intxn", "source")
+        .join(pat(t, EMI + "hasTarget", "intxn", "target"), Seq("intxn"))
+        .join(pat(t, EMI + "isClassifiedWith", "intxn", "itype"), Seq("intxn"))
+        .join(pat(t, RDFS_LABEL, "itype", "intxnLabel"), Seq("itype"))
+        .join(pat(t, EMI + "inTaxon", "source", "wdxSource")
+          .join(pat(t, RDFS_LABEL, "source", "sourceName"), Seq("source")), Seq("source"))
+        .join(pat(t, EMI + "inTaxon", "target", "wdxTarget")
+          .join(pat(t, RDFS_LABEL, "target", "targetName"), Seq("target")), Seq("target"))
+      val inTaxon = pat(t, EMI + "inTaxon", "s", "wdx")
+      // SPARQL's UNION of the source-side and target-side bindings, as ONE
+      // pass over the star join: explode each interaction row into its two
+      // taxon ends, then probe inTaxon once. The naive per-arm formulation
+      // referenced `intxn` twice and executed the whole 7-pattern join
+      // subtree once per arm — at corpus scale that doubles the most
+      // expensive serving join.
+      val ends = intxn.select(explode(array(col("source"), col("target"))).as("s"))
+      ends.join(inTaxon, Seq("s"))
+        .agg(countDistinct(col("wdx")).as("totalDistinctTaxa"))
+    }
 
   /** query_trydb_metrics.txt:6-22 — chain join + two OPTIONAL type
     * patterns (left joins) + three conditional COUNT DISTINCTs.

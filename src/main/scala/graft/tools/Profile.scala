@@ -2,8 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageSubmitted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
@@ -31,6 +32,10 @@ import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
   *       shared-table build (in Bench order, memo-incremental) and of the
   *       incremental state builds, labelled through the job description;
   *       tasks far above jobs × cores read as over-partitioning
+  *   setup <sfDir>
+  *       the shared-table set-up the graph queries read (the GloBI and
+  *       TRY-db tables, then [[CaseStudyQueries.materializeShared]]):
+  *       every Spark job with its call site, and the job count
   *   build <nDocs>
   *       one cold `Pipeline.runFromTable` over a fresh `DataGen` docs
   *       table (in a temp dir, deleted afterwards): every Spark job of
@@ -50,10 +55,11 @@ object Profile {
         planDump(_, sfDir, outDir, suffix, Verify.queryNames(names))
       case "sample" :: sfDir :: Nil => sample(_, sfDir)
       case "phases" :: sfDir :: Nil => phases(_, sfDir)
+      case "setup" :: sfDir :: Nil => setup(_, sfDir)
       case "build" :: nDocs :: Nil => build(_, nDocs.toLong)
       case _ =>
         System.err.println("usage: Profile plan <sfDir> [<outDir> <suffix>] <q1,q2,...>" +
-          " | sample <sfDir> | phases <sfDir> | build <nDocs>")
+          " | sample <sfDir> | phases <sfDir> | setup <sfDir> | build <nDocs>")
         sys.exit(2)
     }
     val spark = Session("graft-profile")
@@ -185,6 +191,7 @@ object Profile {
       "organismGraph" -> p(CaseStudyQueries.organismGraph(_, _)),
       "taxonomyEdges" -> p(CaseStudyQueries.taxonomyEdges),
       "taxonomyGraph" -> p(CaseStudyQueries.taxonomyGraph(_, _)),
+      "globiTriples" -> p(CaseStudyQueries.globiTriples(_, _)),
       // incremental_state_build
       "incLshState" -> p(PipelineQueries.incLshState),
       "incCosState" -> p(PipelineQueries.incCosState),
@@ -212,25 +219,40 @@ object Profile {
   case class Job(id: Int, label: String, site: String, seconds: Double)
 
   /** Runs `body` and returns the Spark jobs it scheduled, in id order.
-    * Listener events arrive asynchronously but in order, so a marker job
-    * run after `body` flushes them.
+    * A job of a SQL execution is named by that execution's call site
+    * (the `collect at File.scala:N` of the action, or the job
+    * description when one is set), through its root execution: AQE
+    * submits a query's stages and broadcasts from other threads, whose
+    * own call site is a `CompletableFuture` frame. Any other job is
+    * named by its result stage. Listener events arrive asynchronously
+    * but in order, so a marker job run after `body` flushes them.
     */
   private[graft] def recordJobs[A](spark: SparkSession)(body: => A): (A, Seq[Job]) = {
     val sc = spark.sparkContext
     val marker = s"graft-jobs-flush-${java.util.UUID.randomUUID}"
     val flushed = new java.util.concurrent.CountDownLatch(1)
+    val sites = new ConcurrentHashMap[Long, String]()
     val started = new ConcurrentHashMap[Int, (String, String, Long)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     def property(p: java.util.Properties, key: String): Option[String] =
       Option(p).flatMap(p => Option(p.getProperty(key)))
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          sites.put(x.executionId, x.rootExecutionId.flatMap(r => Option(sites.get(r)))
+            .getOrElse(x.description))
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit =
         if (property(js.properties, "spark.job.description").contains(marker))
           flushed.countDown()
         else started.put(js.jobId, (property(js.properties, Pipeline.StageLabel)
           .getOrElse("-"),
-          // the result stage is the job's last: its name is the call site
-          js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"), js.time))
+          property(js.properties, "spark.sql.execution.id")
+            .flatMap(id => Option(sites.get(id.toLong)))
+            // the result stage is the job's last: its name is the call site
+            .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?"),
+          js.time))
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(started.remove(je.jobId)).foreach { case (label, site, t0) =>
           done.add(Job(je.jobId, label, site, (je.time - t0) / 1e3))
@@ -245,6 +267,16 @@ object Profile {
       flushed.await()
       (result, done.asScala.toSeq.sortBy(_.id))
     } finally sc.removeSparkListener(listener)
+  }
+
+  private def setup(spark: SparkSession, sfDir: String): Unit = {
+    val (_, jobs) = recordJobs(spark) {
+      Materialized.globiTable(spark, sfDir)
+      Materialized.trydbTable(spark, sfDir)
+      CaseStudyQueries.materializeShared(spark, sfDir)
+    }
+    jobs.foreach(j => println(f"[profile] job ${j.id}%4d ${j.seconds}%6.2f s  ${j.site}"))
+    println(s"[profile] setup: ${jobs.size} jobs")
   }
 
   private def build(spark: SparkSession, nDocs: Long): Unit = {

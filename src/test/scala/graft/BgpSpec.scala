@@ -2,14 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.Bgp
+import graft.ops.{Bgp, LocalTriples}
 import graft.ops.Bgp.{C, Pattern, V}
 import graft.kg.Model
 
 /** BGP compiler: parsing, constant pushdown, greedy join order (no
   * cartesian on connected patterns, loud failure on disconnected ones),
-  * repeated-variable filters, and result equivalence against a
-  * hand-composed DataFrame plan over the same triples.
+  * repeated-variable filters, result equivalence against a
+  * hand-composed DataFrame plan over the same triples, and the driver
+  * executor ([[LocalTriples]]) against the compiled plan.
   */
 class BgpSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -224,5 +225,86 @@ class BgpSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [IsNotNull(pred), EqualTo(pred,") ||
       plan.contains(s"EqualTo(pred,${Model.EMI}hasSource)"), plan)
+  }
+
+  /** A seeded random bag of triples: four predicates over a dozen terms
+    * (duplicate triples and subj = obj rows included), an `up` hierarchy
+    * with a chain longer than the `+` reach, and numeric objects under
+    * `p:score` only (a non-numeric cast fails under ANSI). "ﬁ" (U+FB01)
+    * sorts after "😀" (U+1F600) in UTF-16 and before it in UTF-8, Spark's
+    * string order.
+    */
+  private def randomTriples(seed: Int): Seq[(String, String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val nodes = Seq("a", "b", "c", "d", "e", "ﬁ", "😀", "é", "A", "b2")
+    def node = nodes(rnd.nextInt(nodes.size))
+    val plain = Seq.fill(80 + rnd.nextInt(40))(
+      (node, Seq("p:x", "p:y", "p:z")(rnd.nextInt(3)), node))
+    val scores = Seq("10", "9", "2.5", "-1", "1e1", "NaN", "-0.0", "0")
+      .map(v => (node, "p:score", v))
+    val chain = (0 until 7).map(i => (s"h$i", "up", s"h${i + 1}"))
+    val up = Seq.fill(8)((node, "up", node)) ++ Seq(("a", "up", "h0"), ("h7", "up", "ﬁ"))
+    val all = plain ++ scores ++ chain ++ up
+    all ++ all.take(6)
+  }
+
+  /** Every query shape above, as (pattern, select). */
+  private val shapes: Seq[(String, Seq[String])] = Seq(
+    // star and chain
+    "?r <p:x> ?a . ?r <p:y> ?b . ?r <p:z> ?c" -> Seq("r", "a", "b", "c"),
+    "?a <p:x> ?b . ?b <p:y> ?c . ?c <p:x> ?d" -> Seq("a", "d"),
+    // constant anchors, one the table lacks
+    """?a <p:x> "c" . ?a <p:y> ?b""" -> Seq("a", "b"),
+    """?a <p:x> "zz" . ?a <p:y> ?b""" -> Seq("b"),
+    """"ﬁ" ?p ?o""" -> Seq("p", "o"),
+    // repeated variables, in a pattern and across the predicate
+    "?x <p:x> ?x . ?x <p:y> ?y" -> Seq("x", "y"),
+    "?x ?p ?x" -> Seq("x", "p"),
+    // OPTIONAL, the second keyed on a variable the first may leave null
+    "?a <p:x> ?b . OPTIONAL { ?b <p:y> ?c } . OPTIONAL { ?c <p:z> ?d }" ->
+      Seq("a", "b", "c", "d"),
+    // the four FILTER kinds
+    "?a <p:x> ?b . ?b <p:y> ?c . FILTER (?a < ?c)" -> Seq("a", "b", "c"),
+    """?a <p:x> ?b . FILTER (?b >= "ﬁ")""" -> Seq("a", "b"),
+    """?a <p:x> ?b . FILTER (?b != "c")""" -> Seq("a", "b"),
+    "?s <p:score> ?v . FILTER (?v > 2)" -> Seq("s", "v"),
+    "?s <p:score> ?v . FILTER (?v = 0)" -> Seq("s", "v"),
+    "?s <p:score> ?v . FILTER (?v >= 10)" -> Seq("v"),
+    """?a <p:x> ?b . FILTER regex(?b, "^[a-c]")""" -> Seq("a", "b"),
+    // property paths: past the reach, anchored, and joined
+    "?a <up>+ ?b" -> Seq("a", "b"),
+    """?a <up>+ "ﬁ" . ?a <p:x> ?x""" -> Seq("a", "x"))
+
+  test("the driver executor agrees with the compiled plan as a multiset on random triples") {
+    val nonEmpty = scala.collection.mutable.Set[String]()
+    (1 to 4).foreach { seed =>
+      val rows = randomTriples(seed)
+      val ix = LocalTriples(rows)
+      assert(ix.names.indexOf("ﬁ") < ix.names.indexOf("😀"))
+      val df = rows.toDF("subj", "pred", "obj")
+      shapes.foreach { case (bgp, select) =>
+        withClue(s"seed $seed, $bgp: ") {
+          def bag(rs: Seq[Seq[String]]) = rs.groupBy(identity).view.mapValues(_.size).toMap
+          val want = Bgp.query(df, bgp, select, plusRounds = 2).collect()
+            .map(r => select.indices.map(r.getString)).toSeq
+          val got = ix.query(bgp, select, plusRounds = 2).map(_.toSeq.map(ix.name))
+          assert(bag(got) == bag(want))
+          if (want.nonEmpty) nonEmpty += bgp
+        }
+      }
+    }
+    assert(nonEmpty == shapes.map(_._1).toSet - """?a <p:x> "zz" . ?a <p:y> ?b""")
+  }
+
+  test("the driver executor refuses what the compiler refuses") {
+    val ix = LocalTriples(Seq(("a", "p:x", "b")))
+    Seq("?a <p:x> ?b . ?c <p:y> ?d" -> "disconnected",
+      "?a <p:x> ?b . OPTIONAL { ?c <p:y> ?d }" -> "OPTIONAL",
+      "?a <p:x> ?b . FILTER (?zzz != ?b)" -> "zzz").foreach { case (bgp, msg) =>
+      val ex = intercept[IllegalArgumentException](ix.query(bgp, Seq("a")))
+      assert(ex.getMessage.contains(msg), ex.getMessage)
+    }
+    assert(intercept[IllegalArgumentException](ix.query("?a <p:x> ?b", Seq("zzz")))
+      .getMessage.contains("zzz"))
   }
 }

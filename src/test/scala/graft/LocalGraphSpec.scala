@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 import graft.kg.Model
-import graft.queries.{CaseStudyQueries, Materialized}
+import graft.queries.{CaseStudyQueries, Materialized, SparqlQueries}
 
-/** The organism-graph queries' and the taxonomy closure's two arms: the
-  * driver arm over [[graft.ops.LocalGraph]] below the row guard and the
-  * distributed plan above it.
+/** The organism-graph queries', the taxonomy closure's and the BGP and
+  * SPARQL queries' two arms: the driver arm over [[graft.ops.LocalGraph]]
+  * or [[graft.ops.LocalTriples]] below the row guard and the distributed
+  * plan above it.
   */
 class LocalGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -180,5 +181,51 @@ class LocalGraphSpec extends AnyFunSuite {
     CaseStudyQueries.materializeShared(spark, sf)
     val jobs = queryJobs(Set("kg_taxonomy_closure"))
     assert(jobs.isEmpty, jobs.size)
+  }
+
+  private val triplePatternQueries: Seq[(String, (SparkSession, String, Long) => DataFrame)] = Seq(
+    "kg_bgp_star" -> CaseStudyQueries.bgpStar,
+    "kg_bgp_filtered" -> CaseStudyQueries.bgpFiltered,
+    "kg_bgp_filter_expr" -> CaseStudyQueries.bgpFilterExpr,
+    "kg_bgp_optional" -> CaseStudyQueries.bgpOptional,
+    "kg_bgp_path_plus" -> CaseStudyQueries.bgpPathPlus,
+    "kg_sparql_records" -> SparqlQueries.globiRecords,
+    "kg_sparql_wdids" -> SparqlQueries.globiWikidataIds)
+
+  /** The driver arm's rows, checked equal to the distributed arm's. */
+  private def armsAgree(f: (SparkSession, String, Long) => DataFrame, dir: String) = {
+    val (local, dist) = (f(spark, dir, Model.MaxDriverRows), f(spark, dir, 0L))
+    assert(local.schema.map(c => (c.name, c.dataType)) ==
+      dist.schema.map(c => (c.name, c.dataType)))
+    val want = dist.collect().toSeq
+    assert(want.nonEmpty, "empty result — vacuous")
+    assert(local.collect().toSeq == want)
+    want
+  }
+
+  test("routed BGP/SPARQL queries: driver and distributed arms agree row for row at sf0.001") {
+    assert(CaseStudyQueries.globiTriples(spark, sf).isDefined)
+    triplePatternQueries.foreach { case (q, f) => withClue(s"$q: ")(armsAgree(f, sf)) }
+  }
+
+  test("after materializeShared the routed BGP/SPARQL queries run no Spark job") {
+    CaseStudyQueries.materializeShared(spark, sf)
+    val jobs = queryJobs(triplePatternQueries.map(_._1).toSet)
+    assert(jobs.isEmpty, jobs.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
+  test("kg_bgp_path_plus: driver and distributed arms agree on random taxonomies") {
+    import spark.implicits._
+    (1 to 3).foreach { seed =>
+      val dir = s"local-graph-spec/path-plus$seed"
+      Materialized.once(spark, "taxonomyEdges", dir)(
+        (taxonomyEdges(seed) :+ ("c12" -> "Kingdom0")).toDF("child", "parent"))
+      withClue(s"seed $seed: ") {
+        val ds = armsAgree(CaseStudyQueries.bgpPathPlus, dir).map(_.getString(0)).toSet
+        // 2^3 steps: c05 and "ﬁ" (through "é") reach the root in 8 hops,
+        // c04 only in 9
+        assert(ds("c05") && ds("ﬁ") && ds("x") && !ds("c04"), ds)
+      }
+    }
   }
 }

@@ -612,8 +612,9 @@ class PlanSpec extends AnyFunSuite {
     // executes it once per arm. The single-pass form (explode both taxon
     // ends) must contain exactly one hasSource pattern scan in the
     // optimized plan — at 100 TB a second copy doubles the most
-    // expensive serving join.
-    val df = graft.queries.SparqlQueries.globiWikidataIds(spark, dir)
+    // expensive serving join. That is the distributed arm, the one above
+    // the row guard (the driver arm below it joins no plan at all).
+    val df = graft.queries.SparqlQueries.globiWikidataIds(spark, dir, maxDriverRows = 0L)
     val plan = df.queryExecution.optimizedPlan.toString
     val occurrences = "hasSource".r.findAllIn(plan).size
     assert(occurrences == 1, s"star join subtree appears $occurrences times")
