@@ -45,7 +45,7 @@ object Canonical {
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
       maxDriverRows: Long = Model.MaxDriverRows): DataFrame = {
     val e = ordered(edges)
-    Model.driverRows(e, maxDriverRows)
+    Model.driverRows(e, maxDriverRows, "components")
       .map(rows => driverComponents(e.sparkSession,
         rows.toSeq.map(r => (r.get(0), r.get(1))), e.schema("src").dataType))
       .getOrElse(starComponents(edges, maxIter))

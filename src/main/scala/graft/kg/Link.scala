@@ -308,7 +308,7 @@ object Link {
     val spark = taxa.sparkSession
     val base = taxa.select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
         col("TaxonRankName"), col("rowIdx"))
-    Model.driverRows(base, maxDriverRows) match {
+    Model.driverRows(base, maxDriverRows, "matcher") match {
       case Some(fetched) =>
         val rows = fetched
           .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),

@@ -98,7 +98,7 @@ object Materialize {
       maxDriverRows: Long = MaxDriverRows): (DataFrame, DataFrame) = {
     val cleaned = matcherOut.select(dictColumns: _*)
       .filter(col("Mapped_ID_WD").isNotNull && col("Mapped_ID_WD") =!= "")
-    driverRows(cleaned, maxDriverRows) match {
+    driverRows(cleaned, maxDriverRows, "dictionaries") match {
       case Some(rows) => driverDicts(matcherOut.sparkSession, rows)
       case None =>
         def dict(key: String): DataFrame = cleaned
@@ -460,8 +460,8 @@ object Materialize {
     // one limited collect per dictionary decides and fetches it; on the
     // local relations wdMapDicts returns under its guard no job runs
     val fetched = for {
-      byId <- driverRows(dictId, maxDriverRows)
-      byName <- driverRows(dictName, maxDriverRows)
+      byId <- driverRows(dictId, maxDriverRows, "dictionary by id")
+      byName <- driverRows(dictName, maxDriverRows, "dictionary by name")
       if byId.length + byName.length <= maxDriverRows
     } yield (byId, byName)
     val tagged = fetched match {

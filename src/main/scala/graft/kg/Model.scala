@@ -23,13 +23,26 @@ object Model {
     * `maxDriverRows` of them, from a single limited collect that both
     * decides and fetches; None above the guard or when the guard is
     * non-positive. On a local relation Catalyst folds the limit into
-    * the relation, so no job runs.
+    * the relation, so no job runs. The collect's jobs take `label` as
+    * their call site ("guarded fetch <label>"), so a job listing names
+    * what each fetch is for.
     */
-  def driverRows(df: org.apache.spark.sql.DataFrame, maxDriverRows: Long)
+  def driverRows(df: org.apache.spark.sql.DataFrame, maxDriverRows: Long, label: String)
       : Option[Array[org.apache.spark.sql.Row]] =
     if (maxDriverRows <= 0) None
-    else Some(df.limit(math.min(maxDriverRows, Int.MaxValue - 1L).toInt + 1)
-      .collect()).filter(_.length <= maxDriverRows)
+    else {
+      val sc = df.sparkSession.sparkContext
+      // the short call site is a thread-local property: restore the
+      // caller's, which may be an outer label
+      val outer = sc.getLocalProperty(CallSiteShort)
+      sc.setCallSite(s"guarded fetch $label")
+      try Some(df.limit(math.min(maxDriverRows, Int.MaxValue - 1L).toInt + 1)
+        .collect()).filter(_.length <= maxDriverRows)
+      finally sc.setLocalProperty(CallSiteShort, outer)
+    }
+
+  /** The local property `SparkContext.setCallSite` sets. */
+  private val CallSiteShort = "callSite.short"
 
   case class Span(kind: String, text: String, media_ref: String, offset: Int)
   case class Document(doc_id: String, spans: Seq[Span])

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.math.Ordering.Double.TotalOrdering
 import graft.kg._
 import graft.ops.{Adjacency, Bgp, Iterate, LocalGraph, LocalTriples, Par, Pca}
+import graft.sources.Inputs
 
 /** Case-study analytic workload over the REAL materialized triple
   * table, plus the forced-distributed flagship pipeline.
@@ -227,7 +228,7 @@ object CaseStudyQueries {
     if (maxDriverRows <= 0) None
     else Materialized.once(s,
         if (maxDriverRows == Model.MaxDriverRows) what else s"$what@$maxDriverRows", dir) {
-      Model.driverRows(df, maxDriverRows).flatMap(build)
+      Model.driverRows(df, maxDriverRows, what).flatMap(build)
     }
 
   /** Path-doubling rounds of [[taxonomyClosure]]'s distributed arm:
@@ -1119,7 +1120,7 @@ object CaseStudyQueries {
     // scale-invariant so sample-vs-population never matters, only
     // accumulation order, absorbed by round-6.
     "cs5_corr_matrix" -> ((s: SparkSession, dir: String) => {
-      val l = s.read.parquet(s"$dir/lineitem.parquet").select(
+      val l = Inputs.parquet(s, dir, "lineitem").select(
         col("l_quantity").cast("double").as("qty"),
         col("l_extendedprice").cast("double").as("price"),
         col("l_discount").cast("double").as("disc"))
@@ -1135,7 +1136,7 @@ object CaseStudyQueries {
     "cs5_zscore" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("l_returnflag"))
-      val l = s.read.parquet(s"$dir/lineitem.parquet")
+      val l = Inputs.parquet(s, dir, "lineitem")
       l.select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           col("l_extendedprice").cast("double").as("x"))
         .withColumn("z",
@@ -1157,7 +1158,7 @@ object CaseStudyQueries {
     // eigenvalue path end-to-end. Loadings/eigenvectors (dimension-
     // sized) are spec-pinned via ops.Pca.eig3Corr.
     "cs5_pca" -> ((s: SparkSession, dir: String) => {
-      val l = s.read.parquet(s"$dir/lineitem.parquet").select(
+      val l = Inputs.parquet(s, dir, "lineitem").select(
         col("l_quantity").cast("double").as("qty"),
         col("l_extendedprice").cast("double").as("price"),
         col("l_discount").cast("double").as("disc"))
@@ -1190,7 +1191,7 @@ object CaseStudyQueries {
     // round-6 gate covers eigenvectors + loadings end-to-end at all
     // three scales.
     "cs5_pca_loadings" -> ((s: SparkSession, dir: String) => {
-      val l = s.read.parquet(s"$dir/lineitem.parquet").select(
+      val l = Inputs.parquet(s, dir, "lineitem").select(
         col("l_quantity").cast("double").as("qty"),
         col("l_extendedprice").cast("double").as("price"),
         col("l_discount").cast("double").as("disc"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.kg._
+import graft.sources.Inputs
 
 /** Knowledge-graph construction surface exposed through the driver
   * contract.
@@ -13,7 +14,10 @@ import graft.kg._
   * ScalaTest oracle (engine == single-threaded interpreter, P/R = 1.0);
   * the driver records rows-only here because the corpus is not a DuckDB
   * table. kg_mentions/kg_triples/kg_cc_* are KG archetypes expressed
-  * over the shared `documents` table so DuckDB can verify them exactly.
+  * over the shared `documents` table so DuckDB can verify them exactly;
+  * the documents are read through [[Inputs]] (no schema-inference job),
+  * and the three mention queries share [[mentions]], so each runs as
+  * one Spark job.
   */
 object KgQueries {
 
@@ -28,6 +32,25 @@ object KgQueries {
   val vocab: Seq[(String, String)] = Seq(
     "spark" -> "Q1", "table" -> "Q2", "query" -> "Q3",
     "stream" -> "Q4", "window" -> "Q5", "merge" -> "Q6")
+
+  /** The mentions of [[vocab]] in `docs`: one (doc_id, term, qid) row
+    * per distinct vocabulary term of each document row, in one
+    * partition. The vocabulary is a map literal (null: no mention), not
+    * a broadcast join, whose broadcast is a job of its own. The input is
+    * one split at every scale and the mention queries funnel their
+    * output into one partition anyway, so coalescing the scan there
+    * lets the lookup, the distinct and the sort above it run in the
+    * scan's task: each query is one Spark job, with no exchange.
+    */
+  private def mentions(docs: DataFrame): DataFrame =
+    // (doc_id, term) duplicates are within-doc only: array_distinct in
+    // the scan row replaces a global distinct
+    docs.select(col("doc_id"),
+        explode(array_distinct(split(col("text"), "\\s+"))).as("term"))
+      .select(col("doc_id"), col("term"),
+        element_at(typedLit(vocab.toMap), col("term")).as("qid"))
+      .filter(col("qid").isNotNull)
+      .coalesce(1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -57,42 +80,23 @@ object KgQueries {
 
     // dictionary + word-boundary mention detection over documents (the
     // extraction archetype, SQL-verifiable)
-    "kg_mentions" -> ((s: SparkSession, dir: String) => {
-      import s.implicits._
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val v = vocab.toDF("term", "qid")
-      // (doc_id, term) duplicates are within-doc only: array_distinct
-      // in the scan row replaces the global distinct() shuffle
-      d.select(col("doc_id"),
-          explode(array_distinct(split(col("text"), "\\s+"))).as("term"))
-        .join(broadcast(v), Seq("term"))
-        .select(col("doc_id"), col("term"), col("qid"))
-        .orderBy(col("doc_id"), col("term"))
-    }),
+    "kg_mentions" -> ((s: SparkSession, dir: String) =>
+      mentions(Inputs.parquet(s, dir, "documents"))
+        .orderBy(col("doc_id"), col("term"))),
 
     // mention triples + inverse augmentation + global distinct (J8 + A6)
     "kg_triples" -> ((s: SparkSession, dir: String) => {
-      import s.implicits._
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val v = vocab.toDF("term", "qid")
-      val mentions = d
-        .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), "\\s+"))).as("term"))
-        .join(broadcast(v), Seq("term"))
       val docUri = concat(lit("doc:"), col("doc_id"))
       val entUri = concat(lit("wd:"), col("qid"))
       def triple(subj: Column, pred: String, obj: Column) =
         struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj"))
       // each mention yields its three triple kinds from the one scan
-      mentions.select(explode(array(
+      mentions(Inputs.parquet(s, dir, "documents"))
+        .select(explode(array(
           triple(docUri, "emi:mentions", entUri),
           triple(entUri, "rdf:type", lit("emi:Entity")),
           triple(entUri, "emi:mentionedIn", docUri))).as("t"))
         .select(col("t.subj"), col("t.pred"), col("t.obj"))
-        // one exchange into one partition, where the distinct and the
-        // total order need none of their own (alone they cost a hash
-        // exchange, a range exchange and its sampling job)
-        .repartition(1)
         .distinct()
         .orderBy(col("subj"), col("pred"), col("obj"))
     }),
@@ -101,7 +105,7 @@ object KgQueries {
     // large-star/small-star above it) with a closed-form oracle: docs in
     // the same (source, lang) group form a path → component = min doc_id
     "kg_cc_components" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Inputs.parquet(s, dir, "documents")
       val w = Window.partitionBy(col("source"), col("lang")).orderBy(col("doc_id"))
       val edges = d.select(col("source"), col("lang"), col("doc_id"))
         .withColumn("nxt", lead(col("doc_id"), 1).over(w))
@@ -118,7 +122,7 @@ object KgQueries {
     "j9_term_similarity" -> ((s: SparkSession, dir: String) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val d = s.read.parquet(s"$dir/documents.parquet")
+      val d = Inputs.parquet(s, dir, "documents")
       val terms = d
         .select(explode(split(col("text"), "\\s+")).as("tok"))
         .filter(length(col("tok")) > 4)
@@ -137,19 +141,14 @@ object KgQueries {
 
     // SPARQL-metrics archetype over the mention-triple table
     // (metrics/query_globi_records.txt as Spark SQL)
-    "kg_metrics_counts" -> ((s: SparkSession, dir: String) => {
-      import s.implicits._
-      val d = s.read.parquet(s"$dir/documents.parquet")
-      val v = vocab.toDF("term", "qid")
-      val mentions = d
-        .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), "\\s+"))).as("term"))
-        .join(broadcast(v), Seq("term"))
-      mentions.agg(
+    // the distinct counts are set sizes: two countDistincts plan an
+    // Expand, which drops the one-partition layout and costs two
+    // exchanges; a set is at most the documents or the vocabulary
+    "kg_metrics_counts" -> ((s: SparkSession, dir: String) =>
+      mentions(Inputs.parquet(s, dir, "documents")).agg(
         count(lit(1)).as("n_mentions"),
-        countDistinct(col("doc_id")).as("n_docs"),
-        countDistinct(col("qid")).as("n_entities"))
-    })
+        size(collect_set(col("doc_id"))).cast("long").as("n_docs"),
+        size(collect_set(col("qid"))).cast("long").as("n_entities")))
   )
 
   val oracle: Map[String, String] = {

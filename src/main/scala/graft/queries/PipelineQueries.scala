@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Par, Sampling, Similarity, TextOps}
+import graft.sources.Inputs
 
 /** Training-data pipeline operators as verifiable queries: text analysis,
   * deduplication (exact / MinHash-LSH / token-Jaccard / SimHash /
@@ -11,8 +12,6 @@ import graft.ops.{Dedup, Par, Sampling, Similarity, TextOps}
   * xxhash64 and is covered by ScalaTest instead (rows-only check here).
   */
 object PipelineQueries {
-
-  private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
   /** Connected components over the verified LSH pair graph — memoized
     * like the pair memo itself, because TWO queries consume the same
@@ -105,7 +104,7 @@ object PipelineQueries {
       val stateDir = java.nio.file.Files
         .createTempDirectory("dd-inc-lsh").toString
       deleteOnExit(stateDir)
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val cfg = graft.ops.IncrementalDedup.LshConfig(
         k = 4, rowsPerBand = 2, threshold = 0.8, maxBucket = 1000)
       (0 until 2).foreach { i =>
@@ -132,7 +131,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-merge-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val base = s.read.parquet(t(dir, "documents"))
+      val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), lit("v1").as("version"))
       SnapshotTable.write(base.repartition(8), tableDir,
         idempotencyKey = "merge-gate-base")
@@ -190,7 +189,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-wap-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       val base = d.filter(col("doc_id") % 3 === 0)
       val snapBase = SnapshotTable.write(base.repartition(4), tableDir,
@@ -234,7 +233,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-scd2-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       val cut = e.agg(max(col("event_id"))).head().getLong(0) / 2
       val dim0 = graft.ops.Scd2.runs(e.filter(col("event_id") <= cut))
@@ -265,7 +264,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-delete-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val base = s.read.parquet(t(dir, "documents"))
+      val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       SnapshotTable.write(base.repartitionByRange(8, col("doc_id")),
         tableDir, idempotencyKey = "delete-gate-base",
@@ -302,7 +301,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-bloom-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val base = s.read.parquet(t(dir, "documents"))
+      val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
         .repartition(8, col("lang"))
       SnapshotTable.write(base, tableDir,
@@ -325,7 +324,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-owp-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val base = s.read.parquet(t(dir, "documents"))
+      val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       SnapshotTable.write(base, tableDir, partitionBy = Seq("lang"),
         idempotencyKey = "owp-gate-base", statsCols = Seq("doc_id"))
@@ -352,7 +351,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-stats-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val docs = s.read.parquet(t(dir, "documents"))
+      val docs = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .repartitionByRange(8, col("doc_id"))
       SnapshotTable.write(docs, tableDir,
@@ -374,7 +373,7 @@ object PipelineQueries {
       val tableDir = java.nio.file.Files
         .createTempDirectory("snap-zorder-gate").toString + "/t"
       deleteOnExit(tableDir)
-      val orders = s.read.parquet(t(dir, "orders"))
+      val orders = Inputs.parquet(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       SnapshotTable.write(
         graft.ops.ZOrder.cluster(orders, "o_orderkey", "o_custkey", 16),
@@ -391,7 +390,7 @@ object PipelineQueries {
       val stateDir = java.nio.file.Files
         .createTempDirectory("dd-inc-cos").toString
       deleteOnExit(stateDir)
-      val v = s.read.parquet(t(dir, "embeddings"))
+      val v = Inputs.parquet(s, dir, "embeddings")
       val cfg = graft.ops.IncrementalDedup.VecLshConfig(
         planes = 4, bands = 2, threshold = 0.4)
       (0 until 2).foreach { i =>
@@ -414,7 +413,7 @@ object PipelineQueries {
     */
   private[graft] def verifiedLshPairs(s: SparkSession, dir: String): DataFrame =
     Materialized.once(s, "verifiedLshPairs", dir) {
-      Dedup.minhashLsh(s.read.parquet(t(dir, "documents")), "doc_id",
+      Dedup.minhashLsh(Inputs.parquet(s, dir, "documents"), "doc_id",
           "text", k = 4, rowsPerBand = 2, threshold = 0.8)
         .select(col("id_a"), col("id_b"))
         .localCheckpoint(true)
@@ -447,20 +446,20 @@ object PipelineQueries {
 
     // ---- text analysis -----------------------------------------------
     "tx_token_count" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"),
           TextOps.subwordCount(col("text")).as("n_subwords"))
         .orderBy(col("doc_id"))
     }),
 
     "tx_fingerprint" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id"))
     }),
 
     "tx_quality" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       TextOps.qualityFeatures(d, col("text"))
         .select(col("doc_id"), col("n_chars"), col("n_tokens"), col("n_punct"),
           col("n_stop"), col("quality_ok"))
@@ -468,7 +467,7 @@ object PipelineQueries {
     }),
 
     "tx_langid" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"), TextOps.langId(col("text")).as("pred_lang"))
         .orderBy(col("doc_id"))
     }),
@@ -477,7 +476,7 @@ object PipelineQueries {
       // deterministic hash train/val/test split (10/10/80): a pure
       // map-side projection — re-runs and data growth never reassign
       // an already-split record
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"),
           Sampling.hashBucket("split", col("doc_id")).as("bucket"))
         .withColumn("split", Sampling.splitAssign(col("bucket"), 10, 10))
@@ -496,7 +495,7 @@ object PipelineQueries {
     // rank gets a hash-threshold pre-filter before the exact trim).
     "tx_stratified" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("lang"))
       val tot = d.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
       val n = tot.agg(sum(col("n_l")).cast("long").as("n_total"))
@@ -531,7 +530,7 @@ object PipelineQueries {
       // per-domain ledger (total vs kept) plus an order-independent
       // bit_xor fingerprint of the kept ids, so the gate pins the exact
       // survivor SET without shipping it.
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val cap = 100
       d.select(col("doc_id"), col("source"),
           Sampling.domainCapRank(col("source"), col("doc_id")).as("rk"))
@@ -548,7 +547,7 @@ object PipelineQueries {
       // source-mixture sampling: each source keeps a deterministic pct
       // of its docs (hash-bucket < weight); reported per source. The
       // only shuffle is the 20-row source aggregate
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("source"), Sampling.sourcePct(col("source")).as("pct"),
           col("doc_id"))
         .groupBy(col("source"), col("pct"))
@@ -567,7 +566,7 @@ object PipelineQueries {
     // a map-side projection (bounded ≤6-hash fold fused into the scan)
     // + TakeOrderedAndProject, zero exchanges before the top-k.
     "tx_weighted_sample" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"),
           expr("1 + least(5, n_chars div 256)").as("w"))
         .withColumn("priority",
@@ -591,7 +590,7 @@ object PipelineQueries {
       // both sides; the only cross-engine float divergence is
       // summation order + a ≤1-ulp ln(), absorbed by round-3.
       // n_exact rides along so the error is visible (spec-asserted).
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       // materialized once: both the sketch and the exact count (which
       // rides along for error visibility) consume the scan→tokenize→
       // shingle→hash lineage — unchecked, the expensive part runs 2×
@@ -619,7 +618,7 @@ object PipelineQueries {
       // one fingerprint pass feeds all three consumers (bits build,
       // candidate arm, exact-presence flag) — materialized so the
       // corpus scan + md5 run once, not three times
-      val base = s.read.parquet(t(dir, "documents"))
+      val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
         .localCheckpoint(true)
       val bits = graft.ops.Sketches.bloomBitsOf(base.select(col("fp")), "fp")
@@ -646,7 +645,7 @@ object PipelineQueries {
     "a13_kmv_theta" -> ((s: SparkSession, dir: String) => {
       import graft.functions.Kmv
       val k = 64
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .select(col("lang"), Dedup.hash60(
           concat(lit("kmv:"), col("doc_id").cast("string"))).as("h"))
       d.groupBy(col("lang"))
@@ -667,7 +666,7 @@ object PipelineQueries {
     "a14_theta_intersect" -> ((s: SparkSession, dir: String) => {
       import graft.functions.Kmv
       val k = 64
-      val flags = s.read.parquet(t(dir, "documents"))
+      val flags = Inputs.parquet(s, dir, "documents")
         .select(Dedup.hash60(
             concat(lit("kmv:"), col("doc_id").cast("string"))).as("h"),
           col("text").contains("spark").as("in_a"),
@@ -698,7 +697,7 @@ object PipelineQueries {
       // everything is integer-exact: the oracle compare needs no
       // rounding at all. est ≥ n_exact is the CMS one-sided guarantee
       // (spec-asserted).
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val sh = d.select(TextOps.tokens(TextOps.normalizeText(col("text"))).as("_ts"))
         .select(explode(Dedup.shinglesOf(col("_ts"), 3)).as("g"))
       val exact = sh.groupBy(col("g")).agg(count(lit(1)).as("n_exact"))
@@ -718,7 +717,7 @@ object PipelineQueries {
       // Gopher-style repetition quality: most-frequent token / bigram
       // counts vs totals, integer-exact gate
       TextOps.repetitionFeatures(
-          s.read.parquet(t(dir, "documents")), "doc_id", "text")
+          Inputs.parquet(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -729,7 +728,7 @@ object PipelineQueries {
       // top-V + an OOV floor, same plan), then one groupBy(doc) over
       // token instances. ln() of exact integer ratios both engines,
       // sum/count spelled explicitly, round-6 absorbs libm/assoc drift.
-      val toks = s.read.parquet(t(dir, "documents"))
+      val toks = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"),
           explode(TextOps.tokens(TextOps.normalizeText(col("text")))).as("tok"))
       val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -757,7 +756,7 @@ object PipelineQueries {
       // tokenize ONCE: both the unigram and the bigram aggregates
       // consume the regex normalize+split lineage — unchecked, the
       // expensive scan stage runs per consumer (the a9 convention)
-      val arr = s.read.parquet(t(dir, "documents"))
+      val arr = Inputs.parquet(s, dir, "documents")
         .select(TextOps.tokens(TextOps.normalizeText(col("text"))).as("l"))
         .filter(size(col("l")) >= 2)
         .localCheckpoint(true)
@@ -796,7 +795,7 @@ object PipelineQueries {
       // tokenize ONCE (the tx_pmi/a9 convention): the tokenized arrays
       // feed the bigram fan-out twice (count build + probe) and the
       // unigram counts — four recomputes of the regex scan otherwise
-      val arr = s.read.parquet(t(dir, "documents"))
+      val arr = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"),
           TextOps.tokens(TextOps.normalizeText(col("text"))).as("l"))
         .filter(size(col("l")) >= 2)
@@ -837,7 +836,7 @@ object PipelineQueries {
       // (id, token) duplicates can only exist WITHIN a doc, so the
       // dedup is per-row array_distinct in the scan stage — the former
       // global distinct() shuffled the whole 5-gram fan-out for nothing
-      val sh = s.read.parquet(t(dir, "documents"))
+      val sh = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id").as("id"),
           TextOps.tokens(TextOps.normalizeText(col("text"))).as("_ts"))
         .select(col("id"), explode(array_distinct(
@@ -874,7 +873,7 @@ object PipelineQueries {
       // materialized once: three consumers (the doc-frequency
       // aggregate and both partner-join sides) would each re-run the
       // tokenize+shingle+hash scan otherwise
-      val wins = s.read.parquet(t(dir, "documents"))
+      val wins = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id").as("id"),
           TextOps.tokens(TextOps.normalizeText(col("text"))).as("_ts"))
         .select(col("id"), explode(array_distinct(
@@ -911,7 +910,7 @@ object PipelineQueries {
       // next chunk.
       import org.apache.spark.sql.expressions.Window
       val C = 512
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TextOps.tokenCount(col("text")).as("n_tok"),
           Dedup.hash60(concat(lit("packseed:"), col("doc_id").cast("string")))
@@ -950,7 +949,7 @@ object PipelineQueries {
       // itself is the pure map-side count + replace chain. n_residual
       // proves the scrub converged; the md5 fingerprint pins the
       // redacted bytes exactly.
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val txt = concat(col("text"),
         when(col("doc_id") % 3 === 0,
           concat(lit(" contact user"), col("doc_id").cast("string"),
@@ -972,7 +971,7 @@ object PipelineQueries {
 
     // ---- dedup ----------------------------------------------------------
     "dd_exact" -> ((s: SparkSession, dir: String) => {
-      Dedup.exact(s.read.parquet(t(dir, "documents")), "doc_id", "text")
+      Dedup.exact(Inputs.parquet(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("fp"))
     }),
 
@@ -980,7 +979,7 @@ object PipelineQueries {
       // zero-shuffle: distinct-token arrays + array_min signatures in
       // the scan stage (value-identical to the explode→groupBy form)
       val arrays = Dedup.docTokenArraysHashed(
-        s.read.parquet(t(dir, "documents")), "doc_id", "text", hashed = false)
+        Inputs.parquet(s, dir, "documents"), "doc_id", "text", hashed = false)
       Dedup.minhashSignaturesFromArrays(arrays, 4).orderBy(col("id"))
     }),
 
@@ -1167,7 +1166,7 @@ object PipelineQueries {
       // re-evaluated the interpreted higher-order shingle chain, and a
       // checkpoint big enough to stop that costs more than the tiny
       // (id, long) shuffles it saves — see OPTIMIZATION_r06.md.)
-      val tokens = s.read.parquet(t(dir, "documents"))
+      val tokens = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id").as("id"),
           TextOps.tokens(TextOps.normalizeText(col("text"))).as("_ts"))
         .select(col("id"),
@@ -1184,7 +1183,7 @@ object PipelineQueries {
     "dd_jaccard_pairs" -> ((s: SparkSession, dir: String) => {
       // token-set Jaccard over blocked candidate pairs (same source, same
       // token count bucket) — relational formulation, SQL-verifiable
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       // distinct-token arrays straight from the scan (no explode →
       // distinct → groupBy shuffles); raw strings kept because this
       // query's Jaccard is defined over the unhashed token sets
@@ -1224,7 +1223,7 @@ object PipelineQueries {
       // term) — the integer-exact tf-idf ordering (higher tf, rarer
       // term wins) with no float logarithm to disagree across engines
       import org.apache.spark.sql.expressions.Window
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val tok = d.select(col("doc_id"),
         explode(TextOps.tokens(TextOps.normalizeText(col("text")))).as("term"))
       // materialized once: both the df aggregate and the ranking join
@@ -1247,7 +1246,7 @@ object PipelineQueries {
     // plug into the same hash machinery as documents.
     "tx_chunk" -> ((s: SparkSession, dir: String) => {
       graft.ops.TextOps.chunkTokens(
-        s.read.parquet(t(dir, "documents")), "doc_id", "text")
+        Inputs.parquet(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("start_tok"))
     }),
 
@@ -1260,7 +1259,7 @@ object PipelineQueries {
     // engines via the same COALESCE(pred, FALSE) shape.
     "tx_expectations" -> ((s: SparkSession, dir: String) => {
       import graft.ops.{Expectations, TextOps}
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       Expectations.ledger(d, Seq(
         "doc_id_present" -> col("doc_id").isNotNull,
         "lang_known" -> col("lang").isin("en", "de", "fr", "es", "zh"),
@@ -1276,7 +1275,7 @@ object PipelineQueries {
     // 60-bit-xor fingerprint, and the kept/dropped ledger rides along.
     "tx_inverted_index" -> ((s: SparkSession, dir: String) => {
       import graft.ops.{Dedup, Retrieval}
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val cap = d.count() / 2
       val (index, ledger) = Retrieval.invertedIndex(d, "doc_id", "text", cap)
       index.select(col("term"), col("df"),
@@ -1298,7 +1297,7 @@ object PipelineQueries {
     // (the cosine-gate convention — no rounding anywhere).
     "tx_bm25_topk" -> ((s: SparkSession, dir: String) => {
       graft.ops.Retrieval.bm25TopK(
-        s.read.parquet(t(dir, "documents")), "doc_id", "text",
+        Inputs.parquet(s, dir, "documents"), "doc_id", "text",
         Seq("vector", "customer", "dup"), k = 20)
     }),
 
@@ -1306,7 +1305,7 @@ object PipelineQueries {
       // engine-portable 60-bit md5 SimHash — hash-verified by the DuckDB
       // oracle (the xxhash64 variant stays as the Spark-native fast path,
       // covered by ScalaTest)
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"), Dedup.simhashPortable(col("text")).as("sh"))
         .orderBy(col("doc_id"))
     }),
@@ -1314,7 +1313,7 @@ object PipelineQueries {
     "dd_embedding_cosine" -> ((s: SparkSession, dir: String) => {
       // embedding near-dup pairs blocked by the deterministic sign-plane
       // quantizer (2 bands × 4 planes = 16 cells/band, data-independent)
-      Similarity.signLshPairs(s.read.parquet(t(dir, "embeddings")),
+      Similarity.signLshPairs(Inputs.parquet(s, dir, "embeddings"),
           "vec_id", "embedding", planes = 4, bands = 2, threshold = 0.4)
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a"), col("id_b"))
@@ -1407,7 +1406,7 @@ object PipelineQueries {
     // ---- similarity search ---------------------------------------------
     "sim_ann_topk" -> ((s: SparkSession, dir: String) => {
       // brute-force cosine top-k against the vec_id=0 query vector
-      val e = s.read.parquet(t(dir, "embeddings"))
+      val e = Inputs.parquet(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding"))
         .head().getSeq[Float](0).toArray
       // top-10 selected by the ORACLE's (round-6 cos, vec_id) order —
@@ -1426,7 +1425,7 @@ object PipelineQueries {
       // query probes its 2 nearest cells, exact cosine within. The
       // assignment is an inline literal-centroid argmax: zero shuffle,
       // the whole operator is scan → project → filter → TakeOrdered
-      val e = s.read.parquet(t(dir, "embeddings"))
+      val e = Inputs.parquet(s, dir, "embeddings")
       val cents = e.filter(col("vec_id").between(1, 8))
         .select(col("vec_id"), col("embedding")).collect()
         .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -1449,7 +1448,7 @@ object PipelineQueries {
       // hash-exact with no rounding convention; the recall rider
       // measures the quantization loss against the exact cosine top-10
       // the same way sim_ivf_topk accounts for its probes.
-      val e = s.read.parquet(t(dir, "embeddings"))
+      val e = Inputs.parquet(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding"))
         .head().getSeq[Float](0).toArray
       val qq = Similarity.quantizeLocal(q)
@@ -1469,7 +1468,7 @@ object PipelineQueries {
       // reads a rerank pays) for the exact-cosine top-10. The recall
       // rider accounts for the shortlist's loss against the exact
       // cosine top-10, like sim_ivf_topk's probe accounting.
-      val e = s.read.parquet(t(dir, "embeddings"))
+      val e = Inputs.parquet(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding"))
         .head().getSeq[Float](0).toArray
       val cb = e.filter(col("vec_id").between(1, 16))
@@ -1493,7 +1492,7 @@ object PipelineQueries {
       // argmin (zero shuffle); each update is one map-side-combinable
       // k×(d+1) aggregate. Integer-exact gate: per-cluster counts plus
       // exact scaled component sums (see Similarity.kmeans).
-      Similarity.kmeans(s.read.parquet(t(dir, "embeddings")),
+      Similarity.kmeans(Inputs.parquet(s, dir, "embeddings"),
         "vec_id", "embedding", seedIds = 1L to 8L, iters = 2)
     }),
 
@@ -1501,14 +1500,14 @@ object PipelineQueries {
       // the SemDeDup ACTION: k-means cells gate sign-LSH-bucketed
       // candidate pairs, exact cosine verifies, lower-id keeper wins —
       // the vectors never cross-product, even within a cluster
-      Similarity.semDedup(s.read.parquet(t(dir, "embeddings")),
+      Similarity.semDedup(Inputs.parquet(s, dir, "embeddings"),
         "vec_id", "embedding", seedIds = 1L to 8L, iters = 2,
         planes = 4, bands = 2, threshold = 0.4)
     }),
 
     "sim_lsh_buckets" -> ((s: SparkSession, dir: String) => {
       // hyperplane-LSH candidates: Spark-native hash planes; rows-only check
-      Similarity.lshCandidates(s.read.parquet(t(dir, "embeddings")),
+      Similarity.lshCandidates(Inputs.parquet(s, dir, "embeddings"),
           "vec_id", "embedding", planes = 8)
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a"), col("id_b"))
@@ -1518,7 +1517,7 @@ object PipelineQueries {
     "ev_tumbling_window" -> ((s: SparkSession, dir: String) => {
       // event-time tumbling window aggregation (batch equivalent of the
       // Structured Streaming plan in graft.streaming)
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       e.groupBy(date_trunc("hour", col("ts")).as("win"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"))
@@ -1528,7 +1527,7 @@ object PipelineQueries {
     "ev_sessionize" -> ((s: SparkSession, dir: String) => {
       // session id = cumulative count of >30-min gaps per user (lag window)
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val gapped = e.withColumn("prev_ts", lag(col("ts"), 1).over(w))
         .withColumn("new_sess",
@@ -1549,7 +1548,7 @@ object PipelineQueries {
       // event streams: last_value ignoreNulls), NOT an O(clicks×views)
       // join: a single shuffle on user_id, linear scan per user.
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, 0)
       e.withColumn("_v_ts", when(col("event_type") === "view", col("ts")))
@@ -1574,7 +1573,7 @@ object PipelineQueries {
       // buckets? no — each (click, view) shares exactly the view's one
       // bucket; distinct guards the semantics anyway), then a per-user
       // ledger with an order-independent pair fingerprint.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val winUs = 3600L * 1000000L
       val clicks = e.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -1602,7 +1601,7 @@ object PipelineQueries {
     "ev_json_extract" -> ((s: SparkSession, dir: String) => {
       // semi-structured extraction: JSON props column → typed key, then
       // aggregate — get_json_object is codegen'd, no UDF
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       e.select(get_json_object(col("props"), "$.k").cast("long").as("k"),
           col("value"))
         .groupBy(col("k"))
@@ -1615,7 +1614,7 @@ object PipelineQueries {
       // keep-first dedup by (user_id, event_type) — streaming dropDuplicates
       // semantics, deterministic batch formulation
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val w = Window.partitionBy(col("user_id"), col("event_type"))
         .orderBy(col("ts"), col("event_id"))
       e.withColumn("rn", row_number().over(w))
@@ -1633,7 +1632,7 @@ object PipelineQueries {
       // cohort, so the plan is two user-keyed shuffles plus
       // dimension-sized joins; day ids are epoch-days (BIGINT), no
       // timezone in the gate.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val days = e.select(col("user_id"),
           floor(unix_timestamp(col("ts")) / 86400L).cast("long").as("day"))
         .distinct()
@@ -1662,7 +1661,7 @@ object PipelineQueries {
       // run the identical closed-form float expression once per
       // (type, window); the per-type stats are a 5-row broadcast. Types
       // with zero variance (or < 2 windows) emit nothing by definition.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val win = (floor(unix_timestamp(col("ts")) / 600L) * 600L).cast("long")
       val counts = e.groupBy(col("event_type"), win.as("win_start"))
         .agg(count(lit(1)).as("c"))
@@ -1691,7 +1690,7 @@ object PipelineQueries {
       // the snapshot-table maintenance persists incrementally). Window
       // starts as BIGINT epoch seconds, the ev_hopping_window
       // convention.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val size = 600L
       // one scan feeds both the sketch and the exact rider
       val hashed = e.select(
@@ -1717,7 +1716,7 @@ object PipelineQueries {
       // the same partial-aggregating groupBy as the tumbling window.
       // Window starts are emitted as BIGINT epoch seconds so neither
       // engine's timestamp/timezone rendering enters the hash gate.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val slide = 300L
       val w1 = (floor(unix_timestamp(col("ts")) / slide) * slide).cast("long")
       e.select(col("event_type"), col("value"),
@@ -1736,7 +1735,7 @@ object PipelineQueries {
       // scan per user; the frame sum is exact decimal and only the final
       // division goes through double + round(6).
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id")).rowsBetween(-2, 0)
       e.select(col("user_id"), col("event_id"),
@@ -1754,7 +1753,7 @@ object PipelineQueries {
     // everything after the window stage is broadcast-trivial.
     "ev_markov" -> ((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.expressions.Window
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -1781,7 +1780,7 @@ object PipelineQueries {
     // from the same exchange (no re-shuffle at 100 TB either — the
     // partitioning is carried through).
     "ev_scd2" -> ((s: SparkSession, dir: String) => {
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       graft.ops.Scd2.runs(e).orderBy(col("user_id"), col("version"))
     }),
@@ -1824,7 +1823,7 @@ object PipelineQueries {
     // on their own id. Rerun-stable (pure hash, no RNG), one
     // corpus-scale shuffle (the join).
     "tx_leakage_split" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents")).select(col("doc_id"))
+      val d = Inputs.parquet(s, dir, "documents").select(col("doc_id"))
       val comp = lshComponents(s, dir)
         .select(col("node").as("doc_id"), col("component"))
       d.join(comp, Seq("doc_id"), "left")
@@ -1846,7 +1845,7 @@ object PipelineQueries {
       // so AQE plans at most one exchange per stage and the stage
       // outputs are user-dimension sized); no window over the full
       // event stream and no per-user sort is ever materialized.
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"))
       val v = e.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("v_ts"))
@@ -1883,7 +1882,7 @@ object PipelineQueries {
       // the float log-sum runs over ≤1024 terms (round-6 absorbs libm
       // and association drift, the tx_unigram_lm convention).
       val B = 1024
-      val bg = s.read.parquet(t(dir, "documents"))
+      val bg = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           TextOps.tokens(TextOps.normalizeText(col("text"))).as("_ts"))
         .select(col("doc_id"), col("lang"),

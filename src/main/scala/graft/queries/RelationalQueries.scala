@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.normalize.Norm
 import graft.ops.Salting
+import graft.sources.Inputs
 
 /** Relational operator surface (SURVEY.md §2.2-§2.7): every entry is a
   * (Spark plan, equivalent DuckDB SQL) pair. Query names carry the
@@ -18,19 +19,17 @@ import graft.ops.Salting
   */
 object RelationalQueries {
 
-  private def t(dir: String, name: String) = s"$dir/$name.parquet"
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- scans / projections / filters ------------------------------
     "s1_scan_prune" -> ((s: SparkSession, dir: String) => {
-      s.read.parquet(t(dir, "lineitem"))
+      Inputs.parquet(s, dir, "lineitem")
         .filter(col("l_quantity") >= 45 && col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }),
 
     "p2_null_widened" -> ((s: SparkSession, dir: String) => {
-      val o = s.read.parquet(t(dir, "orders"))
+      val o = Inputs.parquet(s, dir, "orders")
         .withColumn("marker",
           when(col("o_orderkey") % 5 === 0, lit("\\N"))
             .when(col("o_orderkey") % 5 === 1, lit("no:match"))
@@ -44,7 +43,7 @@ object RelationalQueries {
 
     "p4_status_mask" -> ((s: SparkSession, dir: String) => {
       // selective recompute: error events zeroed, others kept (matcher.py:464-468 archetype)
-      s.read.parquet(t(dir, "events"))
+      Inputs.parquet(s, dir, "events")
         .withColumn("v2",
           when(col("event_type") === "error", lit(0.0)).otherwise(col("value")))
         .groupBy(col("event_type"))
@@ -55,9 +54,9 @@ object RelationalQueries {
 
     // ---- joins -------------------------------------------------------
     "j1_broadcast_join" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer"))
-      val n = s.read.parquet(t(dir, "nation"))
-      val r = s.read.parquet(t(dir, "region"))
+      val c = Inputs.parquet(s, dir, "customer")
+      val n = Inputs.parquet(s, dir, "nation")
+      val r = Inputs.parquet(s, dir, "region")
       c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
@@ -66,8 +65,8 @@ object RelationalQueries {
     }),
 
     "j2_left_outer" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer"))
-      val o = s.read.parquet(t(dir, "orders"))
+      val c = Inputs.parquet(s, dir, "customer")
+      val o = Inputs.parquet(s, dir, "orders")
       c.join(o, c("c_custkey") === o("o_custkey"), "left")
         .groupBy(col("c_custkey"))
         .agg(count(col("o_orderkey")).as("n_orders"))
@@ -75,8 +74,8 @@ object RelationalQueries {
     }),
 
     "j3_semi" -> ((s: SparkSession, dir: String) => {
-      val n = s.read.parquet(t(dir, "nation"))
-      val sup = s.read.parquet(t(dir, "supplier"))
+      val n = Inputs.parquet(s, dir, "nation")
+      val sup = Inputs.parquet(s, dir, "supplier")
         .select(col("s_nationkey").as("n_nationkey"))
       n.join(sup, Seq("n_nationkey"), "left_semi")
         .select(col("n_nationkey"), col("n_name"))
@@ -84,8 +83,8 @@ object RelationalQueries {
     }),
 
     "j3b_anti" -> ((s: SparkSession, dir: String) => {
-      val n = s.read.parquet(t(dir, "nation"))
-      val sup = s.read.parquet(t(dir, "supplier"))
+      val n = Inputs.parquet(s, dir, "nation")
+      val sup = Inputs.parquet(s, dir, "supplier")
         .select(col("s_nationkey").as("n_nationkey"))
       n.join(sup, Seq("n_nationkey"), "left_anti")
         .select(col("n_nationkey"), col("n_name"))
@@ -95,7 +94,7 @@ object RelationalQueries {
     "j4_priority_fallback" -> ((s: SparkSession, dir: String) => {
       // composite-key priority lookup (matcher.py:357-379 archetype):
       // per source, doc count in 'en' if present, else in 'fr', else null
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val dim = d.groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
       val en = dim.filter(col("lang") === "en").select(col("source"), col("n").as("n_en"))
       val fr = dim.filter(col("lang") === "fr").select(col("source"), col("n").as("n_fr"))
@@ -110,8 +109,8 @@ object RelationalQueries {
       // scored best-match join (matcher.py:248-280 archetype): candidate set
       // = suppliers in the same nation; score = |balance gap|, argmin with
       // deterministic tiebreak via row_number.
-      val c = s.read.parquet(t(dir, "customer"))
-      val sup = s.read.parquet(t(dir, "supplier"))
+      val c = Inputs.parquet(s, dir, "customer")
+      val sup = Inputs.parquet(s, dir, "supplier")
       val cand = c.join(sup, c("c_nationkey") === sup("s_nationkey"))
         .withColumn("gap", abs(col("c_acctbal") - col("s_acctbal")))
       val w = Window.partitionBy(col("c_custkey"))
@@ -126,10 +125,10 @@ object RelationalQueries {
       // two-tier dictionary fallback (globi_kg_generator.py:190-206):
       // resolve by part (only large parts present in tier-1 dict), else by
       // supplier; rows resolving in neither are dropped.
-      val li = s.read.parquet(t(dir, "lineitem"))
-      val p = s.read.parquet(t(dir, "part")).filter(col("p_size") >= 40)
+      val li = Inputs.parquet(s, dir, "lineitem")
+      val p = Inputs.parquet(s, dir, "part").filter(col("p_size") >= 40)
         .select(col("p_partkey"), col("p_name"))
-      val sup = s.read.parquet(t(dir, "supplier")).filter(col("s_acctbal") > 5000)
+      val sup = Inputs.parquet(s, dir, "supplier").filter(col("s_acctbal") > 5000)
         .select(col("s_suppkey"), col("s_name"))
       li.join(broadcast(p), li("l_partkey") === p("p_partkey"), "left")
         .join(broadcast(sup), li("l_suppkey") === sup("s_suppkey"), "left")
@@ -152,7 +151,7 @@ object RelationalQueries {
       // (SaltingSpec pins the sampled detector on a 200k-row hub).
       // Oracle = the PLAIN SQL join: a green hash row proves the
       // salt-explode/replicate machinery loses and duplicates nothing.
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("lang"))
       val dim = d.groupBy(col("lang")).agg(count(lit(1)).as("lang_total"))
       val thr = math.max(1L, d.count() / 4) // parquet metadata count
@@ -164,7 +163,7 @@ object RelationalQueries {
 
     // ---- aggregations -------------------------------------------------
     "q1_agg" -> ((s: SparkSession, dir: String) => {
-      val li = s.read.parquet(t(dir, "lineitem"))
+      val li = Inputs.parquet(s, dir, "lineitem")
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           sum(col("l_quantity")).as("sum_qty"),
@@ -184,7 +183,7 @@ object RelationalQueries {
     // sorts NULLS FIRST, DuckDB NULLS LAST) without a nondeterministic
     // null key.
     "a11_rollup" -> ((s: SparkSession, dir: String) => {
-      val li = s.read.parquet(t(dir, "lineitem"))
+      val li = Inputs.parquet(s, dir, "lineitem")
       li.rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"),
           sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base"),
@@ -198,7 +197,7 @@ object RelationalQueries {
     // CUBE over the same keys: every grouping-set combination including
     // per-linestatus marginals — the full multidimensional aggregate.
     "a12_cube" -> ((s: SparkSession, dir: String) => {
-      val li = s.read.parquet(t(dir, "lineitem"))
+      val li = Inputs.parquet(s, dir, "lineitem")
       li.cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("cnt"),
           sum(col("l_quantity")).as("sum_qty"))
@@ -214,10 +213,10 @@ object RelationalQueries {
     // F-orders, F-orders from low-balance customers). Keys COALESCEd,
     // null indicators as integers.
     "j11_full_outer" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer"))
+      val c = Inputs.parquet(s, dir, "customer")
         .filter(col("c_acctbal") > 5000)
         .select(col("c_custkey"))
-      val o = s.read.parquet(t(dir, "orders"))
+      val o = Inputs.parquet(s, dir, "orders")
         .filter(col("o_orderstatus") === "F")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
       c.join(o, c("c_custkey") === o("o_custkey"), "full_outer")
@@ -228,7 +227,7 @@ object RelationalQueries {
     }),
 
     "a1_distinct" -> ((s: SparkSession, dir: String) => {
-      s.read.parquet(t(dir, "lineitem"))
+      Inputs.parquet(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"))
         .distinct()
         .orderBy(col("l_returnflag"), col("l_linestatus"))
@@ -236,7 +235,7 @@ object RelationalQueries {
 
     "a2_dup_detect" -> ((s: SparkSession, dir: String) => {
       // duplicate-group detection via window count (wikidata_fetcher.py:284-288)
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val w = Window.partitionBy(col("user_id"), col("event_type"))
       e.withColumn("cnt", count(lit(1)).over(w))
         .filter(col("cnt") > 1)
@@ -247,7 +246,7 @@ object RelationalQueries {
 
     "a3_pivot" -> ((s: SparkSession, dir: String) => {
       // long→wide pivot with fixed value list (wikidata_fetcher.py:231-250)
-      val o = s.read.parquet(t(dir, "orders"))
+      val o = Inputs.parquet(s, dir, "orders")
       val pv = o.groupBy(col("o_orderstatus"))
         .pivot("o_orderpriority",
           Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
@@ -263,7 +262,7 @@ object RelationalQueries {
 
     "a4_term_count" -> ((s: SparkSession, dir: String) => {
       // explode + group term counting (globi_entity_matcher.py:160-220 archetype)
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(explode(split(col("text"), "\\s+")).as("token"))
         .filter(col("token").isin("key", "value", "table", "row", "scan"))
         .groupBy(col("token"))
@@ -273,14 +272,14 @@ object RelationalQueries {
 
     "a7_union_countdistinct" -> ((s: SparkSession, dir: String) => {
       // UNION + COUNT(DISTINCT) metrics archetype (metrics/query_globi_wikidata_ids.txt)
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
       val a = e.filter(col("event_type") === "click").select(col("user_id"))
       val b = e.filter(col("event_type") === "view").select(col("user_id"))
       a.unionByName(b).agg(countDistinct(col("user_id")).as("n_users"))
     }),
 
     "a8_crosstab" -> ((s: SparkSession, dir: String) => {
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       val pv = d.groupBy(col("lang"))
         .pivot("source", Seq("src0", "src1", "src2", "src3"))
         .agg(count(lit(1)))
@@ -294,7 +293,7 @@ object RelationalQueries {
 
     // ---- windows / sorts / top-k --------------------------------------
     "w1_argmax" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer"))
+      val c = Inputs.parquet(s, dir, "customer")
       val w = Window.partitionBy(col("c_nationkey"))
         .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
       c.withColumn("rn", row_number().over(w))
@@ -312,7 +311,7 @@ object RelationalQueries {
       // histogram (the exact-quantile shape that survives 100 TB when
       // values are discrete; for continuous values the approx sketch
       // replaces the histogram, same two-phase plan).
-      val l = s.read.parquet(t(dir, "lineitem"))
+      val l = Inputs.parquet(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity").cast("double").as("q"))
       val h = l.groupBy(col("l_returnflag"), col("q"))
         .agg(count(lit(1)).as("c"))
@@ -334,7 +333,7 @@ object RelationalQueries {
       // four percentiles read the same cumulative pass. The N rows are
       // aggregated once; the window sort runs over the value-cardinality-
       // sized histogram crossed with 4 percentile rows (dimension-sized).
-      val l = s.read.parquet(t(dir, "lineitem"))
+      val l = Inputs.parquet(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity").cast("double").as("q"))
       val h = l.groupBy(col("l_returnflag"), col("q"))
         .agg(count(lit(1)).as("c"))
@@ -363,7 +362,7 @@ object RelationalQueries {
       // on both engines; est ≤ exact ≤ est + est/16 is the spec-pinned
       // bound.
       val pcts = Seq(25L, 50L, 75L, 90L, 99L)
-      val cents = s.read.parquet(t(dir, "lineitem"))
+      val cents = Inputs.parquet(s, dir, "lineitem")
         .select((col("l_extendedprice").cast("decimal(18,2)") * 100)
           .cast("long").as("v"))
       // ONE corpus scan + shuffle: the exact rider's distinct-value
@@ -384,13 +383,13 @@ object RelationalQueries {
     }),
 
     "w2_sort" -> ((s: SparkSession, dir: String) => {
-      s.read.parquet(t(dir, "orders"))
+      Inputs.parquet(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
     }),
 
     "w3_topk" -> ((s: SparkSession, dir: String) => {
-      s.read.parquet(t(dir, "orders"))
+      Inputs.parquet(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(15)
@@ -399,33 +398,33 @@ object RelationalQueries {
     "w4_det_record_id" -> ((s: SparkSession, dir: String) => {
       // partition-order-independent record id (vs reference inRec{n},
       // globi_kg_generator.py:213-217): content hash, not row position
-      s.read.parquet(t(dir, "documents"))
+      Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), md5(col("doc_id").cast("string")).as("rec_id"))
         .orderBy(col("doc_id"))
     }),
 
     // ---- set operations ------------------------------------------------
     "u1_union_distinct" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer")).select(col("c_custkey").as("k"))
-      val o = s.read.parquet(t(dir, "orders")).select(col("o_custkey").as("k"))
+      val c = Inputs.parquet(s, dir, "customer").select(col("c_custkey").as("k"))
+      val o = Inputs.parquet(s, dir, "orders").select(col("o_custkey").as("k"))
       c.unionByName(o).distinct().orderBy(col("k"))
     }),
 
     "u3a_intersect" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer")).select(col("c_nationkey").as("nk"))
-      val sup = s.read.parquet(t(dir, "supplier")).select(col("s_nationkey").as("nk"))
+      val c = Inputs.parquet(s, dir, "customer").select(col("c_nationkey").as("nk"))
+      val sup = Inputs.parquet(s, dir, "supplier").select(col("s_nationkey").as("nk"))
       c.intersect(sup).orderBy(col("nk"))
     }),
 
     "u3b_except" -> ((s: SparkSession, dir: String) => {
-      val c = s.read.parquet(t(dir, "customer")).select(col("c_nationkey").as("nk"))
-      val sup = s.read.parquet(t(dir, "supplier")).select(col("s_nationkey").as("nk"))
+      val c = Inputs.parquet(s, dir, "customer").select(col("c_nationkey").as("nk"))
+      val sup = Inputs.parquet(s, dir, "supplier").select(col("s_nationkey").as("nk"))
       c.except(sup).orderBy(col("nk"))
     }),
 
     // ---- scalar function parity -----------------------------------------
     "f2_uri_normalize" -> ((s: SparkSession, dir: String) => {
-      val p = s.read.parquet(t(dir, "part"))
+      val p = Inputs.parquet(s, dir, "part")
         .withColumn("raw",
           when(col("p_partkey") % 4 === 0,
             concat(lit("https://www.gbif.org/species/"), col("p_partkey")))
@@ -441,7 +440,7 @@ object RelationalQueries {
     "f3_rank_unpack" -> ((s: SparkSession, dir: String) => {
       // |-packed ordered path unpack (matcher.py:416-427): split both lists,
       // zip positionally, project onto predefined ranks with "" fill
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
         .withColumn("names",
           concat_ws("|", slice(split(col("text"), "\\s+"), 1, 3)))
         .withColumn("ranks", lit("kingdom|phylum|class|order"))
@@ -459,7 +458,7 @@ object RelationalQueries {
 
     "f4_preprocess_term" -> ((s: SparkSession, dir: String) => {
       // de-pluralization rules (utils.py:124-129) over document tokens
-      val d = s.read.parquet(t(dir, "documents"))
+      val d = Inputs.parquet(s, dir, "documents")
       d.select(explode(split(col("text"), "\\s+")).as("token"))
         .distinct()
         .select(col("token"), Norm.preprocessTerm(col("token")).as("term"))
@@ -473,7 +472,7 @@ object RelationalQueries {
       // branches through the driver gate on every row (part names alone
       // only exercise the space branch); the oracle carries the
       // hand-encoded expected tail.
-      val p = s.read.parquet(t(dir, "part"))
+      val p = Inputs.parquet(s, dir, "part")
       p.select(col("p_partkey"),
           Norm.formatUri(concat(col("p_name"), lit("/x?&#Ĝ +*~._-")))
             .as("encoded"))
@@ -482,7 +481,7 @@ object RelationalQueries {
 
     "f10_numeric_literal" -> ((s: SparkSession, dir: String) => {
       // xsd:double vs xsd:string detection (trydb_kg_generator.py:130-134)
-      val e = s.read.parquet(t(dir, "events"))
+      val e = Inputs.parquet(s, dir, "events")
         .withColumn("raw",
           when(col("event_id") % 3 === 0, col("value").cast("string"))
             .when(col("event_id") % 3 === 1, concat(lit("v"), col("value")))

@@ -35,7 +35,12 @@ import graft.queries.{CaseStudyQueries, Materialized, PipelineQueries}
   *   setup <sfDir>
   *       the shared-table set-up the graph queries read (the GloBI and
   *       TRY-db tables, then [[CaseStudyQueries.materializeShared]]):
-  *       every Spark job with its call site, and the job count
+  *       every Spark job with its call site (a guarded driver fetch
+  *       reads `guarded fetch <memo>`), and the job count
+  *   pass <sfDir> <q1,q2,...>
+  *       the set-up of `setup`, then a first and a warm pass over the
+  *       named queries: per query its wall seconds, Spark job count,
+  *       codegen (Janino) compiles and rows
   *   build <nDocs>
   *       one cold `Pipeline.runFromTable` over a fresh `DataGen` docs
   *       table (in a temp dir, deleted afterwards): every Spark job of
@@ -56,10 +61,12 @@ object Profile {
       case "sample" :: sfDir :: Nil => sample(_, sfDir)
       case "phases" :: sfDir :: Nil => phases(_, sfDir)
       case "setup" :: sfDir :: Nil => setup(_, sfDir)
+      case "pass" :: sfDir :: names :: Nil => pass(_, sfDir, Verify.queryNames(names))
       case "build" :: nDocs :: Nil => build(_, nDocs.toLong)
       case _ =>
         System.err.println("usage: Profile plan <sfDir> [<outDir> <suffix>] <q1,q2,...>" +
-          " | sample <sfDir> | phases <sfDir> | setup <sfDir> | build <nDocs>")
+          " | sample <sfDir> | phases <sfDir> | setup <sfDir> | pass <sfDir> <q1,q2,...>" +
+          " | build <nDocs>")
         sys.exit(2)
     }
     val spark = Session("graft-profile")
@@ -269,14 +276,36 @@ object Profile {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The shared tables the graph queries read, as Bench and perfbench
+    * build them before their timed passes.
+    */
+  private def sharedTables(spark: SparkSession, sfDir: String): Unit = {
+    Materialized.globiTable(spark, sfDir)
+    Materialized.trydbTable(spark, sfDir)
+    CaseStudyQueries.materializeShared(spark, sfDir)
+  }
+
   private def setup(spark: SparkSession, sfDir: String): Unit = {
-    val (_, jobs) = recordJobs(spark) {
-      Materialized.globiTable(spark, sfDir)
-      Materialized.trydbTable(spark, sfDir)
-      CaseStudyQueries.materializeShared(spark, sfDir)
-    }
+    val (_, jobs) = recordJobs(spark)(sharedTables(spark, sfDir))
     jobs.foreach(j => println(f"[profile] job ${j.id}%4d ${j.seconds}%6.2f s  ${j.site}"))
     println(s"[profile] setup: ${jobs.size} jobs")
+  }
+
+  private def pass(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    sharedTables(spark, sfDir)
+    println("[profile] pass  query                          wall_s  jobs  compiles  rows")
+    Seq("first", "warm").foreach { p =>
+      names.foreach { q =>
+        val ((rows, compiles, wall), jobs) = recordJobs(spark) {
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val t0 = System.nanoTime()
+          val n = SparkEntry.queries(q)(spark, sfDir).collect().length
+          (n, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0, (System.nanoTime() - t0) / 1e9)
+        }
+        println(f"[profile] $p%-5s $q%-30s $wall%6.3f ${jobs.size}%5d $compiles%9d $rows%5d")
+      }
+    }
   }
 
   private def build(spark: SparkSession, nDocs: Long): Unit = {

@@ -20,4 +20,14 @@ class ProfileSpec extends AnyFunSuite {
     assert(jobs.size >= 2, jobs)
     assert(jobs.forall(_.site == s"collect at ProfileSpec.scala:$line"), jobs.mkString("\n"))
   }
+
+  test("a guarded fetch's jobs take its label as their call site") {
+    val df = spark.range(0, 1000, 1, 4).select((col("id") % 10).as("k")).distinct()
+    val (rows, jobs) = Profile.recordJobs(spark)(graft.kg.Model.driverRows(df, 100, "memo x"))
+    assert(rows.map(_.length).contains(10))
+    assert(jobs.nonEmpty && jobs.forall(_.site == "guarded fetch memo x"), jobs.mkString("\n"))
+    // the label is restored afterwards: a later action names its own line
+    val (_, after) = Profile.recordJobs(spark)(df.collect())
+    assert(after.forall(_.site.startsWith("collect at ProfileSpec.scala:")), after.mkString("\n"))
+  }
 }
