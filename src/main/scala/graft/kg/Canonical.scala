@@ -8,11 +8,10 @@ import org.apache.spark.sql.types.DataType
   * equivalence edges (north rule; NOT in the reference, whose
   * canonicalization is purely dictionary-based — SURVEY §4.1).
   *
-  * ROW-COUNT GUARD (the policy of Link.matchStacked): while the edge
-  * table has at most `maxDriverRows` rows — the equivalence graph is
-  * dimension-sized, like the taxa table the matcher collects — one
-  * action brings the edges to the driver, where a min-label union-find
-  * labels the components and the mapping comes back as a local
+  * ROW-COUNT GUARD ([[Model.driverRows]]): while the edge table has at
+  * most `maxDriverRows` rows — the equivalence graph is
+  * dimension-sized — one action brings the edges to the driver, where
+  * a min-label union-find labels the components and the mapping comes back as a local
   * relation. Above the guard, or with a non-positive guard, the
   * distributed algorithm below runs; the specs hold both arms equal.
   *
@@ -232,9 +231,9 @@ object Canonical {
     * only; literals pass through). Canonical ids only exist for wd
     * entities, so the join key is the WD-prefixed IRI.
     *
-    * The broadcast hint is ROW-COUNT-GUARDED (same policy as
-    * Link.matchStacked): while the mapping is dictionary-sized the
-    * two probes are broadcast-hash joins, but when the entity space
+    * The broadcast hint is ROW-COUNT-GUARDED ([[Model.MaxDriverRows]]):
+    * while the mapping is dictionary-sized the two probes are
+    * broadcast-hash joins, but when the entity space
     * scales with the corpus (open-world linking) a forced broadcast
     * would OOM the executors — above the guard the planner keeps its
     * freedom and falls back to a shuffle join (AQE can still pick

@@ -51,7 +51,7 @@ object DataGen {
   /** wd_sparql mapping rows (FIXTURES §2.1): WdID, 15 external-id cols,
     * WdName — raw (un-prefixed) values; the matcher applies the
     * positional prefixes (matcher.py:108-112). Shared by the Spark
-    * fixture, the compact matcher, and the oracle.
+    * fixture, the broadcast matcher index, and the oracle.
     */
   def wdSparqlRows: Seq[Seq[String]] =
     (0 until K).filter(inWdMapping).map { k =>

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model._
 
@@ -25,8 +25,8 @@ object Extract {
     * (`filter`/`transform`/`map_from_entries` are CodegenFallback).
     * `CollapseProject` keeps the struct build and its field expansion in
     * separate projections (the kernel is non-cheap and referenced 24×),
-    * so the walk executes once per row. [[recordsLegacy]] is the
-    * executable specification; SpanRecordSpec pins kernel == legacy.
+    * so the walk executes once per row. SpanRecordSpec pins the kernel
+    * against the higher-order-function walk it replaced.
     */
   def records(docs: DataFrame): DataFrame = {
     val base = docs.select(
@@ -36,29 +36,6 @@ object Extract {
     val fields = DataGen.fieldOrder.map(f => col(s"_r.$f").as(f))
     base.select((col("doc_id") +: col("recNum") +: fields)
       :+ col("_r.mediaRefs").as("mediaRefs"): _*)
-  }
-
-  /** The original higher-order-function span walk — kept as the
-    * executable specification of [[records]]'s semantics (the
-    * VectorExprs convention: the kernel must equal this row-by-row).
-    */
-  def recordsLegacy(docs: DataFrame): DataFrame = {
-    val textSpans = filter(col("spans"), s => s.getField("kind") === "text")
-    val kv = map_from_entries(transform(textSpans, s => {
-      val t = s.getField("text")
-      val key = substring_index(t, ": ", 1)
-      struct(key.as("key"), t.substr(length(key) + lit(3), length(t)).as("value"))
-    }))
-    val media = transform(
-      filter(col("spans"), s => s.getField("kind") === "media"),
-      s => s.getField("media_ref"))
-    val base = docs.select(
-      col("doc_id"),
-      regexp_extract(col("doc_id"), "DOC-(\\d+)", 1).cast("long").as("recNum"),
-      kv.as("kv"), media.as("mediaRefs"))
-    val fields = DataGen.fieldOrder.map(f =>
-      coalesce(element_at(col("kv"), f), lit("")).as(f))
-    base.select((col("doc_id") +: col("recNum") +: fields) :+ col("mediaRefs"): _*)
   }
 
   /** Typed view of the span walk. */

@@ -168,8 +168,8 @@ object Link {
     // per-name index, NOT a global row_number: every downstream
     // comparison of rowIdx/grpIdx happens within one WdName (the
     // candidate join key is the name, so min_by/max_by tie-breaks never
-    // cross names — same invariant in LocalMatcher, whose dict insertion
-    // order is only ever consulted through a name-filtered view). A
+    // cross names — same invariant in LocalMatcher, whose index groups
+    // the candidates by name in their insertion order). A
     // global orderBy window would funnel the whole lineage table through
     // one partition (WindowExec warns exactly that); partitioning by
     // WdName keeps the index distributed and semantics-identical.
@@ -258,29 +258,6 @@ object Link {
     rankUpdated.select(outCols: _*).unionByName(keep.select(outCols: _*))
   }
 
-  /** Driver-local matched rows → DataFrame via parallelize, NOT a
-    * LocalRelation: a LocalTableScan feeding an exchange embeds the
-    * whole row collection in every task binary (the driver bench logged
-    * `task of very large size (1189 KiB)` for exactly this), while
-    * parallelize ships each task only its slice.
-    */
-  private def matchedRowsToDf(spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[LocalMatcher.MatchedRow], slices: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
-    val schema = StructType(Seq(
-      StructField("TaxonId", StringType, true),
-      StructField("TaxonName", StringType, true),
-      StructField("Mapped_Value", StringType, true),
-      StructField("Mapped_ID_WD", StringType, true),
-      StructField("Match_Status", StringType, true),
-      StructField("rowIdx", LongType, false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(m =>
-        org.apache.spark.sql.Row(m.taxonId, m.taxonName, m.mappedValue,
-          m.mappedIdWd, m.status, m.rowIdx)), math.max(slices, 1)),
-      schema)
-  }
-
   /** The shipped matcher: [[stackTaxa]], then [[matchStacked]]'s
     * row-count guard. `nDocs` is unused — the target ordinal base is
     * the fixed [[TargetBase]] — and stays in the signature only because
@@ -293,50 +270,55 @@ object Link {
 
   /** Matcher over a stacked distinct-taxa table (the [[stackTaxa]] shape;
     * the incremental path's accumulated taxa state is one). The ROW-COUNT
-    * GUARD: one limited collect ([[Model.driverRows]]) decides and
-    * fetches — while the table has at most `maxDriverRows` rows, the
-    * dimension-sized dictionary/scoring passes run on the driver via
-    * LocalMatcher instead of ~12 small jobs, and the rows come back as a
-    * parallelized table; beyond it the distributed formulation runs over
-    * the same table (the corpus is never re-scanned) and its output comes
-    * back persisted. A non-positive guard forces the distributed arm.
-    * Both arms are asserted equal in KgPipelineSpec. A caller loop
-    * unpersists the result (a no-op on the driver arm).
+    * GUARD is on the vocabulary, which is bounded, never on the taxa,
+    * which grow with the corpus: while the wd mapping and lineage rows
+    * number at most `maxDriverRows`, their [[LocalMatcher.Index]] is
+    * broadcast and every taxon is matched in its own partition
+    * ([[LocalMatcher.Index.matchOne]]), a narrow map that schedules no
+    * job of its own; beyond it the distributed formulation runs over the
+    * same table (the corpus is never re-scanned). A non-positive guard
+    * forces the distributed arm. Both arms are asserted equal in
+    * KgPipelineSpec and LinkSpec. The broadcast arm comes back lazy: a
+    * caller that reads it more than once persists it (under AQE a
+    * persisted table costs its first reader one more job). The
+    * distributed arm comes back persisted, so a caller loop unpersists
+    * the result.
     */
   def matchStacked(taxa: DataFrame, wdSparqlRows: Seq[Seq[String]],
       lineageRows: Seq[Seq[String]], maxDriverRows: Long): DataFrame = {
     val spark = taxa.sparkSession
-    val base = taxa.select(col("TaxonId"), col("TaxonName"), col("TaxonPathName"),
-        col("TaxonRankName"), col("rowIdx"))
-    Model.driverRows(base, maxDriverRows, "matcher") match {
-      case Some(fetched) =>
-        val rows = fetched
-          .map(r => LocalMatcher.TaxaRow(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getLong(4)))
-          .sortBy(_.rowIdx)
-        matchedRowsToDf(spark,
-          LocalMatcher.matchTaxa(rows.toSeq, wdSparqlRows, lineageRows))
-      case None =>
-        import org.apache.spark.sql.types.{StructField, StructType, StringType}
-        def rowsDf(rows: Seq[Seq[String]], cols: Seq[String]): DataFrame =
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(
-              rows.map(org.apache.spark.sql.Row.fromSeq), 1),
-            StructType(cols.map(StructField(_, StringType, true))))
-        // the distributed passes read `base` once, through unpackRanks'
-        // persisted table, so it is not persisted itself
-        matchDistributed(base,
-          rowsDf(wdSparqlRows, Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
-            "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
-            "iNat", "eppo", "WdName")),
-          rowsDf(lineageRows, Seq("WdID", "WdName", "kingdom", "phylum", "class",
-            "order", "family", "genus", "species")))
+    import spark.implicits._
+    if (maxDriverRows > 0 && wdSparqlRows.size + lineageRows.size <= maxDriverRows) {
+      val index = spark.sparkContext.broadcast(
+        LocalMatcher.index(wdSparqlRows, lineageRows))
+      taxa.select(col("TaxonId").as("taxonId"), col("TaxonName").as("taxonName"),
+          col("TaxonPathName").as("path"), col("TaxonRankName").as("ranks"),
+          col("rowIdx"))
+        .as[LocalMatcher.TaxaRow]
+        .map(t => index.value.matchOne(t))
+        .toDF("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
+          "Match_Status", "rowIdx")
+    } else {
+      import org.apache.spark.sql.types.{StructField, StructType, StringType}
+      def rowsDf(rows: Seq[Seq[String]], cols: Seq[String]): DataFrame =
+        spark.createDataFrame(
+          java.util.Arrays.asList(rows.map(org.apache.spark.sql.Row.fromSeq): _*),
+          StructType(cols.map(StructField(_, StringType, true))))
+      // the distributed passes read the taxa once, through unpackRanks'
+      // persisted table, so they are not persisted here
+      matchDistributed(taxa.select(col("TaxonId"), col("TaxonName"),
+          col("TaxonPathName"), col("TaxonRankName"), col("rowIdx")),
+        rowsDf(wdSparqlRows, Seq("WdID", "eol", "gbif", "ncbi", "ott", "itis",
+          "irmng", "col", "nbn", "worms", "bold", "plazi", "apni", "msw3",
+          "iNat", "eppo", "WdName")),
+        rowsDf(lineageRows, Seq("WdID", "WdName", "kingdom", "phylum", "class",
+          "order", "family", "genus", "species")))
     }
   }
 
   /** Fully distributed matcher: records → matched-taxa table
     * (matcher.py:432-478). The independently implemented reference the
-    * specs hold the driver-local arm of [[matchStacked]] against.
+    * specs hold the broadcast arm of [[matchStacked]] against.
     */
   def matchTaxa(records: DataFrame, wdSparql: DataFrame,
       lineage: DataFrame): DataFrame =

@@ -84,7 +84,7 @@ object Materialize {
     * Mapped_ID_WD rows dropped; later rows win on key collision (pandas
     * dict-build order = ascending first-occurrence rowIdx).
     *
-    * The ROW-COUNT GUARD of [[Link.matchStacked]]: while the cleaned
+    * The ROW-COUNT GUARD ([[Model.driverRows]]): while the cleaned
     * matcher output has at most `maxDriverRows` rows, one limited
     * collect brings it to the driver, where [[driverDicts]] builds both
     * dictionaries as local relations — no job reads them again. Above

@@ -13,9 +13,10 @@ package graft.kg
 object Model {
 
   /** Default row budget for driver-side or broadcast dictionaries: the
-    * matcher's distinct-taxa table, the resolution dictionaries and the
-    * canonical mapping each take the driver/broadcast arm at or below
-    * it, the distributed arm above it.
+    * matcher's vocabulary (wd mapping + lineage rows), the resolution
+    * dictionaries, the equivalence edges and the canonical mapping each
+    * take the driver/broadcast arm at or below it, the distributed arm
+    * above it.
     */
   val MaxDriverRows: Long = 2000000L
 

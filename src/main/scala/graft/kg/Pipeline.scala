@@ -347,7 +347,7 @@ object Pipeline {
       mode = if (mode == "rebuild") "overwrite" else "append",
       idempotencyKey = s"raw-snap-$rawSnapNow")
     persisted.unpersist(); mappingDf.unpersist()
-    matchedDf.unpersist() // persisted only on the distributed path; no-op otherwise
+    matchedDf.unpersist() // persisted by the raw layer or the distributed arm, if at all
     IncrementalResult(raw.processedDocsSnapshot, newSnap, written,
       if (raw.mode == "rebuild") "rebuild" else mode)
   }
@@ -382,8 +382,9 @@ object Pipeline {
     *     (isTarget·2^40 + recNum — exactly the full rebuild's
     *     sources-then-targets order, stable under appends);
     *  2. each increment merges the delta's taxa (min-ordinal) and
-    *     re-runs the driver-local matcher on the state → the FINAL
-    *     dictionaries, identical to a full rebuild's;
+    *     re-runs the matcher on the state (in its own partitions, under
+    *     the broadcast vocabulary index) → the FINAL dictionaries,
+    *     identical to a full rebuild's;
     *  3. a PROBE state keeps every distinct (taxonId, taxonName)
     *     resolution probe ever seen; if no old probe resolves
     *     DIFFERENTLY under the final dictionaries than under the
@@ -477,18 +478,21 @@ object Pipeline {
       .agg(min(col("rowIdx")).as("rowIdx"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // dictionary derivation through the matcher's row-count guard
-    // (Link.matchStacked; the taxa state is dimension-sized, DISTINCT
-    // mention 4-tuples) and the shared dict build. The dicts and the
-    // matcher outputs they persist are released after the final commit —
-    // a streaming micro-batch loop must not accumulate storage blocks per
-    // call. The FINAL matcher output is handed to the caller when
-    // keepMatched (the canonical layer derives its equivalence mapping
-    // from it, instead of re-running the matcher on identical input).
+    // dictionary derivation through the matcher (Link.matchStacked,
+    // whose row guard is on the vocabulary: the taxa state, DISTINCT
+    // mention 4-tuples, never leaves the cluster) and the shared dict
+    // build. The dicts and the matcher outputs, persisted, are
+    // released after the final commit — a streaming micro-batch loop
+    // must not accumulate storage blocks per call. The FINAL matcher
+    // output is handed to the caller when keepMatched (the canonical
+    // layer derives its equivalence mapping from it after the taxa
+    // state is released, instead of re-running the matcher on
+    // identical input).
     val toRelease = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def deriveDicts(taxaDf: DataFrame): (DataFrame, DataFrame, DataFrame) = {
       val matched = Link.matchStacked(taxaDf, DataGen.wdSparqlRows,
         DataGen.lineageRows, maxDriverRows)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val (di, dn) = Materialize.wdMapDicts(matched, maxDriverRows)
       toRelease ++= Seq(di, dn)
       (matched, di, dn)
@@ -508,7 +512,7 @@ object Pipeline {
       toRelease += oldMatched
       // a dictionary built on the driver is a local relation: broadcast
       // it whatever its size, as a LocalTableScan under a shuffle exchange
-      // embeds the whole relation in every task (Link.matchedRowsToDf)
+      // embeds the whole relation in every task
       def d(df: DataFrame, key: String, p: String) = {
         val renamed = df.select(col("key").as(key), col("wd").as(s"${p}_wd"),
           col("mv").as(s"${p}_mv"))

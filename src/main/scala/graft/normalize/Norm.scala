@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *  - widened-null predicate: src/common/utils.py:20-22
   *  - term preprocessing (de-pluralization): src/common/utils.py:124-129
   *  - URI normalization rule table: src/taxonomy_matching/matcher.py:160-175
-  *  - conjunction/delimiter canonicalization:
-  *    src/knowledge_graph/globi_entity_matcher.py:34-41,149-158
+  *  - pre/postfix strip: src/knowledge_graph/globi_entity_matcher.py:36
   *  - numeric-literal detection: src/knowledge_graph/trydb_kg_generator.py:130-134
   */
 object Norm {
@@ -23,8 +22,6 @@ object Norm {
   def isPresent(c: Column): Column =
     c.isNotNull && c =!= "" && c =!= "\\N" && c =!= "no:match" &&
       !c.startsWith("ĜLOBI:")
-
-  def isEmptyLike(c: Column): Column = !isPresent(c)
 
   /** Term preprocessing (utils.py:124-129): lowercase, trim, then drop one
     * trailing 's' unless the term contains "mono" or "auto".
@@ -70,31 +67,11 @@ object Norm {
   def normalizeUri(c: Column): Column =
     uriRules.foldLeft(c) { case (acc, (pat, rep)) => regexp_replace(acc, pat, rep) }
 
-  /** Wikidata entity-URI → "Wikidata:Q…" prefix form (matcher.py:114). */
-  def wikidataPrefix(c: Column): Column =
-    regexp_replace(c, "http://www\\.wikidata\\.org/entity/", "Wikidata:")
-
   /** Numeric-literal detection (trydb_kg_generator.py:130-134):
     * fullmatch of -?[0-9]+(\.[0-9]+)?(E[+-][0-9]+)? selects xsd:double.
     */
   def isNumericLiteral(c: Column): Column =
     c.rlike("^-?[0-9]+(\\.[0-9]+)?(E[+-][0-9]+)?$")
-
-  /** Conjunction/delimiter canonicalization chain
-    * (globi_entity_matcher.py:149-158), in reference order:
-    * lower+strip; and|y → ","; or → ""; [,;/|&]+ → ","; bracket/punct
-    * class → " "; double-space → " ". Split on [+.,]+ afterwards.
-    */
-  def canonicalizeTermString(c: Column): Column = {
-    val s0 = lower(trim(c))
-    val s1 = regexp_replace(s0, "(?i)\\b(and|y)\\b", ",")
-    val s2 = regexp_replace(s1, "(?i)\\b(or)\\b", "")
-    val s3 = regexp_replace(s2, "[,;/|&]+", ",")
-    val s4 = regexp_replace(s3, "[\\[\\]\\(\\)\\?\\#:`]+", " ")
-    regexp_replace(s4, "\\s\\s", " ")
-  }
-
-  def splitSubTerms(c: Column): Column = split(canonicalizeTermString(c), "[+.,]+")
 
   /** Pre/postfix strip (globi_entity_matcher.py:36): removes
     * adult(a|s)? / tortere / juvenil(e)? / maybe / (torete(s))?.

@@ -77,12 +77,4 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
   }
-
-  /** Join two same-bucketed tables on the bucket key — with matching
-    * bucket counts Catalyst plans a SortMergeJoin with NO Exchange on
-    * either side.
-    */
-  def joinBucketed(spark: SparkSession, leftTable: String, rightTable: String,
-      key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 }

@@ -11,15 +11,14 @@ import org.apache.spark.sql.functions._
   *    bucket join → candidate pairs → exact Jaccard verify. The banding
   *    turns the O(n²) pair space into per-bucket joins; at 100 TB the
   *    bucket join shuffles only (band_key, doc_id) pairs, never text.
-  *  - SimHash: 64-bit sign-aggregated xxhash64 over tokens, computed with
-  *    a single higher-order `aggregate` over the token array (no
-  *    explode/shuffle); near-dups = equal 16-bit bands (Hamming blocking).
+  *  - SimHash: 60-bit sign-aggregated md5 token hash, computed with a
+  *    single higher-order `aggregate` over the token array (no
+  *    explode/shuffle).
   *  - n-gram Jaccard: token-set overlap via a relational
   *    explode/join/count plan — fully expressible in ANSI SQL so an
   *    external oracle can verify it.
   *
-  * All hash choices are engine-portable (md5 hex) except SimHash
-  * (xxhash64, Spark-native; verified by ScalaTest instead of SQL).
+  * All hash choices are engine-portable (md5 hex).
   */
 object Dedup {
 
@@ -56,29 +55,6 @@ object Dedup {
         i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
       .otherwise(array())
 
-  /** Distinct shingles per doc: (id, token) rows — drop-in replacement
-    * for docTokens as the MinHash/Jaccard unit.
-    */
-  def docShingles(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        TextOps.tokens(TextOps.normalizeText(col(textCol))).as("_ts"))
-      .select(col("id"), explode(shinglesOf(col("_ts"), n)).as("token"))
-      .distinct()
-
-  /** Distinct tokens per doc: (id, token) rows. The building block for
-    * MinHash and Jaccard. Filters to tokens of length ≥ minTokenLen to
-    * keep join fan-out bounded on stopword-heavy corpora.
-    */
-  def docTokens(docs: DataFrame, idCol: String, textCol: String,
-                minTokenLen: Int = 1): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        explode(TextOps.tokens(TextOps.normalizeText(col(textCol)))).as("token"))
-      .filter(length(col("token")) >= minTokenLen)
-      .distinct()
-
   /** Distinct tokens per doc, hashed to 60-bit md5-prefix longs IN THE
     * SCAN STAGE (same construction as the shingle path and
     * simhashPortable): every downstream shuffle — the distinct, the
@@ -113,7 +89,7 @@ object Dedup {
     * zero exchanges (set-of-hashes == hashes-of-token-set, so the arrays
     * are value-identical). Docs with no qualifying tokens produce no row,
     * matching the exploded form. `hashed=false` keeps raw token strings
-    * (the docTokens twin, for the string-Jaccard oracles).
+    * (the string-token form, for the string-Jaccard oracles).
     */
   def docTokenArraysHashed(docs: DataFrame, idCol: String, textCol: String,
       minTokenLen: Int = 1, hashed: Boolean = true): DataFrame = {
@@ -268,10 +244,10 @@ object Dedup {
 
   /** Engine-portable SimHash: 60-bit signature from the token multiset,
     * token hash = first 15 hex chars of md5 (fits a signed long, and any
-    * SQL engine can reproduce it — the DuckDB oracle hash-verifies this
-    * one, unlike the xxhash64 variant below). One md5 per token: the
-    * hash array is materialized FIRST (transform), then the bit-count
-    * aggregate runs over longs — no per-bit hash recomputation.
+    * SQL engine can reproduce it — the DuckDB oracle hash-verifies
+    * it). One md5 per token: the hash array is materialized FIRST
+    * (transform), then the bit-count aggregate runs over longs — no
+    * per-bit hash recomputation.
     */
   def simhashPortable(text: Column): Column = {
     val toks = TextOps.tokens(TextOps.normalizeText(text))
@@ -291,66 +267,5 @@ object Dedup {
         acc.bitwiseOR(
           when(element_at(counts, i + 1) * 2 > nTok,
             call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))))
-  }
-
-  /** SimHash: 64-bit signature from the token multiset. Computed with
-    * higher-order functions over the token array — zero shuffle, one
-    * projection. bit_j(doc) = majority over tokens of bit_j(xxhash64(tok)).
-    */
-  def simhash(text: Column): Column = {
-    val toks = TextOps.tokens(TextOps.normalizeText(text))
-    // hash array materialized FIRST: an xxhash64 referenced inside the
-    // per-bit transform would re-evaluate 64× per token
-    val hs = transform(toks, tok => xxhash64(tok))
-    // accumulate per-bit counts packed as 64-element int array
-    val counts = aggregate(
-      hs,
-      array_repeat(lit(0), 64),
-      (acc, h) =>
-        transform(acc, (c, i) =>
-          c + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1)
-            .otherwise(0))
-    )
-    val nTok = size(toks)
-    // majority vote per bit → packed long
-    aggregate(
-      sequence(lit(0), lit(63)),
-      lit(0L),
-      (acc, i) =>
-        acc.bitwiseOR(
-          when(element_at(counts, i + 1) * 2 > nTok,
-            call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))
-    )
-  }
-
-  /** SimHash near-dup blocking: equal 16-bit bands ⇒ candidate pair
-    * (catches Hamming distance ≤ 3 across 4 bands by pigeonhole).
-    * maxBucket caps hot 16-bit-band buckets exactly as in lshCandidates.
-    */
-  def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      maxBucket: Int = 1000): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"), simhash(col(textCol)).as("sh"))
-    val banded0 = sh.select(
-      col("id"), col("sh"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sh"), b * 16).bitwiseAND(0xFFFFL).as("bkey"))
-      }: _*)).as("bb"))
-      .select(col("id"), col("sh"), col("bb.band"), col("bb.bkey"))
-    val banded =
-      if (maxBucket <= 0) banded0
-      else {
-        val sizes = banded0.groupBy(col("band"), col("bkey"))
-          .agg(count(lit(1)).as("_bsz")).filter(col("_bsz") <= maxBucket)
-        banded0.join(sizes, Seq("band", "bkey")).drop("_bsz")
-      }
-    val l = banded.as("l"); val r = banded.as("r")
-    l.join(r, col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-        col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sh").as("sh_a"), col("r.sh").as("sh_b"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
   }
 }

@@ -51,51 +51,21 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic ±1 sign pattern for one blocking plane: component i
-    * gets +1 iff (i·prime) mod 64 < 32. Arithmetic-only — bit-identical
-    * in any engine (the SQL oracle reproduces it with a CASE), unlike a
-    * hash-derived plane. Quasi-random enough for coarse blocking.
-    */
-  private def signPlaneBit(vec: Column, prime: Int): Column = {
-    val proj = aggregate(
-      zip_with(vec, sequence(lit(0), size(vec) - 1),
-        (x, i) => x.cast("double") *
-          when(pmod(i * prime, lit(64)) < 32, lit(1.0)).otherwise(lit(-1.0))),
-      lit(0.0), (a, v) => a + v)
-    // round before the sign test so float re-association order (Spark
-    // array-order vs the oracle's group-by sum) cannot flip a bit
-    when(round(proj, 6) >= 0, lit(1L)).otherwise(lit(0L))
-  }
-
   /** Coarse cell id from `primes.size` sign-plane bits (an IVF-style
     * deterministic quantizer: cell count = 2^planes, scales with the
-    * plane count instead of the data). Native kernel — all planes in
-    * one compiled pass over the vector instead of `primes.size`
-    * interpreted [[signPlaneBit]] aggregates per row; bit-identical
-    * (same per-plane accumulation order, round-6 HALF_UP, Spark NaN
-    * ordering — VectorExprsSpec pins equality against this legacy
-    * formulation).
+    * plane count instead of the data). Plane `prime` gives component i
+    * the sign +1 iff (i·prime) mod 64 < 32: arithmetic-only, so it is
+    * bit-identical in any engine (the SQL oracle reproduces it with a
+    * CASE), unlike a hash-derived plane, and quasi-random enough for
+    * coarse blocking. Each plane's projection is rounded to 6 dp before
+    * the sign test, so float re-association order (Spark array order vs
+    * the oracle's group-by sum) cannot flip a bit. Native kernel — all
+    * planes in one compiled pass over the vector; VectorExprsSpec pins
+    * it against the per-plane higher-order formulation it replaced.
     */
   def signCell(vec: Column, primes: Seq[Int]): Column =
     graft.functions.VectorExprs.signCell(vec, primes)
 
-  /** The pre-kernel spelling of [[signCell]], kept as the executable
-    * specification the equality spec checks the kernel against.
-    */
-  def signCellLegacy(vec: Column, primes: Seq[Int]): Column =
-    primes.zipWithIndex
-      .map { case (pr, b) => signPlaneBit(vec, pr) * lit(1L << b) }
-      .reduce(_ + _)
-
-  /** Banded sign-LSH near-neighbour pairs: each vector gets `bands`
-    * (band, cell) keys (disjoint plane sets per band); pairs sharing any
-    * band-cell are candidates (OR-amplification recovers the recall a
-    * single cut loses), then exact cosine ≥ threshold verifies. This is
-    * the scale path for embedding near-dup: the pair space shrinks by
-    * ~2^planes per band and no cell is data-dependent (no hot `label`
-    * cell going cartesian). At 100 TB raise `planes` (cells = 2^planes)
-    * so per-cell membership stays bounded.
-    */
   /** Banded sign-cell postings (id, [gate,] band, cell) — the ONE
     * construction of the deterministic prime-plane band keys, shared by
     * the batch pair join and the incremental-maintenance state so the
@@ -136,6 +106,15 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
 
+  /** Banded sign-LSH near-neighbour pairs: each vector gets `bands`
+    * (band, cell) keys (disjoint plane sets per band); pairs sharing any
+    * band-cell are candidates (OR-amplification recovers the recall a
+    * single cut loses), then exact cosine ≥ threshold verifies. This is
+    * the scale path for embedding near-dup: the pair space shrinks by
+    * ~2^planes per band and no cell is data-dependent (no hot `label`
+    * cell going cartesian). At 100 TB raise `planes` (cells = 2^planes)
+    * so per-cell membership stays bounded.
+    */
   def signLshPairs(vecs: DataFrame, idCol: String, vecCol: String,
                    planes: Int = 4, bands: Int = 2,
                    threshold: Double = 0.5,
@@ -213,7 +192,7 @@ object Similarity {
     * Cosines are rounded to 6 dp before every comparison (assignment
     * argmax, probe ranking, final order) so float re-association
     * cannot flip a cell or a rank against the SQL oracle — the same
-    * convention as [[signPlaneBit]].
+    * convention as [[signCell]]'s planes.
     */
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String,
               centroids: Array[(Long, Array[Float])], query: Array[Float],

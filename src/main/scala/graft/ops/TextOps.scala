@@ -147,17 +147,6 @@ object TextOps {
           col("m_bi") * 8 <= col("n_bi") + 8)
   }
 
-  /** Rolling-hash document shingle fingerprints: character n-grams of the
-    * normalized text, md5-hashed; the lexicographic min is a cheap
-    * locality-sensitive sketch (used by tests; MinHash proper lives in
-    * Dedup).
-    */
-  def charShingles(text: Column, n: Int): Column = {
-    val norm = normalizeText(text)
-    val idx = sequence(lit(1), greatest(length(norm) - (n - 1), lit(0)))
-    transform(idx, i => norm.substr(i, lit(n)))
-  }
-
   /** PII redaction patterns — deliberately written without `\d`/`\b`
     * (class shorthands and word-boundary semantics are where Java
     * regex and RE2 drift); `[.]` instead of an escaped dot keeps the

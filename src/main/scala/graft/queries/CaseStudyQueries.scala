@@ -28,9 +28,9 @@ import graft.sources.Inputs
   * relational two-tier resolution join before the emission. It is
   * hash-gated against the SAME independent SQL re-derivation as
   * kg_pipeline_triples — whose dictionary side-channel is written by
-  * the driver-local matcher — so a green driver row certifies
-  * distributed == driver-local over the full emission, with zero
-  * driver-side matching in this plan.
+  * the broadcast-index matcher — so a green driver row certifies
+  * distributed == broadcast over the full emission, with no
+  * vocabulary broadcast in this plan.
   */
 object CaseStudyQueries {
 
@@ -738,7 +738,7 @@ object CaseStudyQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "kg_pipeline_triples_dist" -> ((s: SparkSession, dir: String) => {
-      // the memoized compact-path build also writes the matched
+      // the memoized broadcast-arm build also writes the matched
       // side-channel the oracle derives its dictionaries from
       val (records, _) = Materialized.recordsAndMatched(s, dir)
       val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,

@@ -13,7 +13,7 @@ import graft.kg.{DataGen, Model}
   *  - the GloBI branch reuses exactly ONE engine intermediate — the
   *    matcher output side-channel (Materialized.SideDir/matched_n*) —
   *    because the scored-disambiguation matcher is separately verified
-  *    (j4/j5/j6 oracles + the LocalMatcher==distributed equality test);
+  *    (j4/j5/j6 oracles + the broadcast==distributed equality tests);
   *    everything downstream (dict build, two-tier resolution, the ~30
   *    conditional emission templates, media, inverse augmentation,
   *    set dedup) is reproduced in SQL;

@@ -8,8 +8,7 @@ import graft.sources.Inputs
 /** Training-data pipeline operators as verifiable queries: text analysis,
   * deduplication (exact / MinHash-LSH / token-Jaccard / SimHash /
   * embedding-cosine), and similarity search. Hash primitives are md5
-  * (engine-portable) wherever a SQL oracle exists; SimHash uses Spark's
-  * xxhash64 and is covered by ScalaTest instead (rows-only check here).
+  * (engine-portable), so a SQL oracle reproduces every hash.
   */
 object PipelineQueries {
 
@@ -75,21 +74,23 @@ object PipelineQueries {
       "incCos" -> (() => { incCosState(s, dir); () }))
   }
 
-  /** Recursively reclaim a temp state dir when the JVM exits — the
-    * memoized state dirs live for the whole session (every query
-    * invocation serves from them), so per-query cleanup no longer
-    * applies, but a bench/verify run must still not leak a full
-    * LSH-state copy of the corpus under /tmp.
+  /** A new temp dir, reclaimed recursively when the JVM exits — the
+    * memoized state dirs and fixture tables live for the whole session
+    * (every query invocation serves from them), so per-query cleanup
+    * does not apply, but a bench/verify run must still not leak a full
+    * LSH-state copy of the corpus, or an empty fixture dir, under /tmp.
     */
-  private def deleteOnExit(dir: String): Unit =
+  private def tempDir(prefix: String): String = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        import java.nio.file.{Files, Paths}
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(dir)).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }
+      try Files.walk(dir).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+      catch { case _: Throwable => () }
     }))
+    dir.toString
+  }
 
   /** Once-per-(session, scale) text-LSH incremental state: ingest the
     * corpus in two batches through the persisted-LSH-state machinery
@@ -101,9 +102,7 @@ object PipelineQueries {
     */
   private[graft] def incLshState(s: SparkSession, dir: String): String =
     Materialized.once(s, "incLshState", dir) {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("dd-inc-lsh").toString
-      deleteOnExit(stateDir)
+      val stateDir = tempDir("dd-inc-lsh")
       val d = Inputs.parquet(s, dir, "documents")
       val cfg = graft.ops.IncrementalDedup.LshConfig(
         k = 4, rowsPerBand = 2, threshold = 0.8, maxBucket = 1000)
@@ -128,9 +127,7 @@ object PipelineQueries {
   private[graft] def mergedDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "mergedDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-merge-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-merge-gate") + "/t"
       val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), lit("v1").as("version"))
       SnapshotTable.write(base.repartition(8), tableDir,
@@ -186,9 +183,7 @@ object PipelineQueries {
   private[graft] def wapDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "wapDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-wap-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-wap-gate") + "/t"
       val d = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       val base = d.filter(col("doc_id") % 3 === 0)
@@ -230,9 +225,7 @@ object PipelineQueries {
   private[graft] def scd2DimTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "scd2DimTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-scd2-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-scd2-gate") + "/t"
       val e = Inputs.parquet(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       val cut = e.agg(max(col("event_id"))).head().getLong(0) / 2
@@ -261,9 +254,7 @@ object PipelineQueries {
   private[graft] def deletedDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "deletedDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-delete-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-delete-gate") + "/t"
       val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       SnapshotTable.write(base.repartitionByRange(8, col("doc_id")),
@@ -298,9 +289,7 @@ object PipelineQueries {
   private[graft] def bloomDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "bloomDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-bloom-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-bloom-gate") + "/t"
       val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
         .repartition(8, col("lang"))
@@ -321,9 +310,7 @@ object PipelineQueries {
   private[graft] def partitionedDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "partitionedDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-owp-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-owp-gate") + "/t"
       val base = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"))
       SnapshotTable.write(base, tableDir, partitionBy = Seq("lang"),
@@ -348,9 +335,7 @@ object PipelineQueries {
   private[graft] def statsDocsTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "statsDocsTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-stats-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-stats-gate") + "/t"
       val docs = Inputs.parquet(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .repartitionByRange(8, col("doc_id"))
@@ -370,9 +355,7 @@ object PipelineQueries {
   private[graft] def zorderOrdersTable(s: SparkSession, dir: String): String =
     Materialized.once(s, "zorderOrdersTable", dir) {
       import graft.sources.SnapshotTable
-      val tableDir = java.nio.file.Files
-        .createTempDirectory("snap-zorder-gate").toString + "/t"
-      deleteOnExit(tableDir)
+      val tableDir = tempDir("snap-zorder-gate") + "/t"
       val orders = Inputs.parquet(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       SnapshotTable.write(
@@ -387,9 +370,7 @@ object PipelineQueries {
     */
   private[graft] def incCosState(s: SparkSession, dir: String): String =
     Materialized.once(s, "incCosState", dir) {
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("dd-inc-cos").toString
-      deleteOnExit(stateDir)
+      val stateDir = tempDir("dd-inc-cos")
       val v = Inputs.parquet(s, dir, "embeddings")
       val cfg = graft.ops.IncrementalDedup.VecLshConfig(
         planes = 4, bands = 2, threshold = 0.4)
@@ -1303,8 +1284,7 @@ object PipelineQueries {
 
     "dd_simhash" -> ((s: SparkSession, dir: String) => {
       // engine-portable 60-bit md5 SimHash — hash-verified by the DuckDB
-      // oracle (the xxhash64 variant stays as the Spark-native fast path,
-      // covered by ScalaTest)
+      // oracle
       val d = Inputs.parquet(s, dir, "documents")
       d.select(col("doc_id"), Dedup.simhashPortable(col("text")).as("sh"))
         .orderBy(col("doc_id"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `foreachBatch` appends each batch to the docs snapshot table, keyed
   * by its batch id, and runs [[graft.kg.Pipeline.incrementalCanonicalFromTable]]
   * (StreamingSpec). Event streams additionally get watermarked windows,
-  * streaming dedup, and stateful sessionization — the operators a
+  * interval joins and stateful sessionization — the operators a
   * 100 TB training-data ingest pipeline needs.
   */
 object Streaming {
@@ -22,13 +22,6 @@ object Streaming {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_v"))
-
-  /** Streaming exact dedup on (user_id, event_type) within the
-    * watermark horizon — keep-first semantics.
-    */
-  def streamingDedup(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
-      .dropDuplicates("user_id", "event_type")
 
   /** Watermarked HOPPING-window aggregation: 10-minute windows sliding
     * every 5 — the streaming twin of the batch `ev_hopping_window`

@@ -67,7 +67,7 @@ class KgPipelineSpec extends AnyFunSuite {
   test("compact (driver-local) matcher path equals the distributed path") {
     val docs = DataGen.corpus(spark, N, 4).toDF()
     val records = Extract.records(docs)
-    // the shipped calls end to end: driver-local matcher arm, map arm
+    // the shipped calls end to end: broadcast matcher arm, map arm
     val matched = Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
       DataGen.lineageRows)
     val (dictId, dictName) = Materialize.wdMapDicts(matched)
@@ -93,7 +93,7 @@ class KgPipelineSpec extends AnyFunSuite {
       df.select("TaxonId", "TaxonName", "Mapped_Value", "Mapped_ID_WD",
         "Match_Status", "rowIdx").collect().map(_.toSeq).toSet
     val compact = rows(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
-      DataGen.lineageRows)) // default guard → driver-local path
+      DataGen.lineageRows)) // default guard → broadcast-index path
     val distributed = rows(Link.matchTaxaAdaptive(records, DataGen.wdSparqlRows,
       DataGen.lineageRows, maxDriverRows = 0)) // force distributed
     assert(compact == distributed,

@@ -28,6 +28,25 @@ class VectorExprsSpec extends AnyFunSuite {
       t * t
     }), lit(0.0), (acc, v) => acc + v)
 
+  /** One blocking plane's sign bit: component i weighs +1 iff
+    * (i·prime) mod 64 < 32, the projection rounded to 6 dp before the
+    * sign test.
+    */
+  private def signPlaneBit(vec: org.apache.spark.sql.Column, prime: Int) = {
+    val proj = aggregate(
+      zip_with(vec, sequence(lit(0), size(vec) - 1),
+        (x, i) => x.cast("double") *
+          when(pmod(i * prime, lit(64)) < 32, lit(1.0)).otherwise(lit(-1.0))),
+      lit(0.0), (a, v) => a + v)
+    when(round(proj, 6) >= 0, lit(1L)).otherwise(lit(0L))
+  }
+
+  /** Similarity.signCell's pre-kernel spelling: one plane bit per prime. */
+  private def signCellLegacy(vec: org.apache.spark.sql.Column, primes: Seq[Int]) =
+    primes.zipWithIndex
+      .map { case (pr, b) => signPlaneBit(vec, pr) * lit(1L << b) }
+      .reduce(_ + _)
+
   private def vecs = {
     val rows = (0 until 64).map { i =>
       (i.toLong, Array.tabulate(16)(j =>
@@ -72,7 +91,7 @@ class VectorExprsSpec extends AnyFunSuite {
     val primes = Seq(3, 5, 7, 11)
     val df = vecs.select(
       Similarity.signCell(col("v"), primes).as("native"),
-      Similarity.signCellLegacy(col("v"), primes).as("legacy"))
+      signCellLegacy(col("v"), primes).as("legacy"))
     assert(df.filter(not(col("native") <=> col("legacy"))).count() === 0)
   }
 }
